@@ -389,6 +389,59 @@ def test_bloom_positions_match_spark_canon(spark, values):
     assert got == want
 
 
+_zarr_rows = st.lists(
+    st.tuples(
+        st.integers(min_value=0, max_value=2),  # partition key
+        st.one_of(st.floats(), st.sampled_from(
+            [float("nan"), float("inf"), float("-inf"), -0.0, 0.0])),
+        st.integers(min_value=-2**63, max_value=2**63 - 1),
+        st.one_of(st.text(max_size=6), st.sampled_from(["", "é", "日本"]))),
+    min_size=1, max_size=12)
+
+
+@given(_zarr_rows)
+@settings(max_examples=8, deadline=None)
+def test_zarr_in_task_stats_match_spark_aggregation(spark, rows):
+    """The zarr write task's zone-map and bloom entries equal the Spark
+    aggregations (``collect_zone_stats`` / ``collect_bloom_stats``) run
+    over the collection's read-back rows — NaN (TOP), ±inf, -0.0,
+    non-ASCII and empty strings, single-row partitions included."""
+    import shutil
+    import tempfile
+    from zcollection_spark.collection.stats import (collect_bloom_stats,
+                                                    collect_zone_stats)
+    from zcollection_spark.zarr3.collection import create_zarr_collection
+    schema = (zc.SchemaBuilder()
+              .add_dimension("i")
+              .add_variable("i", "int64", ("i",))
+              .add_variable("x", "float64", ("i",))
+              .add_variable("n", "int64", ("i",))
+              .add_variable("s", "str", ("i",))
+              .add_variable("num", "int64", ("i",))
+              .build())
+    root = tempfile.mkdtemp()
+    try:
+        coll = create_zarr_collection(
+            spark, f"{root}/z", schema=schema, axis="i",
+            partitioning=zc.Sequence(("num",)),
+            stats_columns=["n", "s", "x"], bloom_columns=["n", "s"],
+            bloom_bits=256)
+        coll.insert(spark.createDataFrame(
+            [(i, *row[1:], row[0]) for i, row in enumerate(rows)],
+            "i long, x double, n long, s string, num long"))
+        back = coll.to_df()
+        rels = coll.partitions()
+        want = collect_zone_stats(back, coll.partitioning,
+                                  coll.stats_columns, rels)
+        for rel, entry in collect_bloom_stats(
+                back, coll.partitioning, coll.bloom_columns, rels,
+                m_bits=256).items():
+            want[rel].update(entry)
+        assert coll._catalog.read_stats() == want
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+
+
 @given(st.lists(st.integers(min_value=-10**9, max_value=10**9),
                 min_size=1, max_size=200, unique=True))
 @settings(max_examples=50, deadline=None)

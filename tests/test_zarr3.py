@@ -460,3 +460,46 @@ def test_corrupt_shard_fails_loudly(tmp_path):
     shard2.write_bytes(bytes(raw))
     with pytest.raises(ValueError, match="corrupt shard"):
         read_array(tmp_path / "c2")
+
+
+# -- nulls in variables zarr cannot store as null ---------------------------
+
+_NULLABLE = [("int64", "long", -1, 7),
+             ("bool", "boolean", True, False),
+             ("str", "string", "n/a", "x")]
+
+
+def _null_coll(spark, path, dtype, fill):
+    schema = (zc.SchemaBuilder()
+              .add_dimension("i")
+              .add_variable("i", "int64", ("i",))
+              .add_variable("v", dtype, ("i",), fill_value=fill)
+              .add_variable("num", "int64", ("i",))
+              .build())
+    return create_zarr_collection(spark, path, schema=schema, axis="i",
+                                  partitioning=zc.Sequence(("num",)))
+
+
+@pytest.mark.parametrize("dtype,ddl,fill,value", _NULLABLE)
+def test_zarr_null_written_as_declared_fill(spark, tmp_path, dtype, ddl,
+                                            fill, value):
+    """A null in an integer, bool or string variable is stored as the
+    variable's declared fill_value (not INT64_MIN, False or '')."""
+    coll = _null_coll(spark, str(tmp_path / "f"), dtype, fill)
+    coll.insert(spark.createDataFrame(
+        [(0, value, 1), (1, None, 1)], f"i long, v {ddl}, num long"))
+    assert [r.v for r in coll.query().collect()] == [value, fill]
+
+
+@pytest.mark.parametrize("dtype,ddl,fill,value", _NULLABLE)
+def test_zarr_null_without_fill_raises(spark, tmp_path, dtype, ddl, fill,
+                                       value):
+    """Without a declared fill_value the write refuses the null, naming
+    the variable and the partition, and publishes nothing."""
+    coll = _null_coll(spark, str(tmp_path / "r"), dtype, None)
+    df = spark.createDataFrame([(0, value, 1), (1, None, 2)],
+                               f"i long, v {ddl}, num long")
+    with pytest.raises(zc.SchemaError,
+                       match=r"variable 'v' .* partition 'num=2'"):
+        coll.insert(df)
+    assert coll.partitions() == []

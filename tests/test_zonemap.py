@@ -307,6 +307,82 @@ def test_zarr3_reopen_keeps_stats_columns(spark, tmp_path):
     assert reopened.query(where="value < 0.5") is None
 
 
+def test_zarr3_null_double_stats_describe_stored_nan(spark, tmp_path):
+    """Zarr stores a null double as NaN, which reads back as NaN and
+    matches ``value > 1000`` (NaN sorts above every number in Spark).
+    The zone map must describe that stored NaN (TOP, no pruning) — a
+    null count would prune the partition and answer None instead of
+    the row a stats-less twin returns."""
+    from zcollection_spark.zarr3.collection import create_zarr_collection
+    schema = (zc.SchemaBuilder()
+              .add_dimension("i")
+              .add_variable("i", "int64", ("i",))
+              .add_variable("value", "float64", ("i",))
+              .add_variable("num", "int64", ("i",))
+              .build())
+    rows = [(0, 1.0, 1), (1, None, 1), (2, 5.0, 2)]
+    answers = []
+    for name, stats in (("plain", None), ("stats", ["value"])):
+        coll = create_zarr_collection(
+            spark, str(tmp_path / name), schema=schema, axis="i",
+            partitioning=zc.Sequence(("num",)), stats_columns=stats)
+        coll.insert(spark.createDataFrame(
+            rows, "i long, value double, num long"))
+        res = coll.query(where="value > 1000")
+        answers.append(None if res is None
+                       else sorted(r.i for r in res.collect()))
+    assert answers[0] == answers[1] == [1]
+    assert coll._catalog.read_stats()["num=1"]["value"] == [None, None, 0]
+    assert coll.query(where="value > 1000", filters="num == 2") is None
+
+
+def _jobs_of(spark, group: str, action) -> int:
+    """Spark jobs ``action()`` runs, counted through its job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_zarr3_stats_cost_no_spark_job(spark, tmp_path):
+    """Zone maps and blooms ride the zarr write task: an upsert on a
+    collection with ``stats_columns`` and ``bloom_columns`` runs exactly
+    as many Spark jobs as on a twin without them."""
+    import uuid
+    from zcollection_spark.zarr3.collection import create_zarr_collection
+    schema = (zc.SchemaBuilder()
+              .add_dimension("i")
+              .add_variable("i", "int64", ("i",))
+              .add_variable("uid", "int64", ("i",))
+              .add_variable("value", "float64", ("i",))
+              .add_variable("num", "int64", ("i",))
+              .build())
+    ddl = "i long, uid long, value double, num long"
+    first = [(i, 100 + i, float(i), i % 3) for i in range(12)]
+    upsert = [(i, 500 + i, -float(i), i % 3) for i in range(6, 18)]
+    counts = []
+    for name, extra in (("plain", {}),
+                        ("stats", {"stats_columns": ["value"],
+                                   "bloom_columns": ["uid"]})):
+        coll = create_zarr_collection(
+            spark, str(tmp_path / name), schema=schema, axis="i",
+            partitioning=zc.Sequence(("num",)), **extra)
+        coll.insert(spark.createDataFrame(first, ddl))
+        df = spark.createDataFrame(upsert, ddl)
+        counts.append(_jobs_of(
+            spark, f"zarr-upsert-{uuid.uuid4().hex}",
+            lambda: coll.insert(df, merge="upsert")))
+    assert counts[0] == counts[1] > 0
+    stats = coll._catalog.read_stats()
+    assert sorted(stats) == ["num=0", "num=1", "num=2"]
+    assert stats["num=0"]["value"] == [-15.0, 3.0, 0]
+    assert coll.query(where="uid == 517") is not None
+    assert coll.query(where="uid == 106") is None  # upserted away
+
+
 def test_temporal_stats_columns_rejected(spark, tmp_path):
     """ISO-string bounds do not order like Spark's timestamp casts
     ('2024-01-04' vs '2024-01-04T09:00' as text vs as time), so temporal

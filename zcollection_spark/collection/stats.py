@@ -1,10 +1,17 @@
-"""Zone-map statistics collection, shared by both storage layouts.
+"""Zone-map and bloom statistics, shared by both storage layouts.
 
-One map-side-combined aggregation over the DataFrame being written
-produces ``{relpath: {col: [min, max, null_count]}}`` — committed with
-the publish (staging intent → catalog PUT) and consumed by
-``query(where=...)``'s conservative partition skipping
-(``partitioning/zonemap.py``).
+Each layout produces ``{relpath: {col: [min, max, null_count]}}`` plus
+``{relpath: {"col#bloom": {...}}}`` — committed with the publish
+(staging intent → catalog PUT) and consumed by ``query(where=...)``'s
+conservative partition skipping (``partitioning/zonemap.py``):
+
+* the parquet layout's writer is the JVM, so it pays one map-side-
+  combined aggregation over the DataFrame being written
+  (:func:`collect_zone_stats`, :func:`collect_bloom_stats`);
+* the zarr layout's write task already holds every array it encodes,
+  so it builds each partition's entries there (:func:`zone_entry`,
+  :func:`bloom_entry`) and they ride the write job's own collect — no
+  extra Spark job, and the statistics describe what is stored.
 
 Correctness invariants (pruning must NEVER be a correctness boundary):
 
@@ -28,6 +35,7 @@ import math
 from decimal import Decimal
 from typing import Any
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -63,6 +71,37 @@ def json_stat(value: Any, direction: str | None = None) -> Any:
         elif direction == "hi":
             f = math.nextafter(f, math.inf)
     return f
+
+
+def zone_entry(values: np.ndarray) -> list:
+    """``[lo, hi, nulls]`` of one partition-column, computed from the
+    1-D array a writer encodes — the in-task counterpart of
+    :func:`collect_zone_stats` (same NaN → TOP rule, same
+    :func:`json_stat` widening).  The array holds no nulls: the zarr
+    writer stores floats' nulls as NaN and fills or rejects the rest."""
+    if values.dtype.kind == "f" and np.isnan(values).any():
+        return [None, None, 0]
+    if values.dtype == object:
+        # strings: Python's code-point order IS Spark's UTF-8 byte order
+        lo, hi = min(values), max(values)
+    else:
+        lo, hi = values.min(), values.max()
+    return [json_stat(lo, "lo"), json_stat(hi, "hi"), 0]
+
+
+def bloom_entry(values: np.ndarray, kind: str, m_bits: int) -> dict:
+    """One partition-column bloom filter built from the array a writer
+    encodes — bit-identical to :func:`collect_bloom_stats` over the
+    same values (cast-to-string md5 canon of
+    :func:`partitioning.zonemap.bloom_value_positions`)."""
+    import base64
+    from ..partitioning.zonemap import BLOOM_K, bloom_value_positions
+    bits = np.zeros(m_bits // 64, dtype="<u8")
+    for value in set(values.tolist()):
+        for pos in bloom_value_positions(value, m_bits):
+            bits[pos >> 6] |= np.uint64(1 << (pos & 63))
+    return {"m": m_bits, "k": BLOOM_K, "t": kind,
+            "b64": base64.b64encode(bits.tobytes()).decode()}
 
 
 def collect_zone_stats(df: DataFrame, partitioning, stats_columns,

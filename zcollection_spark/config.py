@@ -58,18 +58,6 @@ _DEFAULTS: dict[str, Any] = {
     "similarity.broadcast_rows_cap": 1_000_000,  # dup-pairs method="broadcast"
     "insert.partition_key_cap": 100_000,         # distinct keys per insert
     "retrieval.broadcast_terms_cap": 1_000_000,  # bm25 (query, term) rows
-    # bm25_scores can pin the probe-matched tf table (persist) so the
-    # document-frequency reduction and the scoring join consume ONE
-    # corpus pass instead of re-tokenizing the corpus per consumer
-    # (Spark has no cross-branch CSE).  Default OFF: interleaved A/Bs
-    # at sf0.1 AND the synthetic sf1 tier both read the recompute
-    # shape faster or equal (bm25 1.59 vs 2.04 s best at sf0.1, 4.27
-    # vs 4.48 s at sf1 — the duplicate passes run in parallel across
-    # idle cores while the persist serializes through a
-    # materialization barrier; OPTIMIZATION_r17.md).  Flip ON for
-    # truly large corpora, where two full tokenize passes dwarf
-    # persisting the probe-selectivity-bounded matched frame.
-    "retrieval.pin_matched": False,
     # tfidf_topk pins its corpus tf table (persist) when the corpus'
     # optimizer-estimated scan size reaches this many bytes — same
     # crossover-gated device as text.pin_tokens_min_input_bytes

@@ -136,20 +136,6 @@ def bm25_scores(corpus: DataFrame, queries: DataFrame, *,
                .groupBy(id_col, "__term")
                .agg(F.count(F.lit(1)).alias("__tf"),
                     F.max("__dl").alias("__dl")))
-    handles: list[DataFrame] = []
-    if config.get("retrieval.pin_matched"):
-        # matched feeds TWO consumers (the df reduction and the
-        # scoring join); without a pin each re-tokenizes the corpus
-        # (no cross-branch CSE).  The pin is OFF by default on
-        # measured grounds — interleaved A/Bs at sf0.1 and sf1 both
-        # favored the recompute shape (parallel idle-core passes beat
-        # the materialization barrier; see the config key comment) —
-        # and exists for truly large corpora, where persisting the
-        # probe-selectivity-bounded frame (one row per matched
-        # (doc, term)) beats a second full tokenize pass.  Release
-        # through the dedup-family contract (unpersist_intermediates).
-        matched = matched.persist()
-        handles.append(matched)
     # per-term document frequency over the full corpus — counting the
     # matched tf rows per term IS the corpus df (the broadcast
     # term filter above dropped terms, never containing docs)
@@ -167,11 +153,9 @@ def bm25_scores(corpus: DataFrame, queries: DataFrame, *,
                   + F.lit(k1) * (F.lit(1.0 - b)
                                  + F.lit(b) * F.col("__dl")
                                  / F.col("__avgdl"))))
-    return _attach_cached(
-        scored_terms
-        .groupBy(query_id_col, id_col)
-        .agg(F.round(F.sum(idf * tf_norm), round_to).alias("score")),
-        *handles)
+    return (scored_terms
+            .groupBy(query_id_col, id_col)
+            .agg(F.round(F.sum(idf * tf_norm), round_to).alias("score")))
 
 
 def bm25_topk(corpus: DataFrame, queries: DataFrame, *,

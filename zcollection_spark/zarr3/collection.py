@@ -8,6 +8,14 @@ arrays (``io/partition.py:145-169`` semantics) with the partition key
 stamped into group attributes as ``_zc_partition_key``
 (``collection/base.py:508-516``).  The catalog PUT commits visibility.
 
+Zone maps and blooms (``stats_columns`` / ``bloom_columns``) are built
+by those same write tasks from the arrays they encode and ride the
+write job's collect into the publish — no Spark job of their own, and
+they describe what zarr stores: a null double is stored (and read
+back) as NaN, so its partition keeps no bounds.  A null in an integer,
+bool or string variable is stored as the variable's ``fill_value``;
+without one the write raises :class:`SchemaError`.
+
 Reads go through the registered ``zarr3`` Python DataSource (partition
 pruning via filter pushdown + per-variable column projection).
 
@@ -28,13 +36,14 @@ from typing import Callable, Iterable
 import numpy as np
 import pandas as pd
 
+from pyspark.errors import PythonException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import config as engine_config
 from ..collection import staging as staging_proto
 from ..collection.catalog import Catalog
-from ..collection.stats import collect_zone_stats
+from ..collection.stats import bloom_kind_of
 from ..collection.merge import MergeCallable, resolve_merge
 from ..collection.merge import replace as merge_replace
 from ..errors import (CollectionExistsError, CollectionNotFoundError,
@@ -42,7 +51,7 @@ from ..errors import (CollectionExistsError, CollectionNotFoundError,
 from ..fs import fs_for, strip_scheme
 from ..partitioning import Partitioning, compile_filter
 from ..partitioning import from_json as partitioning_from_json
-from ..schema import FORMAT_VERSION, DatasetSchema
+from ..schema import FORMAT_VERSION, DatasetSchema, dtype_to_spark
 from . import datasource
 from .core import read_array, write_array, write_group
 from .sharding import shard_decision
@@ -50,7 +59,36 @@ from .sharding import shard_decision
 CONFIG_NAME = "_zcollection.json"
 
 
-def write_partition_group(spec: dict, pdf: pd.DataFrame) -> str:
+def _stored_values(series: pd.Series, name: str, dtype: str, fill,
+                   rel: str) -> np.ndarray:
+    """A 1-D variable's values exactly as its Zarr array stores them.
+
+    Zarr has no null: a float null is stored as NaN (and reads back as
+    NaN), a datetime null as NaT; an integer, bool or string null has
+    no faithful encoding, so it is written as the variable's declared
+    ``fill_value`` — or rejected, naming the variable and partition,
+    rather than silently stored as INT64_MIN, ``False`` or ``''``."""
+    # v3 "string" data type via the vlen-utf8 codec (core.py)
+    vlen = dtype in ("str", "vlen-utf8")
+    values = series.to_numpy(dtype=object) if vlen else series.to_numpy()
+    if vlen or np.dtype(dtype).kind in "iubU":
+        nulls = series.isna().to_numpy()
+        if nulls.any():
+            if fill is None:
+                raise SchemaError(
+                    f"variable {name!r} holds {int(nulls.sum())} null(s) "
+                    f"in partition {rel!r}: zarr cannot store a null "
+                    f"{dtype} — declare a fill_value for the variable "
+                    f"or drop the nulls before writing")
+            values = np.where(nulls, fill, values)
+    if vlen:
+        return np.asarray(values, dtype=object)
+    if dtype.startswith("datetime"):
+        return values.astype("datetime64[us]")
+    return values.astype(np.dtype(dtype))
+
+
+def write_partition_group(spec: dict, pdf: pd.DataFrame) -> tuple[str, dict]:
     """Write ONE partition's rows as a Zarr v3 group (executor side).
 
     ``spec`` comes from ``ZarrCollection._write_spec``; the same routine
@@ -59,8 +97,14 @@ def write_partition_group(spec: dict, pdf: pd.DataFrame) -> str:
     must share one partition key; the group is rewritten wholesale
     (reference ``collection/base.py:481-519`` semantics, minus the
     fragmented-key race — callers shuffle by key first).
+
+    Returns ``(relpath, stats)``: ``stats`` is the partition's catalog
+    statistics entry — zone maps for ``spec["stats_columns"]``, blooms
+    for ``spec["bloom_kinds"]`` (both optional) — built from the very
+    arrays encoded here, so it describes what the group stores.
     """
     import shutil as _shutil
+    from ..collection.stats import bloom_entry, zone_entry
     from ..partitioning import from_json as pj
     part = pj(json.loads(spec["partitioning_json"]))
     axis = spec["axis"]
@@ -92,6 +136,7 @@ def write_partition_group(spec: dict, pdf: pd.DataFrame) -> str:
             if rel_group not in seen_groups:
                 seen_groups.add(rel_group)
                 write_group(f"{group_path}/{rel_group}", {}, conf=conf)
+    stored: dict[str, np.ndarray] = {}
     for name, dtype, extra in spec["var_meta"]:
         series = pdf[name]
         if extra:  # nD variable stored as array column
@@ -100,24 +145,23 @@ def write_partition_group(spec: dict, pdf: pd.DataFrame) -> str:
                 np.dtype(dtype) if not dtype.startswith("datetime")
                 else "datetime64[us]")
             chunk = (min(chunk_rows, len(values)) or 1, *extra)
-        elif dtype in ("str", "vlen-utf8"):
-            # v3 "string" data type via the vlen-utf8 codec (core.py)
-            values = np.asarray(series.to_numpy(dtype=object),
-                                dtype=object)
-            chunk = (min(chunk_rows, len(values)) or 1,)
         else:
-            values = series.to_numpy()
-            if dtype.startswith("datetime"):
-                values = values.astype("datetime64[us]")
-            else:
-                values = values.astype(np.dtype(dtype))
+            values = _stored_values(series, name, dtype,
+                                    spec["fill_values"].get(name), rel)
+            stored[name] = values
             chunk = (min(chunk_rows, len(values)) or 1,)
         shard = None if values.dtype == object else shard_decision(
             chunk, values.shape, values.dtype, spec["shard_budget"])
         write_array(f"{group_path}/{name}", values, chunk_shape=chunk,
                     shard_shape=shard, codec="zstd", level=spec["level"],
                     conf=conf)
-    return rel
+    stats = {col: zone_entry(stored[col])
+             for col in spec.get("stats_columns", ()) if col in stored}
+    for col, kind in spec.get("bloom_kinds", {}).items():
+        if col in stored:
+            stats[f"{col}#bloom"] = bloom_entry(stored[col], kind,
+                                                spec["bloom_bits"])
+    return rel, stats
 
 
 def create_zarr_collection(spark: SparkSession, path: str, *,
@@ -420,6 +464,8 @@ class ZarrCollection:
                           tuple(dim_map[d].size or 0 for d in v.dimensions
                                 if d != axis))
                          for v in var_schemas],
+            "fill_values": {v.name: v.fill_value for v in var_schemas
+                            if v.fill_value is not None},
         }
 
     def _write_partitions(self, derived: DataFrame,
@@ -436,40 +482,50 @@ class ZarrCollection:
         part_cols = [c for c in derived.columns
                      if c in var_names or c in keys]
 
+        # statistics ride the write task: each task returns its
+        # partition's catalog entry beside the relpath, so the job's own
+        # collect delivers them (no second pass over the write lineage)
+        var_map = self.schema.variable_map
+        kinds = {col: bloom_kind_of(
+                     dtype_to_spark(var_map[col].dtype).typeName())
+                 for col in self.bloom_columns}
+        stats_spec = {
+            "stats_columns": self.stats_columns,
+            "bloom_kinds": {c: k for c, k in kinds.items() if k},
+            "bloom_bits": self.bloom_bits}
+        stats: dict = {}
+
         def write_fn(staging: str) -> None:
-            spec = dict(base_spec, root=staging)
+            spec = dict(base_spec, root=staging, **stats_spec)
 
             def write_partition(pdf: pd.DataFrame) -> pd.DataFrame:
-                return pd.DataFrame(
-                    {"relpath": [write_partition_group(spec, pdf)]})
+                rel, entry = write_partition_group(spec, pdf)
+                return pd.DataFrame({"relpath": [rel],
+                                     "stats": [json.dumps(entry)]})
 
-            (derived.select(*part_cols)
-             .repartition(*[F.col(k) for k in keys])
-             .groupBy(*keys)
-             .applyInPandas(write_partition, "relpath string")
-             .collect())
+            try:
+                rows = (derived.select(*part_cols)
+                        .repartition(*[F.col(k) for k in keys])
+                        .groupBy(*keys)
+                        .applyInPandas(write_partition,
+                                       "relpath string, stats string")
+                        .collect())
+            except PythonException as exc:
+                # a task's SchemaError (a null it cannot store) reaches
+                # the driver wrapped: re-raise it as what it is
+                marker = f"{SchemaError.__module__}.SchemaError: "
+                if marker in str(exc):
+                    raise SchemaError(str(exc).split(marker, 1)[1]
+                                      .splitlines()[0]) from exc
+                raise
+            stats.update((row.relpath, json.loads(row.stats))
+                         for row in rows if row.stats != "{}")
 
-        stats_fn = None
-        if self.stats_columns or self.bloom_columns:
-            def stats_fn(rels):
-                zone = collect_zone_stats(derived, self.partitioning,
-                                          self.stats_columns, rels)
-                if not self.bloom_columns:
-                    return zone
-                from ..collection.stats import collect_bloom_stats
-                bloom = collect_bloom_stats(
-                    derived, self.partitioning, self.bloom_columns,
-                    rels, m_bits=self.bloom_bits)
-                if bloom is None:
-                    return zone
-                merged = {rel: dict(e) for rel, e in (zone or {}).items()}
-                for rel, entry in bloom.items():
-                    merged.setdefault(rel, {}).update(entry)
-                return merged or None
         return staging_proto.staged_publish(
             self._fs, self.path, write_fn=write_fn,
             depth=self.partitioning.depth, mode="swap",
-            catalog=self._catalog, txn=txn, stats_fn=stats_fn)
+            catalog=self._catalog, txn=txn,
+            stats_fn=lambda _rels: stats or None)
 
     # ------------------------------------------------------------------
     def to_df(self, *, variables: Iterable[str] | None = None) -> DataFrame:

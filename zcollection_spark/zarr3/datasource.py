@@ -254,7 +254,7 @@ class ZarrWriter(DataSourceArrowWriter):
             return ZarrCommit(())
         part = pj(json.loads(self.spec["partitioning_json"]))
         pdf = part.derive_pandas(pdf)
-        rels = [write_partition_group(self.spec, group)
+        rels = [write_partition_group(self.spec, group)[0]
                 for _, group in pdf.groupby(self.spec["keys"], sort=True)]
         return ZarrCommit(rels)
 
