@@ -464,29 +464,56 @@ def test_changes_between_two_generations_zarr_parity(spark, tmp_path):
         coll.changes(coll.generation(), g1)
 
 
-def test_zone_keys_predicate_exact_past_multikey_cap(spark, tmp_path):
-    """Past the 512-partition multi-key planning cap the PRUNING caller
-    may drop the predicate (rows re-filter below), but the TIME-TRAVEL
-    caller must get an exact composite-key isin — None there would
-    silently leak post-snapshot partitions into a historical read."""
+def test_zarr_time_travel_exact_over_live_and_retained(spark, tmp_path):
+    """On a 3-key Date("D") zarr layout whose generation-g read mixes
+    live partitions with a retained (pinned) copy, ``at_generation=g``
+    returns exactly generation g's rows: the republished partition from
+    its retained copy, and never a partition committed after g."""
     from zcollection_spark.zarr3.collection import create_zarr_collection
     schema = (zc.SchemaBuilder().add_dimension("i")
               .add_variable("i", "int64", ("i",))
               .add_variable("ts", "datetime64[ns]", ("i",))
+              .add_variable("value", "float64", ("i",))
               .build())
     coll = create_zarr_collection(
         spark, str(tmp_path / "zk"), schema=schema, axis="i",
-        partitioning=zc.Date(("ts",), resolution="D"))
-    rels = [f"year={2000 + y}/month={m}/day={d}"
-            for y in range(2) for m in range(1, 13)
-            for d in range(1, 27)]          # 624 relpaths, 3 keys
-    assert len(rels) > 512
-    assert coll._zone_keys_predicate(rels) is None          # pruning
-    pred = coll._zone_keys_predicate(rels, exact=True)      # time-travel
-    assert pred is not None
-    probe = spark.createDataFrame(
-        [(2000, 1, 1), (2001, 12, 26), (2000, 1, 28), (2002, 1, 1)],
-        "year int, month int, day int")
-    got = sorted(tuple(r) for r in probe.where(pred).collect())
-    # day=28 and year=2002 fall outside the set; the two members match
-    assert got == [(2000, 1, 1), (2001, 12, 26)]
+        partitioning=zc.Date(("ts",), resolution="D"),
+        stats_columns=["value"])
+
+    def ins(rows):
+        pdf = pd.DataFrame({
+            "i": np.array([i for i, _, _ in rows], dtype=np.int64),
+            "ts": pd.to_datetime([t for _, t, _ in rows]).astype(
+                "datetime64[us]"),
+            "value": np.array([v for _, _, v in rows])})
+        coll.insert(spark.createDataFrame(
+            pdf, schema=coll.schema.to_struct_type()))
+
+    def rows(df):
+        return sorted((r.i, r.value) for r in df.collect())
+
+    ins([(1, "2000-01-01T01:00", 1.0), (2, "2000-01-01T02:00", 2.0),
+         (3, "2000-01-02T01:00", 3.0), (4, "2001-12-26T01:00", 4.0)])
+    g = coll.generation()
+    coll.pin_generation(g)
+    ins([(5, "2000-01-01T03:00", 50.0)])        # republish 2000-01-01
+    ins([(6, "2000-01-28T01:00", 6.0),          # post-snapshot keys
+         (7, "2002-01-01T01:00", 7.0),
+         (8, "2001-12-27T01:00", 8.0)])
+    assert len(coll.partitions()) == 6
+    assert coll.partitions(at_generation=g) == [
+        "year=2000/month=1/day=1", "year=2000/month=1/day=2",
+        "year=2001/month=12/day=26"]
+
+    assert rows(coll.query(at_generation=g)) == [
+        (1, 1.0), (2, 2.0), (3, 3.0), (4, 4.0)]
+    assert rows(coll.query(filters="year == 2000 and month == 1",
+                           at_generation=g)) == [(1, 1.0), (2, 2.0),
+                                                 (3, 3.0)]
+    assert rows(coll.query(filters="day >= 26", at_generation=g)) \
+        == [(4, 4.0)]
+    assert rows(coll.query(where="value >= 2.0", at_generation=g)) \
+        == [(2, 2.0), (3, 3.0), (4, 4.0)]
+    # the live read sees the republish and the post-snapshot partitions
+    assert rows(coll.query()) == [(3, 3.0), (4, 4.0), (5, 50.0),
+                                  (6, 6.0), (7, 7.0), (8, 8.0)]

@@ -439,10 +439,9 @@ def _zins(spark, coll, num, vals):
 
 
 def test_zarr_pin_republish_reads_bit_identical(spark, tmp_path):
-    """Zarr-layout parity: the retained scan is a second zarr3
-    datasource read rooted at the retained base (collection config
-    threaded from the live root), unioned with the live scan under the
-    historical key predicates."""
+    """Zarr-layout parity: the historical read routes the republished
+    partition to its retained copy and the others to the live root,
+    all inside one per-partition scan."""
     coll = _mk_zarr(spark, str(tmp_path / "zc"),
                     stats_columns=["value"])
     _zins(spark, coll, 1, [1.0, 1.5])
@@ -454,11 +453,11 @@ def test_zarr_pin_republish_reads_bit_identical(spark, tmp_path):
     assert _rows(coll.query(at_generation=g2)) == before
     assert coll.stale_partitions(g2) == []
     assert _rows(coll.query()) == [(100, 1, 9.0), (200, 2, 2.0)]
-    # a where clause composes with the retained union (zone stats come
-    # from the pinned snapshot, pruning stays sound across both scans)
+    # a where clause composes with the retained copies (zone stats come
+    # from the pinned snapshot, pruning stays sound across both roots)
     got = coll.query(where="value >= 1.4", at_generation=g2)
     assert _rows(got) == [(101, 1, 1.5), (200, 2, 2.0)]
-    # column projection over the union
+    # column projection over live and retained partitions
     proj = coll.query(variables=["value"], at_generation=g2)
     assert sorted(r.value for r in proj.collect()) == [1.0, 1.5, 2.0]
 

@@ -109,6 +109,74 @@ def test_zarr_plan_cache_sees_new_inserts(spark, zarr_events):
     assert zarr_events.query(filters="year == 2025").count() == 3
 
 
+def _seq_collections(spark, tmp_path):
+    """A parquet and a zarr collection over the same Sequence("num")
+    schema, each holding nums [0, 1, 1, 3]."""
+    schema = (zc.SchemaBuilder().add_dimension("i")
+              .add_variable("i", "int64", ("i",))
+              .add_variable("num", "int64", ("i",))
+              .build())
+    out = [zc.create_collection(spark, str(tmp_path / "p"), schema=schema,
+                                axis="i", partitioning=zc.Sequence(("num",))),
+           create_zarr_collection(spark, str(tmp_path / "z"), schema=schema,
+                                  axis="i",
+                                  partitioning=zc.Sequence(("num",)))]
+    for coll in out:
+        _insert_nums(spark, coll, [0, 1, 1, 3], first_i=0)
+    return out
+
+
+def _insert_nums(spark, coll, nums, first_i):
+    pdf = pd.DataFrame({
+        "i": np.arange(len(nums), dtype=np.int64) + first_i,
+        "num": np.array(nums, dtype=np.int64)})
+    coll.insert(spark.createDataFrame(
+        pdf, schema=coll.schema.to_struct_type()))
+
+
+def test_zarr_query_reads_resolved_partitions_on_every_action(spark,
+                                                              tmp_path):
+    """One query() DataFrame reads exactly the partition set query()
+    resolved, whatever is committed before each action — the parquet
+    layout's contract, and now the zarr layout's."""
+    for coll in _seq_collections(spark, tmp_path):
+        df = coll.query(filters="num >= 1")
+        _insert_nums(spark, coll, [2, 2, 2], first_i=100)
+        assert df.count() == 3
+        assert sorted(r.num for r in df.collect()) == [1, 1, 3]
+        assert sorted(df.toPandas()["num"]) == [1, 1, 3]
+        assert coll.query(filters="num >= 1").count() == 6
+
+
+def test_zarr_pruned_query_one_task_per_partition(spark, zarr_events):
+    """A pruned query scans its resolved partitions directly: no
+    Python-DataSource ``BatchScan`` in the executed plan, and the scan
+    job runs exactly one task per resolved partition."""
+    import uuid
+    filters = "day in (3, 4, 5) or day == 9"
+    resolved = zarr_events.partitions(filters=filters)
+    assert len(resolved) == 4
+    df = zarr_events.query(filters=filters, ordered=False)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "BatchScan" not in plan and "PythonDataSource" not in plan, plan
+    assert "MapInArrow" in plan, plan
+    sc = spark.sparkContext
+    group = f"zarr-scan-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        rows = df.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup(group)
+    tasks = sum(tracker.getStageInfo(sid).numTasks
+                for jid in jobs
+                for sid in tracker.getJobInfo(jid).stageIds)
+    assert len(jobs) == 1 and tasks == len(resolved)
+    days = {r["ts"].day for r in rows}
+    assert days == {3, 4, 5, 9}
+
+
 def test_zarr_single_partition_ordered_no_exchange(spark, zarr_events):
     """A pruned one-partition ordered query sorts within the single
     reader task — no orderBy Exchange in the executed plan — and still

@@ -4,8 +4,8 @@ against genuine object-store semantics.
 Executors write zarr chunk/shard objects directly to S3 through
 ``zarr3.blobs`` (no scratch bridge needed — all zarr I/O is Python),
 the staged manifest publish moves them object-by-object, and the
-DataSource reader pulls chunks back with plain GETs plus ranged GETs
-for shard partial reads.  Reference analog: zarr collections over
+per-partition read tasks pull chunks back with plain GETs plus ranged
+GETs for shard partial reads.  Reference analog: zarr collections over
 obstore-S3 (``/root/reference/zcollection/store/obstore_store.py``).
 """
 
@@ -77,6 +77,59 @@ def test_zarr_collection_roundtrip_on_s3(spark, zschema, s3_root):
     assert reopened.query().count() == 4
 
 
+def test_zarr_query_ships_endpoint_to_read_tasks(spark, zschema,
+                                                s3_endpoint, monkeypatch):
+    """Read tasks decode with the endpoint captured on the driver.
+    Python workers keep the environment they were born with, so a store
+    configured after they started — here a second S3 endpoint — is only
+    reached through the conf shipped with the scan.  (moto servers in
+    one process share their buckets, so the second server counts the
+    GETs it serves to tell the two endpoints apart.)"""
+    import boto3
+    from moto.server import (DomainDispatcherApplication,
+                             ThreadedMotoServer, create_backend_app)
+    from werkzeug.serving import make_server
+
+    class CountingMotoServer(ThreadedMotoServer):
+        gets = 0
+
+        def _server_entry(self):
+            inner = DomainDispatcherApplication(create_backend_app)
+
+            def app(environ, start_response):
+                if environ["REQUEST_METHOD"] == "GET":
+                    self.gets += 1
+                return inner(environ, start_response)
+
+            self._server = make_server(self._ip_address, self._port, app,
+                                       True)
+            self._server_ready_event.set()
+            self._server.serve_forever()
+
+    spark.range(2, numPartitions=2).mapInArrow(
+        lambda it: it, "id long").collect()       # workers exist now
+    server = CountingMotoServer(ip_address="127.0.0.1", port=0,
+                                verbose=False)
+    server.start()
+    try:
+        host, port = server.get_host_and_port()
+        endpoint = f"http://{host}:{port}"
+        monkeypatch.setenv("AWS_ENDPOINT_URL", endpoint)
+        boto3.client("s3", endpoint_url=endpoint,
+                     region_name="us-east-1").create_bucket(Bucket="late")
+        coll = create_zarr_collection(spark, "s3://late/store/zcoll",
+                                      schema=zschema, axis="num",
+                                      partitioning=zc.Sequence(("num",)))
+        coll.insert(_zdf(spark, zschema, [0, 0, 1, 2], 3.0))
+        df = coll.query(filters="num >= 1")
+        before = server.gets
+        assert sorted((r["num"], r["v"]) for r in df.collect()) == [
+            (1, 3.0), (2, 3.0)]
+        assert server.gets > before    # the chunks came from this store
+    finally:
+        server.stop()
+
+
 def test_zarr_crash_mid_publish_recovers_on_s3(spark, zschema, s3_root):
     """Kill the file-granular zarr publish after k object moves; repair
     converges to exactly the new generation."""
@@ -127,9 +180,8 @@ def test_zarr_crash_mid_publish_recovers_on_s3(spark, zschema, s3_root):
 def test_zarr_pinned_retention_on_s3(spark, zschema, s3_root):
     """Zarr-layout retention on s3://: the copy-on-republish copies the
     partition's zarr group server-side (CopyObject), and the pinned
-    read's RETAINED SCAN — a second zarr3 datasource rooted at
-    _catalog/retained/gen-N with the collection config threaded from
-    the live root — runs in Python workers against the S3 blob conf."""
+    read decodes that copy under _catalog/retained/gen-N in Python
+    workers, with the S3 blob conf shipped in the task closure."""
     path = f"{s3_root}/zpin"
     coll = create_zarr_collection(spark, path, schema=zschema,
                                   axis="num",

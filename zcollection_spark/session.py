@@ -39,7 +39,9 @@ SESSION_CONF: dict[str, str] = {
     # read parquet naive timestamps as TimestampType (UTC), not NTZ —
     # one timestamp type throughout the engine and its oracle comparisons
     "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
-    # the zarr3 Python DataSource pushes partition-key filters
+    # the raw spark.read.format("zarr3") reader prunes partitions from
+    # pushed key filters (ZarrCollection reads resolve partitions on the
+    # driver and do not need it)
     "spark.sql.python.filterPushdown.enabled": "true",
 }
 

@@ -16,8 +16,13 @@ back) as NaN, so its partition keeps no bounds.  A null in an integer,
 bool or string variable is stored as the variable's ``fill_value``;
 without one the write raises :class:`SchemaError`.
 
-Reads go through the registered ``zarr3`` Python DataSource (partition
-pruning via filter pushdown + per-variable column projection).
+Reads scan the partition list the driver resolved (catalog, key
+filters, zone maps, time-travel snapshot): one Spark task per partition
+decodes only the requested arrays (``_read_partitions``, the parquet
+layout's helper of the same name).  Nothing is planned a second time,
+and a query's DataFrame reads the same partitions on every action.  The
+``zarr3`` Python DataSource (``datasource.py``) stays the raw
+``spark.read/write.format("zarr3")`` surface and shares the decoder.
 
 Scope: numeric/bool/datetime variables (Zarr v3 core types) plus
 variable-length strings (v3 "string" data type via the vlen-utf8 codec).
@@ -280,10 +285,7 @@ class ZarrCollection:
         self._fs = fs_for(self.path, spark)
         self._catalog = Catalog(self._fs, self.path,
                                 walk_depth=partitioning.depth)
-        # base-scan plan cache (see to_df): building a Python-DataSource
-        # DataFrame costs a driver↔Python-worker planning round trip
-        # (~100ms) PER CALL — measured as the dominant cost of a pruned
-        # single-partition query, and pure overhead when nothing changed
+        # full-scan plan cache, keyed on the catalog generation (to_df)
         self._df_cache: dict = {}
         # sidecar bloom payload cache, keyed by catalog ref — initialized
         # here (NOT lazily in query()) so no per-query state lives outside
@@ -410,7 +412,7 @@ class ZarrCollection:
         from the executors, commit the catalog.
 
         ``merge`` mirrors the parquet collection's strategies; colliding
-        partitions are read back through the datasource, merged with one
+        partitions are read back (one task each), merged with one
         DataFrame program, and rewritten wholesale (Zarr groups are
         replaced atomically per partition — stale chunks are removed)."""
         self._write_immutable(df)
@@ -428,13 +430,7 @@ class ZarrCollection:
         colliding = sorted(set(incoming_rel) & existing_rel)
         strategy = resolve_merge(merge)
         if colliding and strategy is not merge_replace:
-            filters = " or ".join(
-                "(" + " and ".join(
-                    f"{k} == {v}" for k, v in
-                    self.partitioning.decode(rel).items()) + ")"
-                for rel in colliding)
-            existing = self.to_df().where(
-                compile_filter(filters).to_column())
+            existing = self._read_partitions(colliding)
             derived = strategy(existing, derived, axis=self.axis,
                                keys=tuple(keys))
         written = self._write_partitions(derived, txn=txn)
@@ -528,44 +524,56 @@ class ZarrCollection:
             stats_fn=lambda _rels: stats or None)
 
     # ------------------------------------------------------------------
-    def to_df(self, *, variables: Iterable[str] | None = None) -> DataFrame:
+    def _read_partitions(self, relpaths: list[str],
+                         variables: Iterable[str] | None = None,
+                         sources: "dict | None" = None) -> DataFrame:
+        """Scan exactly ``relpaths``, one Spark task per partition — the
+        reference's unit of read parallelism (``io/partition.py:235-265``)
+        and the parquet layout's helper of the same name.  ``variables``
+        projects the scan (partition keys always kept); ``sources``
+        (time travel) routes a relpath to its retained ``gen-N`` copy, so
+        live and retained partitions share the one scan.  The schema and
+        the endpoint conf are resolved here on the driver and ride the
+        task closure: Python workers keep the environment they were born
+        with."""
         from .blobs import capture_blob_conf
-        conf = capture_blob_conf()
-        # Reuse the planned base scan while nothing observable changed:
-        # the cache key carries the catalog generation (any insert /
-        # drop / compact bumps it → fresh plan sees the new state) and
-        # the captured endpoint conf (tests repoint stores mid-process).
-        # Pruning is unaffected — partition-key predicates push into
-        # the SAME reader at execution time, whatever filters the query
-        # stacks on top of the cached scan.
+        wanted = (None if variables is None
+                  else set(variables) | set(self.partitioning.keys))
+        schema = datasource.scan_schema(self.schema, self.partitioning,
+                                        wanted)
+        if not relpaths:
+            return self.spark.createDataFrame([], schema)
+        sources = sources or {}
+        tasks = [(sources.get(rel) or self.path, rel,
+                  self.partitioning.decode(rel)) for rel in relpaths]
+        # locals, not self: the closure is pickled into every task
+        dataset_schema, partitioning = self.schema, self.partitioning
+        blob_conf = capture_blob_conf()
+
+        def decode(batches):
+            for batch in batches:
+                for i in batch.column(0).to_pylist():
+                    root, rel, key = tasks[i]
+                    yield from datasource.read_partition(
+                        root, rel, key, schema, dataset_schema,
+                        partitioning, blob_conf=blob_conf)
+
+        return (self.spark.range(len(tasks), numPartitions=len(tasks))
+                .mapInArrow(decode, schema))
+
+    def to_df(self, *, variables: Iterable[str] | None = None) -> DataFrame:
+        """Every live partition, projected to ``variables`` (plus the
+        partition keys).  The plan is cached per (projection, endpoint
+        conf, catalog generation): every commit bumps the generation, so
+        a cached scan's partition list is always the current one."""
+        from .blobs import capture_blob_conf
         key = (None if variables is None else tuple(sorted(variables)),
-               json.dumps(conf, sort_keys=True), self.generation())
+               json.dumps(capture_blob_conf(), sort_keys=True),
+               self.generation())
         cached = self._df_cache.get(key)
         if cached is not None:
             return cached
-        reader = (self.spark.read.format("zarr3")
-                  .option("path", self.path))
-        if conf is not None:
-            # DataSource code runs in Python workers, which keep the env
-            # they were born with — ship the endpoint config in the plan
-            reader = reader.option("blob_conf", json.dumps(conf))
-        if variables is not None:
-            cols = set(variables) | set(self.partitioning.keys)
-            reader = reader.option("columns", ",".join(sorted(cols)))
-        df = reader.load()
-        # The cached scan SHARES one reader instance across every query
-        # planned on top of it, and ``ZarrReader.pushFilters`` keeps its
-        # accepted-filter state on that instance — but Spark only calls
-        # pushFilters when a query HAS pushable filters, so a filterless
-        # query planned after a filtered one would inherit the previous
-        # query's pruning (read [1,2] forever after a num in (1,2)
-        # read).  Baking one trivially-true PUSHABLE predicate into the
-        # cached plan guarantees every derived query's planning invokes
-        # pushFilters and RESETS that state (the reader rejects
-        # IsNotNull, so it survives as a no-op row filter; partition
-        # keys are never null).  Regression-pinned in
-        # test_generations.py::test_zarr_filterless_query_after_filtered.
-        df = df.where(F.col(self.partitioning.keys[0]).isNotNull())
+        df = self._read_partitions(self.partitions(), variables)
         if len(self._df_cache) > 8:  # stale generations/projections
             self._df_cache.clear()
         self._df_cache[key] = df
@@ -666,58 +674,15 @@ class ZarrCollection:
         """
         from pyspark.sql import Window
         from ..collection.collection import ROW_IDX
-        predicate = compile_filter(filters)
-        if not self.partitions(filters=filters):
+        relpaths = self.partitions(filters=filters)
+        if not relpaths:
             return None
-        df = self.to_df()
-        if predicate.expr is not None:
-            df = df.where(predicate.to_column())
+        df = self._read_partitions(relpaths)
         if keep_internal:
             win = (Window.partitionBy(*self.partitioning.keys)
                    .orderBy(self.axis))
             df = df.withColumn(ROW_IDX, F.row_number().over(win) - F.lit(1))
         return df
-
-    def _zone_keys_predicate(self, relpaths: list[str],
-                             exact: bool = False):
-        """Catalyst predicate selecting exactly ``relpaths`` by their
-        partition-key values — how zone-map pruning reaches the zarr3
-        datasource (whose file pruning is driven by pushed key
-        comparisons, not an explicit path list).  Single-key layouts
-        compile to one ``isin`` (scales to large surviving sets);
-        multi-key layouts to an OR of conjunctions, skipped past a cap
-        where the predicate itself would dominate planning — the
-        row-level ``where`` filter keeps correctness either way when
-        pruning is the caller.  ``exact=True`` (time-travel: the
-        predicate IS the correctness boundary, nothing re-filters
-        below) compiles a composite-key ``isin`` past the cap instead
-        of returning None."""
-        keys = list(self.partitioning.keys)
-        decoded = [self.partitioning.decode(rel) for rel in relpaths]
-        if len(keys) == 1:
-            k = keys[0]
-            return F.col(k).isin([d[k] for d in decoded])
-        if len(decoded) > 512:
-            if not exact:
-                return None
-            # one composite string key, one isin: O(1) predicate nodes
-            # at any partition count (keys are integers, so '/'-joined
-            # values are collision-free)
-            composite = F.concat_ws(
-                "/", *[F.col(k).cast("string") for k in keys])
-            return composite.isin(
-                ["/".join(str(d[k]) for k in keys) for d in decoded])
-        clauses = []
-        for d in decoded:
-            conj = None
-            for k in keys:
-                cmp_ = F.col(k) == F.lit(d[k])
-                conj = cmp_ if conj is None else (conj & cmp_)
-            clauses.append(conj)
-        out = clauses[0]
-        for c in clauses[1:]:
-            out = out | c
-        return out
 
     def query(self, *, filters: str | None = None,
               variables: Iterable[str] | None = None,
@@ -725,23 +690,23 @@ class ZarrCollection:
               ordered: bool = True,
               at_generation: int | None = None,
               nested: bool = False) -> DataFrame | None:
-        """Pruned + projected read through the zarr3 datasource; the
-        filter string compiles to a Catalyst predicate whose partition-key
-        comparisons are pushed down into the reader.
+        """Pruned + projected read: ``filters`` (partition-key dialect)
+        selects partitions on the driver, and the scan reads exactly
+        that list, one task per partition (``_read_partitions``) — every
+        action on the returned DataFrame reads the same partition set.
 
         ``where`` (data-column dialect, float literals allowed) adds
         zone-map partition skipping when the collection records
-        ``stats_columns`` — surviving partitions are re-expressed as a
-        pushed key predicate, and the exact row filter is applied on
-        top (parquet-layout parity, collection/collection.py).
+        ``stats_columns`` — only surviving partitions are scanned, and
+        the exact row filter is applied on top (parquet-layout parity,
+        collection/collection.py).
 
         ``at_generation`` reads AS OF a committed generation (parquet-
         layout parity: partition list + zone statistics from the gen-N
         snapshot, staleness-gated — see
-        ``collection.catalog.resolve_snapshot_readable``); the
-        historical partition set is pushed into the reader as a key
-        predicate."""
-        predicate = compile_filter(filters)
+        ``collection.catalog.resolve_snapshot_readable``); republished
+        partitions are read from their retained copies in the same
+        scan."""
         sources = None
         if at_generation is not None:
             # fetch + staleness-verify the snapshot ONCE and thread it
@@ -761,7 +726,6 @@ class ZarrCollection:
             relpaths = self.partitions(filters=filters)
         if not relpaths:
             return None  # quirk Q6 parity
-        pruned = False
         if where is not None and (self.stats_columns
                                   or self.bloom_columns):
             if snap is not None:
@@ -789,17 +753,7 @@ class ZarrCollection:
                             if may_match(resolved[rel])]
                 if not kept:
                     return None
-                pruned = len(kept) < len(relpaths)
                 relpaths = kept
-        live_rels = (relpaths if sources is None
-                     else [r for r in relpaths
-                           if sources.get(r) is None])
-        retained_groups: dict[str, list[str]] = {}
-        if sources is not None:
-            for rel in relpaths:
-                base = sources.get(rel)
-                if base is not None:
-                    retained_groups.setdefault(base, []).append(rel)
         read_vars = variables
         if variables is not None and where is not None:
             # the where predicate's columns must survive the scan
@@ -807,33 +761,7 @@ class ZarrCollection:
             read_vars = sorted(
                 set(variables)
                 | compile_filter(where, allow_float=True).names)
-        parts = []
-        if live_rels:
-            ldf = self.to_df(variables=read_vars)
-            if predicate.expr is not None:
-                ldf = ldf.where(predicate.to_column())
-            if at_generation is not None or pruned:
-                # restrict the scan to exactly the resolved live set
-                # (under time travel: partitions committed OR
-                # republished after gen N must not be read) —
-                # exact=True is the correctness boundary, so the
-                # multi-key planning cap must never silently drop it
-                zp = self._zone_keys_predicate(
-                    live_rels, exact=at_generation is not None)
-                if zp is not None:
-                    ldf = ldf.where(zp)
-            parts.append(ldf)
-        for base, rels in sorted(retained_groups.items()):
-            rdf = self._retained_scan(base, read_vars)
-            if predicate.expr is not None:
-                rdf = rdf.where(predicate.to_column())
-            zp = self._zone_keys_predicate(rels, exact=True)
-            if zp is not None:
-                rdf = rdf.where(zp)
-            parts.append(rdf)
-        df = parts[0]
-        for p in parts[1:]:
-            df = df.unionByName(p)
+        df = self._read_partitions(relpaths, read_vars, sources)
         if where is not None:
             df = df.where(compile_filter(where,
                                          allow_float=True).to_column())
@@ -882,25 +810,6 @@ class ZarrCollection:
             df = nest_struct_columns(df)
         return df
 
-    def _retained_scan(self, base: str, read_vars) -> DataFrame:
-        """Datasource scan over a retained partition base
-        (``_catalog/retained/gen-N``): DATA under ``base``, collection
-        config from the live root (the ``config_root`` option — a
-        retained copy carries no ``_zcollection.json`` of its own)."""
-        from .blobs import capture_blob_conf
-        conf = capture_blob_conf()
-        reader = (self.spark.read.format("zarr3")
-                  .option("path", base)
-                  .option("config_root", self.path))
-        if conf is not None:
-            reader = reader.option("blob_conf", json.dumps(conf))
-        if read_vars is not None:
-            cols = set(read_vars) | set(self.partitioning.keys)
-            reader = reader.option("columns", ",".join(sorted(cols)))
-        df = reader.load()
-        # same pushFilters-reset guard as to_df (keys are never null)
-        return df.where(F.col(self.partitioning.keys[0]).isNotNull())
-
     def drop_partitions(self, *, filters: str | None = None) -> list[str]:
         """Delete matching partition groups + catalog update
         (``collection/base.py:599-634`` parity)."""
@@ -920,10 +829,7 @@ class ZarrCollection:
         relpaths = self.partitions(filters=filters)
         if not relpaths:
             return []
-        predicate = compile_filter(filters)
-        df = self.to_df()
-        if predicate.expr is not None:
-            df = df.where(predicate.to_column())
+        df = self._read_partitions(relpaths)
         keys = list(self.partitioning.keys)
         var_names = [v.name for v in self.schema.partitioned_variables]
         sample = fn(df.limit(0).toPandas())
@@ -941,14 +847,12 @@ class ZarrCollection:
     def map(self, fn: Callable, schema, *,
             filters: str | None = None,
             variables: Iterable[str] | None = None) -> DataFrame | None:
-        """Per-partition pandas fn over the zarr datasource read
+        """Per-partition pandas fn over the matching partitions
         (``collection/base.py:638-696`` parity)."""
-        predicate = compile_filter(filters)
-        if not self.partitions(filters=filters):
+        relpaths = self.partitions(filters=filters)
+        if not relpaths:
             return None
-        df = self.to_df(variables=variables)
-        if predicate.expr is not None:
-            df = df.where(predicate.to_column())
+        df = self._read_partitions(relpaths, variables)
         return df.groupBy(*self.partitioning.keys).applyInPandas(fn, schema)
 
     def repair_catalog(self) -> list[str]:

@@ -1,13 +1,21 @@
 """Spark Python DataSource for Zarr v3 collections (format name "zarr3").
 
+The raw ``spark.read.format("zarr3").option("path", root).load()`` and
+``df.write.format("zarr3")`` surface.  ``ZarrCollection`` reads do not
+go through it: they scan the partition list the driver already resolved
+(``ZarrCollection._read_partitions``) with the same decoder,
+:func:`read_partition`.
+
 Read path: one ``InputPartition`` per collection partition (the reference's
-unit of parallelism, ``io/partition.py:235-265``); partition-key predicates
-are PUSHED DOWN (``pushFilters``) and evaluated driver-side against the
-decoded partition keys, so non-matching partitions are never listed, opened
-or read — the same listing-time pruning as the parquet path.  Column
-projection arrives via the ``columns`` option (the Python DS API has no
-prune hook yet); only requested Zarr arrays are fetched, per-variable, like
-the reference's ``wanted_paths``.
+unit of parallelism, ``io/partition.py:235-265``), listed from the catalog
+(store walk fallback) when the query is planned; partition-key predicates
+are PUSHED DOWN (``pushFilters``, enabled by the session's
+``spark.sql.python.filterPushdown.enabled``) and evaluated driver-side
+against the decoded partition keys, so non-matching partitions are never
+opened or read.  Column projection arrives via the ``columns`` option
+(the Python DS API has no prune hook yet); only requested Zarr arrays are
+fetched, per-variable, like the reference's ``wanted_paths``.  Endpoint
+config for object stores arrives via the ``blob_conf`` option.
 
 Executors return pyarrow RecordBatches built zero-copy from the chunk
 buffers, so the Python-side cost is decompress + Arrow wrap, not
@@ -56,25 +64,102 @@ def _np_to_arrow(values: np.ndarray) -> pa.Array:
     return pa.ListArray.from_arrays(offsets, flat)
 
 
+def scan_schema(dataset_schema: DatasetSchema, partitioning,
+                wanted: "set[str] | None" = None) -> T.StructType:
+    """Spark schema of a partition scan projected to ``wanted`` (all
+    columns when None).  Immutable (non-axis) variables live in
+    ``_immutable/``, not in the partition groups — the collection layer
+    attaches them; derived partition-key columns (Date year/month/…)
+    appear as int64 columns, matching the parquet layout's partition
+    columns."""
+    fields = [f for f in dataset_schema.to_struct_type().fields
+              if not dataset_schema.variable_map[f.name].immutable
+              and (wanted is None or f.name in wanted)]
+    for kname in partitioning.keys:
+        if kname not in dataset_schema.variable_map:
+            if wanted is None or kname in wanted:
+                fields.append(T.StructField(kname, T.LongType()))
+    return T.StructType(fields)
+
+
+def read_partition(root: str, rel: str, key: dict,
+                   spark_schema: T.StructType,
+                   dataset_schema: DatasetSchema, partitioning,
+                   columns: "list[str] | None" = None,
+                   blob_conf: dict | None = None
+                   ) -> Iterator[pa.RecordBatch]:
+    """Decode one partition group ``{root}/{rel}`` (executor side) into
+    Arrow batches of ``spark_schema``, fetching only the requested
+    arrays.  ``key`` is the partition's decoded key; ``blob_conf`` is
+    the driver-captured endpoint config (Python workers keep the
+    environment they were born with, so it must ride the task).  Backs
+    both the collection scans and the raw ``zarr3`` format reader."""
+    from .core import read_array
+    group_path = f"{root}/{rel}"
+    wanted = columns
+    arrays: dict[str, pa.Array] = {}
+    length = None
+    var_map = dataset_schema.variable_map
+    for field in spark_schema.fields:
+        name = field.name
+        if name in partitioning.keys and name not in var_map:
+            continue  # derived key columns appended below
+        if name in var_map and var_map[name].immutable:
+            continue  # lives in _immutable/, attached by the caller
+        if wanted is not None and name not in wanted:
+            continue
+        array_path = f"{group_path}/{name}"
+        try:
+            values = read_array(array_path, conf=blob_conf)
+        except FileNotFoundError:
+            # schema-evolved variable absent from an old partition:
+            # surface the declared fill (zarr missing-chunk semantics)
+            if length is None:
+                length = len(read_array(
+                    f"{group_path}/{dataset_schema.axis}", conf=blob_conf))
+            var = var_map.get(name)
+            if var is None or var.fill_value is None:
+                raise FileNotFoundError(
+                    f"array {name!r} missing in {rel!r} and no "
+                    f"fill_value declared") from None
+            dtype = np.dtype("datetime64[us]"
+                             if var.dtype.startswith("datetime")
+                             else var.dtype)
+            values = np.full(length, var.fill_value, dtype=dtype)
+        if values.dtype.kind == "M":
+            values = values.astype("datetime64[us]")
+        arrays[name] = _np_to_arrow(values)
+        length = len(values)
+    if length is None:  # keys-only projection: length from axis array
+        length = len(read_array(f"{group_path}/{dataset_schema.axis}",
+                                conf=blob_conf))
+    for kname in partitioning.keys:
+        if kname in var_map and kname not in arrays \
+                and (wanted is None or kname in wanted):
+            arrays[kname] = _np_to_arrow(
+                read_array(f"{group_path}/{kname}", conf=blob_conf))
+        elif kname not in var_map:
+            if wanted is None or kname in wanted:
+                arrays[kname] = pa.array(
+                    np.full(length, key[kname], dtype=np.int64))
+    names = [f.name for f in spark_schema.fields if f.name in arrays]
+    yield pa.RecordBatch.from_arrays([arrays[n] for n in names],
+                                     names=names)
+
+
 class ZarrReader(DataSourceReader):
     def __init__(self, root: str, schema: T.StructType,
-                 columns: str | None, blob_conf: dict | None = None,
-                 config_root: str | None = None):
+                 columns: str | None, blob_conf: dict | None = None):
         self.root = root
         self.spark_schema = schema
-        # arrives via the "blob_conf" option (set by ZarrCollection):
-        # DataSource instances run in Python WORKERS, which keep the env
-        # they were born with — endpoint config must ride the plan
+        # arrives via the "blob_conf" option: DataSource instances run in
+        # Python WORKERS, which keep the env they were born with —
+        # endpoint config must ride the plan
         self.blob_conf = blob_conf
-        # config_root: scan DATA under ``root`` but read the collection
-        # config (_zcollection.json) from elsewhere — time-travel scans
-        # of ``_catalog/retained/gen-N`` partition copies, which carry
-        # no config of their own
-        self.dataset_schema, self.partitioning = _load_config(
-            config_root or root, blob_conf)
+        self.dataset_schema, self.partitioning = _load_config(root,
+                                                              blob_conf)
         self.columns = ([c.strip() for c in columns.split(",")]
                         if columns else None)
-        self._pruned: list[str] | None = None
 
     # -- partition-key filter pushdown ---------------------------------
     def pushFilters(self, filters: list[Filter]) -> Iterator[Filter]:
@@ -156,63 +241,10 @@ class ZarrReader(DataSourceReader):
 
     # -- per-partition read (executor side) ----------------------------
     def read(self, partition: InputPartition) -> Iterator[pa.RecordBatch]:
-        from .core import read_array
         rel, key = partition.value
-        group_path = f"{self.root}/{rel}"
-        wanted = self.columns
-        arrays: dict[str, pa.Array] = {}
-        length = None
-        var_map = self.dataset_schema.variable_map
-        for field in self.spark_schema.fields:
-            name = field.name
-            if name in self.partitioning.keys and name not in var_map:
-                continue  # derived key columns appended below
-            if name in var_map and var_map[name].immutable:
-                continue  # lives in _immutable/, attached by the caller
-            if wanted is not None and name not in wanted:
-                continue
-            array_path = f"{group_path}/{name}"
-            try:
-                values = read_array(array_path, conf=self.blob_conf)
-            except FileNotFoundError:
-                # schema-evolved variable absent from an old partition:
-                # surface the declared fill (zarr missing-chunk semantics)
-                if length is None:
-                    length = len(read_array(
-                        f"{group_path}/{self.dataset_schema.axis}",
-                        conf=self.blob_conf))
-                var = var_map.get(name)
-                if var is None or var.fill_value is None:
-                    raise FileNotFoundError(
-                        f"array {name!r} missing in {rel!r} and no "
-                        f"fill_value declared") from None
-                dtype = np.dtype("datetime64[us]"
-                                 if var.dtype.startswith("datetime")
-                                 else var.dtype)
-                values = np.full(length, var.fill_value, dtype=dtype)
-            if values.dtype.kind == "M":
-                values = values.astype("datetime64[us]")
-            arrays[name] = _np_to_arrow(values)
-            length = len(values)
-        if length is None:  # keys-only projection: length from axis array
-            axis = self.dataset_schema.axis
-            length = len(read_array(f"{group_path}/{axis}",
-                                    conf=self.blob_conf))
-        for kname in self.partitioning.keys:
-            if kname in self.dataset_schema.variable_map \
-                    and kname not in arrays and (wanted is None
-                                                 or kname in wanted):
-                arrays[kname] = _np_to_arrow(
-                    read_array(f"{group_path}/{kname}",
-                               conf=self.blob_conf))
-            elif kname not in self.dataset_schema.variable_map:
-                if wanted is None or kname in wanted:
-                    arrays[kname] = pa.array(
-                        np.full(length, key[kname], dtype=np.int64))
-        names = [f.name for f in self.spark_schema.fields
-                 if f.name in arrays]
-        yield pa.RecordBatch.from_arrays([arrays[n] for n in names],
-                                         names=names)
+        return read_partition(self.root, rel, key, self.spark_schema,
+                              self.dataset_schema, self.partitioning,
+                              self.columns, self.blob_conf)
 
 
 class ZarrCommit(WriterCommitMessage):
@@ -287,34 +319,17 @@ class ZarrDataSource(DataSource):
         return json.loads(raw) if raw else None
 
     def schema(self) -> T.StructType:
-        root = self.options.get("config_root") or self.options["path"]
-        dataset_schema, partitioning = _load_config(root,
+        dataset_schema, partitioning = _load_config(self.options["path"],
                                                     self._blob_conf())
-        # immutable (non-axis) variables live in _immutable/, not in the
-        # partition groups — the collection layer broadcast-attaches them
-        struct = T.StructType(
-            [f for f in dataset_schema.to_struct_type().fields
-             if not dataset_schema.variable_map[f.name].immutable])
         columns = self.options.get("columns")
         wanted = ({c.strip() for c in columns.split(",")}
                   if columns else None)
-        if wanted is not None:
-            struct = T.StructType(
-                [f for f in struct.fields if f.name in wanted])
-        # derived partition-key columns (Date year/month/…) appear as
-        # int64 columns, matching the parquet layout's partition columns
-        fields = list(struct.fields)
-        for kname in partitioning.keys:
-            if kname not in dataset_schema.variable_map:
-                if wanted is None or kname in wanted:
-                    fields.append(T.StructField(kname, T.LongType()))
-        return T.StructType(fields)
+        return scan_schema(dataset_schema, partitioning, wanted)
 
     def reader(self, schema: T.StructType) -> ZarrReader:
         return ZarrReader(self.options["path"], schema,
                           self.options.get("columns"),
-                          self._blob_conf(),
-                          self.options.get("config_root"))
+                          self._blob_conf())
 
     def writer(self, schema: T.StructType, overwrite: bool) -> ZarrWriter:
         return ZarrWriter(self.options["path"])
