@@ -1,0 +1,371 @@
+"""One store contract, three object stores.
+
+:class:`S3FS` (moto), :class:`AzureBlobFS` (``azurite_mini``) and
+:class:`GcsFS` (``gcs_mini``) share the store contract of
+``fs._ObjectStoreFS``.  One fixed script runs against each and checks
+both the answers and the per-backend ``api_counts`` of every step:
+the op counts are the metadata-cost currency on object stores, so a
+refactor of the shared code must not move them by a single call.
+
+The same module holds the transport and routing checks that span
+backends: bearer-mode Copy Blob authorization, the shared retry set
+(429/500/502/503/504) and the zarr blob routing for ``gs://``/``az://``.
+"""
+
+import io
+import json
+import os
+import urllib.error
+import urllib.request
+import uuid
+
+import pytest
+
+from zcollection_spark.errors import (CommitConflictError, ReadOnlyError,
+                                      StoreError)
+from zcollection_spark.fs import AzureBlobFS, GcsFS, HttpFS
+
+from tests import azurite_mini, gcs_mini
+
+
+@pytest.fixture(scope="module")
+def az_emulator():
+    srv, endpoint = azurite_mini.start_server()
+    yield srv, endpoint
+    srv.shutdown()
+
+
+@pytest.fixture(scope="module")
+def gcs_emulator():
+    srv, endpoint = gcs_mini.start_server()
+    yield srv, endpoint
+    srv.shutdown()
+
+
+@pytest.fixture(params=["s3", "az", "gcs"])
+def store(request):
+    """``(backend, fs, root)`` with a fresh bucket/container."""
+    name = f"zc-{uuid.uuid4().hex[:12]}"
+    if request.param == "s3":
+        pytest.importorskip("boto3")
+        pytest.importorskip("moto")
+        from zcollection_spark.fs import S3FS
+        root = request.getfixturevalue("s3_root")   # sets the env first
+        return "s3", S3FS(), root
+    if request.param == "az":
+        _, endpoint = request.getfixturevalue("az_emulator")
+        fs = AzureBlobFS(azurite_mini.ACCOUNT, azurite_mini.KEY_B64,
+                         endpoint)
+        return "az", fs, f"az://{name}/store"
+    srv, endpoint = request.getfixturevalue("gcs_emulator")
+    fs = GcsFS(endpoint, bearer_token=gcs_mini.issue_token(srv.state))
+    return "gcs", fs, f"gs://{name}/store"
+
+
+# Per-step op counts of each backend: the metadata-cost budget.  Change
+# them only for a deliberate op-budget change.
+_COMMON_OPS = {
+    "write": {"put": 7},
+    "list": {"list": 3},
+    "walk": {"list": 1},
+    "partitions": {"list": 1},
+    "exists": {"head": 6, "list": 3},
+    "read": {"get": 2},
+    "cas": {"get": 3, "put": 4},
+    "rename_prefix": {"copy": 1, "delete": 1, "head": 3, "list": 4},
+    "delete": {"delete": 2, "head": 3, "list": 3},
+    "localize": {"get": 4, "list": 1},
+    "localize_again": {"list": 1},
+    "remote_delete": {"delete": 1, "head": 1, "list": 1},
+    "localize_purged": {"list": 1},
+    "upload_tree": {"list": 1, "put": 1},
+}
+_EXPECTED_OPS = {
+    # S3's move_file sends CopyObject with no HEAD (a missing source
+    # answers 404); its copy_file HEADs once for the multipart size check
+    "s3": {**_COMMON_OPS,
+           "rename_file": {"copy": 1, "delete": 1, "head": 5, "list": 3},
+           "missing_source": {"copy": 1, "head": 1},
+           "copy_move": {"copy": 2, "delete": 1, "get": 1, "head": 2}},
+    # az and gcs HEAD the source before every single-object copy
+    "az": {**_COMMON_OPS,
+           "rename_file": {"copy": 1, "delete": 1, "head": 6, "list": 3},
+           "missing_source": {"head": 2},
+           "copy_move": {"copy": 2, "delete": 1, "get": 1, "head": 3}},
+}
+_EXPECTED_OPS["gcs"] = _EXPECTED_OPS["az"]
+
+
+def _run_script(fs, root, tmp_path) -> dict:
+    """The fixed contract script; returns ``{step: api_counts}``."""
+    ops: dict = {}
+    fs.api_counts.clear()
+
+    def step(name):
+        ops[name] = {k: v for k, v in fs.api_counts.items() if v}
+        fs.api_counts.clear()
+
+    p = f"{root}/p"
+    for rel in ("num=1/a.bin", "num=1/b.bin", "num=2/a.bin",
+                "num=10/a.bin", "_meta/x.json", ".hidden/y", "top.txt"):
+        fs.write_text(f"{p}/{rel}", rel)
+    step("write")
+
+    # delimiter boundary: num=1 must not capture num=10's keys
+    assert fs.list_files(f"{p}/num=1") == ["a.bin", "b.bin"]
+    assert fs.list_files(p) == ["top.txt"]
+    assert fs.list_dirs(p) == [".hidden", "_meta", "num=1", "num=10",
+                               "num=2"]
+    step("list")
+
+    assert fs.walk_files(p) == ["num=1/a.bin", "num=1/b.bin",
+                                "num=10/a.bin", "num=2/a.bin", "top.txt"]
+    step("walk")
+
+    assert fs.list_partition_dirs(p, 1) == ["num=1", "num=10", "num=2"]
+    step("partitions")
+
+    assert fs.exists(f"{p}/num=1")            # prefix-only "directory"
+    assert not fs.exists(f"{p}/num=3")
+    assert not fs.exists(f"{p}/num")          # no partial-name match
+    assert fs.exists_file(f"{p}/top.txt")
+    assert not fs.exists_file(f"{p}/num=1")
+    fs.mtime(f"{p}/top.txt")   # one HEAD (azurite_mini sends no date)
+    step("exists")
+
+    assert fs.read_text(f"{p}/top.txt") == "top.txt"
+    with pytest.raises(FileNotFoundError):
+        fs.read_bytes(f"{p}/ghost")
+    step("read")
+
+    tok = fs.write_if(f"{root}/state.json", "v1", None)
+    text, cur = fs.read_versioned(f"{root}/state.json")
+    assert text == "v1" and cur == tok
+    with pytest.raises(CommitConflictError):
+        fs.write_if(f"{root}/state.json", "v1b", None)
+    tok2 = fs.write_if(f"{root}/state.json", "v2", tok)
+    with pytest.raises(CommitConflictError):
+        fs.write_if(f"{root}/state.json", "v3", tok)
+    assert fs.read_versioned(f"{root}/state.json") == ("v2", tok2)
+    assert fs.read_versioned(f"{root}/nothing.json") == (None, None)
+    step("cas")
+
+    assert fs.rename(f"{p}/num=2", f"{p}/num=3")       # prefix rename
+    assert fs.list_files(f"{p}/num=3") == ["a.bin"]
+    assert not fs.exists(f"{p}/num=2")
+    step("rename_prefix")
+
+    assert fs.rename(f"{p}/top.txt", f"{p}/top2.txt")  # one object
+    assert not fs.rename(f"{p}/top2.txt", f"{p}/num=1/a.bin")  # occupied
+    assert not fs.rename(f"{p}/ghost", f"{p}/ghost2")
+    step("rename_file")
+
+    assert fs.move_file(f"{p}/ghost", f"{p}/g2") is False
+    assert fs.copy_file(f"{p}/ghost", f"{p}/g2") is False
+    step("missing_source")
+
+    assert fs.copy_file(f"{p}/top2.txt", f"{p}/top3.txt") is True
+    assert fs.move_file(f"{p}/top3.txt", f"{p}/top4.txt") is True
+    assert fs.read_text(f"{p}/top4.txt") == "top.txt"
+    assert not fs.exists_file(f"{p}/top3.txt")
+    step("copy_move")
+
+    fs.delete(f"{p}/num=3")                            # prefix delete
+    fs.delete(f"{p}/top4.txt")                         # one object
+    assert not fs.exists(f"{p}/num=3")
+    step("delete")
+
+    mirror = fs.localize(p)
+    assert sorted(os.listdir(mirror)) == ["num=1", "num=10", "top2.txt"]
+    with open(os.path.join(mirror, "num=1", "b.bin")) as fh:
+        assert fh.read() == "num=1/b.bin"
+    step("localize")
+
+    assert fs.localize(p) == mirror
+    step("localize_again")
+
+    fs.delete(f"{p}/num=1/b.bin")
+    step("remote_delete")
+
+    fs.localize(p)
+    assert os.listdir(os.path.join(mirror, "num=1")) == ["a.bin"]
+    step("localize_purged")
+
+    local = tmp_path / "up"
+    (local / "num=5").mkdir(parents=True)
+    (local / "num=5" / "c.bin").write_bytes(b"c")
+    (local / "_hidden").mkdir()
+    (local / "_hidden" / "skip").write_bytes(b"s")
+    assert fs.upload_tree(str(local), f"{root}/u") == ["num=5/c.bin"]
+    assert not local.exists()
+    assert fs.walk_files(f"{root}/u") == ["num=5/c.bin"]
+    step("upload_tree")
+    return ops
+
+
+def test_store_contract_and_op_budget(store, tmp_path):
+    backend, fs, root = store
+    assert fs.supports_atomic_rename(root) is False
+    assert fs.requires_localization is True
+    assert _run_script(fs, root, tmp_path) == _EXPECTED_OPS[backend]
+
+
+# ---------------------------------------------------------------------------
+# Copy Blob under bearer auth (any container pair)
+# ---------------------------------------------------------------------------
+
+def test_az_bearer_cross_container_move_authorizes_and_checks_copy(
+        az_emulator, monkeypatch):
+    """Under AAD/MSI bearer auth the source URL carries no credential,
+    so every Copy Blob — cross-container included — must send
+    ``x-ms-copy-source-authorization``; and a ``pending`` copy must
+    raise before the move deletes its source."""
+    srv, endpoint = az_emulator
+    fs = AzureBlobFS(azurite_mini.ACCOUNT, endpoint=endpoint,
+                     bearer_token=azurite_mini.issue_token(srv.state))
+    src = f"az://zc-{uuid.uuid4().hex[:12]}/a.txt"
+    dst = f"az://zc-{uuid.uuid4().hex[:12]}/a.txt"
+    fs.write_text(src, "x")
+    real = AzureBlobFS._request
+    copies = []
+
+    def spy(self, method, container, key, params=None, headers=None,
+            body=None):
+        if "x-ms-copy-source" in (headers or {}):
+            copies.append(dict(headers))
+        return real(self, method, container, key, params, headers, body)
+
+    monkeypatch.setattr(AzureBlobFS, "_request", spy)
+    assert fs.move_file(src, dst) is True
+    assert len(copies) == 1
+    assert copies[0]["x-ms-copy-source-authorization"].startswith(
+        "Bearer ")
+    assert fs.read_text(dst) == "x" and not fs.exists_file(src)
+
+    def pending(self, method, container, key, params=None, headers=None,
+                body=None):
+        status, hdrs, data = real(self, method, container, key, params,
+                                  headers, body)
+        if "x-ms-copy-source" in (headers or {}):
+            hdrs = {**hdrs, "x-ms-copy-status": "pending"}
+        return status, hdrs, data
+
+    monkeypatch.setattr(AzureBlobFS, "_request", pending)
+    with pytest.raises(StoreError, match="pending"):
+        fs.move_file(dst, src)
+    assert fs.exists_file(dst)      # the source survives a pending copy
+
+
+# ---------------------------------------------------------------------------
+# one retry set for every urllib client
+# ---------------------------------------------------------------------------
+
+def _scripted_urlopen(script, calls):
+    """Fake ``urlopen`` answering each request with the next status of
+    ``script``; 200 carries body ``ok``."""
+    def urlopen(req, timeout=None):
+        code = script[len(calls)]
+        calls.append(code)
+        if code == 200:
+            class _Resp:
+                status = 200
+                headers = {"ETag": '"e1"'}
+
+                def read(self):
+                    return b"ok"
+
+                def __enter__(self):
+                    return self
+
+                def __exit__(self, *a):
+                    return False
+            return _Resp()
+        raise urllib.error.HTTPError(req.full_url, code, "err", {},
+                                     io.BytesIO(b""))
+    return urlopen
+
+
+@pytest.mark.parametrize("backend,code", [
+    ("az", 502), ("gcs", 504), ("http", 429), ("http_blobs", 429)])
+def test_transient_statuses_are_retried_by_every_client(backend, code,
+                                                        monkeypatch):
+    """429/500/502/503/504 are transient for all four urllib clients
+    (AzureBlobFS, GcsFS, HttpFS, HttpBlobs): each gets a retry, and the
+    retry's answer is the result."""
+    import time
+
+    from zcollection_spark.zarr3.blobs import HttpBlobs
+    calls = []
+    monkeypatch.setattr(urllib.request, "urlopen",
+                        _scripted_urlopen([code, 200], calls))
+    monkeypatch.setattr(time, "sleep", lambda s: None)
+    url = "http://example.invalid/c/k"
+    if backend == "az":
+        fs = AzureBlobFS(account="acct", key=azurite_mini.KEY_B64,
+                         endpoint="http://example.invalid/acct")
+        assert fs.read_bytes("az://c/k") == b"ok"
+    elif backend == "gcs":
+        fs = GcsFS("http://example.invalid", bearer_token="tok")
+        assert fs.read_bytes("gs://c/k") == b"ok"
+    elif backend == "http":
+        assert HttpFS().read_bytes(url) == b"ok"
+    else:
+        assert HttpBlobs().try_read_bytes(url) == b"ok"
+    assert calls == [code, 200]
+
+
+# ---------------------------------------------------------------------------
+# zarr blob routing on gs:// / az://
+# ---------------------------------------------------------------------------
+
+_CRED_ENV = ("GCS_BEARER_TOKEN", "GCS_KEYFILE", "GCE_METADATA_ENDPOINT",
+             "GCS_JSON_ENDPOINT", "GCS_ACCESS_KEY_ID",
+             "GCS_SECRET_ACCESS_KEY", "AZURE_STORAGE_ACCOUNT",
+             "AZURE_STORAGE_KEY", "AZURE_STORAGE_SAS_TOKEN",
+             "AZURE_STORAGE_BEARER_TOKEN", "AZURE_MSI_ENDPOINT",
+             "AZURE_BLOB_ENDPOINT")
+
+
+def test_zarr_blobs_route_gs_keyfile_and_never_fall_back_local(
+        gcs_emulator, tmp_path, monkeypatch):
+    """With only ``GCS_KEYFILE`` set, ``fs_for`` commits the catalog to
+    GCS, so the zarr chunks must go there too: the keyfile rides the
+    shipped blob conf and routes to the GCS blob backend.  A gs:// or
+    az:// path with no credentials raises instead of writing under a
+    local ``./gs:/bucket/...`` directory."""
+    from zcollection_spark.fs import gcs_keyfile_token_provider
+    from zcollection_spark.zarr3 import blobs
+    srv, endpoint = gcs_emulator
+    for var in _CRED_ENV:
+        monkeypatch.delenv(var, raising=False)
+    keyfile = tmp_path / "sa.json"
+    keyfile.write_text(json.dumps(
+        gcs_mini.register_service_account(srv.state, endpoint)))
+    monkeypatch.setenv("GCS_KEYFILE", str(keyfile))
+    monkeypatch.setenv("GCS_JSON_ENDPOINT", endpoint)
+    monkeypatch.chdir(tmp_path)
+
+    conf = blobs.capture_blob_conf()
+    assert conf["gs_keyfile"] == str(keyfile)
+    root = f"gs://zc-{uuid.uuid4().hex[:12]}/coll"
+    store = blobs.blobs_for(f"{root}/num=1", conf)
+    assert not isinstance(store, blobs.LocalBlobs)
+    store.write_bytes(f"{root}/num=1/c.0", b"0123456789")
+    assert store.read_at(f"{root}/num=1/c.0", 2, 4) == b"2345"
+    assert store.read_tail(f"{root}/num=1/c.0", 3) == b"789"
+    assert store.try_read_bytes(f"{root}/num=1/missing") is None
+    fs = GcsFS(endpoint,
+               token_provider=gcs_keyfile_token_provider(str(keyfile)))
+    assert fs.read_bytes(f"{root}/num=1/c.0") == b"0123456789"
+    assert not (tmp_path / "gs:").exists()
+
+    monkeypatch.delenv("GCS_KEYFILE")
+    for path in ("gs://bkt/coll/num=1", "az://c/coll/num=1"):
+        with pytest.raises(StoreError, match="credentials"):
+            blobs.blobs_for(path, None)
+
+
+def test_http_blobs_stay_read_only():
+    from zcollection_spark.zarr3.blobs import HttpBlobs
+    with pytest.raises(ReadOnlyError):
+        HttpBlobs().write_bytes("http://example.invalid/x", b"")

@@ -897,8 +897,7 @@ class Catalog:
         # env-reconstructible classes before fanning out.
         from .. import fs as fsmod
         inner = getattr(self._fs, "inner", self._fs)  # unwrap CountingFS
-        if not isinstance(inner, (fsmod.LocalFS, fsmod.S3FS,
-                                  fsmod.AzureBlobFS, fsmod.GcsFS)):
+        if not isinstance(inner, (fsmod.LocalFS, fsmod._ObjectStoreFS)):
             return None
         from pyspark.sql import SparkSession
         return SparkSession.getActiveSession()

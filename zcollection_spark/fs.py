@@ -13,6 +13,9 @@ implementations:
 - :class:`HadoopFS` — py4j bridge to ``org.apache.hadoop.fs.FileSystem`` for
   any scheme the Spark runtime supports (object stores); the path-walk and
   read/write primitives go through the JVM so no extra Python deps are needed.
+- :class:`_ObjectStoreFS` — the object-store contract written once over
+  per-backend primitives: :class:`S3FS` (boto3), :class:`AzureBlobFS` and
+  :class:`GcsFS` (REST over the retrying :func:`http_request` transport).
 
 Atomicity note: on object stores a single PUT is atomic, which is all the
 catalog swap protocol requires (see ``catalog.py``).
@@ -708,39 +711,419 @@ class CountingFS:
         return getattr(self.inner, name)
 
 
-class S3FS:
-    """S3-compatible object store backend via boto3 — REAL S3 semantics:
-    a flat keyspace, atomic single-object PUT/DELETE, **no rename at
-    all** (``rename`` is CopyObject + DeleteObject, non-atomic by
-    nature), directories are pure prefix fictions.  This is the store
-    class the manifest-driven staging publish was designed for
-    (staging.py design note); ``supports_atomic_rename`` is honestly
-    False here, so every write takes the file-granular path.
+#: Statuses the urllib clients retry: throttles and transient
+#: server/gateway faults.  Every other status is an answer.
+_RETRY_STATUSES = frozenset({429, 500, 502, 503, 504})
 
-    Mirrors the reference's moto-S3 contract surface
-    (``/root/reference/zcollection/tests/test_backends.py:49-430``,
-    ``store/obstore_store.py:27``) on boto3.
+#: Bounded transient-fault retry count of :func:`http_request`.
+_HTTP_RETRIES = 3
+
+
+def http_request(method: str, url: str, headers: dict | None = None,
+                 body: bytes | None = None, *, timeout: float = 60,
+                 authorize=None, refresh=None, denied=None):
+    """One urllib exchange with bounded retry → ``(status, headers,
+    body)`` — the transport under :class:`AzureBlobFS`, :class:`GcsFS`,
+    :class:`HttpFS` and the zarr ``HttpBlobs``.
+
+    Object stores and CDNs throttle routinely, and a flaky window must
+    not fail an insert or read as absence: statuses in
+    ``_RETRY_STATUSES`` and connection errors are retried with
+    exponential backoff, at most ``_HTTP_RETRIES`` times.  Any other
+    status (absent, conflict, precondition) is RETURNED, never raised,
+    so each caller maps it per operation (ONLY a real 404 may read as
+    absent).
+
+    ``authorize(headers)`` runs before every attempt (request signing,
+    bearer header).  ``refresh``, given for provider-backed bearer
+    auth, gets ONE call on the first 401 — the token may simply have
+    expired mid-session — and that retry does not consume a
+    transient-retry slot, so a 401 landing on the last attempt after a
+    throttle streak still gets its refreshed-token retry.  Any other
+    401/403 raises ``denied(status)`` when ``denied`` is given.  A
+    connection error on the last attempt re-raises the ``URLError``.
+    """
+    import time
+    import urllib.error
+    import urllib.request
+    headers = dict(headers or {})
+    refreshed = refresh is None
+    attempt = 0
+    while True:
+        if authorize is not None:
+            authorize(headers)
+        req = urllib.request.Request(url, data=body, headers=headers,
+                                     method=method)
+        try:
+            with urllib.request.urlopen(req, timeout=timeout) as resp:
+                return resp.status, dict(resp.headers), resp.read()
+        except urllib.error.HTTPError as exc:
+            data = exc.read()
+            if exc.code == 401 and not refreshed:
+                refreshed = True
+                refresh()
+                continue
+            if exc.code in (401, 403) and denied is not None:
+                raise denied(exc.code) from exc
+            if exc.code not in _RETRY_STATUSES \
+                    or attempt == _HTTP_RETRIES:
+                return exc.code, dict(exc.headers), data
+        except urllib.error.URLError:
+            if attempt == _HTTP_RETRIES:
+                raise
+        # every branch above returns or raises at the final attempt,
+        # so this backoff only runs with retries left
+        time.sleep(0.1 * (2 ** attempt))
+        attempt += 1
+
+
+def _hidden(rel: str) -> bool:
+    """True when any component of ``rel`` is ``_``/``.``-prefixed."""
+    return any(c.startswith(("_", ".")) for c in rel.split("/"))
+
+
+def _purge_mirror(mirror: str, rel: str, seen: set,
+                  versions: dict) -> None:
+    """Remove mirror files under ``rel`` that the remote no longer
+    has (not in ``seen``): a republished partition renames its files,
+    and a stale generation must never leak into a scan."""
+    local_prefix = os.path.join(mirror, *rel.split("/")) if rel \
+        else mirror
+    if os.path.isdir(local_prefix):
+        for dirpath, _, filenames in os.walk(local_prefix):
+            for fname in filenames:
+                full = os.path.join(dirpath, fname)
+                if full not in seen:
+                    os.remove(full)
+                    versions.pop(full, None)
+
+
+class _ObjectStoreFS:
+    """The store contract shared by the object-store backends
+    (:class:`S3FS`, :class:`AzureBlobFS`, :class:`GcsFS`), written once
+    over a few backend primitives.  The reference gets every scheme
+    from one store abstraction the same way (its
+    ``store/obstore_store.py:27`` and ``store/factory.py:22-79``).
+
+    Object stores are a flat keyspace: single-object PUT/DELETE are
+    atomic, directories are pure prefix fictions, and there is **no
+    rename** — ``rename`` is copy + delete, non-atomic by nature (every
+    scheme here is in ``_NON_ATOMIC_RENAME_SCHEMES``).
+    ``supports_atomic_rename`` is honestly False, so collections take
+    the manifest-driven file-granular publish path (staging.py design
+    note).
 
     Two planes:
 
-    - **metadata plane** (config/catalog/intents/publish): every op is a
-      direct S3 API call; ``api_counts`` tallies them so benches can
-      assert op budgets (HEAD/GET/PUT/LIST/COPY/DELETE).
-    - **bulk plane**: on a production cluster Spark reads/writes
-      ``s3a://`` natively through the Hadoop connector and this class
-      never touches row data.  When the JVM has no S3 connector (this
-      environment), ``requires_localization`` switches the collection to
-      a scratch bridge: Spark jobs write to local scratch and
-      :meth:`upload_tree` PUTs the files (returning the exact file
-      manifest — zero listing on the commit path); reads go through
-      :meth:`localize`, an ETag-validated local mirror.  The protocol
-      traffic — staging, intents, manifests, publish copies, catalog
-      PUTs, recovery — is identical in both configurations.
+    - **metadata plane** (config/catalog/intents/publish): every op is
+      a direct store API call; ``api_counts`` tallies them (head, get,
+      put, list, copy, delete) so benches and tests can assert op
+      budgets.
+    - **bulk plane**: on a production cluster Spark reads and writes
+      the scheme natively through its Hadoop connector (hadoop-aws,
+      hadoop-azure, gcs-connector) and this class never touches row
+      data.  When the JVM has no connector, ``requires_localization``
+      switches the collection to a scratch bridge: Spark jobs write to
+      local scratch and :meth:`upload_tree` PUTs the files (returning
+      the exact file manifest — zero listing on the commit path);
+      reads go through :meth:`localize`, a version-validated local
+      mirror.  The protocol traffic — staging, intents, manifests,
+      publish copies, catalog PUTs, recovery — is identical in both
+      configurations.
+
+    Backend primitives (``bucket`` is the S3/GCS bucket or the Azure
+    container; each call tallies its own ``api_counts``):
+
+    - ``_head(bucket, key)`` → metadata, or None for a real 404 ONLY: a
+      throttle/5xx/403 answered as "absent" would make recovery re-run
+      phase-1 parking on a published generation and wedge the
+      partition;
+    - ``_list_page(bucket, prefix, delimiter, token, limit)`` → one
+      LIST page ``(rows, prefixes, next_token)`` with ``(key, version,
+      size)`` rows;
+    - ``_get(bucket, key)`` → ``(body, version)``, None when absent;
+    - ``_put(bucket, key, data)``, and ``_put_if(bucket, key, data,
+      token)``: the conditional PUT (create-only for a None token,
+      replace-exactly-this otherwise) returning the new version, or
+      raising :class:`CommitConflictError` when the race is lost;
+    - ``_copy_key(sb, sk, db, dk, listed)`` → server-side copy, False
+      ONLY when the source is missing (``listed``: the key was just
+      listed, so no existence probe is needed);
+    - ``_delete_keys(bucket, keys)``.
     """
 
-    #: Collection bulk I/O must go through the scratch bridge (no JVM
-    #: S3 connector assumed; flip off when running with hadoop-aws).
     requires_localization = True
+
+    def __init__(self, scratch_dir: str | None, tag: str):
+        from collections import Counter
+        self._scratch_root = scratch_dir or os.path.join(
+            tempfile.gettempdir(), f"{tag}-{uuid.uuid4().hex[:8]}")
+        #: localize mirror file -> version token (ETag / generation)
+        self._versions: dict[str, str] = {}
+        self.api_counts = Counter()
+
+    @staticmethod
+    def _bk(path: str) -> tuple[str, str]:
+        """``(bucket, key)`` of ``scheme://bucket/key``; the scheme is
+        not checked (gs:// rides :class:`S3FS` through the interop
+        API)."""
+        bucket, _, key = path.split("://", 1)[-1].partition("/")
+        return bucket, key.strip("/")
+
+    def _iter_keys(self, bucket: str, prefix: str):
+        """All ``(key, version, size)`` under ``prefix`` — flat
+        paginated LIST; O(n/page) round-trips, never a per-directory
+        walk."""
+        token = None
+        while True:
+            rows, _, token = self._list_page(bucket, prefix, token=token)
+            yield from rows
+            if not token:
+                return
+
+    def _rel_keys(self, root: str):
+        bucket, base = self._bk(root)
+        start = len(base) + 1 if base else 0
+        for key, version, size in self._iter_keys(
+                bucket, base + "/" if base else ""):
+            yield key[start:], version, size
+
+    # -- protocol surface ----------------------------------------------
+    def supports_atomic_rename(self, path: str) -> bool:
+        return False
+
+    def mkdirs(self, path: str) -> None:
+        pass  # directories are prefix fictions on a flat keyspace
+
+    def exists(self, path: str) -> bool:
+        bucket, key = self._bk(path)
+        if not key:
+            return True
+        if self._head(bucket, key) is not None:
+            return True
+        rows, prefixes, _ = self._list_page(bucket, key + "/", limit=1)
+        return bool(rows or prefixes)
+
+    def exists_file(self, path: str) -> bool:
+        """Existence of a single OBJECT: one HEAD, no prefix LIST.
+        ``exists`` must also answer for directory fictions, which costs
+        a LIST on every miss — per-file publish checks use this instead
+        (the dominant saving on the commit path: one LIST per staged
+        file at scale)."""
+        return self._head(*self._bk(path)) is not None
+
+    def read_text(self, path: str) -> str:
+        return self.read_bytes(path).decode("utf-8")
+
+    def read_bytes(self, path: str) -> bytes:
+        got = self._get(*self._bk(path))
+        if got is None:
+            raise FileNotFoundError(path)
+        return got[0]
+
+    def write_text(self, path: str, data: str) -> None:
+        self.write_bytes(path, data.encode("utf-8"))
+
+    def write_bytes(self, path: str, data: bytes) -> None:
+        self._put(*self._bk(path), data)
+
+    def read_versioned(self, path: str) -> tuple[str | None, str | None]:
+        """``(text, version)`` — the ETag/generation is the store's
+        native version token for :meth:`write_if`'s conditional PUT."""
+        got = self._get(*self._bk(path))
+        if got is None:
+            return None, None
+        return got[0].decode("utf-8"), got[1]
+
+    def write_if(self, path: str, data: str, token: str | None) -> str:
+        """True server-side compare-and-swap: one conditional PUT, no
+        locks, scales to any number of writers.  Returns the new
+        version straight from the PUT response (no separate read that a
+        racing takeover could poison)."""
+        try:
+            return self._put_if(*self._bk(path), data.encode("utf-8"),
+                                token)
+        except CommitConflictError as exc:
+            raise CommitConflictError(
+                f"{path}: conditional PUT lost the race ({exc})") from None
+
+    def delete(self, path: str) -> None:
+        bucket, key = self._bk(path)
+        doomed = [key] if self._head(bucket, key) is not None else []
+        doomed += [k for k, _, _ in self._iter_keys(bucket, key + "/")]
+        self._delete_keys(bucket, doomed)
+
+    def _delete_source(self, bucket: str, key: str) -> None:
+        """Post-copy source delete: a silent failure would leave BOTH
+        src and dst visible as duplicate data, so anything but success
+        or already-gone raises."""
+        try:
+            self._delete_keys(bucket, [key])
+        except StoreError as exc:
+            raise StoreError(f"{exc} after copy (source blob survives; "
+                             f"re-run the move)") from exc
+
+    def move_file(self, src: str, dst: str) -> bool:
+        """Single-object move where the CALLER has already done any
+        dst-exists check: one server-side copy + one delete, no
+        redundant LIST round-trips.  The publish hot path uses this —
+        per-file metadata cost is the commit-path currency at large
+        file counts.  False ONLY when the source object is missing."""
+        sb, sk = self._bk(src)
+        if not self._copy_key(sb, sk, *self._bk(dst)):
+            return False
+        self._delete_source(sb, sk)
+        return True
+
+    def copy_file(self, src: str, dst: str) -> bool:
+        """Non-destructive server-side copy (bytes never leave the
+        store; retention copies of pinned partitions use this instead
+        of a driver byte round-trip).  Same missing-source contract as
+        :meth:`move_file`."""
+        return self._copy_key(*self._bk(src), *self._bk(dst))
+
+    def rename(self, src: str, dst: str) -> bool:
+        """Copy+delete move of one object, or of every object under a
+        prefix; False if dst exists or src is absent.  Each object moves
+        as two atomic ops with a visible window between them; the
+        staging protocol's exists-checks are what make crashes in the
+        window recoverable."""
+        if self.exists(dst):
+            return False
+        sb, sk = self._bk(src)
+        if self._head(sb, sk) is not None:  # single object
+            return self.move_file(src, dst)
+        keys = [k for k, _, _ in self._iter_keys(sb, sk + "/")]
+        if not keys:
+            return False
+        db, dk = self._bk(dst)
+        for k in keys:
+            if not self._copy_key(sb, k, db, dk + k[len(sk):],
+                                  listed=True):
+                raise FileNotFoundError(f"{src}: {k} vanished mid-rename")
+            self._delete_source(sb, k)
+        return True
+
+    def _delimited(self, path: str) -> tuple[list[str], list[str]]:
+        bucket, key = self._bk(path)
+        prefix = key + "/" if key else ""
+        files, dirs, token = [], set(), None
+        while True:
+            rows, prefixes, token = self._list_page(
+                bucket, prefix, delimiter="/", token=token)
+            files += [k[len(prefix):] for k, _, _ in rows if k != prefix]
+            # a set: GCS repeats the prefixes on every page
+            dirs.update(p[len(prefix):].rstrip("/") for p in prefixes)
+            if not token:
+                return sorted(files), sorted(dirs)
+
+    def list_files(self, path: str) -> list[str]:
+        return self._delimited(path)[0]
+
+    def list_dirs(self, path: str) -> list[str]:
+        return self._delimited(path)[1]
+
+    def walk_files(self, root: str) -> list[str]:
+        """Staging fast path (staging._walk_files): ONE flat LIST of the
+        prefix instead of O(dirs) recursive listings; hidden components
+        skipped to match the recursive walker's contract."""
+        return sorted(rel for rel, _, _ in self._rel_keys(root)
+                      if not _hidden(rel))
+
+    def list_partition_dirs(self, root: str, depth: int) -> list[str]:
+        out = set()
+        for rel, _, _ in self._rel_keys(root):
+            comps = rel.split("/")
+            if len(comps) <= depth or _hidden(rel) \
+                    or not all("=" in c for c in comps[:depth]):
+                continue
+            out.add("/".join(comps[:depth]))
+        return sorted(out)
+
+    # -- bulk bridge (no-JVM-connector configurations only) -------------
+    def new_scratch_dir(self) -> str:
+        path = os.path.join(self._scratch_root, "w", uuid.uuid4().hex)
+        os.makedirs(path, exist_ok=True)
+        return path
+
+    def upload_tree(self, local_dir: str, remote_dir: str) -> list[str]:
+        """PUT every non-hidden file under ``local_dir`` to the remote
+        prefix; returns the relative file list — the writer-side manifest
+        that lets the staged publish skip listing entirely."""
+        uploaded: list[str] = []
+        for dirpath, dirnames, filenames in os.walk(local_dir):
+            dirnames[:] = [d for d in dirnames
+                           if not d.startswith(("_", "."))]
+            for fname in filenames:
+                if fname.startswith(("_", ".")):
+                    continue
+                full = os.path.join(dirpath, fname)
+                rel = os.path.relpath(full, local_dir).replace(os.sep, "/")
+                with open(full, "rb") as fh:
+                    self.write_bytes(f"{remote_dir}/{rel}", fh.read())
+                uploaded.append(rel)
+        shutil.rmtree(local_dir, ignore_errors=True)
+        return sorted(uploaded)
+
+    def localize(self, root: str,
+                 relpaths: "list[str] | None" = None) -> str:
+        """Version-validated local mirror of ``root`` (or just
+        ``relpaths`` under it) for Spark to read; returns the mirror
+        base dir.
+
+        Unchanged objects (same ETag/generation) are never
+        re-downloaded; objects that vanished remotely are removed from
+        the mirror so a stale generation can never leak into a scan.
+        This bridge exists for connector-less environments — with the
+        Hadoop connector on the cluster, reads are direct scans and this
+        is never called.
+        """
+        bucket, base = self._bk(root)
+        mirror = os.path.join(self._scratch_root, "r", bucket,
+                              base.replace("/", "_"))
+        for rel in (relpaths if relpaths is not None else [""]):
+            rkey = f"{base}/{rel}".strip("/") if rel else base
+            seen = set()
+            for key, version, _ in self._iter_keys(
+                    bucket, rkey + "/" if rkey else ""):
+                krel = key[len(base) + 1:] if base else key
+                if rel == "" and _hidden(krel):
+                    continue
+                local = os.path.join(mirror, *krel.split("/"))
+                seen.add(local)
+                if self._versions.get(local) == version \
+                        and os.path.exists(local):
+                    continue
+                os.makedirs(os.path.dirname(local), exist_ok=True)
+                with open(local, "wb") as fh:
+                    fh.write(self.read_bytes(f"{root.rstrip('/')}/{krel}"))
+                self._versions[local] = version
+            _purge_mirror(mirror, rel, seen, self._versions)
+        return mirror
+
+
+def _s3_missing(exc) -> bool:
+    """A botocore error that means "no such object" — ONLY a 404: a
+    throttle/5xx/403 read as absence would surface in staging recovery
+    as the misleading "staged data incomplete, cannot roll forward"."""
+    resp = getattr(exc, "response", None) or {}
+    return (resp.get("ResponseMetadata", {}).get("HTTPStatusCode") == 404
+            or resp.get("Error", {}).get("Code", "")
+            in ("404", "NoSuchKey", "NotFound"))
+
+
+class S3FS(_ObjectStoreFS):
+    """S3-compatible object store backend via boto3 — REAL S3
+    semantics (the shared contract and its two planes are documented on
+    :class:`_ObjectStoreFS`).  This is the store class the
+    manifest-driven staging publish was designed for (staging.py design
+    note).  ``requires_localization`` assumes no JVM S3 connector; flip
+    it off when running with hadoop-aws.
+
+    Mirrors the reference's moto-S3 contract surface (its
+    ``tests/test_backends.py:49-430`` and ``store/obstore_store.py:27``)
+    on boto3.
+    """
 
     def __init__(self, endpoint_url: str | None = None,
                  region: str | None = None,
@@ -748,7 +1131,6 @@ class S3FS:
                  access_key: str | None = None,
                  secret_key: str | None = None):
         import boto3  # optional dep, import-gated (env ships it)
-        from collections import Counter
         kwargs = {}
         if access_key:
             # explicit creds (shipped plan config in Python workers);
@@ -760,39 +1142,24 @@ class S3FS:
             endpoint_url=endpoint_url or os.environ.get("AWS_ENDPOINT_URL"),
             region_name=region or os.environ.get("AWS_REGION", "us-east-1"),
             **kwargs)
-        self._scratch_root = scratch_dir or os.path.join(
-            tempfile.gettempdir(), f"zcs3-{uuid.uuid4().hex[:8]}")
-        self._etags: dict[str, str] = {}
-        self.api_counts = Counter()
-
-    # -- path helpers ---------------------------------------------------
-    @staticmethod
-    def _bk(path: str) -> tuple[str, str]:
-        rest = path[len("s3://"):] if path.startswith("s3://") else \
-            path.split("://", 1)[1]
-        bucket, _, key = rest.partition("/")
-        return bucket, key.strip("/")
+        super().__init__(scratch_dir, "zcs3")
 
     def mtime(self, path: str) -> "float | None":
-        bucket, key = self._bk(path)
-        head = self._head(bucket, key)
+        head = self._head(*self._bk(path))
         lm = (head or {}).get("LastModified")
         return lm.timestamp() if lm is not None else None
 
+    # -- primitives -----------------------------------------------------
     def _head(self, bucket: str, key: str):
         self.api_counts["head"] += 1
         try:
             return self._client.head_object(Bucket=bucket, Key=key)
         except self._client.exceptions.ClientError as exc:
-            # ONLY a 404 means absent.  A throttle/5xx/403 answered as
-            # "absent" would make recovery re-run phase-1 parking on a
-            # published generation and wedge the partition — transient
-            # faults must surface, not masquerade as missing objects.
+            if _s3_missing(exc):
+                return None
             status = exc.response.get("ResponseMetadata", {}) \
                 .get("HTTPStatusCode")
             code = exc.response.get("Error", {}).get("Code", "")
-            if status == 404 or code in ("404", "NoSuchKey", "NotFound"):
-                return None
             if status == 403 or code in ("403", "AccessDenied"):
                 # S3 answers HEAD-on-missing-key with 403 when the
                 # credentials lack s3:ListBucket — indistinguishable
@@ -808,170 +1175,76 @@ class S3FS:
                     f"forbidden") from exc
             raise
 
-    def _list_page(self, bucket: str, **kwargs):
+    def _list_page(self, bucket: str, prefix: str,
+                   delimiter: str | None = None,
+                   token: str | None = None, limit: int | None = None):
         self.api_counts["list"] += 1
-        return self._client.list_objects_v2(Bucket=bucket, **kwargs)
+        kwargs = {"Prefix": prefix}
+        if delimiter:
+            kwargs["Delimiter"] = delimiter
+        if token:
+            kwargs["ContinuationToken"] = token
+        if limit:
+            kwargs["MaxKeys"] = limit
+        page = self._client.list_objects_v2(Bucket=bucket, **kwargs)
+        rows = [(obj["Key"], obj["ETag"], obj["Size"])
+                for obj in page.get("Contents", ())]
+        prefixes = [cp["Prefix"] for cp in page.get("CommonPrefixes", ())]
+        return rows, prefixes, (page.get("NextContinuationToken")
+                                if page.get("IsTruncated") else None)
 
-    def _iter_keys(self, bucket: str, prefix: str):
-        """All (key, etag, size) under ``prefix`` — flat paginated LIST;
-        O(n/1000) round-trips, never a per-directory walk."""
-        token = None
-        while True:
-            kwargs = {"Prefix": prefix}
-            if token:
-                kwargs["ContinuationToken"] = token
-            page = self._list_page(bucket, **kwargs)
-            for obj in page.get("Contents", ()):
-                yield obj["Key"], obj["ETag"], obj["Size"]
-            if not page.get("IsTruncated"):
-                return
-            token = page.get("NextContinuationToken")
-
-    # -- protocol surface ----------------------------------------------
-    def supports_atomic_rename(self, path: str) -> bool:
-        return False
-
-    def exists(self, path: str) -> bool:
-        bucket, key = self._bk(path)
-        if not key:
-            return True
-        if self._head(bucket, key) is not None:
-            return True
-        page = self._list_page(bucket, Prefix=key + "/", MaxKeys=1)
-        return bool(page.get("KeyCount"))
-
-    def exists_file(self, path: str) -> bool:
-        """Existence of a single OBJECT: one HEAD, no prefix LIST.
-        ``exists`` must also answer for directory fictions, which costs
-        a LIST on every miss — per-file publish checks use this instead
-        (the dominant saving on the commit path: one LIST per staged
-        file at scale)."""
-        bucket, key = self._bk(path)
-        return self._head(bucket, key) is not None
-
-    def read_text(self, path: str) -> str:
-        return self.read_bytes(path).decode("utf-8")
-
-    def read_bytes(self, path: str) -> bytes:
-        bucket, key = self._bk(path)
+    def _get(self, bucket: str, key: str):
         self.api_counts["get"] += 1
         try:
             resp = self._client.get_object(Bucket=bucket, Key=key)
         except self._client.exceptions.NoSuchKey:
-            raise FileNotFoundError(path) from None
-        return resp["Body"].read()
+            return None
+        return resp["Body"].read(), resp["ETag"]
 
-    def write_text(self, path: str, data: str) -> None:
-        self.write_bytes(path, data.encode("utf-8"))
-
-    def write_bytes(self, path: str, data: bytes) -> None:
-        bucket, key = self._bk(path)
+    def _put(self, bucket: str, key: str, data: bytes) -> None:
         self.api_counts["put"] += 1
         self._client.put_object(Bucket=bucket, Key=key, Body=data)
 
-    def read_versioned(self, path: str) -> tuple[str | None, str | None]:
-        """``(text, ETag)`` — the ETag is S3's native version token for
-        :meth:`write_if`'s conditional PUT."""
-        bucket, key = self._bk(path)
-        self.api_counts["get"] += 1
-        try:
-            resp = self._client.get_object(Bucket=bucket, Key=key)
-        except self._client.exceptions.NoSuchKey:
-            return None, None
-        return resp["Body"].read().decode("utf-8"), resp["ETag"]
-
-    def write_if(self, path: str, data: str, token: str | None) -> str:
-        """True server-side compare-and-swap: conditional PUT with
-        ``If-Match`` (update) / ``If-None-Match: *`` (create-only) —
-        no locks, one API call, scales to any number of writers.
-        Returns the new version's ETag straight from the PUT response
-        (no separate read that a racing takeover could poison)."""
+    def _put_if(self, bucket: str, key: str, data: bytes,
+                token: str | None) -> str:
+        """``If-Match`` (update) / ``If-None-Match: *`` (create-only)."""
         from botocore.exceptions import ClientError
-        bucket, key = self._bk(path)
         kwargs = ({"IfNoneMatch": "*"} if token is None
                   else {"IfMatch": token})
         self.api_counts["put"] += 1
         try:
             return self._client.put_object(
-                Bucket=bucket, Key=key,
-                Body=data.encode("utf-8"), **kwargs)["ETag"]
+                Bucket=bucket, Key=key, Body=data, **kwargs)["ETag"]
         except ClientError as exc:
             code = exc.response.get("Error", {}).get("Code", "")
             if code in ("PreconditionFailed", "ConditionalRequestConflict",
                         "412"):
-                raise CommitConflictError(
-                    f"{path}: conditional PUT lost the race "
-                    f"({code})") from None
+                raise CommitConflictError(code) from None
             raise
 
-    def delete(self, path: str) -> None:
-        bucket, key = self._bk(path)
-        doomed = [key] if self._head(bucket, key) is not None else []
-        doomed += [k for k, _, _ in self._iter_keys(bucket, key + "/")]
-        for i in range(0, len(doomed), 1000):
+    def _delete_keys(self, bucket: str, keys: list[str]) -> None:
+        if len(keys) == 1:  # e.g. the source of a move: one DeleteObject
+            self.api_counts["delete"] += 1
+            self._client.delete_object(Bucket=bucket, Key=keys[0])
+            return
+        for i in range(0, len(keys), 1000):
             self.api_counts["delete"] += 1
             self._client.delete_objects(
                 Bucket=bucket,
-                Delete={"Objects": [{"Key": k}
-                                    for k in doomed[i:i + 1000]],
+                Delete={"Objects": [{"Key": k} for k in keys[i:i + 1000]],
                         "Quiet": True})
 
-    def mkdirs(self, path: str) -> None:
-        pass  # directories are prefix fictions on a flat keyspace
-
-    def _move_object(self, sb: str, sk: str, db: str, dk: str) -> None:
-        # the S3 "rename": CopyObject then DeleteObject — two atomic ops
-        # with a visible window between them; the staging protocol's
-        # exists-checks are what make crashes in the window recoverable
-        self.api_counts["copy"] += 1
-        self._client.copy_object(Bucket=db, Key=dk,
-                                 CopySource={"Bucket": sb, "Key": sk})
-        self.api_counts["delete"] += 1
-        self._client.delete_object(Bucket=sb, Key=sk)
-
-    def rename(self, src: str, dst: str) -> bool:
-        """Copy+delete move; False if dst exists or src is absent."""
-        if self.exists(dst):
-            return False
-        sb, sk = self._bk(src)
-        db, dk = self._bk(dst)
-        if self._head(sb, sk) is not None:  # single object
-            self._move_object(sb, sk, db, dk)
-            return True
-        keys = [k for k, _, _ in self._iter_keys(sb, sk + "/")]
-        if not keys:
-            return False
-        for k in keys:
-            self._move_object(sb, k, db, dk + k[len(sk):])
-        return True
-
-    def move_file(self, src: str, dst: str) -> bool:
-        """Single-object move where the CALLER has already done any
-        dst-exists check: exactly one CopyObject + one DeleteObject, no
-        redundant HEAD/LIST round-trips.  The publish hot path uses this
-        — per-file metadata cost drops from ~7 API calls to ~4, which is
-        the commit-path currency at large file counts.  False when the
-        source object is missing."""
-        sb, sk = self._bk(src)
-        db, dk = self._bk(dst)
+    def _copy_key(self, sb: str, sk: str, db: str, dk: str,
+                  listed: bool = False) -> bool:
+        """One CopyObject and no HEAD: a missing source answers 404."""
         self.api_counts["copy"] += 1
         try:
             self._client.copy_object(Bucket=db, Key=dk,
                                      CopySource={"Bucket": sb, "Key": sk})
         except self._client.exceptions.ClientError as exc:
-            # False ONLY for a missing source (the _head rule, ADVICE
-            # r5): a throttle/5xx/403 returned as "missing" would
-            # surface in staging recovery as the misleading "staged
-            # data incomplete, cannot roll forward" — transient faults
-            # must raise, not masquerade as absence.
-            status = exc.response.get("ResponseMetadata", {}) \
-                .get("HTTPStatusCode")
-            code = exc.response.get("Error", {}).get("Code", "")
-            if status == 404 or code in ("404", "NoSuchKey", "NotFound"):
+            if _s3_missing(exc):
                 return False
             raise
-        self.api_counts["delete"] += 1
-        self._client.delete_object(Bucket=sb, Key=sk)
         return True
 
     #: single-call CopyObject ceiling (the documented S3 limit is
@@ -982,13 +1255,11 @@ class S3FS:
     _COPY_PART_SIZE = 1024 ** 3
 
     def copy_file(self, src: str, dst: str) -> bool:
-        """Non-destructive server-side copy (bytes never leave S3;
-        retention copies of pinned partitions use this instead of a
-        driver byte round-trip): one CopyObject up to the documented
-        5 GiB single-call limit, multipart UploadPartCopy with ranged
-        parts past it — a pinned partition holding a >5 GiB part-file
-        must retain, not fail every publish.  Same missing-source
-        contract as ``move_file``."""
+        """Server-side copy: one CopyObject up to the documented 5 GiB
+        single-call limit, multipart UploadPartCopy with ranged parts
+        past it — a pinned partition holding a >5 GiB part-file must
+        retain, not fail every publish.  Same missing-source contract as
+        ``move_file``."""
         sb, sk = self._bk(src)
         db, dk = self._bk(dst)
         head = self._head(sb, sk)
@@ -996,20 +1267,7 @@ class S3FS:
             return False
         size = int(head.get("ContentLength", 0))
         if size <= self._COPY_SINGLE_MAX:
-            self.api_counts["copy"] += 1
-            try:
-                self._client.copy_object(Bucket=db, Key=dk,
-                                         CopySource={"Bucket": sb,
-                                                     "Key": sk})
-            except self._client.exceptions.ClientError as exc:
-                status = exc.response.get("ResponseMetadata", {}) \
-                    .get("HTTPStatusCode")
-                code = exc.response.get("Error", {}).get("Code", "")
-                if status == 404 or code in ("404", "NoSuchKey",
-                                             "NotFound"):
-                    return False
-                raise
-            return True
+            return self._copy_key(sb, sk, db, dk)
         mp = self._client.create_multipart_upload(Bucket=db, Key=dk)
         upload_id = mp["UploadId"]
         try:
@@ -1035,143 +1293,10 @@ class S3FS:
             # vanishing between the HEAD and an upload_part_copy must
             # surface as False (the caller's concurrent-mutation
             # signal), not a raw botocore error
-            resp = getattr(exc, "response", None) or {}
-            status = resp.get("ResponseMetadata", {}) \
-                .get("HTTPStatusCode")
-            code = resp.get("Error", {}).get("Code", "")
-            if status == 404 or code in ("404", "NoSuchKey", "NotFound"):
+            if _s3_missing(exc):
                 return False
             raise
         return True
-
-    def _delimited(self, path: str) -> tuple[list[str], list[str]]:
-        bucket, key = self._bk(path)
-        prefix = key + "/" if key else ""
-        files, dirs, token = [], [], None
-        while True:
-            kwargs = {"Prefix": prefix, "Delimiter": "/"}
-            if token:
-                kwargs["ContinuationToken"] = token
-            page = self._list_page(bucket, **kwargs)
-            files += [obj["Key"][len(prefix):]
-                      for obj in page.get("Contents", ())
-                      if obj["Key"] != prefix]
-            dirs += [cp["Prefix"][len(prefix):].rstrip("/")
-                     for cp in page.get("CommonPrefixes", ())]
-            if not page.get("IsTruncated"):
-                return sorted(files), sorted(dirs)
-            token = page.get("NextContinuationToken")
-
-    def list_files(self, path: str) -> list[str]:
-        return self._delimited(path)[0]
-
-    def list_dirs(self, path: str) -> list[str]:
-        return self._delimited(path)[1]
-
-    def _rel_keys(self, root: str):
-        bucket, base = self._bk(root)
-        start = len(base) + 1 if base else 0
-        for key, etag, size in self._iter_keys(bucket,
-                                               base + "/" if base else ""):
-            yield key[start:], etag, size
-
-    def walk_files(self, root: str) -> list[str]:
-        """Staging fast path (staging._walk_files): ONE flat LIST of the
-        prefix instead of O(dirs) recursive listings; hidden components
-        skipped to match the recursive walker's contract."""
-        return sorted(
-            rel for rel, _, _ in self._rel_keys(root)
-            if not any(c.startswith(("_", "."))
-                       for c in rel.split("/")))
-
-    def list_partition_dirs(self, root: str, depth: int) -> list[str]:
-        out = set()
-        for rel, _, _ in self._rel_keys(root):
-            comps = rel.split("/")
-            if len(comps) <= depth:
-                continue
-            head = comps[:depth]
-            if any(c.startswith(("_", ".")) for c in comps) \
-                    or not all("=" in c for c in head):
-                continue
-            out.add("/".join(head))
-        return sorted(out)
-
-    # -- bulk bridge (no-JVM-connector configurations only) -------------
-    def new_scratch_dir(self) -> str:
-        path = os.path.join(self._scratch_root, "w", uuid.uuid4().hex)
-        os.makedirs(path, exist_ok=True)
-        return path
-
-    def upload_tree(self, local_dir: str, remote_dir: str) -> list[str]:
-        """PUT every non-hidden file under ``local_dir`` to the remote
-        prefix; returns the relative file list — the writer-side manifest
-        that lets the staged publish skip listing entirely."""
-        bucket, base = self._bk(remote_dir)
-        uploaded: list[str] = []
-        for dirpath, dirnames, filenames in os.walk(local_dir):
-            dirnames[:] = [d for d in dirnames
-                           if not d.startswith(("_", "."))]
-            for fname in filenames:
-                if fname.startswith(("_", ".")):
-                    continue
-                full = os.path.join(dirpath, fname)
-                rel = os.path.relpath(full, local_dir).replace(os.sep, "/")
-                self.api_counts["put"] += 1
-                with open(full, "rb") as fh:
-                    self._client.put_object(Bucket=bucket,
-                                            Key=f"{base}/{rel}",
-                                            Body=fh.read())
-                uploaded.append(rel)
-        shutil.rmtree(local_dir, ignore_errors=True)
-        return sorted(uploaded)
-
-    def localize(self, root: str,
-                 relpaths: "list[str] | None" = None) -> str:
-        """ETag-validated local mirror of ``root`` (or just ``relpaths``
-        under it) for Spark to read; returns the mirror base dir.
-
-        Unchanged objects (same ETag) are never re-downloaded; objects
-        that vanished remotely are removed from the mirror so a stale
-        generation can never leak into a scan.  This bridge exists for
-        connector-less environments — with hadoop-aws on the cluster,
-        reads are direct ``s3a://`` scans and this is never called.
-        """
-        bucket, base = self._bk(root)
-        mirror = os.path.join(self._scratch_root, "r", bucket,
-                              base.replace("/", "_"))
-        prefixes = relpaths if relpaths is not None else [""]
-        for rel in prefixes:
-            remote = f"{root}/{rel}" if rel else root
-            rb, rkey = self._bk(remote)
-            seen = set()
-            for key, etag, _ in self._iter_keys(
-                    bucket, rkey + "/" if rkey else ""):
-                krel = key[len(base) + 1:] if base else key
-                if rel == "" and any(c.startswith(("_", "."))
-                                     for c in krel.split("/")):
-                    continue
-                local = os.path.join(mirror, *krel.split("/"))
-                seen.add(local)
-                if self._etags.get(local) == etag and os.path.exists(local):
-                    continue
-                os.makedirs(os.path.dirname(local), exist_ok=True)
-                self.api_counts["get"] += 1
-                obj = self._client.get_object(Bucket=bucket, Key=key)
-                with open(local, "wb") as fh:
-                    fh.write(obj["Body"].read())
-                self._etags[local] = etag
-            # drop mirror files whose remote object is gone
-            local_prefix = os.path.join(mirror, *rel.split("/")) \
-                if rel else mirror
-            if os.path.isdir(local_prefix):
-                for dirpath, _, filenames in os.walk(local_prefix):
-                    for fname in filenames:
-                        full = os.path.join(dirpath, fname)
-                        if full not in seen:
-                            os.remove(full)
-                            self._etags.pop(full, None)
-        return mirror
 
 
 #: Name of the published file manifest an HTTP(S) store requires —
@@ -1203,51 +1328,33 @@ class HttpFS:
         self._etags: dict[str, str] = {}
         self._manifests: dict[str, tuple[str | None, dict]] = {}
 
-    #: bounded retry for transient faults (5xx, connection resets) —
-    #: CDNs throttle; a throttle must not read as absence or failure
-    _RETRIES = 3
-
     # -- plumbing -------------------------------------------------------
-    @classmethod
-    def _request(cls, url: str, method: str = "GET"):
-        import time
-        import urllib.error
-        import urllib.request
-        for attempt in range(cls._RETRIES + 1):
-            try:
-                return urllib.request.urlopen(
-                    urllib.request.Request(url, method=method),
-                    timeout=30)
-            except urllib.error.HTTPError as exc:
-                if exc.code < 500 or attempt == cls._RETRIES:
-                    raise
-            except urllib.error.URLError:
-                if attempt == cls._RETRIES:
-                    raise
-            time.sleep(0.1 * (2 ** attempt))
-        raise AssertionError("unreachable")
-
-    def _head(self, url: str):
+    @staticmethod
+    def _request(url: str, method: str = "GET"):
+        """``(status, headers, body)`` through the shared retrying
+        transport — CDNs throttle; a throttle must not read as absence
+        or failure."""
         import urllib.error
         try:
-            with self._request(url, "HEAD") as resp:
-                return dict(resp.headers)
-        except urllib.error.HTTPError as exc:
-            if exc.code in (404, 410):
-                return None
-            raise
+            return http_request(method, url, timeout=30)
         except urllib.error.URLError:
             raise StoreError(f"HTTP store unreachable: {url}") from None
 
+    def _head(self, url: str):
+        status, headers, _ = self._request(url, "HEAD")
+        if status in (404, 410):
+            return None
+        if status >= 400:
+            raise StoreError(f"HEAD {url} failed: {status}")
+        return headers
+
     def _get(self, url: str) -> "tuple[bytes, str | None]":
-        import urllib.error
-        try:
-            with self._request(url) as resp:
-                return resp.read(), resp.headers.get("ETag")
-        except urllib.error.HTTPError as exc:
-            if exc.code in (404, 410):
-                raise FileNotFoundError(url) from None
-            raise
+        status, headers, body = self._request(url)
+        if status in (404, 410):
+            raise FileNotFoundError(url)
+        if status >= 400:
+            raise StoreError(f"GET {url} failed: {status}")
+        return body, headers.get("ETag")
 
     @staticmethod
     def _version_token(headers: dict) -> "str | None":
@@ -1435,18 +1542,8 @@ class HttpFS:
                     fh.write(body)
                 if etag:
                     self._etags[local] = etag
-            # a republished partition renames its files: purge mirror
-            # files the manifest no longer lists, or a stale generation
-            # would leak into the scan alongside the new one
-            local_prefix = os.path.join(mirror, *rel.split("/")) \
-                if rel else mirror
-            if os.path.isdir(local_prefix):
-                for dirpath, _, filenames in os.walk(local_prefix):
-                    for fname in filenames:
-                        full = os.path.join(dirpath, fname)
-                        if full not in seen:
-                            os.remove(full)
-                            self._etags.pop(full, None)
+            # purge mirror files the manifest no longer lists
+            _purge_mirror(mirror, rel, seen, self._etags)
         return mirror
 
     # -- writes: refused ------------------------------------------------
@@ -1509,7 +1606,105 @@ def msi_token_provider(resource: str = "https://storage.azure.com/",
     return provider
 
 
-class AzureBlobFS:
+class _RestObjectStoreFS(_ObjectStoreFS):
+    """The urllib REST backends' shared half (:class:`AzureBlobFS`,
+    :class:`GcsFS`): OAuth bearer tokens, the retrying transport
+    (:func:`http_request`) and the object GET/DELETE primitives over a
+    backend ``_request(method, bucket, key, params, headers, body)``
+    that addresses one object (or, with an empty key, the bucket)."""
+
+    #: URL scheme of the backend's paths (messages only)
+    _SCHEME = ""
+    #: response header carrying an object's version token
+    _VERSION_HEADER = ""
+    #: query parameters selecting an object's bytes
+    _MEDIA: dict = {}
+    #: env var of the static bearer token (messages only)
+    _BEARER_ENV = ""
+
+    def _bearer_token(self, force_refresh: bool = False) -> str:
+        """Current OAuth access token; provider-backed tokens refresh
+        lazily 5 minutes before expiry (and immediately on a 401)."""
+        import time
+        if self._token_provider is not None and (
+                force_refresh or self._bearer is None
+                or (self._bearer_exp is not None
+                    and time.time() > self._bearer_exp - 300)):
+            token, expires = self._token_provider()
+            self._bearer = str(token)
+            self._bearer_exp = float(expires) if expires else None
+        if not self._bearer:
+            raise StoreError(
+                f"{type(self).__name__} bearer auth has no token "
+                f"(provider returned nothing and {self._BEARER_ENV} "
+                f"is unset)")
+        return self._bearer
+
+    def _auth_mode(self) -> str:
+        return "bearer"
+
+    def _send(self, method: str, url: str, headers: dict | None = None,
+              body: bytes | None = None, authorize=None,
+              what: str | None = None):
+        """One authorized request through :func:`http_request` →
+        ``(status, headers, body)``; bearer auth unless ``authorize``
+        signs the request itself.  401/403 raise a credentials
+        :class:`StoreError`; an unreachable endpoint raises one too."""
+        import urllib.error
+        headers = dict(headers or {})
+        if body is not None:
+            # urllib injects a default Content-Type on bodied requests
+            # AFTER signing — set it explicitly so the signed value and
+            # the sent value agree
+            headers.setdefault("Content-Type", "application/octet-stream")
+        if authorize is None:
+            def authorize(hdrs):
+                hdrs["Authorization"] = f"Bearer {self._bearer_token()}"
+        refresh = None
+        if self._token_provider is not None:
+            def refresh():
+                self._bearer_token(force_refresh=True)
+        what = what or f"{method} {url.split('?')[0]}"
+        try:
+            return http_request(
+                method, url, headers, body, authorize=authorize,
+                refresh=refresh,
+                denied=lambda status: StoreError(
+                    f"{what} returned {status} under "
+                    f"{self._auth_mode()} auth: check the credentials "
+                    f"(signature, token expiry, scopes or "
+                    f"permissions)"))
+        except urllib.error.URLError as exc:
+            raise StoreError(f"{type(self).__name__} endpoint "
+                             f"unreachable: {self._endpoint}: {exc}") \
+                from None
+
+    def _fetch(self, bucket: str, key: str, headers: dict | None = None):
+        """An object's bytes, status unmapped → ``(status, headers,
+        body)``: the ranged-GET primitive zarr shard reads use
+        (``zarr3.blobs`` maps 404/416/206 itself)."""
+        return self._request("GET", bucket, key, self._MEDIA, headers)
+
+    def _get(self, bucket: str, key: str):
+        self.api_counts["get"] += 1
+        status, hdrs, body = self._fetch(bucket, key)
+        if status == 404:
+            return None
+        if status >= 400:
+            raise StoreError(
+                f"GET {self._SCHEME}://{bucket}/{key} failed: {status}")
+        return body, hdrs.get(self._VERSION_HEADER)
+
+    def _delete_keys(self, bucket: str, keys: list[str]) -> None:
+        for key in keys:
+            self.api_counts["delete"] += 1
+            status, _, _ = self._request("DELETE", bucket, key)
+            if status >= 400 and status != 404:
+                raise StoreError(f"DELETE {self._SCHEME}://{bucket}/{key} "
+                                 f"failed: {status}")
+
+
+class AzureBlobFS(_RestObjectStoreFS):
     """Azure Blob Storage backend speaking the public Blob REST API
     directly (urllib + SharedKey request signing — no SDK dependency;
     the auth scheme and the canonical string-to-sign are the documented
@@ -1518,26 +1713,17 @@ class AzureBlobFS:
     (``/root/reference/zcollection/store/obstore_store.py:27``,
     ``store/factory.py:22-79``).
 
-    Same two-plane contract as :class:`S3FS`:
-
-    - **metadata plane**: HEAD = Get Blob Properties, GET/PUT/DELETE
-      blob, List Blobs (``restype=container&comp=list`` with
-      prefix/delimiter, marker-paginated), Copy Blob
-      (``x-ms-copy-source``) + Delete for the rename fiction, and a
-      TRUE server-side compare-and-swap via conditional PUT
-      (``If-Match`` / ``If-None-Match: *`` — Azure ETags), which is
-      everything the CAS catalog commit needs.
-    - **bulk plane**: with ``hadoop-azure`` on the cluster Spark scans
-      ``abfss://`` natively; without a JVM connector (this
-      environment) ``requires_localization`` routes bulk I/O through
-      the scratch bridge (:meth:`upload_tree` / ETag-validated
-      :meth:`localize`) exactly like S3.
-
-    Rename is copy+delete (non-atomic — ``az`` is in
-    ``_NON_ATOMIC_RENAME_SCHEMES``), so collections on az:// take the
-    manifest-driven file-granular publish path.  Copy Blob is
-    synchronous within an account for block blobs; a ``pending`` copy
-    status raises rather than silently losing the move.
+    The shared contract and its two planes are documented on
+    :class:`_ObjectStoreFS`.  The primitives here: HEAD = Get Blob
+    Properties, GET/PUT/DELETE blob, List Blobs
+    (``restype=container&comp=list`` with prefix/delimiter,
+    marker-paginated), Copy Blob (``x-ms-copy-source``) + Delete for
+    the rename fiction, and a TRUE server-side compare-and-swap via
+    conditional PUT (``If-Match`` / ``If-None-Match: *`` — Azure ETags).
+    Without ``hadoop-azure`` on the cluster, bulk I/O takes the scratch
+    bridge exactly like S3.  Copy Blob is synchronous within an account
+    for block blobs; a ``pending`` copy status raises rather than
+    silently losing the move.
 
     Configuration (env or constructor): ``AZURE_STORAGE_ACCOUNT`` plus
     ONE of ``AZURE_STORAGE_KEY`` (base64 account key → SharedKey
@@ -1550,12 +1736,10 @@ class AzureBlobFS:
     ``az://container/key...``.
     """
 
-    requires_localization = True
-
     _API_VERSION = "2021-08-06"
-
-    #: bounded transient-fault retry (429/5xx/resets), matching HttpFS
-    _RETRIES = 3
+    _SCHEME = "az"
+    _VERSION_HEADER = "ETag"
+    _BEARER_ENV = "AZURE_STORAGE_BEARER_TOKEN"
 
     def __init__(self, account: str | None = None,
                  key: str | None = None,
@@ -1564,7 +1748,6 @@ class AzureBlobFS:
                  sas_token: str | None = None,
                  bearer_token: str | None = None,
                  token_provider=None):
-        from collections import Counter
         from urllib.parse import parse_qsl
         self.account = account or os.environ["AZURE_STORAGE_ACCOUNT"]
         raw, sas, bearer = key or None, sas_token or None, \
@@ -1611,18 +1794,9 @@ class AzureBlobFS:
                           or os.environ.get("AZURE_BLOB_ENDPOINT")
                           or f"https://{self.account}"
                           f".blob.core.windows.net").rstrip("/")
-        self._scratch_root = scratch_dir or os.path.join(
-            tempfile.gettempdir(), f"zcaz-{uuid.uuid4().hex[:8]}")
-        self._etags: dict[str, str] = {}
-        self.api_counts = Counter()
+        super().__init__(scratch_dir, "zcaz")
 
-    # -- path / signing helpers ----------------------------------------
-    @staticmethod
-    def _ck(path: str) -> tuple[str, str]:
-        rest = path.split("://", 1)[1] if "://" in path else path
-        container, _, key = rest.partition("/")
-        return container, key.strip("/")
-
+    # -- signing helpers -------------------------------------------------
     def _url(self, container: str, key: str, params: dict) -> str:
         from urllib.parse import quote, urlencode
         url = f"{self._endpoint}/{container}"
@@ -1633,24 +1807,6 @@ class AzureBlobFS:
         if params:
             url += "?" + urlencode(sorted(params.items()))
         return url
-
-    def _bearer_token(self, force_refresh: bool = False) -> str:
-        """Current OAuth access token; provider-backed tokens refresh
-        lazily 5 minutes before expiry (and immediately on a 401)."""
-        import time
-        if self._token_provider is not None and (
-                force_refresh or self._bearer is None
-                or (self._bearer_exp is not None
-                    and time.time() > self._bearer_exp - 300)):
-            token, expires = self._token_provider()
-            self._bearer = str(token)
-            self._bearer_exp = float(expires) if expires else None
-        if not self._bearer:
-            raise StoreError(
-                "AzureBlobFS bearer auth has no token (provider "
-                "returned nothing and AZURE_STORAGE_BEARER_TOKEN "
-                "is unset)")
-        return self._bearer
 
     def _authorization(self, method: str, container: str, key: str,
                        params: dict, headers: dict,
@@ -1744,84 +1900,36 @@ class AzureBlobFS:
             q["st"] = start
         return urlencode(q)
 
+    def _auth_mode(self) -> str:
+        return ("SharedKey" if self._key is not None else
+                "SAS" if self._sas is not None else "bearer")
+
     def _request(self, method: str, container: str, key: str,
                  params: dict | None = None,
                  headers: dict | None = None,
                  body: bytes | None = None):
         """Signed request → ``(status, headers, body)``; 404/"absent"
-        mapping is per-operation (the S3FS ``_head`` rule: ONLY a real
-        404 may read as absent)."""
+        mapping is per-operation (the ``_head`` rule: ONLY a real 404
+        may read as absent)."""
         import email.utils
-        import urllib.error
-        import urllib.request
         params = dict(params or {})
         headers = dict(headers or {})
-        if body is not None:
-            # urllib injects a default Content-Type on bodied requests
-            # AFTER signing — set it explicitly so the signed value and
-            # the sent value agree
-            headers.setdefault("Content-Type", "application/octet-stream")
         headers.setdefault("x-ms-date",
                            email.utils.formatdate(usegmt=True))
         headers.setdefault("x-ms-version", self._API_VERSION)
-        # bounded transient-fault retry (throttle 429/500/503 and
-        # connection resets), the same discipline as HttpFS — object
-        # stores throttle routinely and a flaky window must not fail
-        # an insert.  4xx (absent/conflict/precondition) never retries,
-        # EXCEPT one 401 under provider-backed bearer auth: the token
-        # may simply have expired mid-session — refresh once and retry.
-        import time
-        token_refreshed = False
-        attempt = 0
-        while True:
+
+        def authorize(hdrs):
             if self._key is not None:
-                headers["Authorization"] = self._authorization(
-                    method, container, key, params, headers, body)
+                hdrs["Authorization"] = self._authorization(
+                    method, container, key, params, hdrs, body)
             elif self._sas is None:  # bearer (AAD/MSI) mode
-                headers["Authorization"] = \
-                    f"Bearer {self._bearer_token()}"
-            req = urllib.request.Request(
-                self._url(container, key, params), data=body,
-                headers=headers, method=method)
-            try:
-                with urllib.request.urlopen(req, timeout=60) as resp:
-                    return resp.status, dict(resp.headers), resp.read()
-            except urllib.error.HTTPError as exc:
-                data = exc.read()
-                if exc.code == 401 and self._token_provider is not None \
-                        and not token_refreshed:
-                    # the one free refresh does NOT consume a
-                    # transient-retry slot — a 401 landing on the last
-                    # attempt after a throttle streak must still get
-                    # its refreshed-token retry
-                    token_refreshed = True
-                    self._bearer_token(force_refresh=True)
-                    continue
-                if exc.code in (401, 403):
-                    mode = ("SharedKey" if self._key is not None else
-                            "SAS" if self._sas is not None else "bearer")
-                    raise StoreError(
-                        f"{method} az://{container}/{key} returned "
-                        f"{exc.code} under {mode} auth: check "
-                        f"credentials (signature, token expiry or "
-                        f"permissions)") from exc
-                if exc.code not in (429, 500, 503) \
-                        or attempt == self._RETRIES:
-                    return exc.code, dict(exc.headers), data
-            except urllib.error.URLError as exc:
-                if attempt == self._RETRIES:
-                    raise StoreError(
-                        f"Azure Blob endpoint unreachable: "
-                        f"{self._endpoint}: {exc}") from None
-            # every branch above returns or raises at the final
-            # attempt, so this backoff only runs with retries left
-            time.sleep(0.1 * (2 ** attempt))
-            attempt += 1
+                hdrs["Authorization"] = f"Bearer {self._bearer_token()}"
 
-    # -- contract surface ----------------------------------------------
-    def supports_atomic_rename(self, path: str) -> bool:
-        return False
+        return self._send(method, self._url(container, key, params),
+                          headers, body, authorize,
+                          what=f"{method} az://{container}/{key}")
 
+    # -- primitives -----------------------------------------------------
     def _head(self, container: str, key: str):
         self.api_counts["head"] += 1
         status, hdrs, _ = self._request("HEAD", container, key)
@@ -1834,9 +1942,7 @@ class AzureBlobFS:
 
     def mtime(self, path: str) -> "float | None":
         import email.utils
-        container, key = self._ck(path)
-        hdrs = self._head(container, key)
-        lm = (hdrs or {}).get("Last-Modified")
+        lm = (self._head(*self._bk(path)) or {}).get("Last-Modified")
         if not lm:
             return None
         try:
@@ -1844,19 +1950,19 @@ class AzureBlobFS:
         except (TypeError, ValueError):
             return None
 
-    def _list_page(self, container: str, *, prefix: str,
+    def _list_page(self, container: str, prefix: str,
                    delimiter: str | None = None,
-                   marker: str | None = None):
-        """One List Blobs page → (blobs, prefixes, next_marker) where
-        blobs are (name, etag, size)."""
+                   token: str | None = None, limit: int | None = None):
         import xml.etree.ElementTree as ET
         self.api_counts["list"] += 1
         params = {"restype": "container", "comp": "list",
                   "prefix": prefix}
         if delimiter:
             params["delimiter"] = delimiter
-        if marker:
-            params["marker"] = marker
+        if token:
+            params["marker"] = token
+        if limit:
+            params["maxresults"] = str(limit)
         status, _, body = self._request("GET", container, "", params)
         if status >= 400:
             raise StoreError(
@@ -1869,293 +1975,60 @@ class AzureBlobFS:
         prefixes = [p.findtext("Name") for p in root.iter("BlobPrefix")]
         return blobs, prefixes, (root.findtext("NextMarker") or None)
 
-    def _iter_keys(self, container: str, prefix: str):
-        marker = None
-        while True:
-            blobs, _, marker = self._list_page(container, prefix=prefix,
-                                               marker=marker)
-            yield from blobs
-            if not marker:
-                return
-
-    def exists(self, path: str) -> bool:
-        container, key = self._ck(path)
-        if not key:
-            return True
-        if self._head(container, key) is not None:
-            return True
-        blobs, prefixes, _ = self._list_page(container,
-                                             prefix=key + "/")
-        return bool(blobs or prefixes)
-
-    def exists_file(self, path: str) -> bool:
-        container, key = self._ck(path)
-        return self._head(container, key) is not None
-
-    def read_text(self, path: str) -> str:
-        return self.read_bytes(path).decode("utf-8")
-
-    def read_bytes(self, path: str) -> bytes:
-        container, key = self._ck(path)
-        self.api_counts["get"] += 1
-        status, _, body = self._request("GET", container, key)
-        if status == 404:
-            raise FileNotFoundError(path)
-        if status >= 400:
-            raise StoreError(f"GET {path} failed: {status}")
-        return body
-
-    def write_text(self, path: str, data: str) -> None:
-        self.write_bytes(path, data.encode("utf-8"))
-
-    def write_bytes(self, path: str, data: bytes) -> None:
-        container, key = self._ck(path)
+    def _put(self, container: str, key: str, data: bytes) -> None:
         self.api_counts["put"] += 1
         status, _, _ = self._request(
             "PUT", container, key,
             headers={"x-ms-blob-type": "BlockBlob"}, body=data)
         if status >= 400:
-            raise StoreError(f"PUT {path} failed: {status}")
+            raise StoreError(
+                f"PUT az://{container}/{key} failed: {status}")
 
-    def read_versioned(self, path: str) -> tuple[str | None, str | None]:
-        container, key = self._ck(path)
-        self.api_counts["get"] += 1
-        status, hdrs, body = self._request("GET", container, key)
-        if status == 404:
-            return None, None
-        if status >= 400:
-            raise StoreError(f"GET {path} failed: {status}")
-        return body.decode("utf-8"), hdrs.get("ETag")
-
-    def write_if(self, path: str, data: str, token: str | None) -> str:
-        """Server-side compare-and-swap via conditional PUT — Azure
-        honors ``If-Match`` (update) and ``If-None-Match: *``
+    def _put_if(self, container: str, key: str, data: bytes,
+                token: str | None) -> str:
+        """Azure honors ``If-Match`` (update) and ``If-None-Match: *``
         (create-only) on Put Blob; the losing writer gets 412 (or 409
         BlobAlreadyExists for the create case)."""
-        container, key = self._ck(path)
         cond = ({"If-None-Match": "*"} if token is None
                 else {"If-Match": token})
         cond["x-ms-blob-type"] = "BlockBlob"
         self.api_counts["put"] += 1
         status, hdrs, _ = self._request("PUT", container, key,
-                                        headers=cond,
-                                        body=data.encode("utf-8"))
+                                        headers=cond, body=data)
         if status in (409, 412):
-            raise CommitConflictError(
-                f"{path}: conditional PUT lost the race ({status})")
+            raise CommitConflictError(str(status))
         if status >= 400:
-            raise StoreError(f"conditional PUT {path} failed: {status}")
+            raise StoreError(f"conditional PUT az://{container}/{key} "
+                             f"failed: {status}")
         return hdrs.get("ETag")
 
-    def delete(self, path: str) -> None:
-        container, key = self._ck(path)
-        doomed = [key] if self._head(container, key) is not None else []
-        doomed += [name for name, _, _ in
-                   self._iter_keys(container, key + "/")]
-        for name in doomed:
-            self.api_counts["delete"] += 1
-            status, _, _ = self._request("DELETE", container, name)
-            if status >= 400 and status != 404:
-                raise StoreError(
-                    f"DELETE az://{container}/{name} failed: {status}")
-
-    def mkdirs(self, path: str) -> None:
-        pass  # directories are prefix fictions on a flat keyspace
-
-    def _copy_blob(self, container: str, src_key: str,
-                   dst_key: str) -> None:
+    def _copy_key(self, sc: str, sk: str, dc: str, dk: str,
+                  listed: bool = False) -> bool:
+        """HEAD (unless just listed), then one Copy Blob — same or
+        cross container."""
+        if not listed and self._head(sc, sk) is None:
+            return False
         self.api_counts["copy"] += 1
-        src_url = self._url(container, src_key, {})
-        copy_headers = {"x-ms-copy-source": src_url}
+        copy_headers = {"x-ms-copy-source": self._url(sc, sk, {})}
         if self._key is None and self._sas is None:
             # bearer mode: the source URL carries no auth (unlike SAS,
             # where the token rides x-ms-copy-source too) — the
             # documented header authorizes the source read instead
             copy_headers["x-ms-copy-source-authorization"] = \
                 f"Bearer {self._bearer_token()}"
-        status, hdrs, _ = self._request(
-            "PUT", container, dst_key, headers=copy_headers)
-        if status >= 400:
-            raise StoreError(
-                f"COPY az://{container}/{src_key} -> {dst_key} "
-                f"failed: {status}")
-        if hdrs.get("x-ms-copy-status", "success") != "success":
-            # block-blob copies within an account are synchronous; a
-            # pending status here would mean the delete below could
-            # race the copy — fail loudly instead
-            raise StoreError(
-                f"COPY az://{container}/{src_key} not synchronous "
-                f"(status {hdrs.get('x-ms-copy-status')})")
-
-    def move_file(self, src: str, dst: str) -> bool:
-        """Single-object move (caller did any dst-exists check): one
-        Copy Blob + one Delete.  False ONLY for a missing source."""
-        sc, sk = self._ck(src)
-        dc, dk = self._ck(dst)
-        if self._head(sc, sk) is None:
-            return False
-        self._copy_blob(sc, sk, dk) if sc == dc else \
-            self._copy_cross(sc, sk, dc, dk)
-        self._delete_source(sc, sk)
-        return True
-
-    def copy_file(self, src: str, dst: str) -> bool:
-        """Non-destructive server-side copy (one Copy Blob — bytes
-        never leave the account; retention copies use this).  False
-        ONLY for a missing source."""
-        sc, sk = self._ck(src)
-        dc, dk = self._ck(dst)
-        if self._head(sc, sk) is None:
-            return False
-        self._copy_blob(sc, sk, dk) if sc == dc else \
-            self._copy_cross(sc, sk, dc, dk)
-        return True
-
-    def _delete_source(self, container: str, key: str) -> None:
-        """Post-copy source delete: a silent failure would leave BOTH
-        src and dst visible as duplicate data, so anything but success
-        or already-gone (404) raises."""
-        self.api_counts["delete"] += 1
-        status, _, _ = self._request("DELETE", container, key)
-        if status >= 400 and status != 404:
-            raise StoreError(
-                f"DELETE az://{container}/{key} after copy failed: "
-                f"{status} (source blob survives; re-run the move)")
-
-    def _copy_cross(self, sc: str, sk: str, dc: str, dk: str) -> None:
-        # cross-container copy: same API, source URL names the source
-        # container (rare in collection layouts; kept for contract
-        # completeness)
-        self.api_counts["copy"] += 1
-        status, hdrs, _ = self._request(
-            "PUT", dc, dk,
-            headers={"x-ms-copy-source": self._url(sc, sk, {})})
+        status, hdrs, _ = self._request("PUT", dc, dk,
+                                        headers=copy_headers)
         if status >= 400:
             raise StoreError(f"COPY az://{sc}/{sk} -> az://{dc}/{dk} "
                              f"failed: {status}")
-
-    def rename(self, src: str, dst: str) -> bool:
-        if self.exists(dst):
-            return False
-        sc, sk = self._ck(src)
-        if self._head(sc, sk) is not None:
-            return self.move_file(src, dst)
-        keys = [k for k, _, _ in self._iter_keys(sc, sk + "/")]
-        if not keys:
-            return False
-        dc, dk = self._ck(dst)
-        for k in keys:
-            self._copy_blob(sc, k, dk + k[len(sk):]) if sc == dc else \
-                self._copy_cross(sc, k, dc, dk + k[len(sk):])
-            self._delete_source(sc, k)
+        if hdrs.get("x-ms-copy-status", "success") != "success":
+            # block-blob copies within an account are synchronous; a
+            # pending status here would mean a move's source delete
+            # could race the copy — fail loudly instead
+            raise StoreError(
+                f"COPY az://{sc}/{sk} not synchronous "
+                f"(status {hdrs.get('x-ms-copy-status')})")
         return True
-
-    def _delimited(self, path: str) -> tuple[list[str], list[str]]:
-        container, key = self._ck(path)
-        prefix = key + "/" if key else ""
-        files, dirs, marker = [], [], None
-        while True:
-            blobs, prefixes, marker = self._list_page(
-                container, prefix=prefix, delimiter="/", marker=marker)
-            files += [name[len(prefix):] for name, _, _ in blobs
-                      if name != prefix]
-            dirs += [p[len(prefix):].rstrip("/") for p in prefixes]
-            if not marker:
-                return sorted(files), sorted(dirs)
-
-    def list_files(self, path: str) -> list[str]:
-        return self._delimited(path)[0]
-
-    def list_dirs(self, path: str) -> list[str]:
-        return self._delimited(path)[1]
-
-    def _rel_keys(self, root: str):
-        container, base = self._ck(root)
-        start = len(base) + 1 if base else 0
-        for name, etag, size in self._iter_keys(
-                container, base + "/" if base else ""):
-            yield name[start:], etag, size
-
-    def walk_files(self, root: str) -> list[str]:
-        return sorted(
-            rel for rel, _, _ in self._rel_keys(root)
-            if not any(c.startswith(("_", "."))
-                       for c in rel.split("/")))
-
-    def list_partition_dirs(self, root: str, depth: int) -> list[str]:
-        out = set()
-        for rel, _, _ in self._rel_keys(root):
-            comps = rel.split("/")
-            if len(comps) <= depth:
-                continue
-            head = comps[:depth]
-            if any(c.startswith(("_", ".")) for c in comps) \
-                    or not all("=" in c for c in head):
-                continue
-            out.add("/".join(head))
-        return sorted(out)
-
-    # -- bulk bridge (no-JVM-connector configurations only) -------------
-    def new_scratch_dir(self) -> str:
-        path = os.path.join(self._scratch_root, "w", uuid.uuid4().hex)
-        os.makedirs(path, exist_ok=True)
-        return path
-
-    def upload_tree(self, local_dir: str, remote_dir: str) -> list[str]:
-        container, base = self._ck(remote_dir)
-        uploaded: list[str] = []
-        for dirpath, dirnames, filenames in os.walk(local_dir):
-            dirnames[:] = [d for d in dirnames
-                           if not d.startswith(("_", "."))]
-            for fname in filenames:
-                if fname.startswith(("_", ".")):
-                    continue
-                full = os.path.join(dirpath, fname)
-                rel = os.path.relpath(full, local_dir).replace(os.sep, "/")
-                with open(full, "rb") as fh:
-                    self.write_bytes(f"az://{container}/{base}/{rel}",
-                                     fh.read())
-                uploaded.append(rel)
-        shutil.rmtree(local_dir, ignore_errors=True)
-        return sorted(uploaded)
-
-    def localize(self, root: str,
-                 relpaths: "list[str] | None" = None) -> str:
-        """ETag-validated local mirror — same contract as
-        ``S3FS.localize`` (unchanged ETags never re-downloaded, vanished
-        blobs purged so a stale generation cannot leak into a scan)."""
-        container, base = self._ck(root)
-        mirror = os.path.join(self._scratch_root, "r", container,
-                              base.replace("/", "_"))
-        prefixes = relpaths if relpaths is not None else [""]
-        for rel in prefixes:
-            rkey = f"{base}/{rel}".strip("/") if rel else base
-            seen = set()
-            for name, etag, _ in self._iter_keys(
-                    container, rkey + "/" if rkey else ""):
-                krel = name[len(base) + 1:] if base else name
-                if rel == "" and any(c.startswith(("_", "."))
-                                     for c in krel.split("/")):
-                    continue
-                local = os.path.join(mirror, *krel.split("/"))
-                seen.add(local)
-                if self._etags.get(local) == etag \
-                        and os.path.exists(local):
-                    continue
-                os.makedirs(os.path.dirname(local), exist_ok=True)
-                with open(local, "wb") as fh:
-                    fh.write(self.read_bytes(f"az://{container}/{name}"))
-                self._etags[local] = etag
-            local_prefix = os.path.join(mirror, *rel.split("/")) \
-                if rel else mirror
-            if os.path.isdir(local_prefix):
-                for dirpath, _, filenames in os.walk(local_prefix):
-                    for fname in filenames:
-                        full = os.path.join(dirpath, fname)
-                        if full not in seen:
-                            os.remove(full)
-                            self._etags.pop(full, None)
-        return mirror
 
 
 #: One AzureBlobFS per (endpoint, account, key) — same reuse rationale
@@ -2382,7 +2255,7 @@ def gcs_keyfile_token_provider(
     return provider
 
 
-class GcsFS:
+class GcsFS(_RestObjectStoreFS):
     """Google Cloud Storage backend speaking the public JSON API
     directly (urllib + OAuth2 ``Authorization: Bearer`` — no SDK
     dependency), closing the gs:// auth gap: the S3-interop path below
@@ -2395,43 +2268,35 @@ class GcsFS:
     pattern (:class:`AzureBlobFS`, :func:`msi_token_provider`) cloned
     onto GCS's documented endpoints.
 
-    Same two-plane contract as :class:`S3FS` / :class:`AzureBlobFS`:
-
-    - **metadata plane**: objects get/insert/delete, metadata GET,
-      media GET (``?alt=media``), Objects: list (prefix/delimiter,
-      ``pageToken``-paginated), Objects: rewrite + delete for the
-      rename fiction, and TRUE server-side compare-and-swap via
-      generation preconditions (``ifGenerationMatch`` — 0 is
-      create-if-absent, a generation number is the documented CAS;
-      losers get 412), which is everything the catalog commit needs.
-    - **bulk plane**: with the gcs-connector on the cluster Spark scans
-      ``gs://`` natively; without a JVM connector
-      ``requires_localization`` routes bulk I/O through the scratch
-      bridge (:meth:`upload_tree` / generation-validated
-      :meth:`localize`) exactly like S3 and az.
-
-    Rename is rewrite+delete (non-atomic — ``gs`` is in
-    ``_NON_ATOMIC_RENAME_SCHEMES``), so collections on gs:// take the
-    manifest-driven file-granular publish path.
+    The shared contract and its two planes are documented on
+    :class:`_ObjectStoreFS`.  The primitives here: objects
+    get/insert/delete, metadata GET, media GET (``?alt=media``),
+    Objects: list (prefix/delimiter, ``pageToken``-paginated), Objects:
+    rewrite + delete for the rename fiction, and TRUE server-side
+    compare-and-swap via generation preconditions
+    (``ifGenerationMatch`` — 0 is create-if-absent, a generation number
+    is the documented CAS; losers get 412).  Without the gcs-connector
+    on the cluster, bulk I/O takes the generation-validated scratch
+    bridge exactly like S3 and az.
 
     Configuration (env or constructor): ``GCS_BEARER_TOKEN`` (a static
-    OAuth2 access token) or ``GCE_METADATA_ENDPOINT`` (provider-backed
-    tokens with automatic refresh via
+    OAuth2 access token), ``GCS_KEYFILE`` (a service-account keyfile,
+    :func:`gcs_keyfile_token_provider`) or ``GCE_METADATA_ENDPOINT``
+    (provider-backed tokens with automatic refresh via
     :func:`gce_metadata_token_provider`); optional ``GCS_JSON_ENDPOINT``
     (fake-gcs-server-style ``http://host:port``; defaults to
     ``https://storage.googleapis.com``).  Paths are ``gs://bucket/key``.
     """
 
-    requires_localization = True
-
-    #: bounded transient-fault retry (429/5xx/resets), matching HttpFS
-    _RETRIES = 3
+    _SCHEME = "gs"
+    _VERSION_HEADER = "x-goog-generation"
+    _MEDIA = {"alt": "media"}
+    _BEARER_ENV = "GCS_BEARER_TOKEN"
 
     def __init__(self, endpoint: str | None = None,
                  scratch_dir: str | None = None,
                  bearer_token: str | None = None,
                  token_provider=None):
-        from collections import Counter
         bearer = bearer_token or None
         if bearer is None and token_provider is None:
             bearer = os.environ.get("GCS_BEARER_TOKEN")
@@ -2452,18 +2317,9 @@ class GcsFS:
         self._endpoint = (endpoint
                           or os.environ.get("GCS_JSON_ENDPOINT")
                           or "https://storage.googleapis.com").rstrip("/")
-        self._scratch_root = scratch_dir or os.path.join(
-            tempfile.gettempdir(), f"zcgs-{uuid.uuid4().hex[:8]}")
-        self._generations: dict[str, str] = {}
-        self.api_counts = Counter()
+        super().__init__(scratch_dir, "zcgs")
 
-    # -- path / auth helpers ---------------------------------------------
-    @staticmethod
-    def _bk(path: str) -> tuple[str, str]:
-        rest = path.split("://", 1)[1] if "://" in path else path
-        bucket, _, key = rest.partition("/")
-        return bucket, key.strip("/")
-
+    # -- request helpers -------------------------------------------------
     def _obj_url(self, bucket: str, key: str,
                  params: dict | None = None) -> str:
         from urllib.parse import quote, urlencode
@@ -2476,80 +2332,28 @@ class GcsFS:
             url += "?" + urlencode(sorted(params.items()))
         return url
 
-    def _bearer_token(self, force_refresh: bool = False) -> str:
-        """Current OAuth access token; provider-backed tokens refresh
-        lazily 5 minutes before expiry (and immediately on a 401)."""
-        import time
-        if self._token_provider is not None and (
-                force_refresh or self._bearer is None
-                or (self._bearer_exp is not None
-                    and time.time() > self._bearer_exp - 300)):
-            token, expires = self._token_provider()
-            self._bearer = str(token)
-            self._bearer_exp = float(expires) if expires else None
-        if not self._bearer:
-            raise StoreError(
-                "GcsFS bearer auth has no token (provider returned "
-                "nothing and GCS_BEARER_TOKEN is unset)")
-        return self._bearer
-
-    def _request(self, method: str, url: str,
+    def _request(self, method: str, bucket: str, key: str,
+                 params: dict | None = None,
                  headers: dict | None = None,
                  body: bytes | None = None):
-        """Bearer-authorized request → ``(status, headers, body)``;
-        404/"absent" mapping is per-operation (the S3FS ``_head`` rule:
-        ONLY a real 404 may read as absent).  Bounded transient-fault
-        retry (429/500/503/resets) like HttpFS; 4xx never retries,
-        EXCEPT one 401 under provider-backed auth — the token may have
-        expired mid-session, so refresh once and retry (same contract
-        as :class:`AzureBlobFS`)."""
-        import time
-        import urllib.error
-        import urllib.request
-        headers = dict(headers or {})
-        if body is not None:
-            headers.setdefault("Content-Type", "application/octet-stream")
-        token_refreshed = False
-        attempt = 0
-        while True:
-            headers["Authorization"] = f"Bearer {self._bearer_token()}"
-            req = urllib.request.Request(url, data=body, headers=headers,
-                                         method=method)
-            try:
-                with urllib.request.urlopen(req, timeout=60) as resp:
-                    return resp.status, dict(resp.headers), resp.read()
-            except urllib.error.HTTPError as exc:
-                data = exc.read()
-                if exc.code == 401 and self._token_provider is not None \
-                        and not token_refreshed:
-                    # the one free refresh does NOT consume a
-                    # transient-retry slot
-                    token_refreshed = True
-                    self._bearer_token(force_refresh=True)
-                    continue
-                if exc.code in (401, 403):
-                    raise StoreError(
-                        f"{method} {url.split('?')[0]} returned "
-                        f"{exc.code} under bearer auth: check the "
-                        f"token (expiry, scopes or IAM role)") from exc
-                if exc.code not in (429, 500, 503) \
-                        or attempt == self._RETRIES:
-                    return exc.code, dict(exc.headers), data
-            except urllib.error.URLError as exc:
-                if attempt == self._RETRIES:
-                    raise StoreError(
-                        f"GCS endpoint unreachable: {self._endpoint}: "
-                        f"{exc}") from None
-            time.sleep(0.1 * (2 ** attempt))
-            attempt += 1
+        """Bearer-authorized object (or, with an empty key, bucket)
+        request → ``(status, headers, body)``."""
+        return self._send(method, self._obj_url(bucket, key, params),
+                          headers, body)
 
-    # -- contract surface --------------------------------------------------
-    def supports_atomic_rename(self, path: str) -> bool:
-        return False
+    def _upload(self, bucket: str, key: str, data: bytes,
+                extra_params: dict | None = None):
+        from urllib.parse import urlencode
+        params = {"uploadType": "media", "name": key}
+        params.update(extra_params or {})
+        url = (f"{self._endpoint}/upload/storage/v1/b/{bucket}/o?"
+               + urlencode(sorted(params.items())))
+        return self._send("POST", url, body=data)
 
-    def _meta(self, bucket: str, key: str) -> "dict | None":
+    # -- primitives -----------------------------------------------------
+    def _head(self, bucket: str, key: str) -> "dict | None":
         self.api_counts["head"] += 1
-        status, _, body = self._request("GET", self._obj_url(bucket, key))
+        status, _, body = self._request("GET", bucket, key)
         if status == 404:
             return None
         if status >= 400:
@@ -2559,9 +2363,7 @@ class GcsFS:
 
     def mtime(self, path: str) -> "float | None":
         import datetime
-        bucket, key = self._bk(path)
-        meta = self._meta(bucket, key)
-        updated = (meta or {}).get("updated")
+        updated = (self._head(*self._bk(path)) or {}).get("updated")
         if not updated:
             return None
         try:
@@ -2570,19 +2372,18 @@ class GcsFS:
         except ValueError:
             return None
 
-    def _list_page(self, bucket: str, *, prefix: str,
+    def _list_page(self, bucket: str, prefix: str,
                    delimiter: str | None = None,
-                   page_token: str | None = None):
-        """One Objects:list page → (items, prefixes, next_token) where
-        items are (name, generation, size)."""
+                   token: str | None = None, limit: int | None = None):
         self.api_counts["list"] += 1
         params = {"prefix": prefix}
         if delimiter:
             params["delimiter"] = delimiter
-        if page_token:
-            params["pageToken"] = page_token
-        status, _, body = self._request(
-            "GET", self._obj_url(bucket, "", params))
+        if token:
+            params["pageToken"] = token
+        if limit:
+            params["maxResults"] = str(limit)
+        status, _, body = self._request("GET", bucket, "", params)
         if status >= 400:
             raise StoreError(
                 f"LIST gs://{bucket} ({prefix!r}) failed: {status}")
@@ -2592,111 +2393,38 @@ class GcsFS:
         return items, list(doc.get("prefixes", ())), \
             doc.get("nextPageToken")
 
-    def _iter_keys(self, bucket: str, prefix: str):
-        token = None
-        while True:
-            items, _, token = self._list_page(bucket, prefix=prefix,
-                                              page_token=token)
-            yield from items
-            if not token:
-                return
-
-    def exists(self, path: str) -> bool:
-        bucket, key = self._bk(path)
-        if not key:
-            return True
-        if self._meta(bucket, key) is not None:
-            return True
-        items, prefixes, _ = self._list_page(bucket, prefix=key + "/")
-        return bool(items or prefixes)
-
-    def exists_file(self, path: str) -> bool:
-        bucket, key = self._bk(path)
-        return self._meta(bucket, key) is not None
-
-    def read_text(self, path: str) -> str:
-        return self.read_bytes(path).decode("utf-8")
-
-    def read_bytes(self, path: str) -> bytes:
-        bucket, key = self._bk(path)
-        self.api_counts["get"] += 1
-        status, _, body = self._request(
-            "GET", self._obj_url(bucket, key, {"alt": "media"}))
-        if status == 404:
-            raise FileNotFoundError(path)
-        if status >= 400:
-            raise StoreError(f"GET {path} failed: {status}")
-        return body
-
-    def write_text(self, path: str, data: str) -> None:
-        self.write_bytes(path, data.encode("utf-8"))
-
-    def _upload(self, bucket: str, key: str, data: bytes,
-                extra_params: dict | None = None):
-        from urllib.parse import urlencode
-        params = {"uploadType": "media", "name": key}
-        params.update(extra_params or {})
-        url = (f"{self._endpoint}/upload/storage/v1/b/{bucket}/o?"
-               + urlencode(sorted(params.items())))
-        return self._request("POST", url, body=data)
-
-    def write_bytes(self, path: str, data: bytes) -> None:
-        bucket, key = self._bk(path)
+    def _put(self, bucket: str, key: str, data: bytes) -> None:
         self.api_counts["put"] += 1
         status, _, _ = self._upload(bucket, key, data)
         if status >= 400:
-            raise StoreError(f"PUT {path} failed: {status}")
+            raise StoreError(f"PUT gs://{bucket}/{key} failed: {status}")
 
-    def read_versioned(self, path: str) -> tuple[str | None, str | None]:
-        bucket, key = self._bk(path)
-        self.api_counts["get"] += 1
-        status, hdrs, body = self._request(
-            "GET", self._obj_url(bucket, key, {"alt": "media"}))
-        if status == 404:
-            return None, None
-        if status >= 400:
-            raise StoreError(f"GET {path} failed: {status}")
-        return body.decode("utf-8"), hdrs.get("x-goog-generation")
-
-    def write_if(self, path: str, data: str, token: str | None) -> str:
-        """Server-side compare-and-swap via generation preconditions —
-        the documented GCS contract: ``ifGenerationMatch=0`` means
-        create-only, a generation number means replace-exactly-this;
-        the losing writer gets 412."""
-        bucket, key = self._bk(path)
+    def _put_if(self, bucket: str, key: str, data: bytes,
+                token: str | None) -> str:
+        """Generation preconditions — the documented GCS contract:
+        ``ifGenerationMatch=0`` means create-only, a generation number
+        means replace-exactly-this; the losing writer gets 412."""
         self.api_counts["put"] += 1
         status, _, body = self._upload(
-            bucket, key, data.encode("utf-8"),
+            bucket, key, data,
             {"ifGenerationMatch": token if token is not None else "0"})
         if status == 412:
-            raise CommitConflictError(
-                f"{path}: conditional PUT lost the race ({status})")
+            raise CommitConflictError(str(status))
         if status >= 400:
-            raise StoreError(f"conditional PUT {path} failed: {status}")
+            raise StoreError(f"conditional PUT gs://{bucket}/{key} "
+                             f"failed: {status}")
         return json.loads(body).get("generation")
 
-    def delete(self, path: str) -> None:
-        bucket, key = self._bk(path)
-        doomed = [key] if self._meta(bucket, key) is not None else []
-        doomed += [name for name, _, _ in
-                   self._iter_keys(bucket, key + "/")]
-        for name in doomed:
-            self.api_counts["delete"] += 1
-            status, _, _ = self._request(
-                "DELETE", self._obj_url(bucket, name))
-            if status >= 400 and status != 404:
-                raise StoreError(
-                    f"DELETE gs://{bucket}/{name} failed: {status}")
-
-    def mkdirs(self, path: str) -> None:
-        pass  # directories are prefix fictions on a flat keyspace
-
-    def _rewrite(self, sb: str, sk: str, db: str, dk: str) -> None:
-        """Objects: rewrite — the documented server-side copy.  Large
-        objects may need several calls chained by ``rewriteToken``;
-        loop until ``done`` (single-call for the sizes catalogs move,
-        but the protocol requires the loop)."""
+    def _copy_key(self, sb: str, sk: str, db: str, dk: str,
+                  listed: bool = False) -> bool:
+        """Metadata GET (unless just listed), then Objects: rewrite —
+        the documented server-side copy.  Large objects may need
+        several calls chained by ``rewriteToken``; loop until ``done``
+        (single-call for the sizes catalogs move, but the protocol
+        requires the loop)."""
         from urllib.parse import quote, urlencode
+        if not listed and self._head(sb, sk) is None:
+            return False
         self.api_counts["copy"] += 1
         rewrite_token = None
         while True:
@@ -2705,7 +2433,7 @@ class GcsFS:
                    f"{quote(dk, safe='')}")
             if rewrite_token:
                 url += "?" + urlencode({"rewriteToken": rewrite_token})
-            status, _, body = self._request("POST", url, body=b"")
+            status, _, body = self._send("POST", url, body=b"")
             if status == 404:
                 raise FileNotFoundError(f"gs://{sb}/{sk}")
             if status >= 400:
@@ -2714,166 +2442,8 @@ class GcsFS:
                     f"failed: {status}")
             doc = json.loads(body)
             if doc.get("done", True):
-                return
+                return True
             rewrite_token = doc.get("rewriteToken")
-
-    def _delete_source(self, bucket: str, key: str) -> None:
-        """Post-copy source delete: a silent failure would leave BOTH
-        src and dst visible as duplicate data, so anything but success
-        or already-gone (404) raises."""
-        self.api_counts["delete"] += 1
-        status, _, _ = self._request(
-            "DELETE", self._obj_url(bucket, key))
-        if status >= 400 and status != 404:
-            raise StoreError(
-                f"DELETE gs://{bucket}/{key} after copy failed: "
-                f"{status} (source object survives; re-run the move)")
-
-    def move_file(self, src: str, dst: str) -> bool:
-        """Single-object move (caller did any dst-exists check): one
-        rewrite + one delete.  False ONLY for a missing source."""
-        sb, sk = self._bk(src)
-        db, dk = self._bk(dst)
-        if self._meta(sb, sk) is None:
-            return False
-        self._rewrite(sb, sk, db, dk)
-        self._delete_source(sb, sk)
-        return True
-
-    def copy_file(self, src: str, dst: str) -> bool:
-        """Non-destructive server-side copy (one Objects: rewrite —
-        bytes never leave GCS; retention copies use this).  False ONLY
-        for a missing source."""
-        sb, sk = self._bk(src)
-        db, dk = self._bk(dst)
-        if self._meta(sb, sk) is None:
-            return False
-        self._rewrite(sb, sk, db, dk)
-        return True
-
-    def rename(self, src: str, dst: str) -> bool:
-        if self.exists(dst):
-            return False
-        sb, sk = self._bk(src)
-        if self._meta(sb, sk) is not None:
-            return self.move_file(src, dst)
-        keys = [k for k, _, _ in self._iter_keys(sb, sk + "/")]
-        if not keys:
-            return False
-        db, dk = self._bk(dst)
-        for k in keys:
-            self._rewrite(sb, k, db, dk + k[len(sk):])
-            self._delete_source(sb, k)
-        return True
-
-    def _delimited(self, path: str) -> tuple[list[str], list[str]]:
-        bucket, key = self._bk(path)
-        prefix = key + "/" if key else ""
-        files, dirs, token = [], [], None
-        while True:
-            items, prefixes, token = self._list_page(
-                bucket, prefix=prefix, delimiter="/", page_token=token)
-            files += [name[len(prefix):] for name, _, _ in items
-                      if name != prefix]
-            dirs += [p[len(prefix):].rstrip("/") for p in prefixes
-                     if p[len(prefix):].rstrip("/") not in dirs]
-            if not token:
-                return sorted(files), sorted(dirs)
-
-    def list_files(self, path: str) -> list[str]:
-        return self._delimited(path)[0]
-
-    def list_dirs(self, path: str) -> list[str]:
-        return self._delimited(path)[1]
-
-    def _rel_keys(self, root: str):
-        bucket, base = self._bk(root)
-        start = len(base) + 1 if base else 0
-        for name, gen, size in self._iter_keys(
-                bucket, base + "/" if base else ""):
-            yield name[start:], gen, size
-
-    def walk_files(self, root: str) -> list[str]:
-        return sorted(
-            rel for rel, _, _ in self._rel_keys(root)
-            if not any(c.startswith(("_", "."))
-                       for c in rel.split("/")))
-
-    def list_partition_dirs(self, root: str, depth: int) -> list[str]:
-        out = set()
-        for rel, _, _ in self._rel_keys(root):
-            comps = rel.split("/")
-            if len(comps) <= depth:
-                continue
-            head = comps[:depth]
-            if any(c.startswith(("_", ".")) for c in comps) \
-                    or not all("=" in c for c in head):
-                continue
-            out.add("/".join(head))
-        return sorted(out)
-
-    # -- bulk bridge (no-JVM-connector configurations only) ---------------
-    def new_scratch_dir(self) -> str:
-        path = os.path.join(self._scratch_root, "w", uuid.uuid4().hex)
-        os.makedirs(path, exist_ok=True)
-        return path
-
-    def upload_tree(self, local_dir: str, remote_dir: str) -> list[str]:
-        bucket, base = self._bk(remote_dir)
-        uploaded: list[str] = []
-        for dirpath, dirnames, filenames in os.walk(local_dir):
-            dirnames[:] = [d for d in dirnames
-                           if not d.startswith(("_", "."))]
-            for fname in filenames:
-                if fname.startswith(("_", ".")):
-                    continue
-                full = os.path.join(dirpath, fname)
-                rel = os.path.relpath(full, local_dir).replace(os.sep, "/")
-                with open(full, "rb") as fh:
-                    self.write_bytes(f"gs://{bucket}/{base}/{rel}",
-                                     fh.read())
-                uploaded.append(rel)
-        shutil.rmtree(local_dir, ignore_errors=True)
-        return sorted(uploaded)
-
-    def localize(self, root: str,
-                 relpaths: "list[str] | None" = None) -> str:
-        """Generation-validated local mirror — same contract as
-        ``S3FS.localize`` (unchanged generations never re-downloaded,
-        vanished objects purged so a stale generation cannot leak into
-        a scan)."""
-        bucket, base = self._bk(root)
-        mirror = os.path.join(self._scratch_root, "r", bucket,
-                              base.replace("/", "_"))
-        prefixes = relpaths if relpaths is not None else [""]
-        for rel in prefixes:
-            rkey = f"{base}/{rel}".strip("/") if rel else base
-            seen = set()
-            for name, gen, _ in self._iter_keys(
-                    bucket, rkey + "/" if rkey else ""):
-                krel = name[len(base) + 1:] if base else name
-                if rel == "" and any(c.startswith(("_", "."))
-                                     for c in krel.split("/")):
-                    continue
-                local = os.path.join(mirror, *krel.split("/"))
-                seen.add(local)
-                if self._generations.get(local) == gen \
-                        and os.path.exists(local):
-                    continue
-                os.makedirs(os.path.dirname(local), exist_ok=True)
-                with open(local, "wb") as fh:
-                    fh.write(self.read_bytes(f"gs://{bucket}/{name}"))
-                self._generations[local] = gen
-            local_prefix = os.path.join(mirror, *rel.split("/")) \
-                if rel else mirror
-            if os.path.isdir(local_prefix):
-                for dirpath, _, filenames in os.walk(local_prefix):
-                    for fname in filenames:
-                        full = os.path.join(dirpath, fname)
-                        if full not in seen:
-                            os.remove(full)
-                            self._generations.pop(full, None)
-        return mirror
 
 
 #: One GcsFS per (endpoint, credential) — same reuse rationale as

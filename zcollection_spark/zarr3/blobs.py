@@ -3,7 +3,7 @@
 The zarr chunk/shard/metadata reads and writes run INSIDE Spark tasks
 (``applyInPandas`` writers, DataSource readers), so they cannot go
 through the driver's metadata FS objects.  This module gives them a
-path-string-keyed blob interface with two backends:
+path-string-keyed blob interface with these backends:
 
 - :class:`LocalBlobs` — pathlib, for ``file://``/bare paths (identical
   behavior to the original pathlib code).
@@ -13,8 +13,11 @@ path-string-keyed blob interface with two backends:
   single GET-and-catch (not HEAD+GET), and shard partial reads use
   ranged GETs (``bytes=-n`` / ``bytes=off-len``) — the object-store
   access pattern ``sharding_indexed`` exists for.
+- :class:`StoreBlobs` — ``az://`` and service-account ``gs://`` over
+  the ``fs`` clients' ranged-GET primitive.
+- :class:`HttpBlobs` — read-only plain HTTP(S).
 
-Clients are cached per process (one boto3 client per Python worker).
+Clients are cached per process (one client per Python worker).
 The reference reaches the same surface through obstore
 (``/root/reference/zcollection/store/obstore_store.py:27-153``).
 """
@@ -23,6 +26,8 @@ from __future__ import annotations
 
 import os
 from pathlib import Path
+
+from ..errors import ReadOnlyError, StoreError
 
 
 class LocalBlobs:
@@ -87,13 +92,15 @@ def capture_blob_conf() -> dict | None:
                      "az_sas": az_sas,
                      "az_endpoint": os.environ.get("AZURE_BLOB_ENDPOINT")})
     gs_bearer = os.environ.get("GCS_BEARER_TOKEN")
+    gs_keyfile = os.environ.get("GCS_KEYFILE")
     gs_meta = os.environ.get("GCE_METADATA_ENDPOINT")
-    if gs_bearer or gs_meta:
+    if gs_bearer or gs_keyfile or gs_meta:
         # a static token rides the plan (test rigs / short jobs); a
-        # metadata endpoint is BETTER for long jobs — each executor
-        # mints and refreshes its own tokens, so expiry never strands
-        # a worker mid-scan
-        conf.update({"gs_bearer": gs_bearer, "gs_meta": gs_meta,
+        # keyfile path or a metadata endpoint is BETTER for long jobs —
+        # each executor mints and refreshes its own tokens, so expiry
+        # never strands a worker mid-scan
+        conf.update({"gs_bearer": gs_bearer, "gs_keyfile": gs_keyfile,
+                     "gs_meta": gs_meta,
                      "gs_endpoint": os.environ.get("GCS_JSON_ENDPOINT")})
     return conf or None
 
@@ -163,207 +170,20 @@ class S3Blobs:
         return data
 
 
-class AzureBlobs:
-    """Azure Blob backend for zarr chunk/shard I/O: executors PUT
-    chunk objects directly and shard partial reads go out as signed
-    HTTP Range requests — same contract as :class:`S3Blobs`, built on
-    :class:`..fs.AzureBlobFS`'s SharedKey request layer (the Range
-    header sits in the signed string-to-sign slot, so ranged reads
-    authenticate like any other op)."""
+#: statuses that mean "no such object"
+_ABSENT = (404, 410)
 
-    def __init__(self, conf: dict | None = None):
-        from ..fs import AzureBlobFS
-        conf = conf or {}
-        self._fs = AzureBlobFS(
-            conf.get("az_account"), conf.get("az_key"),
-            conf.get("az_endpoint"), sas_token=conf.get("az_sas"))
+
+class _RangedReads:
+    """Reads over ``self._fetch(path, headers) -> (status, headers,
+    body)`` with ONE status mapping for every HTTP-speaking backend:
+    404/410 is absent; a 416 on a suffix range is a zero-byte object
+    (no tail) and on ``read_at`` a truncated shard; a 200 from a server
+    that ignores Range (python's http.server) is sliced locally —
+    correct, just not partial I/O; a short 206 is truncation too."""
 
     def mkdirs(self, path: str) -> None:
         pass  # prefixes need no creation
-
-    def write_bytes(self, path: str, data: bytes) -> None:
-        self._fs.write_bytes(path, data)
-
-    def write_text(self, path: str, text: str) -> None:
-        self._fs.write_text(path, text)
-
-    def read_text(self, path: str) -> str:
-        return self._fs.read_text(path)
-
-    def try_read_bytes(self, path: str) -> bytes | None:
-        try:
-            return self._fs.read_bytes(path)
-        except FileNotFoundError:
-            return None
-
-    def _ranged(self, path: str, range_header: str):
-        container, key = self._fs._ck(path)
-        return self._fs._request("GET", container, key,
-                                 headers={"Range": range_header})
-
-    def read_tail(self, path: str, nbytes: int) -> bytes | None:
-        status, _, body = self._ranged(path, f"bytes=-{nbytes}")
-        if status == 404 or status == 416:
-            # 416 on a suffix range: zero-byte object — no tail
-            return None
-        if status >= 400:
-            from ..errors import StoreError
-            raise StoreError(f"ranged GET {path} failed: {status}")
-        return body if status == 206 else body[-nbytes:]
-
-    def read_at(self, path: str, offset: int, nbytes: int) -> bytes:
-        status, _, body = self._ranged(
-            path, f"bytes={offset}-{offset + nbytes - 1}")
-        if status == 416:
-            # shard index pointed past EOF: truncation, not absence
-            from ..errors import StoreError
-            raise StoreError(
-                f"shard {path} is truncated/corrupt: range "
-                f"{offset}-{offset + nbytes - 1} past end of object")
-        if status == 404:
-            raise FileNotFoundError(path)
-        if status >= 400:
-            from ..errors import StoreError
-            raise StoreError(f"ranged GET {path} failed: {status}")
-        out = body if status == 206 else body[offset:offset + nbytes]
-        if len(out) < nbytes:
-            # a 206 with a clamped short body means the object ends
-            # mid-range — same truncation class as the 416 above
-            from ..errors import StoreError
-            raise StoreError(
-                f"shard {path} is truncated/corrupt: ranged read at "
-                f"{offset} returned {len(out)} of {nbytes} bytes")
-        return out
-
-
-class GcsBlobs:
-    """GCS backend for zarr chunk/shard I/O under service-account
-    bearer auth: executors write chunk objects through the JSON API
-    upload endpoint and shard partial reads go out as Range requests
-    on ``?alt=media`` — same contract as :class:`S3Blobs` /
-    :class:`AzureBlobs`, built on :class:`..fs.GcsFS`'s bearer request
-    layer (token refresh-on-401 included, so a token expiring
-    mid-scan re-mints instead of failing the task).  HMAC-interop
-    deployments use :class:`S3Blobs` against the XML endpoint instead;
-    this class is the service-account path."""
-
-    def __init__(self, conf: dict | None = None):
-        from ..fs import GcsFS, gce_metadata_token_provider
-        conf = conf or {}
-        meta = conf.get("gs_meta") or os.environ.get(
-            "GCE_METADATA_ENDPOINT")
-        bearer = conf.get("gs_bearer") or os.environ.get(
-            "GCS_BEARER_TOKEN")
-        provider = (gce_metadata_token_provider(endpoint=meta)
-                    if meta and not bearer else None)
-        self._fs = GcsFS(conf.get("gs_endpoint"),
-                         bearer_token=bearer, token_provider=provider)
-
-    def mkdirs(self, path: str) -> None:
-        pass  # prefixes need no creation
-
-    def write_bytes(self, path: str, data: bytes) -> None:
-        self._fs.write_bytes(path, data)
-
-    def write_text(self, path: str, text: str) -> None:
-        self._fs.write_text(path, text)
-
-    def read_text(self, path: str) -> str:
-        return self._fs.read_text(path)
-
-    def try_read_bytes(self, path: str) -> bytes | None:
-        try:
-            return self._fs.read_bytes(path)
-        except FileNotFoundError:
-            return None
-
-    def _ranged(self, path: str, range_header: str):
-        bucket, key = self._fs._bk(path)
-        return self._fs._request(
-            "GET", self._fs._obj_url(bucket, key, {"alt": "media"}),
-            headers={"Range": range_header})
-
-    def read_tail(self, path: str, nbytes: int) -> bytes | None:
-        status, _, body = self._ranged(path, f"bytes=-{nbytes}")
-        if status in (404, 416):
-            # 416 on a suffix range: zero-byte object — no tail
-            return None
-        if status >= 400:
-            from ..errors import StoreError
-            raise StoreError(f"ranged GET {path} failed: {status}")
-        return body
-
-    def read_at(self, path: str, offset: int, nbytes: int) -> bytes:
-        status, _, body = self._ranged(
-            path, f"bytes={offset}-{offset + nbytes - 1}")
-        if status == 416:
-            # shard index pointed past EOF: truncation, not absence
-            from ..errors import StoreError
-            raise StoreError(
-                f"shard {path} is truncated/corrupt: range "
-                f"{offset}-{offset + nbytes - 1} past end of object")
-        if status == 404:
-            raise FileNotFoundError(path)
-        if status >= 400:
-            from ..errors import StoreError
-            raise StoreError(f"ranged GET {path} failed: {status}")
-        out = body if status == 206 else body[offset:offset + nbytes]
-        if len(out) < nbytes:
-            # a 206 with a clamped short body means the object ends
-            # mid-range — same truncation class as the 416 above
-            from ..errors import StoreError
-            raise StoreError(
-                f"shard {path} is truncated/corrupt: ranged read at "
-                f"{offset} returned {len(out)} of {nbytes} bytes")
-        return out
-
-
-class HttpBlobs:
-    """READ-ONLY blob access over plain HTTP(S) — zarr chunk names are
-    derived from the zarr metadata (never a LIST), so a zarr3
-    collection is directly servable from a static file server with no
-    manifest at all: metadata GET + chunk GETs, shard partial reads as
-    HTTP Range requests.  Servers that ignore Range (python's
-    http.server answers 200 full-body) degrade to slice-locally —
-    correct, just not partial I/O; real object stores and CDNs answer
-    206.  Writes raise, matching ``fs.HttpFS``."""
-
-    #: bounded transient-fault retry (5xx / resets), matching fs.HttpFS
-    _RETRIES = 3
-
-    def _get(self, path: str, headers: dict | None = None):
-        import time
-        import urllib.error
-        import urllib.request
-        req = urllib.request.Request(path, headers=headers or {})
-        for attempt in range(self._RETRIES + 1):
-            try:
-                with urllib.request.urlopen(req, timeout=30) as resp:
-                    return resp.status, resp.read()
-            except urllib.error.HTTPError as exc:
-                if exc.code in (404, 410):
-                    return None, None
-                if exc.code == 416:
-                    # Range past EOF: the OBJECT exists but is shorter
-                    # than the requested window — distinct from absent,
-                    # so corruption isn't masked as a missing object.
-                    return 416, None
-                if exc.code < 500 or attempt == self._RETRIES:
-                    raise
-            except urllib.error.URLError:
-                if attempt == self._RETRIES:
-                    raise
-            time.sleep(0.1 * (2 ** attempt))
-        raise AssertionError("unreachable")
-
-    def mkdirs(self, path: str) -> None:
-        pass
-
-    def _read_only(self, *_a, **_k):
-        from ..errors import ReadOnlyError
-        raise ReadOnlyError("HTTP(S) stores are read-only")
-
-    write_bytes = write_text = _read_only
 
     def read_text(self, path: str) -> str:
         data = self.try_read_bytes(path)
@@ -372,39 +192,144 @@ class HttpBlobs:
         return data.decode("utf-8")
 
     def try_read_bytes(self, path: str) -> bytes | None:
-        _, body = self._get(path)
+        status, _, body = self._fetch(path)
+        if status in _ABSENT:
+            return None
+        if status >= 400:
+            raise StoreError(f"GET {path} failed: {status}")
         return body
 
     def read_tail(self, path: str, nbytes: int) -> bytes | None:
-        status, body = self._get(path,
-                                 {"Range": f"bytes=-{nbytes}"})
-        if body is None:
-            # 416 on a suffix range means a zero-byte object: no tail
-            # to read — callers treat that the same as absent.
+        status, _, body = self._fetch(path, {"Range": f"bytes=-{nbytes}"})
+        if status in _ABSENT or status == 416:
             return None
+        if status >= 400:
+            raise StoreError(f"ranged GET {path} failed: {status}")
         return body if status == 206 else body[-nbytes:]
 
     def read_at(self, path: str, offset: int, nbytes: int) -> bytes:
-        status, body = self._get(
+        status, _, body = self._fetch(
             path, {"Range": f"bytes={offset}-{offset + nbytes - 1}"})
         if status == 416:
-            # The shard index pointed past EOF on a Range-honoring
-            # server: the object EXISTS but is truncated — corruption,
-            # not a missing-object condition.
-            from ..errors import StoreError
+            # the shard index pointed past EOF: the object EXISTS but
+            # is truncated — corruption, not a missing object
             raise StoreError(
                 f"shard {path} is truncated/corrupt: range "
                 f"{offset}-{offset + nbytes - 1} past end of object")
-        if body is None:
+        if status in _ABSENT:
             raise FileNotFoundError(path)
+        if status >= 400:
+            raise StoreError(f"ranged GET {path} failed: {status}")
         out = body if status == 206 else body[offset:offset + nbytes]
         if len(out) < nbytes:
-            # 206 with a clamped short body: object ends mid-range
-            from ..errors import StoreError
+            # a 206 with a clamped short body means the object ends
+            # mid-range — same truncation class as the 416 above
             raise StoreError(
                 f"shard {path} is truncated/corrupt: ranged read at "
                 f"{offset} returned {len(out)} of {nbytes} bytes")
         return out
+
+
+class StoreBlobs(_RangedReads):
+    """az:// and gs:// (service-account) chunk/shard I/O over an
+    object-store client from :mod:`..fs`: executors PUT chunk objects
+    directly and shard partial reads go out as authorized Range GETs
+    through the client's ranged-GET primitive (``_fetch``).  Azure's
+    SharedKey signs the Range header like any other; GCS bearer
+    requests re-mint a token that expires mid-scan."""
+
+    def __init__(self, fs):
+        self._fs = fs
+
+    def _fetch(self, path: str, headers: dict | None = None):
+        return self._fs._fetch(*self._fs._bk(path), headers)
+
+    def write_bytes(self, path: str, data: bytes) -> None:
+        self._fs.write_bytes(path, data)
+
+    def write_text(self, path: str, text: str) -> None:
+        self._fs.write_text(path, text)
+
+
+class AzureBlobs(StoreBlobs):
+    """``StoreBlobs`` over the az:// client of a shipped ``conf``."""
+
+    def __init__(self, conf: dict | None = None):
+        super().__init__(store_client("az://", conf))
+
+
+def store_client(path: str, conf: dict | None = None):
+    """The :class:`..fs.AzureBlobFS` / :class:`..fs.GcsFS` client for an
+    ``az://`` / ``gs://`` path, built from a shipped blob ``conf``
+    (:func:`capture_blob_conf`) with this process's env as fallback.
+    Raises :class:`StoreError` when neither holds a credential: a zarr
+    write must never fall back to a local directory named after the
+    URL.  (HMAC-interop gs:// has no blob backend and raises too.)"""
+    from ..fs import (AzureBlobFS, GcsFS, gce_metadata_token_provider,
+                      gcs_keyfile_token_provider)
+    c = conf or {}
+    env = os.environ.get
+    if path.startswith("az://"):
+        if not ((c.get("az_account") or env("AZURE_STORAGE_ACCOUNT"))
+                and (c.get("az_key") or c.get("az_sas")
+                     or env("AZURE_STORAGE_KEY")
+                     or env("AZURE_STORAGE_SAS_TOKEN")
+                     or env("AZURE_STORAGE_BEARER_TOKEN"))):
+            raise StoreError(
+                f"no Azure credentials for {path}: zarr blob I/O needs "
+                f"AZURE_STORAGE_ACCOUNT plus AZURE_STORAGE_KEY, "
+                f"AZURE_STORAGE_SAS_TOKEN or AZURE_STORAGE_BEARER_TOKEN")
+        return AzureBlobFS(c.get("az_account"), c.get("az_key"),
+                           c.get("az_endpoint"), sas_token=c.get("az_sas"))
+    # static token wins; then the keyfile (JWT grant — the off-GCE
+    # mode); then the metadata server — the precedence of fs.fs_for
+    bearer = c.get("gs_bearer") or env("GCS_BEARER_TOKEN")
+    keyfile = c.get("gs_keyfile") or env("GCS_KEYFILE")
+    meta = c.get("gs_meta") or env("GCE_METADATA_ENDPOINT")
+    provider = None
+    if not bearer:
+        if keyfile:
+            provider = gcs_keyfile_token_provider(keyfile)
+        elif meta:
+            # a metadata endpoint suits long jobs: each executor mints
+            # and refreshes its own tokens, so expiry never strands a
+            # worker mid-scan
+            provider = gce_metadata_token_provider(endpoint=meta)
+        else:
+            raise StoreError(
+                f"no GCS service-account credentials for {path}: zarr "
+                f"blob I/O needs GCS_BEARER_TOKEN, GCS_KEYFILE or "
+                f"GCE_METADATA_ENDPOINT (HMAC-interop keys have no zarr "
+                f"blob backend)")
+    return GcsFS(c.get("gs_endpoint"), bearer_token=bearer,
+                 token_provider=provider)
+
+
+class HttpBlobs(_RangedReads):
+    """READ-ONLY blob access over plain HTTP(S) — zarr chunk names are
+    derived from the zarr metadata (never a LIST), so a zarr3
+    collection is directly servable from a static file server with no
+    manifest at all: metadata GET + chunk GETs, shard partial reads as
+    HTTP Range requests through the shared retrying transport.  Writes
+    raise, matching ``fs.HttpFS``."""
+
+    def _fetch(self, path: str, headers: dict | None = None):
+        from ..fs import http_request
+        return http_request("GET", path, headers, timeout=30)
+
+    def _read_only(self, *_a, **_k):
+        raise ReadOnlyError("HTTP(S) stores are read-only")
+
+    write_bytes = write_text = _read_only
+
+
+#: env vars that select the az/gs client, per scheme (cache identity)
+_STORE_ENV = {
+    "az": ("AZURE_BLOB_ENDPOINT", "AZURE_STORAGE_ACCOUNT",
+           "AZURE_STORAGE_KEY", "AZURE_STORAGE_SAS_TOKEN",
+           "AZURE_STORAGE_BEARER_TOKEN"),
+    "gs": ("GCS_JSON_ENDPOINT", "GCS_BEARER_TOKEN", "GCS_KEYFILE",
+           "GCE_METADATA_ENDPOINT")}
 
 
 _CACHE: dict = {}
@@ -412,8 +337,9 @@ _CACHE: dict = {}
 
 def blobs_for(path: str, conf: dict | None = None):
     """Blob backend for ``path`` by scheme; clients cached per process
-    (keyed by endpoint so a shipped ``conf`` never collides with a
-    stale env-derived client)."""
+    (keyed by endpoint/credentials so a shipped ``conf`` never collides
+    with a stale env-derived client).  ``az://``/``gs://`` without
+    credentials raise :class:`StoreError`."""
     path = str(path)
     if path.startswith(("s3://", "s3a://", "s3n://")):
         key = ("s3", (conf or {}).get("endpoint_url")
@@ -421,40 +347,16 @@ def blobs_for(path: str, conf: dict | None = None):
         if key not in _CACHE:
             _CACHE[key] = S3Blobs(conf)
         return _CACHE[key]
-    if path.startswith("az://"):
-        c = conf or {}
-        key = ("az",
-               c.get("az_endpoint")
-               or os.environ.get("AZURE_BLOB_ENDPOINT"),
-               c.get("az_account")
-               or os.environ.get("AZURE_STORAGE_ACCOUNT"),
-               # auth identity (resolved the same way the client ctor
-               # resolves it): a SAS-scoped client must not be reused
-               # where key auth was configured, nor across tokens
-               bool(c.get("az_key")
-                    or os.environ.get("AZURE_STORAGE_KEY")),
-               c.get("az_sas")
-               or os.environ.get("AZURE_STORAGE_SAS_TOKEN"))
+    if path.startswith(("az://", "gs://")):
+        # keyed by the whole credential identity (shipped conf + env):
+        # a SAS-scoped client must not be reused where key auth was
+        # configured, nor across tokens
+        scheme = path[:2]
+        key = (scheme, tuple(sorted((conf or {}).items())),
+               tuple(os.environ.get(k) for k in _STORE_ENV[scheme]))
         if key not in _CACHE:
-            _CACHE[key] = AzureBlobs(c)
+            _CACHE[key] = StoreBlobs(store_client(path, conf))
         return _CACHE[key]
-    if path.startswith("gs://"):
-        c = conf or {}
-        bearer = c.get("gs_bearer") or os.environ.get("GCS_BEARER_TOKEN")
-        meta = c.get("gs_meta") or os.environ.get("GCE_METADATA_ENDPOINT")
-        if bearer or meta:
-            key = ("gs",
-                   c.get("gs_endpoint")
-                   or os.environ.get("GCS_JSON_ENDPOINT"),
-                   # auth identity: a static token must not be reused
-                   # across tokens nor where a provider was configured
-                   bearer, meta)
-            if key not in _CACHE:
-                _CACHE[key] = GcsBlobs(c)
-            return _CACHE[key]
-        # no service-account config: HMAC-interop deployments speak the
-        # XML endpoint through S3Blobs via GCS_* envs mapped by the
-        # caller; anything else falls through (a local-path mirror)
     if path.startswith(("http://", "https://")):
         if "http" not in _CACHE:
             _CACHE["http"] = HttpBlobs()

@@ -198,34 +198,25 @@ class ZarrReader(DataSourceReader):
     def partitions(self) -> Sequence[InputPartition]:
         from pyspark.sql import SparkSession
         from ..collection.catalog import Catalog
-        from ..fs import AzureBlobFS, S3FS, fs_for, scheme_of
+        from ..fs import S3FS, fs_for, scheme_of
+        from .blobs import store_client
         # this also runs in a Python worker: with a shipped blob_conf,
         # build the object-store metadata FS from it instead of the
         # worker's env (workers keep the environment they were BORN
         # with — late-set endpoint config never reaches them)
         conf = self.blob_conf
-        if conf is not None \
-                and scheme_of(self.root) in ("s3", "s3a", "s3n"):
+        scheme = scheme_of(self.root)
+        if conf is not None and scheme in ("s3", "s3a", "s3n"):
             fs = S3FS(endpoint_url=conf.get("endpoint_url"),
                       region=conf.get("region"),
                       access_key=conf.get("access_key"),
                       secret_key=conf.get("secret_key"))
-        elif conf is not None and scheme_of(self.root) == "az" \
-                and conf.get("az_account"):
-            fs = AzureBlobFS(conf.get("az_account"),
-                             conf.get("az_key"),
-                             conf.get("az_endpoint"),
-                             sas_token=conf.get("az_sas"))
-        elif conf is not None and scheme_of(self.root) == "gs" \
-                and (conf.get("gs_bearer") or conf.get("gs_meta")):
-            from ..fs import GcsFS, gce_metadata_token_provider
-            provider = (gce_metadata_token_provider(
-                            endpoint=conf["gs_meta"])
-                        if conf.get("gs_meta")
-                        and not conf.get("gs_bearer") else None)
-            fs = GcsFS(conf.get("gs_endpoint"),
-                       bearer_token=conf.get("gs_bearer"),
-                       token_provider=provider)
+        elif conf is not None and (
+                scheme == "az" and conf.get("az_account")
+                or scheme == "gs" and (conf.get("gs_bearer")
+                                       or conf.get("gs_keyfile")
+                                       or conf.get("gs_meta"))):
+            fs = store_client(self.root, conf)
         else:
             fs = fs_for(self.root, SparkSession.getActiveSession())
         relpaths = Catalog(fs, self.root).read()
