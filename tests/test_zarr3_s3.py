@@ -201,3 +201,24 @@ def test_zarr_pinned_retention_on_s3(spark, zschema, s3_root):
     coll.unpin_generation(g)
     with pytest.raises(ValueError, match="republished or dropped"):
         coll.query(at_generation=g)
+
+
+def test_open_collection_dispatches_zarr_on_s3(spark, zschema, s3_root,
+                                               tmp_path):
+    """``zc.open_collection`` reads ``data_format`` through the store's own
+    fs, so an s3:// zarr root opens as the zarr layout — directly and as
+    the base of a reopened view."""
+    from zcollection_spark.view import View
+    from zcollection_spark.zarr3.collection import ZarrCollection
+    path = f"{s3_root}/zopen"
+    coll = create_zarr_collection(spark, path, schema=zschema, axis="num",
+                                  partitioning=zc.Sequence(("num",)))
+    coll.insert(_zdf(spark, zschema, [0, 1], 2.0))
+    opened = zc.open_collection(spark, path)
+    assert isinstance(opened, ZarrCollection) and opened.mode == "r"
+    assert sorted(r.v for r in opened.query().collect()) == [2.0, 2.0]
+    view = View.create(spark, str(tmp_path / "v"), base=coll,
+                       variables=[{"name": "w", "dtype": "float64"}])
+    reopened = View.open(spark, view.path)
+    assert isinstance(reopened.base, ZarrCollection)
+    assert reopened.query().count() == 2

@@ -9,17 +9,11 @@ import sys
 
 
 def _open(path: str, mode: str = "r"):
-    """Open either layout: the root config's data_format picks the
-    implementation (parquet collections vs zarr3 collections)."""
-    from pathlib import Path
+    """Open either layout (``open_collection`` reads the root config's
+    ``data_format``)."""
     from . import get_spark, open_collection
     spark = get_spark("zcs-cli")
     spark.sparkContext.setLogLevel("ERROR")
-    config = Path(path) / "_zcollection.json"
-    if config.exists() and json.loads(
-            config.read_text()).get("data_format") == "zarr3":
-        from .zarr3.collection import open_zarr_collection
-        return open_zarr_collection(spark, path)
     return open_collection(spark, path, mode=mode)
 
 
@@ -85,14 +79,8 @@ def cmd_stats(args: argparse.Namespace) -> int:
     coll = _open(args.path)
     rows: dict = {}
     if args.rows:
-        if hasattr(coll, "_load"):       # parquet layout
-            df = coll._load(filters=args.filter, keep_internal=True)
-        else:                            # zarr layout: keys ride to_df
-            from .partitioning import compile_filter as _cf
-            df = coll.to_df()
-            pred = _cf(args.filter)
-            if pred.expr is not None:
-                df = df.where(pred.to_column())
+        df = coll._load(filters=args.filter,
+                        variables=coll.partitioning.keys)
         rows = {tuple(int(r[k]) for k in coll.partitioning.keys): r["n"]
                 for r in (df.groupBy(*coll.partitioning.keys)
                           .agg({"*": "count"})
@@ -243,7 +231,7 @@ def cmd_manifest(args: argparse.Namespace) -> int:
     """Publish the file manifest that makes the collection servable
     from a LIST-less read-only store (plain HTTP/CDN — fs.HttpFS)."""
     coll = _open(args.path, mode="rw")
-    if not hasattr(coll, "write_manifest"):
+    if coll.data_format == "zarr3":
         # zarr3: chunk names derive from zarr metadata — HTTP serving
         # needs no manifest (fs.HttpBlobs reads are pure GETs)
         print("zarr3 collections need no manifest; serve the directory "

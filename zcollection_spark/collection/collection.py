@@ -1,14 +1,32 @@
-"""Partitioned collection over a Hive-style parquet layout.
+"""One partitioned-collection core over two storage layouts.
 
-The Spark-native re-expression of
-``/root/reference/zcollection/collection/base.py:81`` (``Collection``).  The
-reference's Zarr-v3-group-per-partition layout maps 1:1 onto Spark's
-partitioned-table model (SURVEY §1.4): data lives under ``key=value/``
-directories, read natively (with partition pruning and column pruning from
-Catalyst), written with shuffle-by-partition-key + dynamic partition
-overwrite.
+The Spark-native re-expression of the reference's ``Collection``
+(``zcollection/collection/base.py:81``): one class over one store
+abstraction.  :class:`Collection` owns
+everything that does not depend on how a partition is stored — the
+catalog, partition listing and key pruning, zone-map and bloom
+pruning, ``at_generation`` time travel, ``where`` projection, ordering,
+fill values, ``nested``, merges, staged publish, pins and retention,
+``update``, ``map``, drops, catalog repair and schema evolution.
 
-Layout::
+A layout overrides only its storage jobs (the hooks):
+
+- ``_read_partitions(relpaths, variables, sources)`` — scan exactly the
+  resolved partitions, and ``_filter_keys`` — put the key predicate on
+  that scan where it costs nothing per row;
+- ``_write(derived, txn=...)`` — write partitions and publish them,
+  with their statistics;
+- ``_write_immutable`` / ``_attach_immutable`` — store and attach the
+  non-axis variables;
+- ``_check_storable`` — refuse variables the layout cannot encode.
+
+The layout lives in the root config's ``data_format`` field, and
+:func:`open_collection` picks the class from it.  The Hive parquet
+layout is this module's default; the Zarr v3 layout (one group per
+partition, the reference's own) is
+:class:`zcollection_spark.zarr3.collection.ZarrCollection`.
+
+Parquet layout::
 
     collection/
     ├── _zcollection.json        # schema + axis + partitioning (serde below)
@@ -130,14 +148,34 @@ def create_collection(spark: SparkSession, path: str, *,
     group's extent in EVERY clustered column, so predicates on any of
     them prune (collection/cluster.py; costs one extra min/max
     aggregate job per write)."""
+    return _create(Collection, spark, path, schema=schema, axis=axis,
+                   partitioning=partitioning,
+                   catalog_enabled=catalog_enabled,
+                   stats_columns=stats_columns, bloom_columns=bloom_columns,
+                   bloom_bits=bloom_bits, cluster_by=cluster_by,
+                   cluster_mode=cluster_mode, overwrite=overwrite)
+
+
+def _create(cls: "type[Collection]", spark: SparkSession, path: str, *,
+            schema: DatasetSchema, axis: str, partitioning: Partitioning,
+            catalog_enabled: bool = True,
+            stats_columns: "Iterable[str] | None" = None,
+            bloom_columns: "Iterable[str] | None" = None,
+            bloom_bits: int = 1024,
+            cluster_by: "Iterable[str] | None" = None,
+            cluster_mode: str = "range",
+            overwrite: bool = False) -> "Collection":
+    """Validate the options, write the root config and an empty catalog,
+    and return a writable ``cls`` handle — the create of every layout.
+    Validation runs before an ``overwrite`` deletes anything."""
     path = fsmod.strip_scheme(path).rstrip("/")
     fs = fsmod.fs_for(path, spark)
     config_path = f"{path}/{CONFIG_NAME}"
-    if fs.exists(config_path):
-        if not overwrite:
-            raise CollectionExistsError(f"collection exists at {path!r}")
-        fs.delete(path)
+    exists = fs.exists(config_path)
+    if exists and not overwrite:
+        raise CollectionExistsError(f"collection exists at {path!r}")
     bound = schema.with_partition_axis(axis)
+    cls._check_storable(bound.variables)
     var_map = bound.variable_map
     for var in partitioning.variables:
         if var not in var_map:
@@ -170,7 +208,6 @@ def create_collection(spark: SparkSession, path: str, *,
                     f"in filters= instead of where= zone maps")
     bloom_columns = sorted(bloom_columns) if bloom_columns else None
     if bloom_columns:
-        from .stats import bloom_kind_of
         if not catalog_enabled:
             raise SchemaError(
                 "bloom_columns requires catalog_enabled=True — the "
@@ -223,26 +260,16 @@ def create_collection(spark: SparkSession, path: str, *,
     elif cluster_mode != "range":
         raise SchemaError("cluster_mode without cluster_by has no "
                           "effect — pass the columns to cluster")
-    doc = {"format_version": FORMAT_VERSION, "schema": bound.to_json(),
-           "partitioning": partitioning.to_json(),
-           "catalog_enabled": catalog_enabled}
-    if stats_columns:
-        doc["stats_columns"] = stats_columns
-    if bloom_columns:
-        doc["bloom_columns"] = bloom_columns
-        doc["bloom_bits"] = int(bloom_bits)
-    if cluster_by:
-        doc["cluster_by"] = cluster_by
-        if cluster_mode != "range":
-            doc["cluster_mode"] = cluster_mode
-    fs.write_text(config_path, json.dumps(doc, indent=1, sort_keys=True))
-    coll = Collection(spark, path, bound, partitioning, mode="rw",
-                      catalog_enabled=catalog_enabled,
-                      stats_columns=stats_columns,
-                      bloom_columns=bloom_columns,
-                      bloom_bits=bloom_bits,
-                      cluster_by=cluster_by,
-                      cluster_mode=cluster_mode)
+    if exists:
+        fs.delete(path)
+    coll = cls(spark, path, bound, partitioning, mode="rw",
+               catalog_enabled=catalog_enabled,
+               stats_columns=stats_columns,
+               bloom_columns=bloom_columns,
+               bloom_bits=bloom_bits,
+               cluster_by=cluster_by,
+               cluster_mode=cluster_mode)
+    coll._write_config()
     if catalog_enabled:
         coll._catalog.write([])
     return coll
@@ -250,7 +277,9 @@ def create_collection(spark: SparkSession, path: str, *,
 
 def open_collection(spark: SparkSession, path: str, *,
                     mode: str = "r") -> "Collection":
-    """Open an existing collection root (``api.py:65-95``).
+    """Open an existing collection root (``api.py:65-95``) of either
+    layout: the root config's ``data_format`` picks the class, read
+    through the store's own ``fs`` so every scheme dispatches alike.
 
     An ``icechunk://`` URL dispatches to the read-only format bridge
     for reference-written icechunk repositories
@@ -272,6 +301,13 @@ def open_collection(spark: SparkSession, path: str, *,
         doc = upgrade(json.loads(fs.read_text(config_path)))
     except ValueError as exc:
         raise StoreError(f"unreadable collection config: {exc}") from None
+    # the one place the layout is decided: the root config says it
+    cls = Collection
+    if doc.get("data_format") == "zarr3":
+        from ..zarr3.collection import ZarrCollection as cls
+    elif doc.get("data_format") is not None:
+        raise StoreError(f"unknown data_format {doc['data_format']!r} "
+                         f"in {config_path!r}")
     schema = DatasetSchema.from_json(doc["schema"])
     partitioning = partitioning_from_json(doc["partitioning"])
     bloom_columns = doc.get("bloom_columns")
@@ -289,17 +325,27 @@ def open_collection(spark: SparkSession, path: str, *,
             warnings.warn(f"ignoring temporal stats columns {bad} "
                           f"(unsafe string-vs-timestamp ordering)")
             stats_columns = [c for c in stats_columns if c not in bad]
-    return Collection(spark, path, schema, partitioning, mode=mode,
-                      catalog_enabled=doc.get("catalog_enabled", True),
-                      stats_columns=stats_columns,
-                      bloom_columns=bloom_columns,
-                      bloom_bits=bloom_bits,
-                      cluster_by=doc.get("cluster_by"),
-                      cluster_mode=doc.get("cluster_mode", "range"))
+    return cls(spark, path, schema, partitioning, mode=mode,
+               catalog_enabled=doc.get("catalog_enabled", True),
+               stats_columns=stats_columns,
+               bloom_columns=bloom_columns,
+               bloom_bits=bloom_bits,
+               cluster_by=doc.get("cluster_by"),
+               cluster_mode=doc.get("cluster_mode", "range"))
 
 
 class Collection:
-    """All public reads/writes on one partitioned collection."""
+    """All public reads/writes on one partitioned collection.
+
+    This class is the core and the Hive parquet layout; a layout
+    subclass overrides only the storage hooks named in the module
+    docstring."""
+
+    #: root-config ``data_format`` of the layout (None: Hive parquet)
+    data_format: "str | None" = None
+    #: ``merge="concat"`` appends files into existing partition
+    #: directories instead of rewriting them through the merge path
+    _appends_in_place = True
 
     def __init__(self, spark: SparkSession, path: str,
                  schema: DatasetSchema, partitioning: Partitioning, *,
@@ -329,6 +375,40 @@ class Collection:
         # content-addressed sidecar bloom payloads are immutable:
         # cache them for the collection's lifetime (ref -> b64 | None)
         self._bloom_payloads: dict = {}
+
+    @classmethod
+    def _check_storable(cls, variables: "Iterable[Any]", *,
+                        evolved: bool = False) -> None:
+        """Hook: raise :class:`SchemaError` for a variable the layout
+        cannot store (``evolved``: added to a collection that already
+        has partitions).  Parquet stores every schema dtype, and old
+        partitions read a new column as null."""
+
+    def _write_config(self, schema: "DatasetSchema | None" = None
+                      ) -> None:
+        """(Re)write the root config from this handle, with ``schema``
+        in place of the current one when given.  Every optional
+        field is carried: a rewrite that dropped one would silently turn
+        its feature off on the next open — ``add_variable`` once lost
+        the zone-map and bloom fields that way, and a zarr root without
+        ``data_format`` reopens as parquet."""
+        doc = {"format_version": FORMAT_VERSION,
+               "schema": (schema or self.schema).to_json(),
+               "partitioning": self.partitioning.to_json(),
+               "catalog_enabled": self.catalog_enabled}
+        if self.data_format is not None:
+            doc["data_format"] = self.data_format
+        if self.stats_columns:
+            doc["stats_columns"] = sorted(self.stats_columns)
+        if self.bloom_columns:
+            doc["bloom_columns"] = sorted(self.bloom_columns)
+            doc["bloom_bits"] = int(self.bloom_bits)
+        if self.cluster_by:
+            doc["cluster_by"] = list(self.cluster_by)
+            if self.cluster_mode != "range":
+                doc["cluster_mode"] = self.cluster_mode
+        self._fs.write_text(f"{self.path}/{CONFIG_NAME}",
+                            json.dumps(doc, indent=1, sort_keys=True))
 
     # ------------------------------------------------------------------
     # partition enumeration + pruning (collection/base.py:302-386)
@@ -455,7 +535,15 @@ class Collection:
         return manifest
 
     def _read_partitions(self, relpaths: list[str],
+                         variables: "Iterable[str] | None" = None,
                          sources: "dict | None" = None) -> DataFrame:
+        """Hook: scan exactly ``relpaths`` (partition keys and every
+        partitioned variable, plus ``_row_idx`` when the layout stores
+        it).  ``variables`` names what the caller reads — a layout that
+        decodes per column reads only those; Catalyst prunes this
+        parquet scan's columns from the final projection, so it is not
+        needed here.  ``sources`` (time travel) routes a relpath to its
+        retained ``gen-N`` copy."""
         # explicit schema: no footer sampling (one less cold GET per read
         # at scale), and partitions written BEFORE a schema-evolution
         # add_variable read the new column as nulls instead of the scan
@@ -489,6 +577,13 @@ class Collection:
             out = out.unionByName(p)
         return out
 
+    def _filter_keys(self, df: DataFrame, predicate) -> DataFrame:
+        """Hook: apply the partition-key predicate to a scan of the
+        partitions it matched.  Catalyst turns it into the parquet
+        scan's partition filters: no per-row cost, and the plan shows
+        the pruning."""
+        return df.where(predicate.to_column())
+
     def _immutable_df(self) -> DataFrame | None:
         imm_path = f"{self.path}/{IMMUTABLE_RELPATH}"
         if not self.schema.immutable_variables or not self._fs.exists(imm_path):
@@ -498,8 +593,8 @@ class Collection:
 
     def _attach_immutable(self, df: DataFrame,
                           wanted: set[str] | None) -> DataFrame:
-        """Broadcast-attach ``_immutable`` variables; partition data wins on
-        name conflict (quirk Q5, ``base.py:819-836``)."""
+        """Hook: broadcast-attach ``_immutable`` variables; partition data
+        wins on name conflict (quirk Q5, ``base.py:819-836``)."""
         imm = self._immutable_df()
         if imm is None:
             return df
@@ -576,7 +671,9 @@ class Collection:
     def _load(self, *, filters: str | None = None,
               where: str | None = None,
               keep_internal: bool = False,
-              at_generation: int | None = None) -> DataFrame | None:
+              at_generation: int | None = None,
+              variables: "Iterable[str] | None" = None
+              ) -> DataFrame | None:
         """Pruned scan with partition-key columns attached.
 
         Uses the catalog for listing-time pruning when available, and ALWAYS
@@ -584,8 +681,15 @@ class Collection:
         correct (and prunes) even on a bare directory tree.  ``where``
         (data-column dialect, float literals allowed) additionally
         zone-map-prunes partitions and filters the scanned rows.
+        ``variables`` is the caller's column need, handed to
+        ``_read_partitions`` with the ``where`` columns (and, for
+        ``keep_internal``, the axis) added.  ``keep_internal`` keeps
+        ``_row_idx``; a layout that does not store it gets it from the
+        on-disk order, which is the axis order.
         """
         predicate = compile_filter(filters)
+        row_filter = (None if where is None
+                      else compile_filter(where, allow_float=True))
         sources = None
         if at_generation is not None:
             # fetch + staleness-verify the snapshot ONCE and thread it
@@ -612,14 +716,22 @@ class Collection:
             relpaths = self._zone_prune(relpaths, where, snap_stats)
         if not relpaths:
             return None
-        df = self._read_partitions(relpaths, sources=sources)
+        scan = None
+        if variables is not None:
+            scan = set(variables)
+            if row_filter is not None:
+                scan |= row_filter.names
+            if keep_internal:
+                scan.add(self.axis)
+        df = self._read_partitions(relpaths, scan, sources)
+        if keep_internal and ROW_IDX not in df.columns:
+            df = self._with_row_idx(df)  # before any row filter
         if predicate.expr is not None:
-            df = df.where(predicate.to_column())
-        if where is not None:
+            df = self._filter_keys(df, predicate)
+        if row_filter is not None:
             # the exact predicate: pushed into the parquet scan by
             # Catalyst; zone maps only decided which partitions to list
-            df = df.where(compile_filter(where,
-                                         allow_float=True).to_column())
+            df = df.where(row_filter.to_column())
         df = self._cast_restored_keys(df)
         if not keep_internal and ROW_IDX in df.columns:
             df = df.drop(ROW_IDX)
@@ -666,21 +778,17 @@ class Collection:
         shuffle, order-preserving, and Catalyst's nested-schema
         pruning keeps a ``select("g.sub.leaf")`` on the result as
         cheap as the flat column."""
+        wanted = None if variables is None else set(variables)
+        keep = [v.name for v in (self.schema.partitioned_variables
+                                 if wanted is None else
+                                 self.schema.select(wanted).variables)
+                if not v.immutable]
         df = self._load(filters=filters, where=where,
-                        at_generation=at_generation)
+                        at_generation=at_generation,
+                        variables=None if wanted is None else keep)
         if df is None:
             return None
-        wanted = None
-        if variables is not None:
-            wanted = set(variables)
-            projected = self.schema.select(wanted)
-            keep = [v.name for v in projected.variables
-                    if not v.immutable and v.name in df.columns]
-            df = df.select(*keep)
-        else:
-            keep = [v.name for v in self.schema.partitioned_variables
-                    if v.name in df.columns]
-            df = df.select(*keep)
+        df = df.select(*[c for c in keep if c in df.columns])
         # fill-value semantics: a declared fill stands in for nulls —
         # including partitions written before the variable existed
         # (schema evolution), matching zarr's missing-chunk-equals-fill
@@ -735,8 +843,9 @@ class Collection:
         return df.select(*cols)
 
     def _write_immutable(self, df: DataFrame) -> None:
-        """Lift non-axis variables into the write-once ``_immutable`` table
-        (``io/immutable.py:48-98``): first row's values, written once."""
+        """Hook: lift non-axis variables into the write-once
+        ``_immutable`` table (``io/immutable.py:48-98``): first row's
+        values, written once."""
         imm_names = [v.name for v in self.schema.immutable_variables
                      if v.name in df.columns]
         if not imm_names:
@@ -885,18 +994,18 @@ class Collection:
             catalog=self._catalog if self.catalog_enabled else None,
             txn=txn, stats_fn=stats_fn)
 
-    def _write(self, derived: DataFrame, *, mode: str,
+    def _write(self, derived: DataFrame, *,
                txn: "tuple[str, int] | None" = None) -> list[str]:
+        """Hook: write ``derived``'s partitions whole (each replaces its
+        live partition) and publish them, statistics included, in one
+        staged swap."""
         # ONE shuffle: the _row_idx window exchanges on hash(keys) and
         # sorts by (keys, axis) within tasks — exactly the distribution
         # partitionBy needs, so no extra repartition/sortWithinPartitions.
-        # "overwrite" swaps whole partition dirs; "append" moves staged
-        # files into existing partition dirs under collision-free names.
-        publish = "swap" if mode == "overwrite" else "append"
         return self._staged_write(
             lambda staging: self._write_tree(self._with_row_idx(derived),
                                              staging),
-            mode=publish, txn=txn, stats_df=derived)
+            mode="swap", txn=txn, stats_df=derived)
 
     def insert(self, df: DataFrame, *,
                merge: str | MergeCallable | None = None,
@@ -932,8 +1041,8 @@ class Collection:
         strategy = resolve_merge(merge)
 
         if not colliding or strategy is merge_replace:
-            self._write(derived, mode="overwrite", txn=txn)
-        elif strategy is merge_concat:
+            self._write(derived, txn=txn)
+        elif strategy is merge_concat and self._appends_in_place:
             # true append: never rewrites existing data; only the _row_idx
             # offsets of colliding partitions are read (a count per key)
             offsets = (self._read_partitions(colliding)
@@ -960,7 +1069,7 @@ class Collection:
             existing = self._cast_restored_keys(existing)
             merged = strategy(existing, derived, axis=self.axis,
                               keys=tuple(keys))
-            self._write(merged, mode="overwrite", txn=txn)
+            self._write(merged, txn=txn)
         return sorted(incoming_rel)
 
     def txn_version(self, app_id: str) -> int:
@@ -1193,31 +1302,14 @@ class Collection:
         dimensions = tuple(dimensions) if dimensions else (self.axis,)
         new_var = _VS(name=name, dtype=dtype, dimensions=dimensions,
                       fill_value=fill_value, attrs=dict(attrs or {}))
+        self._check_storable((new_var,), evolved=True)
         rebuilt = DatasetSchema(
             dimensions=self.schema.dimensions,
             variables=(*self.schema.variables, new_var),
             attrs=self.schema.attrs,
             group_attrs=self.schema.group_attrs,
         ).with_partition_axis(self.axis)
-        doc = {"format_version": FORMAT_VERSION,
-               "schema": rebuilt.to_json(),
-               "partitioning": self.partitioning.to_json(),
-               "catalog_enabled": self.catalog_enabled}
-        # the rewrite must carry EVERY optional root-config field —
-        # dropping one here silently disables its feature on the next
-        # open (this bit zone maps/blooms before r12 caught it while
-        # adding cluster_by)
-        if self.stats_columns:
-            doc["stats_columns"] = sorted(self.stats_columns)
-        if self.bloom_columns:
-            doc["bloom_columns"] = sorted(self.bloom_columns)
-            doc["bloom_bits"] = int(self.bloom_bits)
-        if self.cluster_by:
-            doc["cluster_by"] = list(self.cluster_by)
-            if self.cluster_mode != "range":
-                doc["cluster_mode"] = self.cluster_mode
-        self._fs.write_text(f"{self.path}/{CONFIG_NAME}",
-                            json.dumps(doc, indent=1, sort_keys=True))
+        self._write_config(rebuilt)
         self.schema = rebuilt
 
     def to_view(self, name: str, *,
@@ -1400,10 +1492,11 @@ class Collection:
         Immutable variables are attached before ``fn`` runs (quirk-parity
         with ``_attach_immutable``).
         """
-        df = self._load(filters=filters, keep_internal=keep_internal)
+        wanted = set(variables) if variables is not None else None
+        df = self._load(filters=filters, keep_internal=keep_internal,
+                        variables=wanted)
         if df is None:
             return None
-        wanted = set(variables) if variables is not None else None
         if wanted is not None:
             keep = [c for c in df.columns
                     if c in wanted or c in self.partitioning.keys
@@ -1451,11 +1544,13 @@ class Collection:
         only matching partitions are rewritten.
         """
         self._require_writable()
-        df = self._load(filters=filters)
+        wanted = set(variables) if variables is not None else None
+        df = self._load(filters=filters,
+                        variables=None if wanted is None
+                        else wanted | set(self.partitioning.variables))
         if df is None:
             return []
         relpaths = self.partitions(filters=filters)
-        wanted = set(variables) if variables is not None else None
         if wanted is not None:
             keep = [c for c in df.columns
                     if c in wanted or c in self.partitioning.keys
@@ -1464,8 +1559,11 @@ class Collection:
         df = self._attach_immutable(df, wanted)
 
         sample = fn(df.limit(0).toPandas())
-        out_cols = list(sample.columns)
         var_map = self.schema.variable_map
+        # derived key columns (Date's year/month/…) handed back by fn
+        # are re-derived from the partitioning variables on write
+        out_cols = [c for c in sample.columns
+                    if c in var_map or c not in self.partitioning.keys]
         dims = self.schema.dim_map
         missing = [v.name for v in self.schema.partitioned_variables
                    if v.name not in out_cols]
@@ -1488,9 +1586,10 @@ class Collection:
                     f"update fn produced unknown variable {name!r}")
         out_schema = T.StructType(out_fields)
         updated = (df.groupBy(*self.partitioning.keys)
-                   .applyInPandas(lambda pdf: fn(pdf), out_schema))
+                   .applyInPandas(lambda pdf: fn(pdf)[out_cols],
+                                  out_schema))
         derived = self.partitioning.derive(updated)
-        self._write(derived, mode="overwrite")
+        self._write(derived)
         return relpaths
 
     # ------------------------------------------------------------------

@@ -103,7 +103,13 @@ def _operand(node: ast.expr, allow_float: bool = False):
 
     def ev_lit(key: Mapping[str, Any], _v=value) -> Any:
         return _v
-    return ev_lit, lambda _v=value: F.lit(_v)
+    # a literal stays a Python value: a Column operator lifts it on the
+    # JVM side, one round trip fewer per comparison than F.lit
+    return ev_lit, lambda _v=value: _v
+
+
+def _as_column(value: Any) -> Column:
+    return value if isinstance(value, Column) else F.lit(value)
 
 
 def _compare(node: ast.Compare, allow_float: bool = False):
@@ -124,7 +130,7 @@ def _compare(node: ast.Compare, allow_float: bool = False):
                 return (_lf(key) not in _c) if _n else (_lf(key) in _c)
 
             def col(_lc=lc, _c=container, _n=negate):
-                expr = _lc().isin(*_c)
+                expr = _as_column(_lc()).isin(*_c)
                 return ~expr if _n else expr
             parts_fn.append(ev)
             parts_col.append(col)
@@ -139,11 +145,10 @@ def _compare(node: ast.Compare, allow_float: bool = False):
         def ev(key, _lf=lf, _rf=rf, _op=py_op):
             return _op(_lf(key), _rf(key))
 
-        def col(_lc=lc, _rc=rc, _ot=op_type):
-            lcol, rcol = _lc(), _rc()
-            return {ast.Eq: lcol == rcol, ast.NotEq: lcol != rcol,
-                    ast.Lt: lcol < rcol, ast.LtE: lcol <= rcol,
-                    ast.Gt: lcol > rcol, ast.GtE: lcol >= rcol}[_ot]
+        def col(_lc=lc, _rc=rc, _op=py_op):
+            # Column overloads the comparison operators: build only the
+            # one asked for (each is a JVM round trip)
+            return _op(_as_column(_lc()), _rc())
         parts_fn.append(ev)
         parts_col.append(col)
 

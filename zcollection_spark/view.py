@@ -107,14 +107,7 @@ class View:
         except ValueError as exc:
             raise StoreError(f"unreadable view config: {exc}") from None
         if base is None:
-            from pathlib import Path as _P
-            base_cfg = _P(doc["base"]) / "_zcollection.json"
-            if base_cfg.exists() and json.loads(
-                    base_cfg.read_text()).get("data_format") == "zarr3":
-                from .zarr3.collection import open_zarr_collection
-                base = open_zarr_collection(spark, doc["base"])
-            else:
-                base = open_collection(spark, doc["base"])
+            base = open_collection(spark, doc["base"])
         variables = tuple(
             VariableSchema(name=v["name"], dtype=v["dtype"],
                            dimensions=tuple(v["dimensions"]))

@@ -1,42 +1,45 @@
-"""Zarr-v3-backed collection: create / insert / query with the reference's
-on-disk layout (one Zarr v3 group per partition — README.rst:21-54).
+"""Zarr v3 layout of the collection core (``data_format: "zarr3"``).
 
-The write path is fully distributed: rows shuffle once on the partition
-keys (fixing quirk Q3), then each ``applyInPandas`` task writes its
-partition's Zarr group directly from the executor — chunked, zstd-coded
-arrays (``io/partition.py:145-169`` semantics) with the partition key
-stamped into group attributes as ``_zc_partition_key``
-(``collection/base.py:508-516``).  The catalog PUT commits visibility.
+:class:`ZarrCollection` is a :class:`~zcollection_spark.collection.
+Collection`: the catalog, pruning, time travel, merges, staged publish,
+retention, ``update``/``map`` and schema evolution are the core's.  This
+module holds only what storing a partition as one Zarr v3 group (the
+reference's on-disk layout, README.rst:21-54) needs:
 
-Zone maps and blooms (``stats_columns`` / ``bloom_columns``) are built
-by those same write tasks from the arrays they encode and ride the
-write job's collect into the publish — no Spark job of their own, and
-they describe what zarr stores: a null double is stored (and read
-back) as NaN, so its partition keeps no bounds.  A null in an integer,
-bool or string variable is stored as the variable's ``fill_value``;
-without one the write raises :class:`SchemaError`.
+- **encode** — each write task writes its partition's group directly
+  from the executor: chunked, zstd-coded arrays
+  (``io/partition.py:145-169`` semantics), the partition key stamped
+  into the group attributes as ``_zc_partition_key``
+  (``collection/base.py:508-516``).  A null double is stored as NaN; a
+  null integer, bool or string is stored as the variable's
+  ``fill_value``, and without one the write raises
+  :class:`SchemaError` (``_stored_values``).
+- **statistics** — zone maps and blooms are built by the same write
+  task from the arrays it encodes, and ride the write job's collect
+  into the publish: no Spark job of their own, and they describe what
+  zarr stores (a NaN keeps no bounds).
+- **decode** — reads scan the partition list the core resolved, one
+  Spark task per partition, decoding only the requested arrays
+  (``_read_partitions``).  The ``zarr3`` Python DataSource
+  (``datasource.py``) stays the raw ``spark.read/write.format("zarr3")``
+  surface and shares the decoder.
+- **immutables** — a write-once ``_immutable`` group, attached to reads
+  as literals.
 
-Reads scan the partition list the driver resolved (catalog, key
-filters, zone maps, time-travel snapshot): one Spark task per partition
-decodes only the requested arrays (``_read_partitions``, the parquet
-layout's helper of the same name).  Nothing is planned a second time,
-and a query's DataFrame reads the same partitions on every action.  The
-``zarr3`` Python DataSource (``datasource.py``) stays the raw
-``spark.read/write.format("zarr3")`` surface and shares the decoder.
+Plus two zarr-only reads: :meth:`ZarrCollection.read_row_ranges`
+(chunk-level partial reads driven by an index lookup) and
+:meth:`ZarrCollection.to_df`.
 
 Scope: numeric/bool/datetime variables (Zarr v3 core types) plus
 variable-length strings (v3 "string" data type via the vlen-utf8 codec).
-Raw bytes stay on the parquet layout.  Views and the secondary index
-work against either layout (positional ``_row_idx`` synthesized from
-the on-disk array order via ``_load``).
+Raw bytes stay on the parquet layout.
 """
 
 from __future__ import annotations
 
 import json
-import shutil
 from pathlib import Path
-from typing import Callable, Iterable
+from typing import Iterable
 
 import numpy as np
 import pandas as pd
@@ -47,21 +50,17 @@ from pyspark.sql import functions as F
 
 from .. import config as engine_config
 from ..collection import staging as staging_proto
-from ..collection.catalog import Catalog
+from ..collection.collection import Collection, _create, open_collection
 from ..collection.stats import bloom_kind_of
-from ..collection.merge import MergeCallable, resolve_merge
-from ..collection.merge import replace as merge_replace
-from ..errors import (CollectionExistsError, CollectionNotFoundError,
-                      SchemaError)
-from ..fs import fs_for, strip_scheme
-from ..partitioning import Partitioning, compile_filter
-from ..partitioning import from_json as partitioning_from_json
-from ..schema import FORMAT_VERSION, DatasetSchema, dtype_to_spark
+from ..errors import SchemaError
+# metadata I/O goes through the collection core's ``fs.fs_for``; the
+# name stays importable here for instrumentation that wraps it per module
+from ..fs import fs_for  # noqa: F401
+from ..partitioning import Partitioning
+from ..schema import DatasetSchema, dtype_to_spark
 from . import datasource
 from .core import read_array, write_array, write_group
 from .sharding import shard_decision
-
-CONFIG_NAME = "_zcollection.json"
 
 
 def _stored_values(series: pd.Series, name: str, dtype: str, fill,
@@ -176,125 +175,51 @@ def create_zarr_collection(spark: SparkSession, path: str, *,
                            bloom_columns=None,
                            bloom_bits: int = 1024,
                            overwrite: bool = False) -> "ZarrCollection":
-    path = strip_scheme(path).rstrip("/")
-    fs = fs_for(path, spark)
-    config_path = f"{path}/{CONFIG_NAME}"
-    if fs.exists(config_path):
-        if not overwrite:
-            raise CollectionExistsError(f"collection exists at {path!r}")
-        fs.delete(path)
-    bound = schema.with_partition_axis(axis)
-    for var in bound.variables:
-        base = var.dtype
-        if base in ("bytes", "vlen-bytes"):
-            raise SchemaError(
-                f"variable {var.name!r}: bytes dtypes are not "
-                f"supported by the zarr3 layout (use the parquet layout)")
-    stats_columns = sorted(stats_columns) if stats_columns else None
-    if stats_columns:
-        from ..collection.collection import _is_temporal_dtype
-        var_map = bound.variable_map
-        for col in stats_columns:
-            if col not in var_map or var_map[col].immutable:
-                raise SchemaError(
-                    f"stats column {col!r} is not a partitioned "
-                    f"variable of the schema")
-            if _is_temporal_dtype(var_map[col].dtype):
-                raise SchemaError(
-                    f"stats column {col!r} is temporal "
-                    f"({var_map[col].dtype}): use partitioning filters "
-                    f"for time ranges, not where= zone maps")
-    bloom_columns = sorted(bloom_columns) if bloom_columns else None
-    if bloom_columns:
-        if bloom_bits % 64 or bloom_bits <= 0:
-            raise SchemaError("bloom_bits must be a positive multiple "
-                              "of 64")
-        var_map = bound.variable_map
-        for col in bloom_columns:
-            if col not in var_map or var_map[col].immutable:
-                raise SchemaError(
-                    f"bloom column {col!r} is not a partitioned "
-                    f"variable of the schema")
-            dt = var_map[col].dtype
-            if not (dt.startswith(("int", "uint", "<U"))
-                    or dt in ("str", "vlen-utf8")):
-                raise SchemaError(
-                    f"bloom column {col!r} must be integer or string "
-                    f"typed (got {dt})")
-    doc = {"format_version": FORMAT_VERSION, "schema": bound.to_json(),
-           "partitioning": partitioning.to_json(),
-           "data_format": "zarr3", "catalog_enabled": True}
-    if stats_columns:
-        doc["stats_columns"] = stats_columns
-    if bloom_columns:
-        doc["bloom_columns"] = bloom_columns
-        doc["bloom_bits"] = int(bloom_bits)
-    fs.write_text(config_path, json.dumps(doc, indent=1, sort_keys=True))
-    write_group(path, {"zcollection": True})
-    coll = ZarrCollection(spark, path, bound, partitioning,
-                          stats_columns=stats_columns,
-                          bloom_columns=bloom_columns,
-                          bloom_bits=bloom_bits)
-    coll._catalog.write([])
+    """``create_collection`` for the zarr layout: the root config records
+    ``data_format: "zarr3"``, and the root is a Zarr group too."""
+    coll = _create(ZarrCollection, spark, path, schema=schema, axis=axis,
+                   partitioning=partitioning, stats_columns=stats_columns,
+                   bloom_columns=bloom_columns, bloom_bits=bloom_bits,
+                   overwrite=overwrite)
+    write_group(coll.path, {"zcollection": True})
     return coll
 
 
 def open_zarr_collection(spark: SparkSession, path: str) -> "ZarrCollection":
-    path = strip_scheme(path).rstrip("/")
-    fs = fs_for(path, spark)
-    config_path = f"{path}/{CONFIG_NAME}"
-    if not fs.exists(config_path):
-        raise CollectionNotFoundError(f"no collection at {path!r}")
-    doc = json.loads(fs.read_text(config_path))
-    schema = DatasetSchema.from_json(doc["schema"])
-    stats_columns = doc.get("stats_columns")
-    if stats_columns:
-        from ..collection.collection import _is_temporal_dtype
-        var_map = schema.variable_map
-        bad = [c for c in stats_columns if c in var_map
-               and _is_temporal_dtype(var_map[c].dtype)]
-        if bad:
-            import warnings
-            warnings.warn(f"ignoring temporal stats columns {bad} "
-                          f"(unsafe string-vs-timestamp ordering)")
-            stats_columns = [c for c in stats_columns if c not in bad]
-    return ZarrCollection(spark, path, schema,
-                          partitioning_from_json(doc["partitioning"]),
-                          stats_columns=stats_columns,
-                          bloom_columns=doc.get("bloom_columns"),
-                          bloom_bits=int(doc.get("bloom_bits", 1024)))
+    """A writable handle on an existing collection; the root config's
+    ``data_format`` picks the layout (see ``open_collection``)."""
+    return open_collection(spark, path, mode="rw")
 
 
-class ZarrCollection:
-    def __init__(self, spark: SparkSession, path: str,
-                 schema: DatasetSchema, partitioning: Partitioning,
-                 stats_columns=None, bloom_columns=None,
-                 bloom_bits: int = 1024):
-        self.spark = spark
-        self.path = path.rstrip("/")
-        self.schema = schema
-        self.partitioning = partitioning
-        self.bloom_columns = list(bloom_columns) if bloom_columns else []
-        self.bloom_bits = int(bloom_bits)
-        self.axis = schema.axis
-        self.catalog_enabled = True
-        self.stats_columns = list(stats_columns) if stats_columns else []
-        # metadata fs by scheme; zarr DATA I/O (chunk encode/decode in
-        # executors) goes through zarr3.blobs — local paths and s3://
-        # both work end-to-end (other schemes need a mounted path)
-        self._fs = fs_for(self.path, spark)
-        self._catalog = Catalog(self._fs, self.path,
-                                walk_depth=partitioning.depth)
+class ZarrCollection(Collection):
+    """A :class:`Collection` whose partitions are Zarr v3 groups; it
+    overrides only the storage hooks."""
+
+    data_format = "zarr3"
+    # a partition is one group, rewritten whole: merge="concat" runs
+    # the merge path like every other strategy
+    _appends_in_place = False
+
+    def __init__(self, *args, **kwargs):
+        super().__init__(*args, **kwargs)
         # full-scan plan cache, keyed on the catalog generation (to_df)
         self._df_cache: dict = {}
-        # sidecar bloom payload cache, keyed by catalog ref — initialized
-        # here (NOT lazily in query()) so no per-query state lives outside
-        # the constructor; the r10 pushed-filter staleness bug came from
-        # exactly that pattern
-        self._bloom_payloads: dict = {}
-        datasource.register(spark)
+        datasource.register(self.spark)
 
-    # ------------------------------------------------------------------
+    @classmethod
+    def _check_storable(cls, variables, *, evolved: bool = False) -> None:
+        for var in variables:
+            if var.dtype in ("bytes", "vlen-bytes"):
+                raise SchemaError(
+                    f"variable {var.name!r}: bytes dtypes are not "
+                    f"supported by the zarr3 layout (use the parquet "
+                    f"layout)")
+            if evolved and var.fill_value is None:
+                raise SchemaError(
+                    "zarr schema evolution requires a fill_value (old "
+                    "partitions have no array node to read)")
+
+    # -- immutables ----------------------------------------------------
     def _write_immutable(self, df: DataFrame) -> None:
         """Lift non-axis variables into a write-once ``_immutable`` Zarr
         group (``io/immutable.py:48-98`` parity)."""
@@ -317,125 +242,32 @@ class ZarrCollection:
                 else "datetime64[us]"))
             write_array(f"{imm_path}/{var.name}", np.atleast_1d(value))
 
-    def _immutable_row(self) -> dict | None:
+    def _attach_immutable(self, df: DataFrame,
+                          wanted: set | None) -> DataFrame:
+        """Attach ``_immutable`` variables as literals of their declared
+        type — a map-side constant, where parquet broadcasts a one-row
+        table; partition data wins on name conflict (quirk Q5)."""
         from .blobs import blobs_for
         imm_path = f"{self.path}/_immutable"
         blobs = blobs_for(imm_path)
         if blobs.try_read_bytes(f"{imm_path}/zarr.json") is None:
-            return None
-        out = {}
-        for var in self.schema.immutable_variables:
-            if blobs.try_read_bytes(
-                    f"{imm_path}/{var.name}/zarr.json") is not None:
-                out[var.name] = read_array(
-                    f"{imm_path}/{var.name}").tolist()
-        return out or None
-
-    def _attach_immutable(self, df: DataFrame,
-                          wanted: set | None) -> DataFrame:
-        """Literal-attach ``_immutable`` variables (one row of values —
-        a map-side literal, matching the parquet layer's broadcast
-        semantics; partition data wins on name conflict, quirk Q5)."""
-        row = self._immutable_row()
-        if not row:
             return df
-        adds = {}
-        for name, value in row.items():
-            if name in df.columns:
+        dims, cols = self.schema.dim_map, {}
+        for var in self.schema.immutable_variables:
+            if var.name in df.columns or (
+                    wanted is not None and var.name not in wanted
+                    and var.name.rsplit("/", 1)[-1] not in wanted):
                 continue
-            if wanted is not None and name not in wanted \
-                    and name.rsplit("/", 1)[-1] not in wanted:
+            if blobs.try_read_bytes(
+                    f"{imm_path}/{var.name}/zarr.json") is None:
                 continue
-            adds[name] = (F.array(*[F.lit(v) for v in value])
-                          if isinstance(value, list) else F.lit(value))
-        return df.withColumns(adds) if adds else df
+            value = read_array(f"{imm_path}/{var.name}").tolist()
+            # stored at least 1-D: a scalar variable is its one element
+            cols[var.name] = F.lit(value if var.dimensions else value[0]) \
+                .cast(var.spark_type(dims, self.axis))
+        return df.withColumns(cols) if cols else df
 
-    def txn_version(self, app_id: str) -> int:
-        """Highest committed streaming-sink txn version for ``app_id``
-        (-1 if none) — same ledger semantics as the parquet layout."""
-        return self._catalog.read_txn(app_id)
-
-    def generation(self) -> int:
-        """Monotonic catalog commit counter (parquet-layout parity)."""
-        return self._catalog.generation()
-
-    def exclusive_writer(self, *, ttl: float = 60.0,
-                         owner: str | None = None):
-        """Advisory single-producer lease (parquet-layout parity —
-        collection/lease.py; the lease lives next to the catalog, so
-        it is layout-agnostic by construction)."""
-        from ..collection.lease import WriterLease
-        return WriterLease(self._fs, self.path, ttl=ttl, owner=owner)
-
-    def changes(self, since_generation: int,
-                to_generation: int | None = None) -> dict:
-        """Partition-level diff since a previous commit (optionally
-        bounded at a retained generation) — see ``Collection.changes``
-        (identical catalog machinery)."""
-        from ..collection.collection import Collection
-        return Collection.changes(self, since_generation, to_generation)
-
-    def history(self, *, limit: int = 10) -> list[dict]:
-        """Commit ledger, newest first — see ``Collection.history``
-        (identical catalog machinery)."""
-        from ..collection.collection import Collection
-        return Collection.history(self, limit=limit)
-
-    def pin_generation(self, generation: int) -> list[int]:
-        """Pin a generation readable-forever (copy-on-republish
-        retention) — see ``Collection.pin_generation`` (identical
-        catalog machinery; the retained copies are zarr partition
-        groups here)."""
-        from ..collection.catalog import resolve_snapshot_readable
-        resolve_snapshot_readable(self._catalog, generation)
-        return self._catalog.pin(generation)
-
-    def unpin_generation(self, generation: int) -> list[int]:
-        """See ``Collection.unpin_generation``."""
-        pins = self._catalog.unpin(generation)
-        self._catalog.sweep_retained()
-        return pins
-
-    def pinned_generations(self) -> list[int]:
-        """See ``Collection.pinned_generations``."""
-        return self._catalog.pins()
-
-    def stale_partitions(self, generation: int) -> list[str]:
-        """See ``Collection.stale_partitions``."""
-        from ..collection.catalog import stale_partitions
-        return stale_partitions(self._catalog, generation)
-
-    def insert(self, df: DataFrame,
-               merge: str | MergeCallable | None = None,
-               txn: "tuple[str, int] | None" = None) -> list[str]:
-        """Shuffle by partition keys, write one Zarr group per partition
-        from the executors, commit the catalog.
-
-        ``merge`` mirrors the parquet collection's strategies; colliding
-        partitions are read back (one task each), merged with one
-        DataFrame program, and rewritten wholesale (Zarr groups are
-        replaced atomically per partition — stale chunks are removed)."""
-        self._write_immutable(df)
-        part_names = [v.name for v in self.schema.partitioned_variables
-                      if v.name in df.columns]
-        df = df.select(*part_names)
-        keys = list(self.partitioning.keys)
-        derived = self.partitioning.derive(df)
-        incoming_rel = [
-            self.partitioning.encode(key)
-            for key in self.partitioning.enumerate_keys(derived)]
-        if not incoming_rel:
-            return []
-        existing_rel = set(self.partitions())
-        colliding = sorted(set(incoming_rel) & existing_rel)
-        strategy = resolve_merge(merge)
-        if colliding and strategy is not merge_replace:
-            existing = self._read_partitions(colliding)
-            derived = strategy(existing, derived, axis=self.axis,
-                               keys=tuple(keys))
-        written = self._write_partitions(derived, txn=txn)
-        return sorted(set(written) | set(incoming_rel))
-
+    # -- write ---------------------------------------------------------
     def _write_spec(self, columns) -> dict:
         """Picklable write-task spec shared with the zarr3 DataSource
         writer."""
@@ -464,12 +296,11 @@ class ZarrCollection:
                             if v.fill_value is not None},
         }
 
-    def _write_partitions(self, derived: DataFrame,
-                          txn: "tuple[str, int] | None" = None
-                          ) -> list[str]:
+    def _write(self, derived: DataFrame, *,
+               txn: "tuple[str, int] | None" = None) -> list[str]:
         """Stage → intent → publish (staging.py): executors write each
         Zarr partition group under ``_staging/{id}``, then per-partition
-        renames + the catalog PUT make the insert visible atomically —
+        renames + the catalog PUT make the write visible atomically —
         the reference's failed-insert-rolls-back contract
         (``/root/reference/zcollection/store/icechunk_store.py:158-168``)."""
         keys = list(self.partitioning.keys)
@@ -523,14 +354,16 @@ class ZarrCollection:
             catalog=self._catalog, txn=txn,
             stats_fn=lambda _rels: stats or None)
 
-    # ------------------------------------------------------------------
+    # -- read ----------------------------------------------------------
     def _read_partitions(self, relpaths: list[str],
                          variables: Iterable[str] | None = None,
                          sources: "dict | None" = None) -> DataFrame:
         """Scan exactly ``relpaths``, one Spark task per partition — the
-        reference's unit of read parallelism (``io/partition.py:235-265``)
-        and the parquet layout's helper of the same name.  ``variables``
-        projects the scan (partition keys always kept); ``sources``
+        reference's unit of read parallelism (``io/partition.py:235-265``).
+        ``variables`` projects the scan: only those arrays are decoded
+        (partition keys always kept).  A one-partition scan is one task,
+        which Spark knows, so an ordered one-partition query sorts in
+        that task with no exchange.  ``sources``
         (time travel) routes a relpath to its retained ``gen-N`` copy, so
         live and retained partitions share the one scan.  The schema and
         the endpoint conf are resolved here on the driver and ride the
@@ -561,6 +394,12 @@ class ZarrCollection:
         return (self.spark.range(len(tasks), numPartitions=len(tasks))
                 .mapInArrow(decode, schema))
 
+    def _filter_keys(self, df: DataFrame, predicate) -> DataFrame:
+        # the scan holds exactly the matched partitions: a row filter on
+        # their keys removes nothing, and each new key literal would cost
+        # a whole-stage codegen compile
+        return df
+
     def to_df(self, *, variables: Iterable[str] | None = None) -> DataFrame:
         """Every live partition, projected to ``variables`` (plus the
         partition keys).  The plan is cached per (projection, endpoint
@@ -578,35 +417,6 @@ class ZarrCollection:
             self._df_cache.clear()
         self._df_cache[key] = df
         return df
-
-    def add_variable(self, name: str, dtype: str, *,
-                     dimensions=None, fill_value=None,
-                     attrs=None) -> None:
-        """Schema evolution for the zarr layout: declare a new variable;
-        old partitions (no array node) read as ``fill_value`` — the
-        literal zarr missing-chunk rule, applied at array granularity."""
-        from ..schema import VariableSchema as _VS
-        if name in self.schema.variable_map:
-            raise SchemaError(f"variable {name!r} already exists")
-        if fill_value is None:
-            raise SchemaError(
-                "zarr schema evolution requires a fill_value (old "
-                "partitions have no array node to read)")
-        dimensions = tuple(dimensions) if dimensions else (self.axis,)
-        new_var = _VS(name=name, dtype=dtype, dimensions=dimensions,
-                      fill_value=fill_value, attrs=dict(attrs or {}))
-        rebuilt = DatasetSchema(
-            dimensions=self.schema.dimensions,
-            variables=(*self.schema.variables, new_var),
-            attrs=self.schema.attrs,
-            group_attrs=self.schema.group_attrs,
-        ).with_partition_axis(self.axis)
-        doc = {"format_version": FORMAT_VERSION, "schema": rebuilt.to_json(),
-               "partitioning": self.partitioning.to_json(),
-               "data_format": "zarr3", "catalog_enabled": True}
-        self._fs.write_text(f"{self.path}/{CONFIG_NAME}",
-                            json.dumps(doc, indent=1, sort_keys=True))
-        self.schema = rebuilt
 
     def read_row_ranges(self,
                         ranges: dict[str, list[tuple[int, int]]], *,
@@ -661,234 +471,3 @@ class ZarrCollection:
             rows, "relpath string, start long, stop long")
         return (tasks.repartition(len(rows))
                 .mapInPandas(read_spans, struct))
-
-    def _load(self, *, filters: str | None = None,
-              keep_internal: bool = False) -> DataFrame | None:
-        """Indexer-compatible load: pruned scan plus (when asked) a
-        synthesized ``_row_idx`` — the array position within each
-        partition.  Zarr rows ARE positional (writes sort by axis), so a
-        window over (keys, axis) reproduces the on-disk order; this is
-        what lets ``indexing.Indexer`` build/lookup/query against zarr
-        collections unchanged, and its ``lookup`` output feed
-        :meth:`read_row_ranges` for chunk-level partial reads.
-        """
-        from pyspark.sql import Window
-        from ..collection.collection import ROW_IDX
-        relpaths = self.partitions(filters=filters)
-        if not relpaths:
-            return None
-        df = self._read_partitions(relpaths)
-        if keep_internal:
-            win = (Window.partitionBy(*self.partitioning.keys)
-                   .orderBy(self.axis))
-            df = df.withColumn(ROW_IDX, F.row_number().over(win) - F.lit(1))
-        return df
-
-    def query(self, *, filters: str | None = None,
-              variables: Iterable[str] | None = None,
-              where: str | None = None,
-              ordered: bool = True,
-              at_generation: int | None = None,
-              nested: bool = False) -> DataFrame | None:
-        """Pruned + projected read: ``filters`` (partition-key dialect)
-        selects partitions on the driver, and the scan reads exactly
-        that list, one task per partition (``_read_partitions``) — every
-        action on the returned DataFrame reads the same partition set.
-
-        ``where`` (data-column dialect, float literals allowed) adds
-        zone-map partition skipping when the collection records
-        ``stats_columns`` — only surviving partitions are scanned, and
-        the exact row filter is applied on top (parquet-layout parity,
-        collection/collection.py).
-
-        ``at_generation`` reads AS OF a committed generation (parquet-
-        layout parity: partition list + zone statistics from the gen-N
-        snapshot, staleness-gated — see
-        ``collection.catalog.resolve_snapshot_readable``); republished
-        partitions are read from their retained copies in the same
-        scan."""
-        sources = None
-        if at_generation is not None:
-            # fetch + staleness-verify the snapshot ONCE and thread it
-            # to both the partition list and the zone-stats map (a
-            # where-clause time-travel read used to verify twice —
-            # two extra catalog GETs per query, r10 advice).
-            # ``sources`` routes republished partitions to their
-            # pinned-generation retained copies (copy-on-republish);
-            # staleness is fatal only for MATCHED partitions
-            # (catalog.resolve_matched — the partial-read contract).
-            from ..collection.catalog import resolve_matched
-            snap, sources, relpaths = resolve_matched(
-                self._catalog, at_generation,
-                lambda rels: self._match_relpaths(rels, filters))
-        else:
-            snap = None
-            relpaths = self.partitions(filters=filters)
-        if not relpaths:
-            return None  # quirk Q6 parity
-        if where is not None and (self.stats_columns
-                                  or self.bloom_columns):
-            if snap is not None:
-                stats_map = dict(snap.get("stats", {}))
-            else:
-                stats_map = self._catalog.read_stats()
-            if stats_map:
-                from ..partitioning.zonemap import compile_zone_filter
-                may_match = compile_zone_filter(where)
-                allowed = set(self.stats_columns) \
-                    | {f"{c}#bloom" for c in self.bloom_columns}
-                masked = {rel: {c: v for c, v in entry.items()
-                                if c in allowed}
-                          for rel, entry in stats_map.items()}
-                kept = [rel for rel in relpaths
-                        if may_match(masked.get(rel))]
-                # sidecar bloom payloads: fetched only for interval
-                # survivors, then probed (parquet-layout parity)
-                from ..collection.stats import resolve_sidecar_blooms
-                resolved = resolve_sidecar_blooms(
-                    {rel: masked.get(rel) for rel in kept},
-                    self._catalog.load_bloom, self._bloom_payloads)
-                if resolved is not None:
-                    kept = [rel for rel in kept
-                            if may_match(resolved[rel])]
-                if not kept:
-                    return None
-                relpaths = kept
-        read_vars = variables
-        if variables is not None and where is not None:
-            # the where predicate's columns must survive the scan
-            # projection; they are dropped again after the filter
-            read_vars = sorted(
-                set(variables)
-                | compile_filter(where, allow_float=True).names)
-        df = self._read_partitions(relpaths, read_vars, sources)
-        if where is not None:
-            df = df.where(compile_filter(where,
-                                         allow_float=True).to_column())
-        if ordered and self.axis in df.columns:
-            if len(relpaths) == 1:
-                # one surviving partition = one reader task: an
-                # in-partition sort IS the global order — skip the
-                # orderBy exchange (range partitioning + shuffle)
-                df = df.sortWithinPartitions(self.axis)
-            else:
-                df = df.orderBy(self.axis)
-        if variables is not None:
-            keep = [c for c in df.columns if c in set(variables)]
-            df = df.select(*keep)
-        else:
-            keep = [v.name for v in self.schema.partitioned_variables
-                    if v.name in df.columns]
-            df = df.select(*keep)
-        # attach immutables (broadcast one-row table; partition wins on
-        # conflict — quirk Q5 parity)
-        imm = self._immutable_row()
-        if imm is not None:
-            wanted = set(variables) if variables is not None else None
-            cols = {}
-            dims = self.schema.dim_map
-            for var in self.schema.immutable_variables:
-                if var.name not in imm or var.name in df.columns:
-                    continue
-                if wanted is not None and var.name not in wanted \
-                        and var.name.rsplit("/", 1)[-1] not in wanted:
-                    continue
-                value = imm[var.name]
-                if len(var.dimensions) == 0 or (
-                        len(value) == 1 and not isinstance(value[0], list)):
-                    lit = F.lit(value[0])
-                else:
-                    lit = F.lit(value)
-                cols[var.name] = lit.cast(
-                    var.spark_type(dims, self.axis))
-            if cols:
-                df = df.withColumns(cols)
-        if nested:
-            # struct view of the group tree (same contract as the
-            # parquet layout's Collection.query(nested=True))
-            from ..schema import nest_struct_columns
-            df = nest_struct_columns(df)
-        return df
-
-    def drop_partitions(self, *, filters: str | None = None) -> list[str]:
-        """Delete matching partition groups + catalog update
-        (``collection/base.py:599-634`` parity)."""
-        doomed = self.partitions(filters=filters)
-        # pinned generations keep their content past the drop
-        self._catalog.retain_for_pins(doomed)
-        for rel in doomed:
-            self._fs.delete(f"{self.path}/{rel}")
-        self._catalog.remove(doomed)
-        return doomed
-
-    def update(self, fn: Callable, *,
-               filters: str | None = None) -> list[str]:
-        """Read → ``fn(pdf) -> pdf`` → rewrite matching partitions
-        wholesale (``collection/base.py:698-794`` parity; strict about
-        returned columns like the parquet collection)."""
-        relpaths = self.partitions(filters=filters)
-        if not relpaths:
-            return []
-        df = self._read_partitions(relpaths)
-        keys = list(self.partitioning.keys)
-        var_names = [v.name for v in self.schema.partitioned_variables]
-        sample = fn(df.limit(0).toPandas())
-        missing = [n for n in var_names if n not in sample.columns]
-        if missing:
-            raise SchemaError(
-                f"update fn dropped partitioned variables {missing}")
-        updated = (df.groupBy(*keys).applyInPandas(
-            lambda pdf: fn(pdf)[var_names],
-            df.select(*var_names).schema))
-        derived = self.partitioning.derive(updated)
-        self._write_partitions(derived)
-        return relpaths
-
-    def map(self, fn: Callable, schema, *,
-            filters: str | None = None,
-            variables: Iterable[str] | None = None) -> DataFrame | None:
-        """Per-partition pandas fn over the matching partitions
-        (``collection/base.py:638-696`` parity)."""
-        relpaths = self.partitions(filters=filters)
-        if not relpaths:
-            return None
-        df = self._read_partitions(relpaths, variables)
-        return df.groupBy(*self.partitioning.keys).applyInPandas(fn, schema)
-
-    def repair_catalog(self) -> list[str]:
-        """Recover interrupted inserts (roll forward / quarantine —
-        staging.py), then re-walk the store and rewrite the catalog
-        (``base.py:352-375``; ≈ MSCK REPAIR TABLE)."""
-        staging_proto.recover(self._fs, self.path, self._catalog)
-        relpaths = self._fs.list_partition_dirs(
-            self.path, self.partitioning.depth)
-        self._catalog.write(relpaths)
-        return sorted(relpaths)
-
-    def partitions(self, *, filters: str | None = None,
-                   at_generation: int | None = None) -> list[str]:
-        if at_generation is not None:
-            # staleness fatal only for MATCHED partitions
-            # (catalog.resolve_matched — parquet-layout parity)
-            from ..collection.catalog import resolve_matched
-            return resolve_matched(
-                self._catalog, at_generation,
-                lambda rels: self._match_relpaths(rels, filters))[2]
-        relpaths = self._catalog.read()
-        if relpaths is None:
-            relpaths = self._fs.list_partition_dirs(
-                self.path, self.partitioning.depth)
-        return self._match_relpaths(relpaths, filters)
-
-    def _match_relpaths(self, relpaths: "list[str]",
-                        filters: str | None) -> list[str]:
-        """Key-predicate filter + numeric key sort (parquet-layout
-        parity — lets query() reuse an already-verified snapshot's
-        partition list without a second catalog round-trip)."""
-        predicate = compile_filter(filters)
-        matched = [(rel, self.partitioning.decode(rel)) for rel in relpaths]
-        matched = [(rel, key) for rel, key in matched
-                   if predicate.evaluate(key)]
-        matched.sort(key=lambda item: tuple(item[1][k]
-                                            for k in self.partitioning.keys))
-        return [rel for rel, _ in matched]

@@ -112,16 +112,21 @@ def read_partition(root: str, rel: str, key: dict,
         try:
             values = read_array(array_path, conf=blob_conf)
         except FileNotFoundError:
-            # schema-evolved variable absent from an old partition:
-            # surface the declared fill (zarr missing-chunk semantics)
+            # a variable the partition does not store (added by schema
+            # evolution, or dropped by update(allow_variable_drop=True)):
+            # the declared fill (zarr missing-chunk semantics), else
+            # nulls — what the parquet layout reads for a missing column
             if length is None:
                 length = len(read_array(
                     f"{group_path}/{dataset_schema.axis}", conf=blob_conf))
             var = var_map.get(name)
-            if var is None or var.fill_value is None:
-                raise FileNotFoundError(
-                    f"array {name!r} missing in {rel!r} and no "
-                    f"fill_value declared") from None
+            if var is None:
+                raise
+            if var.fill_value is None:
+                from pyspark.sql.pandas.types import to_arrow_type
+                arrays[name] = pa.nulls(length,
+                                        to_arrow_type(field.dataType))
+                continue
             dtype = np.dtype("datetime64[us]"
                              if var.dtype.startswith("datetime")
                              else var.dtype)
