@@ -592,6 +592,47 @@ def test_az_msi_provider_against_imds_stub(az_server, az_root,
     assert routed.read_text(f"{az_root}/d.txt") == "dispatched"
 
 
+@pytest.mark.parametrize("mode", ["bearer", "msi"])
+def test_zarr_collection_on_az_under_aad(spark, az_server, az_root,
+                                         monkeypatch, mode):
+    """Zarr on az:// with no account key: executors get the driver's
+    AAD grant through the shipped blob conf — the static bearer token,
+    or the MSI endpoint from which each process mints its own — and
+    build the same provider-backed client ``fs_for`` does."""
+    from tests.azurite_mini import issue_token
+    from zcollection_spark.zarr3.blobs import (blobs_for,
+                                               capture_blob_conf)
+    from zcollection_spark.zarr3.collection import create_zarr_collection
+    srv, endpoint = az_server
+    monkeypatch.delenv("AZURE_STORAGE_KEY", raising=False)
+    monkeypatch.delenv("AZURE_STORAGE_SAS_TOKEN", raising=False)
+    if mode == "bearer":
+        monkeypatch.setenv("AZURE_STORAGE_BEARER_TOKEN",
+                           issue_token(srv.state))
+    else:
+        monkeypatch.setenv("AZURE_MSI_ENDPOINT",
+                           endpoint.rsplit("/", 1)[0]
+                           + "/metadata/identity/oauth2/token")
+    conf = capture_blob_conf()
+    client = blobs_for(az_root, conf)._fs
+    assert (client._token_provider is not None) == (mode == "msi")
+
+    schema = (zc.SchemaBuilder().add_dimension("num")
+              .add_variable("num", "int64", ("num",))
+              .add_variable("v", "float64", ("num",))
+              .build("num"))
+    coll = create_zarr_collection(spark, f"{az_root}/zaad", schema=schema,
+                                  axis="num",
+                                  partitioning=zc.Sequence(("num",)))
+    assert isinstance(coll._fs, AzureBlobFS)
+    pdf = pd.DataFrame({"num": np.array([0, 0, 1], dtype=np.int64),
+                        "v": [1.5, 2.5, 3.5]})
+    coll.insert(spark.createDataFrame(pdf,
+                                      schema=schema.to_struct_type()))
+    assert coll.partitions() == ["num=0", "num=1"]
+    assert sorted(r.v for r in coll.query().collect()) == [1.5, 2.5, 3.5]
+
+
 def test_az_bearer_401_refresh_survives_throttle_streak(monkeypatch):
     """A 401 landing on the LAST transient-retry attempt (after a 429
     streak) must still get its refreshed-token retry — the refresh is

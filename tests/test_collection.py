@@ -214,6 +214,30 @@ def test_update(spark, seq_collection):
         got, 2 * np.arange(21, dtype=np.float32).reshape(7, 3))
 
 
+def test_update_keeps_immutables_out_of_partition_files(spark,
+                                                        seq_collection):
+    """``fn`` sees the float32 immutable ``static`` and hands it back;
+    the rewritten partition files still store only the partitioned
+    variables (``static`` lives in ``_immutable``) and reads attach it
+    as before."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    def double(pdf):
+        return pdf.assign(value=pdf["value"].map(
+            lambda a: [2 * x for x in a]))
+
+    seq_collection.update(double)
+    files = glob.glob(f"{seq_collection.path}/num=*/*.parquet")
+    assert files
+    for path in files:
+        assert pq.read_schema(path).names == ["value", "_row_idx"]
+    rows = seq_collection.query().collect()
+    assert len(rows) == 7
+    assert all(r["static"] == [10.0, 20.0, 30.0] for r in rows)
+
+
 def test_update_missing_variable_strict(spark, seq_collection):
     def drop_value(pdf):
         return pdf[["num"]]

@@ -442,6 +442,82 @@ def test_zarr_in_task_stats_match_spark_aggregation(spark, rows):
         shutil.rmtree(root, ignore_errors=True)
 
 
+_FLOAT_EDGES = [float("nan"), -float("nan"), float("inf"), float("-inf"),
+                -0.0, 0.0]
+#: past parquet-mr's 4 KiB statistics limit, ASCII and multi-byte
+_LONG_STRINGS = ["q" * 5000, "é" * 2100]
+
+_parquet_rows = st.lists(
+    st.tuples(
+        st.integers(min_value=0, max_value=2),  # partition key
+        st.one_of(st.none(), st.floats(), st.sampled_from(_FLOAT_EDGES)),
+        st.one_of(st.none(), st.floats(width=32),
+                  st.sampled_from(_FLOAT_EDGES)),
+        st.one_of(st.none(), st.booleans()),
+        st.one_of(st.none(), st.integers(-2**7, 2**7 - 1)),
+        st.one_of(st.none(), st.integers(-2**15, 2**15 - 1)),
+        # uint64 is decimal(20,0): 2**53 + 1 and up round as floats
+        st.one_of(st.none(), st.integers(0, 2**64 - 1),
+                  st.sampled_from([2**53 + 1, 2**64 - 1, 0])),
+        st.one_of(st.none(), st.text(max_size=6),
+                  st.sampled_from(["", "日本", *_LONG_STRINGS]))),
+    min_size=1, max_size=12)
+
+
+@given(_parquet_rows)
+@settings(max_examples=8, deadline=None)
+def test_parquet_footer_stats_match_spark_aggregation(spark, rows):
+    """The parquet layout's footer-built zone maps equal
+    ``collect_zone_stats`` over the collection's read-back rows,
+    compared numerically (``-0.0 == 0.0``) — NaN of either sign and
+    ±inf (TOP), nulls and all-null partitions, float32, int8, int16,
+    bool, decimals that widen, multi-file partitions (``chunks=2``
+    caps each file at two rows) and a stats column that is the
+    ``Sequence`` key.  A partition holding a string over parquet-mr's
+    4 KiB statistics limit stores TOP, never EMPTY."""
+    import shutil
+    import tempfile
+    from decimal import Decimal
+    from zcollection_spark.collection.stats import collect_zone_stats
+    schema = (zc.SchemaBuilder()
+              .add_dimension("i", chunks=2)
+              .add_variable("i", "int64", ("i",))
+              .add_variable("x", "float64", ("i",))
+              .add_variable("f", "float32", ("i",))
+              .add_variable("b", "bool", ("i",))
+              .add_variable("t", "int8", ("i",))
+              .add_variable("h", "int16", ("i",))
+              .add_variable("d", "uint64", ("i",))
+              .add_variable("s", "str", ("i",))
+              .add_variable("num", "int64", ("i",))
+              .build())
+    cols = ["b", "d", "f", "h", "num", "s", "t", "x"]
+    root = tempfile.mkdtemp()
+    try:
+        coll = zc.create_collection(
+            spark, f"{root}/p", schema=schema, axis="i",
+            partitioning=zc.Sequence(("num",)), stats_columns=cols)
+        coll.insert(spark.createDataFrame(
+            [(i, x, f, b, t, h, None if d is None else Decimal(d), s, num)
+             for i, (num, x, f, b, t, h, d, s) in enumerate(rows)],
+            coll.schema.to_struct_type()))
+        got = coll._catalog.read_stats()
+        want = collect_zone_stats(coll.query(), coll.partitioning,
+                                  coll.stats_columns, coll.partitions())
+        assert sorted(got) == sorted(want)
+        for rel, entry in want.items():
+            num = int(rel.split("=")[1])
+            long_s = any(len(r[7] or "") > 2000 for r in rows
+                         if r[0] == num)
+            for col in cols:
+                if col == "s" and long_s:
+                    assert got[rel][col] == [None, None, 0]
+                else:
+                    assert got[rel][col] == entry[col], (rel, col)
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+
+
 @given(st.lists(st.integers(min_value=-10**9, max_value=10**9),
                 min_size=1, max_size=200, unique=True))
 @settings(max_examples=50, deadline=None)

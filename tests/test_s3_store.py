@@ -304,6 +304,37 @@ def test_s3_publish_per_file_op_budget(spark, seq_schema, s3_root):
     assert counts.get("list", 0) <= 10 * 3, counts
 
 
+def test_s3_stats_columns_cost_no_store_op(spark, s3_root):
+    """Zone maps are read from the footers in local scratch before the
+    upload, so a parquet insert and an upsert with ``stats_columns``
+    issue exactly the store ops of a twin without them."""
+    schema = (zc.SchemaBuilder()
+              .add_dimension("i")
+              .add_variable("i", "int64", ("i",))
+              .add_variable("value", "float64", ("i",))
+              .add_variable("num", "int64", ("i",))
+              .build())
+    ddl = "i long, value double, num long"
+    first = [(i, float(i), i % 3) for i in range(9)]
+    upsert = [(i, -float(i), i % 3) for i in range(6, 12)]
+    counts = []
+    for name, extra in (("plain", {}), ("stats", {"stats_columns":
+                                                  ["value"]})):
+        coll = zc.create_collection(
+            spark, f"{s3_root}/{name}", schema=schema, axis="i",
+            partitioning=zc.Sequence(("num",)), **extra)
+        fs = coll._fs
+        ops = []
+        for rows, merge in ((first, None), (upsert, "upsert")):
+            fs.api_counts.clear()
+            coll.insert(spark.createDataFrame(rows, ddl), merge=merge)
+            ops.append(dict(fs.api_counts))
+        counts.append(ops)
+    assert counts[0] == counts[1]
+    assert all(op.get("get") and op.get("list") for op in counts[1])
+    assert coll._catalog.read_stats()["num=0"]["value"] == [-9.0, 3.0, 0]
+
+
 def test_s3_intentless_debris_quarantined_file_granular(spark, seq_schema,
                                                         s3_root):
     """Quarantine on S3 has no directory rename to lean on: recover()

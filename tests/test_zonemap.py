@@ -19,7 +19,9 @@ Pinned here:
   (``update``) drops the partition's entry — conservative scans, never
   wrong pruning;
 - append widening: a ``merge='concat'`` publish unions intervals and
-  cannot narrow them.
+  cannot narrow them;
+- cost: parquet zone maps are folded from the staged files' footers and
+  zarr's ride the write task, so neither runs an extra Spark job.
 """
 
 from __future__ import annotations
@@ -381,6 +383,121 @@ def test_zarr3_stats_cost_no_spark_job(spark, tmp_path):
     assert stats["num=0"]["value"] == [-15.0, 3.0, 0]
     assert coll.query(where="uid == 517") is not None
     assert coll.query(where="uid == 106") is None  # upserted away
+
+
+def test_parquet_stats_cost_no_spark_job(spark, tmp_path, monkeypatch):
+    """Parquet zone maps come from the staged files' footers: an upsert
+    on a collection with ``stats_columns`` runs exactly as many Spark
+    jobs as on a twin without them.  With ``bloom_columns`` the only
+    extra jobs are the bloom aggregation's, and its scan reads the
+    staged output alone — never the write lineage."""
+    import uuid
+    from zcollection_spark.collection import collection as collmod
+    schema = (zc.SchemaBuilder()
+              .add_dimension("i")
+              .add_variable("i", "int64", ("i",))
+              .add_variable("uid", "int64", ("i",))
+              .add_variable("value", "float64", ("i",))
+              .add_variable("num", "int64", ("i",))
+              .build())
+    ddl = "i long, uid long, value double, num long"
+    first = [(i, 100 + i, float(i), i % 3) for i in range(12)]
+    upsert = [(i, 500 + i, -float(i), i % 3) for i in range(6, 18)]
+
+    blooms = []
+    real_blooms = collmod.collect_bloom_stats
+
+    def counted_blooms(df, *args, **kwargs):
+        """Run the bloom aggregation in a job group of its own."""
+        sc = spark.sparkContext
+        outer = sc.getLocalProperty("spark.jobGroup.id")
+        out = []
+        jobs = _jobs_of(spark, f"bloom-{uuid.uuid4().hex}",
+                        lambda: out.append(real_blooms(df, *args,
+                                                       **kwargs)))
+        sc.setJobGroup(outer, outer)
+        blooms.append((jobs, df._jdf.queryExecution().executedPlan()
+                       .toString(), df.inputFiles()))
+        return out[0]
+
+    monkeypatch.setattr(collmod, "collect_bloom_stats", counted_blooms)
+    counts = []
+    for name, extra in (("plain", {}),
+                        ("stats", {"stats_columns": ["value"]}),
+                        ("bloom", {"stats_columns": ["value"],
+                                   "bloom_columns": ["uid"]})):
+        coll = zc.create_collection(
+            spark, str(tmp_path / name), schema=schema, axis="i",
+            partitioning=zc.Sequence(("num",)), **extra)
+        coll.insert(spark.createDataFrame(first, ddl))
+        blooms.clear()
+        df = spark.createDataFrame(upsert, ddl)
+        counts.append(_jobs_of(
+            spark, f"parquet-upsert-{uuid.uuid4().hex}",
+            lambda: coll.insert(df, merge="upsert")))
+    assert counts[0] == counts[1] == counts[2] > 0
+    [(bloom_jobs, plan, files)] = blooms
+    assert bloom_jobs >= 1
+    # one scan, of parquet files under the staging dir only
+    assert plan.count("Scan") == 1 and "FileScan parquet" in plan, plan
+    assert files and all("/_staging/" in f for f in files), files
+    stats = coll._catalog.read_stats()
+    assert sorted(stats) == ["num=0", "num=1", "num=2"]
+    assert stats["num=0"]["value"] == [-15.0, 3.0, 0]
+    assert coll.query(where="uid == 517") is not None
+    assert coll.query(where="uid == 106") is None  # upserted away
+
+
+def test_footer_fold_decode_rules(spark, tmp_path):
+    """``footer_zone_stats`` over footers of a second writer (pyarrow):
+    row groups and files fold into one entry; an all-null column counts
+    only nulls; INT32/INT64-backed decimals decode from the unscaled
+    integer and widen outward; a key column's entry is its path value.
+    TOP: a garbled string bound (pyarrow drops only a max past 4 KiB)
+    and float bounds from a writer that leaves NaN out of them."""
+    import glob
+    from decimal import Decimal
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from zcollection_spark.collection.stats import footer_zone_stats
+    dec = pa.decimal128(9, 2)
+    metas = []
+    for i, (n, d, s) in enumerate([
+            ([1, None, -3], ["0.10", "2.50", None], ["b", "c", None]),
+            ([7, 2, None], ["-1.25", None, None], ["a", "q" * 5000,
+                                                   None])]):
+        path = tmp_path / f"f{i}.parquet"
+        pq.write_table(pa.table({
+            "n": pa.array(n, pa.int64()),
+            "d": pa.array([None if x is None else Decimal(x) for x in d],
+                          dec),
+            "s": pa.array(s, pa.string()),
+            "v": pa.array([1.0, float("nan"), None], pa.float64()),
+            "z": pa.array([None] * 3, pa.int64())}), path,
+            row_group_size=2)
+        metas.append(pq.read_metadata(path))
+    got = footer_zone_stats({"num=4": metas}, zc.Sequence(("num",)),
+                            ["d", "n", "num", "s", "v", "z"])["num=4"]
+    assert got["n"] == [-3, 7, 2]
+    assert got["z"] == [None, None, 6]
+    assert got["num"] == [4, 4, 0]
+    lo, hi, nulls = got["d"]
+    assert (lo, hi, nulls) == (-1.25, 2.5, 3)  # both exact as floats
+    assert got["s"] == [None, None, 0]
+    assert got["v"] == [None, None, 0]
+    # Spark stores decimal(10,2) as INT64, whose bounds pyarrow cannot
+    # decode itself
+    out = str(tmp_path / "spark")
+    (spark.createDataFrame([(Decimal("1.23"),), (Decimal("-99999999.99"),),
+                            (None,)], "d decimal(10,2)")
+     .coalesce(1).write.parquet(out))
+    metas = [pq.read_metadata(f) for f in glob.glob(f"{out}/*.parquet")]
+    assert metas[0].schema.column(0).physical_type == "INT64"
+    assert footer_zone_stats({"num=1": metas}, zc.Sequence(("num",)),
+                             ["d"]) == {"num=1": {"d": [-99999999.99,
+                                                        1.23, 1]}}
 
 
 def test_temporal_stats_columns_rejected(spark, tmp_path):

@@ -79,7 +79,8 @@ from ..partitioning.zonemap import compile_zone_filter
 from ..schema import DatasetSchema, FORMAT_VERSION, upgrade
 from . import staging as staging_proto
 from .catalog import Catalog, diff_documents as catalog_diff
-from .stats import collect_zone_stats
+from .stats import (collect_bloom_stats, footer_zone_stats,
+                    staged_footers)
 from .merge import (MergeCallable, concat as merge_concat,
                     replace as merge_replace, resolve_merge)
 
@@ -510,20 +511,30 @@ class Collection:
         return root
 
     def _spark_parquet_write(self, target: str,
-                             run_write: Callable[[str], None]) -> dict | None:
-        """Run a Spark parquet-write job "into" ``target``.
+                             run_write: Callable[[str], None], *,
+                             with_stats: bool = False
+                             ) -> "tuple[dict | None, dict | None]":
+        """Run a Spark parquet-write job "into" ``target``; returns
+        ``(manifest, stats)``.
 
-        Native stores: the job writes directly, returns None (the staged
-        publish walks for manifests if it needs them).  Localized
-        stores: the job writes to scratch and the upload returns the
-        exact file list — which becomes the writer-provided manifest, so
-        the commit path never lists the store (staging.py).
+        Native stores: the job writes directly, and the manifest is None
+        (the staged publish walks for manifests if it needs them).
+        Localized stores: the job writes to scratch and the upload
+        returns the exact file list — which becomes the writer-provided
+        manifest, so the commit path never lists the store (staging.py).
+
+        ``with_stats`` adds the catalog statistics of what the job
+        wrote (:meth:`_written_stats`), read where the JVM wrote it —
+        before the upload on localized stores, so no store op is added.
         """
+        def write(dest: str) -> "dict | None":
+            run_write(dest)
+            return self._written_stats(dest) if with_stats else None
+
         if not getattr(self._fs, "requires_localization", False):
-            run_write(target)
-            return None
+            return None, write(target)
         scratch = self._fs.new_scratch_dir()
-        run_write(scratch)
+        stats = write(scratch)
         files = self._fs.upload_tree(scratch, target)
         depth = self.partitioning.depth
         manifest: dict[str, list[str]] = {}
@@ -532,7 +543,34 @@ class Collection:
             if len(comps) > depth:
                 manifest.setdefault("/".join(comps[:depth]),
                                     []).append("/".join(comps[depth:]))
-        return manifest
+        return manifest, stats
+
+    def _written_stats(self, root: str) -> dict | None:
+        """Zone maps and blooms of the partition tree a parquet write
+        job left under ``root`` (stats.py): zone maps fold the files'
+        footers, and blooms — which no footer holds — re-read the
+        written files, pruned to the bloom columns.  Neither re-runs
+        the write's lineage."""
+        footers = staged_footers(root, self.partitioning.depth, self._fs)
+        stats = footer_zone_stats(footers, self.partitioning,
+                                  self.stats_columns)
+        if not (self.bloom_columns and footers):
+            return stats
+        stored = set(next(iter(footers.values()))[0].schema.names)
+        var_map = self.schema.variable_map
+        dims = self.schema.dim_map
+        struct = T.StructType([
+            T.StructField(c, var_map[c].spark_type(dims, self.axis))
+            for c in self.bloom_columns
+            if c in stored or c in self.partitioning.keys])
+        bloom = collect_bloom_stats(
+            self.spark.read.schema(struct).parquet(root),
+            self.partitioning, self.bloom_columns, sorted(footers),
+            m_bits=self.bloom_bits)
+        merged = {rel: dict(entry) for rel, entry in (stats or {}).items()}
+        for rel, entry in (bloom or {}).items():
+            merged.setdefault(rel, {}).update(entry)
+        return merged or None
 
     def _read_partitions(self, relpaths: list[str],
                          variables: "Iterable[str] | None" = None,
@@ -922,13 +960,13 @@ class Collection:
             return df.sortWithinPartitions(*keys, *present)
         return df
 
-    def _write_tree(self, df: DataFrame, target: str) -> dict | None:
-        """Write ``df``'s partition tree under ``target`` (a staging dir).
+    def _write_tree(self, df: DataFrame) -> Callable[[str], None]:
+        """The Spark job writing ``df``'s partition tree under a
+        directory (a staging dir, or scratch on localized stores).
 
         Staging is always a fresh empty directory, so the Spark job runs
         with plain ``overwrite``; visibility is controlled by the publish
-        renames, not by the write mode.  Returns the writer-side file
-        manifest on localized stores (consumed by ``staged_publish``).
+        renames, not by the write mode.
         """
         keys = list(self.partitioning.keys)
         chunks = None
@@ -947,52 +985,31 @@ class Collection:
                 writer = writer.option("maxRecordsPerFile", chunks)
             writer.parquet(path)
 
-        return self._spark_parquet_write(target, run_write)
+        return run_write
 
-    def _collect_stats(self, df: DataFrame,
-                       relpaths: list[str]) -> dict | None:
-        """Per-partition zone-map stats + bloom filters (see
-        collection/stats.py for the cost model: one map-side-combined
-        aggregation each, driver result bounded by partition count)."""
-        zone = collect_zone_stats(df, self.partitioning,
-                                  self.stats_columns, relpaths)
-        if not self.bloom_columns:
-            return zone
-        from .stats import collect_bloom_stats
-        bloom = collect_bloom_stats(df, self.partitioning,
-                                    self.bloom_columns, relpaths,
-                                    m_bits=self.bloom_bits)
-        if bloom is None:
-            return zone
-        merged = {rel: dict(entry) for rel, entry in (zone or {}).items()}
-        for rel, entry in bloom.items():
-            merged.setdefault(rel, {}).update(entry)
-        return merged or None
-
-    def _staged_write(self, write_fn: Callable[[str], None], *,
+    def _staged_write(self, run_write: Callable[[str], None], *,
                       mode: str,
-                      txn: "tuple[str, int] | None" = None,
-                      stats_df: DataFrame | None = None) -> list[str]:
-        """Run ``write_fn(staging_dir)`` and publish atomically
-        (stage → intent → rename, staging.py); the catalog add is part of
-        the publish so readers never see uncommitted partitions.  ``txn``
-        (app_id, version) commits in the same catalog PUT — streaming
-        sinks use it for exactly-once replay skip.  ``stats_df`` is the
-        exact DataFrame being written; when given (and the collection
-        has ``stats_columns``) zone-map stats ride the same intent +
-        catalog PUT.  Any caller that rewrites partitions WITHOUT
-        providing it drops those partitions' stats (conservative scans
-        instead of stale pruning); every in-repo rewrite path — insert,
-        merges, ``update``, ``compact`` — provides it and refreshes."""
-        stats_fn = None
-        if stats_df is not None and self.catalog_enabled \
-                and (self.stats_columns or self.bloom_columns):
-            stats_fn = lambda rels: self._collect_stats(stats_df, rels)  # noqa: E731
+                      txn: "tuple[str, int] | None" = None) -> list[str]:
+        """Run the parquet job ``run_write(dir)`` into a staging dir and
+        publish atomically (stage → intent → rename, staging.py); the
+        catalog add is part of the publish so readers never see
+        uncommitted partitions.  ``txn`` (app_id, version) commits in
+        the same catalog PUT — streaming sinks use it for exactly-once
+        replay skip.  When the collection has ``stats_columns`` or
+        ``bloom_columns``, the statistics of the staged files
+        (:meth:`_written_stats`) ride the same intent and catalog PUT,
+        so every partition a publish writes — insert, merges,
+        ``update``, ``compact`` — gets entries describing what it
+        stores."""
+        with_stats = self.catalog_enabled and bool(
+            self.stats_columns or self.bloom_columns)
         return staging_proto.staged_publish(
-            self._fs, self.path, write_fn=write_fn,
+            self._fs, self.path,
+            write_fn=lambda staging: self._spark_parquet_write(
+                staging, run_write, with_stats=with_stats),
             depth=self.partitioning.depth, mode=mode,
             catalog=self._catalog if self.catalog_enabled else None,
-            txn=txn, stats_fn=stats_fn)
+            txn=txn)
 
     def _write(self, derived: DataFrame, *,
                txn: "tuple[str, int] | None" = None) -> list[str]:
@@ -1003,9 +1020,8 @@ class Collection:
         # sorts by (keys, axis) within tasks — exactly the distribution
         # partitionBy needs, so no extra repartition/sortWithinPartitions.
         return self._staged_write(
-            lambda staging: self._write_tree(self._with_row_idx(derived),
-                                             staging),
-            mode="swap", txn=txn, stats_df=derived)
+            self._write_tree(self._with_row_idx(derived)),
+            mode="swap", txn=txn)
 
     def insert(self, df: DataFrame, *,
                merge: str | MergeCallable | None = None,
@@ -1061,9 +1077,8 @@ class Collection:
             # the row_number window above already shuffled+sorted by keys;
             # append-publish moves the staged files into the existing
             # partition dirs (existing data is never rewritten)
-            self._staged_write(
-                lambda staging: self._write_tree(appended, staging),
-                mode="append", txn=txn, stats_df=derived)
+            self._staged_write(self._write_tree(appended),
+                               mode="append", txn=txn)
         else:
             existing = (self._read_partitions(colliding).drop(ROW_IDX))
             existing = self._cast_restored_keys(existing)
@@ -1374,14 +1389,11 @@ class Collection:
         compacted = self._apply_cluster_sort(
             df.repartition(*[F.col(k) for k in keys]), keys)
         self._staged_write(
-            lambda staging: self._spark_parquet_write(
-                staging,
-                lambda t: (compacted
-                           .write.mode("overwrite").partitionBy(*keys)
-                           .options(**engine_config.profile()
-                                    .writer_options())
-                           .parquet(t))),
-            mode="swap", stats_df=df)  # content unchanged: re-derive
+            lambda t: (compacted
+                       .write.mode("overwrite").partitionBy(*keys)
+                       .options(**engine_config.profile().writer_options())
+                       .parquet(t)),
+            mode="swap")
         return before
 
     def _pooled_map(self, fn, items: list):
@@ -1578,16 +1590,18 @@ class Collection:
                     f"update fn must retain partitioning column {src!r}")
         out_fields = []
         for name in out_cols:
-            if name in var_map:
-                out_fields.append(T.StructField(
-                    name, var_map[name].spark_type(dims, self.axis)))
-            else:
+            if name not in var_map:
                 raise SchemaError(
                     f"update fn produced unknown variable {name!r}")
-        out_schema = T.StructType(out_fields)
+            # immutables ride fn's input only: they live in
+            # ``_immutable``, never in the rewritten partition files
+            if not var_map[name].immutable:
+                out_fields.append(T.StructField(
+                    name, var_map[name].spark_type(dims, self.axis)))
+        written = [f.name for f in out_fields]
         updated = (df.groupBy(*self.partitioning.keys)
-                   .applyInPandas(lambda pdf: fn(pdf)[out_cols],
-                                  out_schema))
+                   .applyInPandas(lambda pdf: fn(pdf)[written],
+                                  T.StructType(out_fields)))
         derived = self.partitioning.derive(updated)
         self._write(derived)
         return relpaths

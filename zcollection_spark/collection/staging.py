@@ -348,13 +348,16 @@ def apply_publish(fs, root: str, staging_id: str, staging: str,
 
 def staged_publish(fs, root: str, *, write_fn, depth: int,
                    mode: str, catalog=None,
-                   txn: "tuple[str, int] | None" = None,
-                   stats_fn=None) -> list[str]:
+                   txn: "tuple[str, int] | None" = None) -> list[str]:
     """Run ``write_fn(staging_dir)`` (the Spark job), then publish its
-    output atomically.  Returns the published partition relpaths."""
+    output atomically.  ``write_fn`` returns ``(manifest, stats)``: the
+    writer's ``{rel: [files]}`` or None, and the catalog statistics of
+    what it wrote or None — they ride the intent, so they are part of
+    the commit or absent from it, never half-applied.  Returns the
+    published partition relpaths."""
     staging_id, staging = new_staging_dir(fs, root)
     try:
-        written = write_fn(staging)
+        written, stats = write_fn(staging)
         relpaths = fs.list_partition_dirs(staging, depth)
     except BaseException:
         # job failed before intent: nothing is visible; leave the debris
@@ -370,7 +373,7 @@ def staged_publish(fs, root: str, *, write_fn, depth: int,
         # Object-store path: the intent records per-partition file
         # manifests so the publish (and any crash recovery) can run
         # file-granular moves.  The manifest source, in preference order:
-        # 1. the WRITER — ``write_fn`` may return ``{rel: [files]}``
+        # 1. the WRITER — the manifest ``write_fn`` returned
         #    (the write task knows exactly what it wrote; zero extra
         #    round-trips on the commit path),
         # 2. a thread-pooled per-partition walk (or the store's flat
@@ -388,11 +391,6 @@ def staged_publish(fs, root: str, *, write_fn, depth: int,
                         lambda r: _walk_files(fs, f"{staging}/{r}"),
                         missing)):
                     manifests[rel] = files
-    stats = None
-    if stats_fn is not None:
-        # computed AFTER the write job, BEFORE the intent: the stats are
-        # part of the commit or absent from it — never half-applied
-        stats = stats_fn(sorted(relpaths))
     if catalog is not None:
         # copy-on-republish retention for pinned generations — MUST
         # complete before the intent exists: a crash before the intent

@@ -3,15 +3,22 @@
 Each layout produces ``{relpath: {col: [min, max, null_count]}}`` plus
 ``{relpath: {"col#bloom": {...}}}`` — committed with the publish
 (staging intent → catalog PUT) and consumed by ``query(where=...)``'s
-conservative partition skipping (``partitioning/zonemap.py``):
+conservative partition skipping (``partitioning/zonemap.py``).  Both
+describe what the write stored, and neither re-runs the write lineage:
 
-* the parquet layout's writer is the JVM, so it pays one map-side-
-  combined aggregation over the DataFrame being written
-  (:func:`collect_zone_stats`, :func:`collect_bloom_stats`);
+* the parquet layout's writer is the JVM, which already records min,
+  max and null count for every column chunk; zone maps are folded from
+  the footers of the staged files (:func:`staged_footers`,
+  :func:`footer_zone_stats`).  Blooms cannot come from footers, so
+  they re-read the staged output, pruned to the bloom columns
+  (:func:`collect_bloom_stats`);
 * the zarr layout's write task already holds every array it encodes,
   so it builds each partition's entries there (:func:`zone_entry`,
   :func:`bloom_entry`) and they ride the write job's own collect — no
-  extra Spark job, and the statistics describe what is stored.
+  extra Spark job.
+
+:func:`collect_zone_stats` is the Spark-aggregation reference both
+layouts' entries are checked against (``tests/test_properties.py``).
 
 Correctness invariants (pruning must NEVER be a correctness boundary):
 
@@ -22,7 +29,12 @@ Correctness invariants (pruning must NEVER be a correctness boundary):
   columns therefore aggregate NaN-FREE bounds plus a NaN count, and any
   partition-column containing a NaN stores no bounds at all (evaluates
   as TOP — NaN compares greater than any number under Spark semantics,
-  so such a partition may match ANY ordering predicate).
+  so such a partition may match ANY ordering predicate).  A parquet
+  footer shows a NaN as a NaN bound (parquet-mr writes ``max=NaN`` for
+  any chunk holding one), which decodes to the same TOP.
+* **Missing statistics are TOP** — a column chunk whose footer carries
+  no min/max (parquet-mr skips values over 4 KiB) or no null count
+  describes nothing, so the partition-column stores TOP, never EMPTY.
 * **Decimal widening** — converting a Decimal bound to a JSON float
   rounds to nearest, which can round a min UP past the true min (or a
   max DOWN).  Bounds are widened outward (``math.nextafter`` toward
@@ -32,6 +44,8 @@ Correctness invariants (pruning must NEVER be a correctness boundary):
 from __future__ import annotations
 
 import math
+import os
+import struct
 from decimal import Decimal
 from typing import Any
 
@@ -107,14 +121,14 @@ def bloom_entry(values: np.ndarray, kind: str, m_bits: int) -> dict:
 def collect_zone_stats(df: DataFrame, partitioning, stats_columns,
                        relpaths: list[str]) -> dict | None:
     """Per-partition ``{col: [min, max, nulls]}`` for the
-    ``stats_columns`` present in ``df``.
+    ``stats_columns`` present in ``df``, by one map-side-combined
+    aggregation job over ``df``.
 
-    One extra aggregation job over the write's lineage — map-side
-    partial aggregation keeps the shuffle at a few rows per partition,
-    and the driver result is bounded by partition count (the same bound
-    as the write path's distinct-keys collect).  If the lineage re-scan
-    ever dominates at very large inserts, the drop-in alternative is a
-    column-pruned re-read of the staged output."""
+    No write path runs this: the parquet layout folds footers
+    (:func:`footer_zone_stats`) and the zarr layout builds entries in
+    its write task (:func:`zone_entry`).  It stays as the reference
+    definition of an entry, which the property tests compare both
+    against over the read-back rows."""
     cols = [c for c in stats_columns if c in df.columns]
     if not cols:
         return None
@@ -148,6 +162,147 @@ def collect_zone_stats(df: DataFrame, partitioning, stats_columns,
                         json_stat(row[f"__hi_{c}"], "hi"),
                         int(row[f"__nn_{c}"] or 0)]
         out[rel] = entry
+    return out or None
+
+
+# ---------------------------------------------------------------------------
+# zone maps from parquet footers
+# ---------------------------------------------------------------------------
+
+#: Bytes the first tail read of a remote parquet file takes: footers of
+#: collection files are a few KiB, so one read covers the common case
+#: and a longer footer costs one more.
+FOOTER_TAIL_BYTES = 1 << 16
+
+
+def _footer_of_tail(read_tail, path: str):
+    """``FileMetaData`` of a parquet file from its tail
+    (``read_tail(path, n)`` → the last ``n`` bytes, all of a shorter
+    file).  The footer is framed by its length and ``PAR1``; pyarrow
+    parses it from that frame alone."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    tail = read_tail(path, FOOTER_TAIL_BYTES)
+    size = struct.unpack("<I", tail[-8:-4])[0] + 8
+    if size > len(tail):
+        tail = read_tail(path, size)
+    return pq.read_metadata(pa.BufferReader(b"PAR1" + tail[-size:]))
+
+
+def staged_footers(root: str, depth: int, fs) -> dict[str, list]:
+    """``{relpath: [FileMetaData, ...]}`` of the parquet files a write
+    job left under ``root`` (a partition tree ``depth`` keys deep).
+
+    A local ``root`` is read with pyarrow in place — no store op.  A
+    Hadoop-scheme ``root`` is walked through ``fs`` and each footer
+    read through ``fs.read_tail`` (one positioned stream per file)."""
+    import pyarrow.parquet as pq
+    if "://" in root:
+        from .staging import _walk_files
+        files = _walk_files(fs, root)
+
+        def meta(rel):
+            return _footer_of_tail(fs.read_tail, f"{root}/{rel}")
+    else:
+        files = []
+        for dirpath, dirnames, filenames in os.walk(root):
+            dirnames[:] = [d for d in dirnames
+                           if not d.startswith(("_", "."))]
+            rel_dir = os.path.relpath(dirpath, root).replace(os.sep, "/")
+            if rel_dir != ".":
+                files += [f"{rel_dir}/{name}" for name in filenames]
+
+        def meta(rel):
+            return pq.read_metadata(os.path.join(root, rel))
+    out: dict[str, list] = {}
+    for rel in sorted(files):
+        comps = rel.split("/")
+        if len(comps) == depth + 1 and comps[-1].endswith(".parquet") \
+                and not comps[-1].startswith(("_", ".")):
+            out.setdefault("/".join(comps[:depth]), []).append(meta(rel))
+    return out
+
+
+def _chunk_bound(stats, column, which: str) -> Any:
+    """One decoded min or max of a column chunk: decimals from the
+    unscaled integer (pyarrow cannot decode INT32/INT64-backed ones),
+    strings, numbers and bools as pyarrow gives them, and None for a
+    type no ``where`` literal can be compared with."""
+    logical = column.logical_type.type
+    if logical == "DECIMAL":
+        raw = getattr(stats, f"{which}_raw")
+        unscaled = (raw if isinstance(raw, int)
+                    else int.from_bytes(raw, "big", signed=True))
+        return Decimal(unscaled).scaleb(-column.scale)
+    if logical == "STRING" or (
+            column.physical_type in ("BOOLEAN", "INT32", "INT64", "FLOAT",
+                                     "DOUBLE")
+            and logical in ("NONE", "INT")):
+        return getattr(stats, which)
+    return None
+
+
+def _fold_footer_column(metas: list, col: str) -> list | None:
+    """``[lo, hi, nulls]`` of one partition-column over every row group
+    of every file, None when the files do not store ``col`` as a flat
+    column.  A NaN or inverted bound, float bounds from a writer that
+    leaves NaN out of them, a chunk without min/max that is not all
+    null, a chunk without a null count, or an undecodable type → TOP
+    (``[None, None, 0]``: no bounds, the partition is always kept)."""
+    lo = hi = None
+    nulls = 0
+    for meta in metas:
+        schema = meta.schema
+        idx = next((i for i in range(len(schema))
+                    if schema.column(i).path == col), None)
+        if idx is None:
+            return None
+        column = schema.column(idx)
+        if column.physical_type in ("FLOAT", "DOUBLE") \
+                and not (meta.created_by or "").startswith("parquet-mr"):
+            # parquet-mr ranks a NaN into the max; writers that leave
+            # NaN out of min/max (parquet-cpp) cannot show one
+            return [None, None, 0]
+        for r in range(meta.num_row_groups):
+            group = meta.row_group(r)
+            stats = group.column(idx).statistics
+            if stats is None or not stats.has_null_count:
+                return [None, None, 0]
+            if not stats.has_min_max:
+                if stats.null_count != group.num_rows:
+                    return [None, None, 0]
+                nulls += stats.null_count  # an all-null chunk
+                continue
+            a = _chunk_bound(stats, column, "min")
+            b = _chunk_bound(stats, column, "max")
+            # NaN fails a != a; min > max is a garbled (e.g. truncated)
+            # bound
+            if a is None or b is None or a != a or b != b or b < a:
+                return [None, None, 0]
+            lo = a if lo is None else min(lo, a)
+            hi = b if hi is None else max(hi, b)
+            nulls += stats.null_count
+    return [json_stat(lo, "lo"), json_stat(hi, "hi"), nulls]
+
+
+def footer_zone_stats(footers: dict[str, list], partitioning,
+                      stats_columns) -> dict | None:
+    """Per-partition ``{col: [min, max, nulls]}`` folded from the
+    parquet footers of each staged partition (:func:`staged_footers`) —
+    the entries :func:`collect_zone_stats` computes over the same rows,
+    with no Spark job.  A stats column that is also a partition key is
+    not stored in the files; its entry is the path's key value."""
+    out: dict = {}
+    for rel, metas in footers.items():
+        key = partitioning.decode(rel)
+        entry = {}
+        for col in stats_columns or ():
+            folded = ([key[col], key[col], 0] if col in key
+                      else _fold_footer_column(metas, col))
+            if folded is not None:
+                entry[col] = folded
+        if entry:
+            out[rel] = entry
     return out or None
 
 
@@ -201,9 +356,10 @@ def collect_bloom_stats(df: DataFrame, partitioning, bloom_columns,
     high-cardinality unsorted column (every partition's interval spans
     the probe); a small per-partition bloom can — the Delta/Iceberg
     file-skipping companion, committed in the same catalog PUT as the
-    zone stats.  Build cost: the SAME one map-side-combined aggregation
-    shape as the zone stats — each row contributes k=3 md5-derived bit
-    positions, OR-folded into ``m_bits/64`` ``bit_or`` aggregates, so
+    zone stats.  Build cost: one map-side-combined aggregation over
+    ``df`` (the parquet layout passes a re-read of the staged files,
+    pruned to the bloom columns) — each row contributes k=3
+    md5-derived bit positions, OR-folded into ``m_bits/64`` ``bit_or`` aggregates, so
     the shuffle stays a few hundred bytes per partition and the driver
     result is bounded by partition count.  The row hash canon is the
     column CAST TO STRING (exact for int/string — validated at config

@@ -492,6 +492,21 @@ class HadoopFS:
         finally:
             stream.close()
 
+    def read_tail(self, path: str, nbytes: int) -> bytes:
+        """The last ``nbytes`` of a file (all of a shorter one), read
+        through one positioned stream — a parquet footer without the
+        file."""
+        fs, jpath = self._fs_path(path)
+        size = fs.getFileStatus(jpath).getLen()
+        nbytes = min(nbytes, size)
+        stream = fs.open(jpath)
+        try:
+            stream.seek(size - nbytes)
+            return bytes(self._jvm.org.apache.commons.io.IOUtils
+                         .toByteArray(stream, nbytes))
+        finally:
+            stream.close()
+
     def write_text(self, path: str, data: str) -> None:
         self.write_bytes(path, data.encode("utf-8"))
 
@@ -662,6 +677,10 @@ class CountingFS:
     def read_bytes(self, path: str) -> bytes:
         self.counts["get"] += 1
         return self.inner.read_bytes(path)
+
+    def read_tail(self, path: str, nbytes: int) -> bytes:
+        self.counts["get"] += 1
+        return self.inner.read_tail(path, nbytes)
 
     def write_bytes(self, path: str, data: bytes) -> None:
         self.counts["put"] += 1

@@ -87,9 +87,14 @@ def capture_blob_conf() -> dict | None:
     az_account = os.environ.get("AZURE_STORAGE_ACCOUNT")
     az_key = os.environ.get("AZURE_STORAGE_KEY")
     az_sas = os.environ.get("AZURE_STORAGE_SAS_TOKEN")
-    if az_account and (az_key or az_sas):
+    az_bearer = os.environ.get("AZURE_STORAGE_BEARER_TOKEN")
+    az_msi = os.environ.get("AZURE_MSI_ENDPOINT")
+    if az_account and (az_key or az_sas or az_bearer or az_msi):
+        # AAD rides like GCS: a static bearer token, or the MSI
+        # endpoint from which each executor mints its own tokens
         conf.update({"az_account": az_account, "az_key": az_key,
-                     "az_sas": az_sas,
+                     "az_sas": az_sas, "az_bearer": az_bearer,
+                     "az_msi": az_msi,
                      "az_endpoint": os.environ.get("AZURE_BLOB_ENDPOINT")})
     gs_bearer = os.environ.get("GCS_BEARER_TOKEN")
     gs_keyfile = os.environ.get("GCS_KEYFILE")
@@ -266,21 +271,30 @@ def store_client(path: str, conf: dict | None = None):
     write must never fall back to a local directory named after the
     URL.  (HMAC-interop gs:// has no blob backend and raises too.)"""
     from ..fs import (AzureBlobFS, GcsFS, gce_metadata_token_provider,
-                      gcs_keyfile_token_provider)
+                      gcs_keyfile_token_provider, msi_token_provider)
     c = conf or {}
     env = os.environ.get
     if path.startswith("az://"):
+        static = (c.get("az_key") or c.get("az_sas") or c.get("az_bearer")
+                  or env("AZURE_STORAGE_KEY")
+                  or env("AZURE_STORAGE_SAS_TOKEN")
+                  or env("AZURE_STORAGE_BEARER_TOKEN"))
+        msi = c.get("az_msi") or env("AZURE_MSI_ENDPOINT")
         if not ((c.get("az_account") or env("AZURE_STORAGE_ACCOUNT"))
-                and (c.get("az_key") or c.get("az_sas")
-                     or env("AZURE_STORAGE_KEY")
-                     or env("AZURE_STORAGE_SAS_TOKEN")
-                     or env("AZURE_STORAGE_BEARER_TOKEN"))):
+                and (static or msi)):
             raise StoreError(
                 f"no Azure credentials for {path}: zarr blob I/O needs "
                 f"AZURE_STORAGE_ACCOUNT plus AZURE_STORAGE_KEY, "
-                f"AZURE_STORAGE_SAS_TOKEN or AZURE_STORAGE_BEARER_TOKEN")
-        return AzureBlobFS(c.get("az_account"), c.get("az_key"),
-                           c.get("az_endpoint"), sas_token=c.get("az_sas"))
+                f"AZURE_STORAGE_SAS_TOKEN, AZURE_STORAGE_BEARER_TOKEN "
+                f"or AZURE_MSI_ENDPOINT")
+        # an MSI endpoint and no static credential: a provider-backed
+        # client that mints and refreshes its own tokens — the
+        # precedence of fs.fs_for
+        return AzureBlobFS(
+            c.get("az_account"), c.get("az_key"), c.get("az_endpoint"),
+            sas_token=c.get("az_sas"), bearer_token=c.get("az_bearer"),
+            token_provider=(None if static
+                            else msi_token_provider(endpoint=msi)))
     # static token wins; then the keyfile (JWT grant — the off-GCE
     # mode); then the metadata server — the precedence of fs.fs_for
     bearer = c.get("gs_bearer") or env("GCS_BEARER_TOKEN")
@@ -327,7 +341,7 @@ class HttpBlobs(_RangedReads):
 _STORE_ENV = {
     "az": ("AZURE_BLOB_ENDPOINT", "AZURE_STORAGE_ACCOUNT",
            "AZURE_STORAGE_KEY", "AZURE_STORAGE_SAS_TOKEN",
-           "AZURE_STORAGE_BEARER_TOKEN"),
+           "AZURE_STORAGE_BEARER_TOKEN", "AZURE_MSI_ENDPOINT"),
     "gs": ("GCS_JSON_ENDPOINT", "GCS_BEARER_TOKEN", "GCS_KEYFILE",
            "GCE_METADATA_ENDPOINT")}
 

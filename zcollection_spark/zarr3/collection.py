@@ -320,9 +320,8 @@ class ZarrCollection(Collection):
             "stats_columns": self.stats_columns,
             "bloom_kinds": {c: k for c, k in kinds.items() if k},
             "bloom_bits": self.bloom_bits}
-        stats: dict = {}
 
-        def write_fn(staging: str) -> None:
+        def write_fn(staging: str) -> "tuple[None, dict | None]":
             spec = dict(base_spec, root=staging, **stats_spec)
 
             def write_partition(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -345,14 +344,14 @@ class ZarrCollection(Collection):
                     raise SchemaError(str(exc).split(marker, 1)[1]
                                       .splitlines()[0]) from exc
                 raise
-            stats.update((row.relpath, json.loads(row.stats))
-                         for row in rows if row.stats != "{}")
+            stats = {row.relpath: json.loads(row.stats)
+                     for row in rows if row.stats != "{}"}
+            return None, stats or None
 
         return staging_proto.staged_publish(
             self._fs, self.path, write_fn=write_fn,
             depth=self.partitioning.depth, mode="swap",
-            catalog=self._catalog, txn=txn,
-            stats_fn=lambda _rels: stats or None)
+            catalog=self._catalog, txn=txn)
 
     # -- read ----------------------------------------------------------
     def _read_partitions(self, relpaths: list[str],
