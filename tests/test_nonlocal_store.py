@@ -74,6 +74,49 @@ def test_viewfs_collection_roundtrip_with_crash_repair(spark, seq_schema,
     assert all(r["value"] == [2.0, 2.0, 2.0] for r in rows)
 
 
+def test_viewfs_stats_come_from_footers_read_through_hadoop(spark,
+                                                           viewfs_root):
+    """On a Hadoop-scheme store the staged footers are read through
+    ``HadoopFS.read_tail`` (one positioned stream per file): after an
+    insert and an upsert, with multi-file partitions, the catalog's
+    zone maps and blooms equal the Spark aggregations over the
+    read-back rows."""
+    from zcollection_spark.collection.stats import (collect_bloom_stats,
+                                                    collect_zone_stats)
+    from zcollection_spark.fs import HadoopFS
+    schema = (zc.SchemaBuilder()
+              .add_dimension("i", chunks=2)
+              .add_variable("i", "int64", ("i",))
+              .add_variable("uid", "int64", ("i",))
+              .add_variable("value", "float64", ("i",))
+              .add_variable("name", "str", ("i",))
+              .add_variable("num", "int64", ("i",))
+              .build())
+    ddl = "i long, uid long, value double, name string, num long"
+    coll = zc.create_collection(
+        spark, f"{viewfs_root}/stats", schema=schema, axis="i",
+        partitioning=zc.Sequence(("num",)),
+        stats_columns=["value", "name", "num"],
+        bloom_columns=["uid", "name"], bloom_bits=256)
+    assert isinstance(coll._fs, HadoopFS)
+    coll.insert(spark.createDataFrame(
+        [(i, 100 + i, float(i), f"n{i}", i % 3) for i in range(9)], ddl))
+    coll.insert(spark.createDataFrame(
+        [(i, 500 + i, None if i == 7 else -float(i), f"u{i}", i % 3)
+         for i in range(6, 12)], ddl), merge="upsert")
+    back, rels = coll.query(), coll.partitions()
+    want = collect_zone_stats(back, coll.partitioning, coll.stats_columns,
+                              rels)
+    for rel, entry in collect_bloom_stats(
+            back, coll.partitioning, coll.bloom_columns, rels,
+            m_bits=256).items():
+        want[rel].update(entry)
+    assert coll._catalog.read_stats() == want
+    assert want["num=1"]["value"] == [-10.0, 4.0, 1]
+    assert coll.query(where="uid == 511") is not None
+    assert coll.query(where="uid == 106") is None  # upserted away
+
+
 class ObjectStoreFS(LocalFS):
     """LocalFS constrained to object-store semantics: no atomic rename,
     and DIRECTORY renames are forbidden outright (an object store has

@@ -335,6 +335,50 @@ def test_s3_stats_columns_cost_no_store_op(spark, s3_root):
     assert coll._catalog.read_stats()["num=0"]["value"] == [-9.0, 3.0, 0]
 
 
+def test_s3_native_connector_write_reads_footers_from_store(
+        spark, s3_root, tmp_path, monkeypatch):
+    """With ``requires_localization`` off, Spark writes s3:// through
+    its connector and the staged files' footers are read from the
+    store: the write's zone maps cost one LIST plus one ranged GET per
+    staged file.  The connector is stood in for by a local Spark write
+    plus an upload, which lands the same objects."""
+    from zcollection_spark.collection.stats import collect_zone_stats
+    schema = (zc.SchemaBuilder()
+              .add_dimension("i", chunks=2)
+              .add_variable("i", "int64", ("i",))
+              .add_variable("value", "float64", ("i",))
+              .add_variable("num", "int64", ("i",))
+              .build())
+    coll = zc.create_collection(
+        spark, f"{s3_root}/native", schema=schema, axis="i",
+        partitioning=zc.Sequence(("num",)), stats_columns=["value"])
+    fs = coll._fs
+    monkeypatch.setattr(fs, "requires_localization", False)
+    df = spark.createDataFrame(
+        [(i, float(i) if i != 3 else float("nan"), i % 3)
+         for i in range(9)], "i long, value double, num long")
+    uploaded = []
+
+    def connector_write(dest):
+        local = str(tmp_path / "jvm")
+        (df.coalesce(1).write.option("maxRecordsPerFile", 2)
+         .partitionBy("num").parquet(local))
+        uploaded.extend(fs.upload_tree(local, dest))
+        fs.api_counts.clear()
+
+    manifest, stats = coll._spark_parquet_write(
+        f"{coll.path}/{staging.STAGING_RELPATH}/native", connector_write,
+        with_stats=True)
+    assert manifest is None  # native stores walk at publish time
+    assert len(uploaded) == 6
+    assert dict(fs.api_counts) == {"list": 1, "get": len(uploaded)}
+    want = collect_zone_stats(df, coll.partitioning, ["value"],
+                              ["num=0", "num=1", "num=2"])
+    assert stats == want
+    assert stats["num=0"]["value"] == [None, None, 0]  # holds the NaN
+    assert stats["num=1"]["value"] == [1.0, 7.0, 0]
+
+
 def test_s3_intentless_debris_quarantined_file_granular(spark, seq_schema,
                                                         s3_root):
     """Quarantine on S3 has no directory rename to lean on: recover()

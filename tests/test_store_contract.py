@@ -214,6 +214,46 @@ def test_store_contract_and_op_budget(store, tmp_path):
 # Copy Blob under bearer auth (any container pair)
 # ---------------------------------------------------------------------------
 
+def test_staged_footers_read_through_the_store(store, spark, tmp_path):
+    """Where the JVM writes a store natively (``requires_localization``
+    off: hadoop-aws, hadoop-azure, gcs-connector), a parquet write's
+    zone maps come from the staged files' tails read through the store:
+    one LIST for the walk, then one ranged GET per file.  Spark-written
+    files, uploaded, fold to the entries their local copies give and to
+    ``collect_zone_stats`` over the same rows."""
+    import zcollection_spark as zc
+    from zcollection_spark.collection.stats import (collect_zone_stats,
+                                                    footer_zone_stats,
+                                                    staged_footers)
+    _, fs, root = store
+    df = spark.createDataFrame(
+        [(i, None if i == 4 else float(i) - 3.5, i % 2) for i in range(9)],
+        "i long, value double, num long")
+    local = str(tmp_path / "jvm")
+    (df.coalesce(1).write.option("maxRecordsPerFile", 2)
+     .partitionBy("num").parquet(local))
+    part = zc.Sequence(("num",))
+    cols = ["i", "num", "value"]
+    on_disk = footer_zone_stats(staged_footers(local, 1, fs), part, cols)
+    staged = f"{root}/_staging/w"
+    files = fs.upload_tree(local, staged)  # removes the local tree
+    assert len(files) == 5  # two partitions, at most two rows a file
+
+    first = f"{staged}/{files[0]}"
+    assert fs.read_tail(first, 4) == b"PAR1"
+    assert fs.read_tail(first, 1 << 20) == fs.read_bytes(first)
+    with pytest.raises(FileNotFoundError):
+        fs.read_tail(f"{staged}/num=0/missing.parquet", 8)
+
+    fs.api_counts.clear()
+    remote = staged_footers(staged, 1, fs)
+    assert dict(fs.api_counts) == {"list": 1, "get": len(files)}
+    got = footer_zone_stats(remote, part, cols)
+    assert got == on_disk == collect_zone_stats(df, part, cols,
+                                                ["num=0", "num=1"])
+    assert got["num=0"]["value"] == [-3.5, 4.5, 1]
+
+
 def test_az_bearer_cross_container_move_authorizes_and_checks_copy(
         az_emulator, monkeypatch):
     """Under AAD/MSI bearer auth the source URL carries no credential,

@@ -524,8 +524,11 @@ class Collection:
         manifest, so the commit path never lists the store (staging.py).
 
         ``with_stats`` adds the catalog statistics of what the job
-        wrote (:meth:`_written_stats`), read where the JVM wrote it —
-        before the upload on localized stores, so no store op is added.
+        wrote (:meth:`_written_stats`), read where the JVM wrote it.
+        On local disk — a local collection, or a localized store's
+        scratch before the upload — that adds no store op; a store the
+        JVM writes natively pays one walk of the staged tree plus one
+        tail read per staged file (``stats.staged_footers``).
         """
         def write(dest: str) -> "dict | None":
             run_write(dest)

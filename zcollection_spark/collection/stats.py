@@ -44,7 +44,6 @@ Correctness invariants (pruning must NEVER be a correctness boundary):
 from __future__ import annotations
 
 import math
-import os
 import struct
 from decimal import Decimal
 from typing import Any
@@ -169,7 +168,7 @@ def collect_zone_stats(df: DataFrame, partitioning, stats_columns,
 # zone maps from parquet footers
 # ---------------------------------------------------------------------------
 
-#: Bytes the first tail read of a remote parquet file takes: footers of
+#: Bytes the first tail read of a staged parquet file takes: footers of
 #: collection files are a few KiB, so one read covers the common case
 #: and a longer footer costs one more.
 FOOTER_TAIL_BYTES = 1 << 16
@@ -183,6 +182,8 @@ def _footer_of_tail(read_tail, path: str):
     import pyarrow as pa
     import pyarrow.parquet as pq
     tail = read_tail(path, FOOTER_TAIL_BYTES)
+    if len(tail) < 12 or tail[-4:] != b"PAR1":
+        raise ValueError(f"{path} is not a parquet file")
     size = struct.unpack("<I", tail[-8:-4])[0] + 8
     if size > len(tail):
         tail = read_tail(path, size)
@@ -193,33 +194,37 @@ def staged_footers(root: str, depth: int, fs) -> dict[str, list]:
     """``{relpath: [FileMetaData, ...]}`` of the parquet files a write
     job left under ``root`` (a partition tree ``depth`` keys deep).
 
-    A local ``root`` is read with pyarrow in place — no store op.  A
-    Hadoop-scheme ``root`` is walked through ``fs`` and each footer
-    read through ``fs.read_tail`` (one positioned stream per file)."""
-    import pyarrow.parquet as pq
-    if "://" in root:
-        from .staging import _walk_files
-        files = _walk_files(fs, root)
+    ``fs`` is the store holding ``root``: one walk of the tree
+    (``staging._walk_files``: one LIST on an object store), then each
+    file's tail (``fs.read_tail``: one ranged GET on an object store,
+    one positioned stream on a Hadoop store), ``PUBLISH_POOL`` files at
+    a time.  A local ``root`` — a local collection's staging dir, or the
+    scratch a localized store writes before its upload — is read
+    through a plain :class:`LocalFS` instead, one file after another:
+    its footers are bytes on this disk, so they cost no store op, and
+    each read takes microseconds, less than starting a thread."""
+    from concurrent.futures import ThreadPoolExecutor
 
-        def meta(rel):
-            return _footer_of_tail(fs.read_tail, f"{root}/{rel}")
+    from ..fs import LocalFS, scheme_of
+    from .staging import PUBLISH_POOL, _walk_files
+    local = scheme_of(root) == "file"
+    if local:
+        fs = LocalFS()
+    files = [rel for rel in _walk_files(fs, root)
+             if rel.count("/") == depth and rel.endswith(".parquet")]
+
+    def footer(rel):
+        return _footer_of_tail(fs.read_tail, f"{root}/{rel}")
+
+    if local or len(files) < 2:
+        metas = [footer(rel) for rel in files]
     else:
-        files = []
-        for dirpath, dirnames, filenames in os.walk(root):
-            dirnames[:] = [d for d in dirnames
-                           if not d.startswith(("_", "."))]
-            rel_dir = os.path.relpath(dirpath, root).replace(os.sep, "/")
-            if rel_dir != ".":
-                files += [f"{rel_dir}/{name}" for name in filenames]
-
-        def meta(rel):
-            return pq.read_metadata(os.path.join(root, rel))
+        with ThreadPoolExecutor(
+                max_workers=min(PUBLISH_POOL, len(files))) as pool:
+            metas = list(pool.map(footer, files))
     out: dict[str, list] = {}
-    for rel in sorted(files):
-        comps = rel.split("/")
-        if len(comps) == depth + 1 and comps[-1].endswith(".parquet") \
-                and not comps[-1].startswith(("_", ".")):
-            out.setdefault("/".join(comps[:depth]), []).append(meta(rel))
+    for rel, meta in zip(files, metas):
+        out.setdefault(rel.rsplit("/", 1)[0], []).append(meta)
     return out
 
 

@@ -138,6 +138,13 @@ class LocalFS:
     def read_bytes(self, path: str) -> bytes:
         return Path(path).read_bytes()
 
+    def read_tail(self, path: str, nbytes: int) -> bytes:
+        """The last ``nbytes`` of a file (all of a shorter one) — a
+        parquet footer without the file."""
+        with open(path, "rb") as fh:
+            fh.seek(max(fh.seek(0, os.SEEK_END) - nbytes, 0))
+            return fh.read()
+
     def write_text(self, path: str, data: str) -> None:
         target = Path(path)
         target.parent.mkdir(parents=True, exist_ok=True)
@@ -454,12 +461,16 @@ class HadoopFS:
     def __init__(self, spark: SparkSession):
         self._jvm = spark._jvm
         self._conf = spark._jsc.hadoopConfiguration()
+        # resolved once: each ``jvm.a.b.C`` lookup is a py4j round trip
+        # per name component, several times the cost of the call itself
+        self._Path = self._jvm.org.apache.hadoop.fs.Path
+        self._IOUtils = self._jvm.org.apache.commons.io.IOUtils
 
     def supports_atomic_rename(self, path: str) -> bool:
         return scheme_of(path) not in _NON_ATOMIC_RENAME_SCHEMES
 
     def _fs_path(self, path: str):
-        jpath = self._jvm.org.apache.hadoop.fs.Path(path)
+        jpath = self._Path(path)
         return jpath.getFileSystem(self._conf), jpath
 
     def exists(self, path: str) -> bool:
@@ -487,7 +498,7 @@ class HadoopFS:
             # ``stream.read(buf)`` idiom never fills the Python-side buffer.
             # Drain the stream JVM-side and take the returned byte[] (py4j
             # maps Java byte[] return values to Python bytes).
-            data = self._jvm.org.apache.commons.io.IOUtils.toByteArray(stream)
+            data = self._IOUtils.toByteArray(stream)
             return bytes(data)
         finally:
             stream.close()
@@ -502,8 +513,7 @@ class HadoopFS:
         stream = fs.open(jpath)
         try:
             stream.seek(size - nbytes)
-            return bytes(self._jvm.org.apache.commons.io.IOUtils
-                         .toByteArray(stream, nbytes))
+            return bytes(self._IOUtils.toByteArray(stream, nbytes))
         finally:
             stream.close()
 
@@ -861,6 +871,9 @@ class _ObjectStoreFS:
       LIST page ``(rows, prefixes, next_token)`` with ``(key, version,
       size)`` rows;
     - ``_get(bucket, key)`` → ``(body, version)``, None when absent;
+    - ``_get_tail(bucket, key, nbytes)`` → the last ``nbytes`` of the
+      object (all of a shorter one) by one suffix-range GET, None when
+      absent;
     - ``_put(bucket, key, data)``, and ``_put_if(bucket, key, data,
       token)``: the conditional PUT (create-only for a None token,
       replace-exactly-this otherwise) returning the new version, or
@@ -939,6 +952,14 @@ class _ObjectStoreFS:
         if got is None:
             raise FileNotFoundError(path)
         return got[0]
+
+    def read_tail(self, path: str, nbytes: int) -> bytes:
+        """The last ``nbytes`` of an object (all of a shorter one): one
+        ranged GET — a parquet footer without the file."""
+        tail = self._get_tail(*self._bk(path), nbytes)
+        if tail is None:
+            raise FileNotFoundError(path)
+        return tail
 
     def write_text(self, path: str, data: str) -> None:
         self.write_bytes(path, data.encode("utf-8"))
@@ -1219,6 +1240,18 @@ class S3FS(_ObjectStoreFS):
         except self._client.exceptions.NoSuchKey:
             return None
         return resp["Body"].read(), resp["ETag"]
+
+    def _get_tail(self, bucket: str, key: str, nbytes: int):
+        self.api_counts["get"] += 1
+        try:
+            resp = self._client.get_object(Bucket=bucket, Key=key,
+                                           Range=f"bytes=-{nbytes}")
+        except self._client.exceptions.ClientError as exc:
+            if _s3_missing(exc):
+                return None
+            raise
+        # a server that ignores Range answers 200 with the whole body
+        return resp["Body"].read()[-nbytes:]
 
     def _put(self, bucket: str, key: str, data: bytes) -> None:
         self.api_counts["put"] += 1
@@ -1713,6 +1746,18 @@ class _RestObjectStoreFS(_ObjectStoreFS):
             raise StoreError(
                 f"GET {self._SCHEME}://{bucket}/{key} failed: {status}")
         return body, hdrs.get(self._VERSION_HEADER)
+
+    def _get_tail(self, bucket: str, key: str, nbytes: int):
+        self.api_counts["get"] += 1
+        status, _, body = self._fetch(bucket, key,
+                                      {"Range": f"bytes=-{nbytes}"})
+        if status == 404:
+            return None
+        if status >= 400:
+            raise StoreError(f"ranged GET {self._SCHEME}://{bucket}/{key} "
+                             f"failed: {status}")
+        # a server that ignores Range answers 200 with the whole body
+        return body[-nbytes:]
 
     def _delete_keys(self, bucket: str, keys: list[str]) -> None:
         for key in keys:
