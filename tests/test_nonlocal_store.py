@@ -117,6 +117,42 @@ def test_viewfs_stats_come_from_footers_read_through_hadoop(spark,
     assert coll.query(where="uid == 106") is None  # upserted away
 
 
+def test_hadoop_walk_files_is_one_listing_per_directory(spark, viewfs_root,
+                                                      tmp_path):
+    """``HadoopFS.walk_files`` (the ``staging._walk_files`` hook) equals
+    the recursive ``list_files``/``list_dirs`` walk, hidden names
+    skipped at every level, and ``CountingFS`` counts it as one list."""
+    from zcollection_spark.fs import CountingFS, HadoopFS
+
+    class Recursive:  # HadoopFS without the hook
+        def __init__(self, inner):
+            self.list_files = inner.list_files
+            self.list_dirs = inner.list_dirs
+
+    # written through the scheme: the JVM caches a viewfs mount table
+    # per session, so another test's tmp_path may sit behind the root
+    hfs = HadoopFS(spark)
+    root = f"{viewfs_root}/walk-{tmp_path.name}"
+    for rel in ("year=2024/month=1/a.parquet", "year=2024/month=1/b.parquet",
+                "year=2024/month=2/c.parquet", "year=2025/month=1/d.parquet",
+                "top.parquet", "_SUCCESS", ".hidden.crc",
+                "year=2024/_tmp/x.parquet", "year=2024/.crc/y",
+                "year=2024/month=2/_marker", "_staging/z.parquet"):
+        hfs.write_bytes(f"{root}/{rel}", b"x")
+    want = staging._walk_files(Recursive(hfs), root)
+    assert want == ["top.parquet", "year=2024/month=1/a.parquet",
+                    "year=2024/month=1/b.parquet",
+                    "year=2024/month=2/c.parquet",
+                    "year=2025/month=1/d.parquet"]
+    assert hfs.walk_files(root) == want
+    probe = CountingFS(hfs)
+    assert staging._walk_files(probe, root) == want
+    assert dict(probe.counts) == {"list": 1}
+    assert hfs.walk_files(f"{viewfs_root}/missing") == []
+    # stores without the hook keep the recursive walk through CountingFS
+    assert getattr(CountingFS(LocalFS()), "walk_files", None) is None
+
+
 class ObjectStoreFS(LocalFS):
     """LocalFS constrained to object-store semantics: no atomic rename,
     and DIRECTORY renames are forbidden outright (an object store has

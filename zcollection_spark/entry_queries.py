@@ -127,19 +127,6 @@ def _events_coll(spark: SparkSession, sf_dir: str):
     return _cached(("events_d", sf_dir), build)
 
 
-def _events3_coll(spark: SparkSession, sf_dir: str, tag: str):
-    """Fresh 3-column events collection (for state-mutating scenarios)."""
-    def build():
-        df = _events3(spark, sf_dir)
-        coll = create_collection(
-            spark, f"{_tmp()}/events3_{tag}_{abs(hash(sf_dir))}",
-            schema=infer_schema(df.schema, axis="ts"),
-            axis="ts", partitioning=Date(("ts",), resolution="D"))
-        coll.insert(df)
-        return coll
-    return _cached(("events3", tag, sf_dir), build)
-
-
 # ---------------------------------------------------------------------------
 # §2.2 scans, pruning, projection
 # ---------------------------------------------------------------------------

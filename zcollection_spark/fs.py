@@ -620,6 +620,31 @@ class HadoopFS:
     def list_dirs(self, path: str) -> list[str]:
         return self._list_names(path, want_dirs=True)
 
+    def walk_files(self, root: str) -> list[str]:
+        """Staging fast path (staging._walk_files): ONE ``listStatus``
+        per directory, where ``list_files`` plus ``list_dirs`` pay an
+        ``exists`` and a ``listStatus`` each; hidden names skipped at
+        every level, as the recursive walker skips them."""
+        fs, jroot = self._fs_path(root)
+        if not fs.exists(jroot):
+            return []
+        out: list[str] = []
+
+        def walk(jpath, rel: str) -> None:
+            for status in fs.listStatus(jpath):
+                path = status.getPath()
+                name = path.getName()
+                if name.startswith(("_", ".")):
+                    continue
+                sub = f"{rel}/{name}" if rel else name
+                if status.isDirectory():
+                    walk(path, sub)
+                else:
+                    out.append(sub)
+
+        walk(jroot, "")
+        return sorted(out)
+
     def list_partition_dirs(self, root: str, depth: int) -> list[str]:
         fs, jroot = self._fs_path(root)
         if not fs.exists(jroot):
@@ -737,7 +762,13 @@ class CountingFS:
                        lambda p: True)(path)
 
     def __getattr__(self, name):
-        return getattr(self.inner, name)
+        attr = getattr(self.inner, name)
+        if name == "walk_files":  # only stores that have the hook
+            def walk_files(root: str) -> list[str]:
+                self.counts["list"] += 1
+                return attr(root)
+            return walk_files
+        return attr
 
 
 #: Statuses the urllib clients retry: throttles and transient

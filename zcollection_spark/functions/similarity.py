@@ -748,17 +748,6 @@ def _table_buckets_udf(dim: int, n_planes: int, n_tables: int, seed: int):
     return table_buckets
 
 
-def lsh_signature(vec_col: Column | str, planes: list[list[float]]) -> Column:
-    """Sign-bit signature: bit i = 1 iff dot(vec, plane_i) >= 0."""
-    vec = F.col(vec_col) if isinstance(vec_col, str) else vec_col
-    vec = F.transform(vec, lambda v: v.cast("double"))
-    sig = F.lit(0).cast("long")
-    for i, plane in enumerate(planes):
-        d = _dot(vec, F.lit(plane))
-        sig = sig + F.when(d >= 0, F.lit(1 << i)).otherwise(F.lit(0))
-    return sig
-
-
 def lsh_bucket_topk(corpus: DataFrame, queries: DataFrame, *,
                     id_col: str, vec_col: str, query_id_col: str,
                     query_vec_col: str | None = None, k: int = 10,

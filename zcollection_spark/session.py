@@ -10,6 +10,15 @@ with the same plan-affecting settings:
 - dynamic partition overwrite (the engine's ``replace``/``update`` write mode
   only rewrites touched partitions — the 100 TB-safe behavior),
 - Arrow for every pandas interchange (``applyInPandas`` UDF surfaces),
+- Python workers served by :mod:`._pydaemon`.  Before every Python task
+  (zarr reads and writes, Arrow/pandas UDFs) PySpark calls
+  ``importlib.invalidate_caches()``, which on CPython 3.12 and older
+  re-parses every imported zip archive's directory (``pyspark.zip``
+  about 16 times over): 150-200 ms of worker CPU per task.  The daemon
+  re-reads an archive only when it changed.  CPython 3.13 and newer are
+  left as they are: their ``invalidate_caches`` only drops the cache.
+  A session this module did not build (e.g. one a caller passes to
+  :func:`configure`) keeps its own daemon: the setting is static,
 - zstd parquet compression (parity with the reference's codec profiles,
   ``/root/reference/zcollection/codecs/defaults.py:133-156``).
 """
@@ -43,6 +52,10 @@ SESSION_CONF: dict[str, str] = {
     # pushed key filters (ZarrCollection reads resolve partitions on the
     # driver and do not need it)
     "spark.sql.python.filterPushdown.enabled": "true",
+    # workers skip the per-task re-read of unchanged zip archives on
+    # CPython <= 3.12 (see the module docstring); static, so it takes
+    # effect only in sessions get_spark builds
+    "spark.python.daemon.module": "zcollection_spark._pydaemon",
 }
 
 

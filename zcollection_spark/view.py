@@ -36,16 +36,6 @@ from .schema import VariableSchema, dtype_to_spark
 VIEW_CONFIG_NAME = "_zcollection_view.json"
 
 
-def _overlay_struct(variables: tuple[VariableSchema, ...],
-                    base: Collection) -> T.StructType:
-    dims = base.schema.dim_map
-    fields = []
-    for var in variables:
-        fields.append(T.StructField(
-            var.name, var.spark_type(dims, base.axis), True))
-    return T.StructType(fields)
-
-
 class View:
     """Overlay collection bound to a base collection."""
 
