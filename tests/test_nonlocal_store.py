@@ -13,6 +13,8 @@ Two gaps the reference covers with moto-S3 contract tests
    outright, plus crash injection at every file-move state.
 """
 
+import uuid
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -24,9 +26,14 @@ from zcollection_spark.fs import LocalFS
 
 @pytest.fixture()
 def viewfs_root(spark, tmp_path):
+    """``viewfs://<table>/store`` over this test's ``tmp_path``.  The JVM
+    caches a viewfs FileSystem per mount table, so each test gets its
+    own table."""
+    table = f"zct{uuid.uuid4().hex}"
     conf = spark._jsc.hadoopConfiguration()
-    conf.set(f"fs.viewfs.mounttable.zct.link./store", f"file://{tmp_path}")
-    return "viewfs://zct/store"
+    conf.set(f"fs.viewfs.mounttable.{table}.link./store",
+             f"file://{tmp_path}")
+    return f"viewfs://{table}/store"
 
 
 def _seq_df(spark, schema, nums, value):
@@ -117,8 +124,7 @@ def test_viewfs_stats_come_from_footers_read_through_hadoop(spark,
     assert coll.query(where="uid == 106") is None  # upserted away
 
 
-def test_hadoop_walk_files_is_one_listing_per_directory(spark, viewfs_root,
-                                                      tmp_path):
+def test_hadoop_walk_files_is_one_listing_per_directory(spark, viewfs_root):
     """``HadoopFS.walk_files`` (the ``staging._walk_files`` hook) equals
     the recursive ``list_files``/``list_dirs`` walk, hidden names
     skipped at every level, and ``CountingFS`` counts it as one list."""
@@ -129,10 +135,8 @@ def test_hadoop_walk_files_is_one_listing_per_directory(spark, viewfs_root,
             self.list_files = inner.list_files
             self.list_dirs = inner.list_dirs
 
-    # written through the scheme: the JVM caches a viewfs mount table
-    # per session, so another test's tmp_path may sit behind the root
     hfs = HadoopFS(spark)
-    root = f"{viewfs_root}/walk-{tmp_path.name}"
+    root = f"{viewfs_root}/walk"
     for rel in ("year=2024/month=1/a.parquet", "year=2024/month=1/b.parquet",
                 "year=2024/month=2/c.parquet", "year=2025/month=1/d.parquet",
                 "top.parquet", "_SUCCESS", ".hidden.crc",

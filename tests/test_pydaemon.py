@@ -13,7 +13,7 @@ from pathlib import Path
 import pytest
 
 from zcollection_spark import _pydaemon
-from zcollection_spark.session import SESSION_CONF
+from zcollection_spark.session import STATIC_CONF
 
 needs_patch = pytest.mark.skipif(
     sys.version_info >= (3, 13),
@@ -95,9 +95,9 @@ def test_deleted_archive_behaves_as_stock(tmp_path, patched):
 
 
 def test_importing_the_daemon_module_changes_nothing():
-    """The module ``SESSION_CONF`` names patches and starts nothing
+    """The module ``STATIC_CONF`` names patches and starts nothing
     unless it runs as ``__main__``."""
-    module = SESSION_CONF["spark.python.daemon.module"]
+    module = STATIC_CONF["spark.python.daemon.module"]
     assert module == _pydaemon.__name__
     probe = (f"import sys, zipimport, importlib\n"
              f"importlib.import_module({module!r})\n"
