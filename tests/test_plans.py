@@ -256,6 +256,83 @@ def test_tolerance_upsert_grid_anti_join(spark):
     assert "CartesianProduct" not in plan
 
 
+def _last_execution_id(store) -> int:
+    n = store.executionsCount()
+    return store.executionsList(n - 1, 1).apply(0).executionId() \
+        if n else -1
+
+
+def run_write(spark, action, marker: str) -> tuple[str, int]:
+    """Run ``action`` under a job group: the final plan of the one SQL
+    execution whose plan holds ``marker`` (the write), and the number
+    of Spark jobs ``action`` ran.  Write commands have no DataFrame to
+    ask, so the plan comes from the SQL status store, which holds the
+    AQE final plan once the listener bus has drained."""
+    import uuid
+    sc = spark.sparkContext
+    store = spark._jsparkSession.sharedState().statusStore()
+    since = _last_execution_id(store)
+    group = f"write-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    recent = store.executionsList(max(0, store.executionsCount() - 50), 50)
+    plans = [e.physicalPlanDescription()
+             for e in (recent.apply(i) for i in range(recent.size()))
+             if e.executionId() > since]
+    writes = [p for p in plans if marker in p]
+    assert len(writes) == 1, plans
+    return final_plan(writes[0]), jobs
+
+
+@pytest.mark.parametrize("layout", ["parquet", "zarr"])
+@pytest.mark.parametrize("merge", ["upsert", "time_series", None])
+def test_merge_write_one_exchange_no_join(spark, tmp_path, layout, merge):
+    """An exact upsert or time_series insert merges inside the write's
+    one shuffle: the merge window partitions by the keys and orders by
+    the axis, which is what the parquet ``_row_idx`` window and
+    ``partitionBy`` (or the zarr ``groupBy``) need, so the executed
+    write plan has exactly one Exchange and no join — as a plain
+    (replacing) insert's has.  A one-partition parquet upsert runs 4
+    Spark jobs: 2 enumerate the batch's keys, 2 run the write."""
+    import numpy as np
+    import pandas as pd
+
+    from zcollection_spark.zarr3.collection import create_zarr_collection
+    schema = (zc.SchemaBuilder().add_dimension("time")
+              .add_variable("time", "datetime64[us]", ("time",))
+              .add_variable("v", "float32", ("time",)).build())
+    make = (zc.create_collection if layout == "parquet"
+            else create_zarr_collection)
+    coll = make(spark, str(tmp_path / "c"), schema=schema, axis="time",
+                partitioning=zc.Date(("time",), resolution="D"))
+    struct = schema.with_partition_axis("time").to_struct_type()
+
+    def batch(start, n):
+        return spark.createDataFrame(pd.DataFrame({
+            "time": pd.date_range(start, periods=n, freq="h"),
+            "v": np.arange(n, dtype=np.float32)}), schema=struct)
+
+    coll.insert(batch("2024-01-01", 72))
+    plan, jobs = run_write(
+        spark, lambda: coll.insert(batch("2024-01-02 05:00", 10),
+                                   merge=merge),
+        "WriteFiles" if layout == "parquet" else "FlatMapGroupsInPandas")
+    exchanges = count_exchanges(plan)
+    assert len(exchanges) == 1, plan
+    assert "Join" not in plan, plan
+    # and one sort: the merge window's order is the write's order
+    sorts = [ln for ln in plan.splitlines() if re.search(r"\bSort\b", ln)]
+    assert len(sorts) == 1, plan
+    if layout == "parquet" and merge == "upsert":
+        assert jobs == 4, jobs
+    assert coll.query().count() == (72 if merge else 72 - 24 + 10)
+
+
 def test_index_query_grid_semi_join(spark):
     plan = executed_plan(eq.q_index_lookup(spark, SF_DIR))
     assert "BroadcastNestedLoopJoin" not in plan

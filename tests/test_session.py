@@ -4,10 +4,12 @@ sessions ``get_spark`` builds (directory choice, privacy, fallback to
 TCP, removal at exit, and the Python surfaces that ride on it)."""
 
 import os
+import shutil
 import socket
 import stat
 import subprocess
 import sys
+import tempfile
 from pathlib import Path
 from types import SimpleNamespace
 
@@ -19,8 +21,8 @@ from zcollection_spark.session import (SESSION_CONF, STATIC_CONF, configure,
                                        unix_socket_conf)
 from zcollection_spark.zarr3.collection import create_zarr_collection
 
-#: sun_path (107 bytes) less "/" and Spark's ".{uuid4}.sock" (42 bytes)
-SOCKET_DIR_MAX = 64
+#: the longest spark.python.unix.domain.socket.dir Spark accepts
+SOCKET_DIR_MAX = 61
 LONG_DIR = "/" + "x" * 98
 
 
@@ -70,8 +72,8 @@ def test_socket_dir_is_private_and_short(spark):
 def test_socket_dir_parent_falls_back_to_tmp():
     assert session._socket_dir_parent("/tmp", LONG_DIR) == "/tmp"
     assert session._socket_dir_parent(LONG_DIR, "/tmp") == "/tmp"
-    # parent + "/" + "zcs-uds-" + 8 random characters: 47 bytes fit
-    fits, too_long = "/" + "p" * 46, "/" + "p" * 47
+    # parent + "/" + "zcs-uds-" + 8 random characters: 44 bytes fit
+    fits, too_long = "/" + "p" * 43, "/" + "p" * 44
     assert session._socket_dir_parent(too_long, fits) == fits
     assert session._socket_dir_parent(too_long) is None
 
@@ -103,26 +105,52 @@ def test_raw_zarr3_read_and_accumulator(spark, tmp_path, date_schema,
     assert acc.value == 45
 
 
+def _socket_dir_of_probe(tmpdir: Path) -> str:
+    """Start a ``get_spark`` session in a subprocess whose ``TMPDIR`` is
+    ``tmpdir``, run a Python task and a collect, and return the socket
+    directory it used (after the process has exited)."""
+    probe = ("import zcollection_spark as zc\n"
+             "from zcollection_spark.session import unix_socket_conf\n"
+             "spark = zc.get_spark('uds-fallback')\n"
+             "assert spark.range(3).mapInArrow(lambda it: it, "
+             "'id long').count() == 3\n"
+             "assert len(spark.range(3).collect()) == 3\n"
+             "print(unix_socket_conf()"
+             "['spark.python.unix.domain.socket.dir'])\n")
+    root = Path(__file__).resolve().parent.parent
+    env = {**os.environ, "TMPDIR": str(tmpdir), "SPARK_GRAFT_CPUS": "1",
+           "SPARK_DRIVER_MEMORY": "512m", "PYTHONPATH": str(root)}
+    done = subprocess.run([sys.executable, "-c", probe], cwd=root, env=env,
+                          capture_output=True, text=True, timeout=300,
+                          stdin=subprocess.DEVNULL)
+    assert done.returncode == 0, done.stderr[-2000:]
+    return done.stdout.strip().splitlines()[-1]
+
+
 def test_overlong_tempdir_falls_back_and_dir_removed_at_exit(tmp_path):
     """A session started with a temp dir too long for a socket path runs
     on a directory under /tmp, and that directory is gone once the
     process exits."""
     long_tmp = tmp_path / ("t" * max(1, 99 - len(str(tmp_path)) - 1))
     long_tmp.mkdir()
-    probe = ("import zcollection_spark as zc\n"
-             "from zcollection_spark.session import unix_socket_conf\n"
-             "spark = zc.get_spark('uds-fallback')\n"
-             "assert spark.range(3).mapInArrow(lambda it: it, "
-             "'id long').count() == 3\n"
-             "print(unix_socket_conf()"
-             "['spark.python.unix.domain.socket.dir'])\n")
-    root = Path(__file__).resolve().parent.parent
-    env = {**os.environ, "TMPDIR": str(long_tmp), "SPARK_GRAFT_CPUS": "1",
-           "SPARK_DRIVER_MEMORY": "512m", "PYTHONPATH": str(root)}
-    done = subprocess.run([sys.executable, "-c", probe], cwd=root, env=env,
-                          capture_output=True, text=True, timeout=300,
-                          stdin=subprocess.DEVNULL)
-    assert done.returncode == 0, done.stderr[-2000:]
-    sock_dir = done.stdout.strip().splitlines()[-1]
+    sock_dir = _socket_dir_of_probe(long_tmp)
     assert os.path.dirname(sock_dir) == "/tmp"
     assert not os.path.exists(sock_dir)
+
+
+@pytest.mark.parametrize("dir_len", [62, 64])
+def test_tempdir_past_spark_bound_falls_back(dir_len):
+    """A temp dir that leaves room in a ``sun_path`` but gives a socket
+    directory longer than Spark accepts (62 to 64 bytes) also falls
+    back to /tmp, and the session's Python task and collect run."""
+    base = Path(tempfile.mkdtemp(dir="/tmp"))
+    try:
+        pad = dir_len - len("/zcs-uds-XXXXXXXX") - len(str(base)) - 1
+        tmpdir = base / ("t" * pad)
+        tmpdir.mkdir()
+        assert len(os.fsencode(tmpdir)) + 17 == dir_len
+        sock_dir = _socket_dir_of_probe(tmpdir)
+        assert os.path.dirname(sock_dir) == "/tmp"
+        assert not os.path.exists(sock_dir)
+    finally:
+        shutil.rmtree(base, ignore_errors=True)

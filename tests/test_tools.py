@@ -242,3 +242,29 @@ def test_scale_gate_headline_parse_guards_empty_stdout():
     assert scale_gate._parse_headline('{"no_value_key": 1}') is None
     good = '{"metric": "t", "value": 1.5, "queries": {}, "sf": "1"}'
     assert scale_gate._parse_headline("warn line\n" + good) == good
+
+
+def test_entry_collections_root_removed_at_exit(tmp_path):
+    """The registry's collection root exists (with what was built in it)
+    while its process runs, and is gone once the process exits."""
+    import os
+    import subprocess
+
+    root = Path(__file__).resolve().parent.parent
+    probe = ("import os\n"
+             "from zcollection_spark import entry_queries as eq\n"
+             "d = eq._tmp()\n"
+             "assert eq._tmp() == d and os.path.isdir(d)\n"
+             "os.makedirs(os.path.join(d, 'coll', 'day=1'))\n"
+             "print(d, flush=True)\n")
+    done = subprocess.run([sys.executable, "-c", probe], cwd=root,
+                          env={**os.environ, "TMPDIR": str(tmp_path),
+                               "PYTHONPATH": str(root)},
+                          capture_output=True, text=True, timeout=120,
+                          stdin=subprocess.DEVNULL)
+    assert done.returncode == 0, done.stderr[-2000:]
+    made = done.stdout.strip().splitlines()[-1]
+    assert os.path.dirname(made) == str(tmp_path)
+    assert os.path.basename(made).startswith("zcs_entry_")
+    assert not os.path.exists(made)
+    assert list(tmp_path.iterdir()) == []

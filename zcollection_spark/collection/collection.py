@@ -81,7 +81,7 @@ from . import staging as staging_proto
 from .catalog import Catalog, diff_documents as catalog_diff
 from .stats import (collect_bloom_stats, footer_zone_stats,
                     staged_footers)
-from .merge import (MergeCallable, concat as merge_concat,
+from .merge import (MergeCallable, axis_order, concat as merge_concat,
                     replace as merge_replace, resolve_merge)
 
 CONFIG_NAME = "_zcollection.json"
@@ -914,7 +914,7 @@ class Collection:
         position, which Spark does not preserve — fall back to an arrival
         order (stable within a task, arbitrary across runs; documented)."""
         if self.axis in df.columns:
-            return F.col(self.axis).asc_nulls_last()
+            return axis_order(self.axis)
         return F.monotonically_increasing_id().asc()
 
     def _with_row_idx(self, df: DataFrame) -> DataFrame:
@@ -1022,6 +1022,9 @@ class Collection:
         # ONE shuffle: the _row_idx window exchanges on hash(keys) and
         # sorts by (keys, axis) within tasks — exactly the distribution
         # partitionBy needs, so no extra repartition/sortWithinPartitions.
+        # A merged frame (merge.upsert / time_series) arrives already
+        # partitioned and sorted that way by the merge's own window, so
+        # the merge and the write share that one exchange and sort.
         return self._staged_write(
             self._write_tree(self._with_row_idx(derived)),
             mode="swap", txn=txn)

@@ -4,10 +4,13 @@ Re-expresses ``/root/reference/zcollection/collection/merge.py``.  The
 reference invokes a ``MergeCallable`` once per colliding partition with both
 sides materialized in driver memory; here each strategy is ONE distributed
 DataFrame program over *all* colliding partitions at once, with the
-per-partition semantics recovered by grouping/joining on the partition-key
-columns.  That keeps the merge shuffle-parallel (no per-partition driver
-loop) and broadcast-friendly: the inserted batch is typically small relative
-to the collection, so its per-partition bounds / axis sets are broadcast.
+per-partition semantics recovered by grouping, joining or windowing on the
+partition-key columns.  The exact ``upsert`` and ``time_series`` are window
+filters over the union of both sides, each row tagged with its side: the
+window is partitioned by the partition keys and ordered by
+:func:`axis_order`, which is the distribution and order the write itself
+needs, so the merge and the write share one shuffle (no join, no
+broadcast, no second exchange).
 
 Signature: ``fn(existing, inserted, *, axis, keys) -> DataFrame`` where both
 frames carry the partition-key columns.  String aliases resolved by
@@ -21,6 +24,7 @@ from typing import Callable, Protocol
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.window import Window
 
 
 class MergeCallable(Protocol):
@@ -46,24 +50,51 @@ def concat(existing: DataFrame, inserted: DataFrame, *, axis: str,
     return _union(existing, inserted)
 
 
+def _tagged_union(existing: DataFrame, inserted: DataFrame
+                  ) -> tuple[DataFrame, str]:
+    """Both sides in one frame with a boolean column, true on the
+    inserted rows, and that column's name.  No variable of either side
+    starts with the name, so the merges' helper columns (the name plus
+    a suffix) never shadow a variable."""
+    tag = "__ins"
+    while any(c.startswith(tag)
+              for c in (*existing.columns, *inserted.columns)):
+        tag += "_"
+    both = _union(existing.withColumn(tag, F.lit(False)),
+                  inserted.withColumn(tag, F.lit(True)))
+    return both, tag
+
+
+def axis_order(axis: str) -> Column:
+    """Row order along the axis within a partition, nulls last: the
+    order of the write's ``_row_idx`` and of the merge windows, so the
+    merge's sort is the write's."""
+    return F.col(axis).asc_nulls_last()
+
+
 def time_series(existing: DataFrame, inserted: DataFrame, *, axis: str,
                 keys: tuple[str, ...]) -> DataFrame:
     """Drop existing rows with ``axis ∈ [inserted.min, inserted.max]``
     *per partition*, then concat (``merge.py:132-186``).
 
-    The window bounds are the per-partition min/max of the inserted slice —
-    computed with a tiny groupBy and broadcast into a left join, so existing
-    data streams through one scan with no driver round-trip.
+    The bounds are the min/max of the inserted rows' axis over each
+    partition of the tagged union (an unbounded window frame), so one
+    exchange on the partition keys carries both the merge and the
+    write.  An existing null-axis row is dropped whenever its partition
+    has bounds (the comparison is null), and kept when it has none.
     """
-    bounds = inserted.groupBy(*keys).agg(
-        F.min(axis).alias("__lo"), F.max(axis).alias("__hi"))
-    kept = (existing
-            .join(F.broadcast(bounds), on=list(keys), how="left")
-            .where(F.col("__lo").isNull()
-                   | (F.col(axis) < F.col("__lo"))
-                   | (F.col(axis) > F.col("__hi")))
-            .drop("__lo", "__hi"))
-    return _union(kept, inserted)
+    both, tag = _tagged_union(existing, inserted)
+    whole = (Window.partitionBy(*keys).orderBy(axis_order(axis))
+             .rowsBetween(Window.unboundedPreceding,
+                          Window.unboundedFollowing))
+    ins_axis = F.when(F.col(tag), F.col(axis))
+    lo, hi = f"{tag}_lo", f"{tag}_hi"
+    return (both
+            .select("*", F.min(ins_axis).over(whole).alias(lo),
+                    F.max(ins_axis).over(whole).alias(hi))
+            .where(F.col(tag) | F.col(lo).isNull()
+                   | (F.col(axis) < F.col(lo)) | (F.col(axis) > F.col(hi)))
+            .drop(tag, lo, hi))
 
 
 def _axis_distance(left: Column, right: Column, dtype: T.DataType) -> Column:
@@ -79,10 +110,14 @@ def upsert(existing: DataFrame, inserted: DataFrame, *, axis: str,
     """Keep existing rows whose axis value has no match in the inserted
     slice of the same partition; then concat (``merge.py:189-279``).
 
-    Exact mode: a left-anti join on ``keys + axis`` (equal axis ⇒ same
-    partition, so this is exactly the reference's per-partition
-    ``numpy.isin``; no broadcast hint — the batch scales with the
-    insert, AQE picks the side).  Tolerance mode: an existing row is
+    Exact mode: a window over the tagged union of both sides,
+    partitioned by the keys and ordered by the axis.  Its RANGE frame
+    ``CURRENT ROW .. CURRENT ROW`` spans exactly the rows of equal axis
+    value, so ``max(inserted)`` over it says whether the inserted slice
+    holds that value — the reference's per-partition ``numpy.isin``.
+    A null axis value never matches (as in an equi-join).  The window's
+    exchange and sort are the ones the write needs, so the upsert
+    costs no shuffle of its own.  Tolerance mode: an existing row is
     dropped when ANY inserted axis value in the same partition lies
     within ``tolerance`` — equivalent to the reference's
     nearest-within-tolerance ``searchsorted`` check (``merge.py:262-272``:
@@ -94,38 +129,44 @@ def upsert(existing: DataFrame, inserted: DataFrame, *, axis: str,
     plan stays a shuffled anti-join at any batch size (no forced
     broadcast, no nested loop).
     """
+    if tolerance is None or float(tolerance) == 0.0:
+        # tolerance 0 == exact equality (searchsorted nearest within 0)
+        both, tag = _tagged_union(existing, inserted)
+        peers = (Window.partitionBy(*keys).orderBy(axis_order(axis))
+                 .rangeBetween(Window.currentRow, Window.currentRow))
+        hit = f"{tag}_hit"
+        return (both
+                .withColumn(hit, F.max(F.col(tag)).over(peers))
+                .where(F.col(tag) | F.col(axis).isNull() | ~F.col(hit))
+                .drop(tag, hit))
     # the axis may itself BE a partition key (Sequence partitioning on
     # the axis column): dedupe so the join key list stays unambiguous
     on_cols = list(dict.fromkeys([*keys, axis]))
     ins_axis = inserted.select(*on_cols).distinct()
-    if tolerance is None or float(tolerance) == 0.0:
-        # tolerance 0 == exact equality (searchsorted nearest within 0)
-        kept = existing.join(ins_axis, on=on_cols, how="left_anti")
-    else:
-        dtype = existing.schema[axis].dataType
-        tol = float(tolerance)
+    dtype = existing.schema[axis].dataType
+    tol = float(tolerance)
 
-        def numeric(col: Column) -> Column:
-            return col.cast("double") if isinstance(
-                dtype, (T.TimestampType, T.TimestampNTZType)) else col
+    def numeric(col: Column) -> Column:
+        return col.cast("double") if isinstance(
+            dtype, (T.TimestampType, T.TimestampNTZType)) else col
 
-        e_bucket = F.floor(numeric(existing[axis]) / F.lit(tol))
-        ins_bucket = F.floor(numeric(F.col("__ins_axis")) / F.lit(tol))
-        # keep the key columns intact when the axis is one of them
-        aliased = (ins_axis.withColumn("__ins_axis", F.col(axis))
-                   if axis in keys
-                   else ins_axis.withColumnRenamed(axis, "__ins_axis"))
-        fanned = (aliased
-                  .withColumn("__bucket", F.explode(F.transform(
-                      F.array(F.lit(-1), F.lit(0), F.lit(1)),
-                      lambda d: d + ins_bucket))))
-        cond = e_bucket == fanned["__bucket"]
-        for key in keys:
-            cond = cond & (existing[key] == fanned[key])
-        cond = cond & (_axis_distance(existing[axis],
-                                      fanned["__ins_axis"],
-                                      dtype) <= F.lit(tol))
-        kept = existing.join(fanned, on=cond, how="left_anti")
+    e_bucket = F.floor(numeric(existing[axis]) / F.lit(tol))
+    ins_bucket = F.floor(numeric(F.col("__ins_axis")) / F.lit(tol))
+    # keep the key columns intact when the axis is one of them
+    aliased = (ins_axis.withColumn("__ins_axis", F.col(axis))
+               if axis in keys
+               else ins_axis.withColumnRenamed(axis, "__ins_axis"))
+    fanned = (aliased
+              .withColumn("__bucket", F.explode(F.transform(
+                  F.array(F.lit(-1), F.lit(0), F.lit(1)),
+                  lambda d: d + ins_bucket))))
+    cond = e_bucket == fanned["__bucket"]
+    for key in keys:
+        cond = cond & (existing[key] == fanned[key])
+    cond = cond & (_axis_distance(existing[axis],
+                                  fanned["__ins_axis"],
+                                  dtype) <= F.lit(tol))
+    kept = existing.join(fanned, on=cond, how="left_anti")
     return _union(kept, inserted)
 
 

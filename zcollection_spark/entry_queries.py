@@ -18,7 +18,9 @@ contents, so caching is sound); queries that MUTATE collection state
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
 import tempfile
 from typing import Callable
 
@@ -98,8 +100,12 @@ _TMPROOT: list[str] = []
 
 
 def _tmp() -> str:
+    """This process's root for the collections the registry builds:
+    made on first use, removed at exit."""
     if not _TMPROOT:
-        _TMPROOT.append(tempfile.mkdtemp(prefix="zcs_entry_"))
+        root = tempfile.mkdtemp(prefix="zcs_entry_")
+        atexit.register(shutil.rmtree, root, ignore_errors=True)
+        _TMPROOT.append(root)
     return _TMPROOT[0]
 
 

@@ -36,11 +36,12 @@ settings below):
   no CPU and Unix sockets do not have it.  The sockets live in a private
   directory this module makes once per process and removes at exit:
 
-  - *length*: a ``sun_path`` holds 107 bytes and Spark names each socket
-    ``.{uuid4}.sock`` (42 bytes), so the directory path may take 64
-    bytes.  Spark's default, ``java.io.tmpdir``, can be longer (the
-    benchmark puts it under the checkout), and then the accumulator
-    server's bind fails and no session starts;
+  - *length*: Spark rejects a directory path longer than 61 bytes
+    (``INVALID_CONF_VALUE.REQUIREMENT``, at the session's first Python
+    job), which leaves room in a 107-byte ``sun_path`` for the
+    ``/.{uuid4}.sock`` it appends.  Spark's default, ``java.io.tmpdir``,
+    can be longer (the benchmark puts it under the checkout), and then
+    the accumulator server's bind fails and no session starts;
   - *privacy*: in this mode Spark drops the TCP auth secret, so file
     permissions are the only guard: the directory is a ``mkdtemp``
     (mode 0700) under ``tempfile.gettempdir()``, or under ``/tmp`` when
@@ -102,9 +103,11 @@ STATIC_CONF: dict[str, str] = {
     "spark.python.daemon.module": "zcollection_spark._pydaemon",
 }
 
-#: The longest socket directory path: a ``sun_path`` holds 107 bytes, and
-#: Spark joins the directory and ``.{uuid4}.sock`` with a ``/``.
-_SOCKET_DIR_MAX = 107 - len("/.00000000-0000-0000-0000-000000000000.sock")
+#: The longest socket directory path Spark accepts: its check on
+#: ``spark.python.unix.domain.socket.dir`` ("The directory path should be
+#: lower than 61", ``org.apache.spark.internal.config.Python``) fails the
+#: first Python job of a session given a longer one.
+_SOCKET_DIR_MAX = 61
 _SOCKET_DIR_PREFIX = "zcs-uds-"
 #: ``mkdtemp`` appends 8 random characters to the prefix.
 _SOCKET_DIR_NAME_LEN = len(_SOCKET_DIR_PREFIX) + 8

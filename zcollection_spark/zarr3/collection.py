@@ -330,8 +330,10 @@ class ZarrCollection(Collection):
                                      "stats": [json.dumps(entry)]})
 
             try:
+                # the groupBy's exchange on the keys is the write's one
+                # shuffle; a merge's window already partitioned by the
+                # keys, and the groupBy reuses it
                 rows = (derived.select(*part_cols)
-                        .repartition(*[F.col(k) for k in keys])
                         .groupBy(*keys)
                         .applyInPandas(write_partition,
                                        "relpath string, stats string")
