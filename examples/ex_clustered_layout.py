@@ -9,7 +9,9 @@ skips most of each partition under a selective predicate.
 Run: ``python examples/ex_clustered_layout.py``
 """
 
+import atexit
 import glob
+import shutil
 import sys
 import tempfile
 from pathlib import Path
@@ -51,6 +53,7 @@ def main() -> None:
     spark = zc.get_spark("ex-clustered")
     spark.sparkContext.setLogLevel("ERROR")
     tmp = tempfile.mkdtemp()
+    atexit.register(shutil.rmtree, tmp, ignore_errors=True)
 
     rng = np.random.default_rng(9)
     n = 100_000

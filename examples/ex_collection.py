@@ -5,6 +5,8 @@ The Spark-native analog of the reference's README quick-start
 Run: ``python examples/ex_collection.py``
 """
 
+import atexit
+import shutil
 import sys
 import tempfile
 from pathlib import Path
@@ -21,6 +23,7 @@ def main() -> None:
     spark = zc.get_spark("ex-collection")
     spark.sparkContext.setLogLevel("ERROR")
     root = tempfile.mkdtemp(prefix="zcs_ex_")
+    atexit.register(shutil.rmtree, root, ignore_errors=True)
 
     # 1. declare a schema bound to an unbounded time axis
     schema = (zc.SchemaBuilder()

@@ -17,6 +17,8 @@ The shape every 100 TB training-data pipeline converges to:
 Run: ``python examples/ex_incremental_pipeline.py``
 """
 
+import atexit
+import shutil
 import sys
 import tempfile
 from pathlib import Path
@@ -33,7 +35,9 @@ from zcollection_spark.schema import infer_schema
 def main() -> None:
     spark = zc.get_spark("ex-incremental")
     spark.sparkContext.setLogLevel("ERROR")
-    root = tempfile.mkdtemp(prefix="zcs_ex_") + "/events"
+    tmp = tempfile.mkdtemp(prefix="zcs_ex_")
+    atexit.register(shutil.rmtree, tmp, ignore_errors=True)
+    root = tmp + "/events"
     sf_dir = "/root/testdata/sf0.001"
 
     events = load_table(spark, sf_dir, "events") \

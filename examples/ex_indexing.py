@@ -4,6 +4,8 @@ Mirrors the reference's ``examples/ex_indexing.py`` (cycle/pass layout).
 Run: ``python examples/ex_indexing.py``
 """
 
+import atexit
+import shutil
 import sys
 import tempfile
 from pathlib import Path
@@ -21,6 +23,7 @@ def main() -> None:
     spark = zc.get_spark("ex-indexing")
     spark.sparkContext.setLogLevel("ERROR")
     root = tempfile.mkdtemp(prefix="zcs_ex_")
+    atexit.register(shutil.rmtree, root, ignore_errors=True)
 
     pdf = pd.DataFrame({
         "time": np.arange(1000, dtype=np.int64),

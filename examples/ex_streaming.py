@@ -4,6 +4,8 @@ ingest into a collection with upsert semantics, then stream it back out.
 Run: ``python examples/ex_streaming.py``
 """
 
+import atexit
+import shutil
 import sys
 import tempfile
 from pathlib import Path
@@ -25,6 +27,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     sf = "/root/testdata/sf0.001"
     tmp = tempfile.mkdtemp()
+    atexit.register(shutil.rmtree, tmp, ignore_errors=True)
 
     # 1. replayed-ingest dedup: every row arrives twice, state collapses
     print("deduped rows:", deduped_events(spark, sf).count())

@@ -20,6 +20,8 @@ this engine makes the contract explicit:
 Run: ``python examples/ex_time_travel.py``
 """
 
+import atexit
+import shutil
 import sys
 import tempfile
 from pathlib import Path
@@ -36,7 +38,9 @@ from zcollection_spark.schema import infer_schema
 def main() -> None:
     spark = zc.get_spark("ex-time-travel")
     spark.sparkContext.setLogLevel("ERROR")
-    root = tempfile.mkdtemp(prefix="zcs_ex_") + "/corpus"
+    tmp = tempfile.mkdtemp(prefix="zcs_ex_")
+    atexit.register(shutil.rmtree, tmp, ignore_errors=True)
+    root = tmp + "/corpus"
     sf_dir = "/root/testdata/sf0.001"
 
     events = load_table(spark, sf_dir, "events") \

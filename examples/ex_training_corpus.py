@@ -17,6 +17,8 @@ The document-side shape of a 100 TB pretraining pipeline:
 Run: ``python examples/ex_training_corpus.py``
 """
 
+import atexit
+import shutil
 import sys
 import tempfile
 from pathlib import Path
@@ -34,7 +36,9 @@ from zcollection_spark.schema import infer_schema
 def main() -> None:
     spark = zc.get_spark("ex-training-corpus")
     spark.sparkContext.setLogLevel("ERROR")
-    root = tempfile.mkdtemp(prefix="zcs_ex_") + "/docs"
+    tmp = tempfile.mkdtemp(prefix="zcs_ex_")
+    atexit.register(shutil.rmtree, tmp, ignore_errors=True)
+    root = tmp + "/docs"
     docs = load_table(spark, "/root/testdata/sf0.001", "documents") \
         .select("doc_id", "text", "lang", "source")
 

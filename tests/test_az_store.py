@@ -155,10 +155,9 @@ def test_az_blobs_midrange_truncation_raises(az_root):
     must raise the truncation StoreError, not silently return fewer
     than nbytes."""
     from zcollection_spark.errors import StoreError
-    from zcollection_spark.zarr3.blobs import AzureBlobs
     fs = AzureBlobFS()
     fs.write_bytes(f"{az_root}/shard.bin", b"0123456789")
-    blobs = AzureBlobs()
+    blobs = AzureBlobFS()
     assert blobs.read_at(f"{az_root}/shard.bin", 2, 4) == b"2345"
     with pytest.raises(StoreError, match="truncated/corrupt"):
         blobs.read_at(f"{az_root}/shard.bin", 5, 8)   # 206, clamped
@@ -374,7 +373,7 @@ def test_az_publish_leaves_no_partial_state_on_crash(spark, seq_schema,
 
 # ---------------------------------------------------------------------------
 # zarr v3 layout on az:// — executors write chunk/shard objects directly
-# through zarr3.blobs.AzureBlobs; shard partial reads are SIGNED HTTP
+# through fs.AzureBlobFS; shard partial reads are SIGNED HTTP
 # Range requests (the Range header sits in the SharedKey string-to-sign)
 # ---------------------------------------------------------------------------
 
@@ -600,8 +599,7 @@ def test_zarr_collection_on_az_under_aad(spark, az_server, az_root,
     or the MSI endpoint from which each process mints its own — and
     build the same provider-backed client ``fs_for`` does."""
     from tests.azurite_mini import issue_token
-    from zcollection_spark.zarr3.blobs import (blobs_for,
-                                               capture_blob_conf)
+    from zcollection_spark.fs import capture_blob_conf, task_fs
     from zcollection_spark.zarr3.collection import create_zarr_collection
     srv, endpoint = az_server
     monkeypatch.delenv("AZURE_STORAGE_KEY", raising=False)
@@ -614,7 +612,7 @@ def test_zarr_collection_on_az_under_aad(spark, az_server, az_root,
                            endpoint.rsplit("/", 1)[0]
                            + "/metadata/identity/oauth2/token")
     conf = capture_blob_conf()
-    client = blobs_for(az_root, conf)._fs
+    client = task_fs(az_root, conf)
     assert (client._token_provider is not None) == (mode == "msi")
 
     schema = (zc.SchemaBuilder().add_dimension("num")

@@ -333,9 +333,8 @@ def test_http_transient_503_is_retried(tmp_path):
             fs.read_bytes(f"{url}/missing.txt")
         assert fails["hits_404"] == 1  # absent is NOT retried
 
-        from zcollection_spark.zarr3.blobs import HttpBlobs
         fails["n"] = 2
-        assert HttpBlobs().try_read_bytes(f"{url}/f.txt") == b"payload"
+        assert HttpFS().read_bytes(f"{url}/f.txt") == b"payload"
         assert fails["n"] == 0
     finally:
         srv.shutdown()
@@ -384,8 +383,7 @@ def test_http_range_past_eof_is_corruption_not_absent(tmp_path):
     threading.Thread(target=srv.serve_forever, daemon=True).start()
     try:
         url = f"http://127.0.0.1:{srv.server_address[1]}"
-        from zcollection_spark.zarr3.blobs import HttpBlobs
-        blobs = HttpBlobs()
+        blobs = HttpFS()
         with pytest.raises(StoreError, match="truncated/corrupt"):
             blobs.read_at(f"{url}/shard.bin", 100, 8)
         # r8 ADVICE: a range STARTING in-bounds but ending past EOF

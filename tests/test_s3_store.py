@@ -552,6 +552,46 @@ def test_gs_scheme_routes_through_s3_surface(s3_endpoint, monkeypatch):
     assert fs_for(f"s3://{bucket}/store") is not fs
 
 
+def test_zarr_on_hmac_gs_writes_chunks_beside_its_catalog(
+        spark, s3_endpoint, monkeypatch):
+    """With GCS HMAC keys ``fs_for`` sends a ``gs://`` catalog through
+    the S3-interop client; the zarr tasks resolve the same way (the
+    keys ride the shipped env snapshot), so the chunks land in the same
+    interop bucket and read back."""
+    import uuid
+
+    import boto3
+
+    from zcollection_spark.zarr3.collection import create_zarr_collection
+
+    bucket = f"zc-gs-{uuid.uuid4().hex[:12]}"
+    client = boto3.client("s3", endpoint_url=s3_endpoint,
+                          region_name="us-east-1")
+    client.create_bucket(Bucket=bucket)
+    for var in ("GCS_BEARER_TOKEN", "GCS_KEYFILE", "GCE_METADATA_ENDPOINT"):
+        monkeypatch.delenv(var, raising=False)
+    monkeypatch.setenv("GCS_ENDPOINT_URL", s3_endpoint)
+    monkeypatch.setenv("GCS_ACCESS_KEY_ID", "test")
+    monkeypatch.setenv("GCS_SECRET_ACCESS_KEY", "test")
+    schema = (zc.SchemaBuilder().add_dimension("num")
+              .add_variable("num", "int64", ("num",))
+              .add_variable("v", "float64", ("num",))
+              .build("num"))
+    coll = create_zarr_collection(spark, f"gs://{bucket}/zc", schema=schema,
+                                  axis="num",
+                                  partitioning=zc.Sequence(("num",)))
+    assert isinstance(coll._fs, S3FS)
+    pdf = pd.DataFrame({"num": np.array([0, 0, 1], dtype=np.int64),
+                        "v": [1.5, 2.5, 3.5]})
+    coll.insert(spark.createDataFrame(pdf, schema=schema.to_struct_type()))
+    assert sorted(r.v for r in coll.query().collect()) == [1.5, 2.5, 3.5]
+    keys = {o["Key"] for o in client.list_objects_v2(
+        Bucket=bucket)["Contents"]}
+    assert "zc/_catalog/state.json" in keys
+    assert "zc/num=0/v/zarr.json" in keys
+    assert any(k.startswith("zc/num=1/v/c/") for k in keys)
+
+
 def test_s3_pinned_retention_is_server_side_copy(spark, seq_schema,
                                                  s3_root):
     """Pinned-generation retention on s3://: the copy-on-republish

@@ -71,6 +71,7 @@ _COMMON_OPS = {
     "partitions": {"list": 1},
     "exists": {"head": 6, "list": 3},
     "read": {"get": 2},
+    "read_at": {"get": 4},
     "cas": {"get": 3, "put": 4},
     "rename_prefix": {"copy": 1, "delete": 1, "head": 3, "list": 4},
     "delete": {"delete": 2, "head": 3, "list": 3},
@@ -137,6 +138,18 @@ def _run_script(fs, root, tmp_path) -> dict:
     with pytest.raises(FileNotFoundError):
         fs.read_bytes(f"{p}/ghost")
     step("read")
+
+    # a zarr inner-chunk read: one ranged GET each; an object that ends
+    # inside the range (a short 206, or a 416 past its end) is
+    # truncated, an absent one is missing
+    assert fs.read_at(f"{p}/top.txt", 1, 3) == b"op."
+    with pytest.raises(StoreError, match="top.txt is truncated/corrupt"):
+        fs.read_at(f"{p}/top.txt", 5, 8)
+    with pytest.raises(StoreError, match="top.txt is truncated/corrupt"):
+        fs.read_at(f"{p}/top.txt", 100, 8)
+    with pytest.raises(FileNotFoundError):
+        fs.read_at(f"{p}/ghost", 0, 4)
+    step("read_at")
 
     tok = fs.write_if(f"{root}/state.json", "v1", None)
     text, cur = fs.read_versioned(f"{root}/state.json")
@@ -329,12 +342,12 @@ def _scripted_urlopen(script, calls):
     ("az", 502), ("gcs", 504), ("http", 429), ("http_blobs", 429)])
 def test_transient_statuses_are_retried_by_every_client(backend, code,
                                                         monkeypatch):
-    """429/500/502/503/504 are transient for all four urllib clients
-    (AzureBlobFS, GcsFS, HttpFS, HttpBlobs): each gets a retry, and the
-    retry's answer is the result."""
+    """429/500/502/503/504 are transient for every urllib read
+    (AzureBlobFS, GcsFS, HttpFS, and HttpFS's ranged reads that zarr
+    shard reads use): each gets a retry, and the retry's answer is the
+    result."""
     import time
 
-    from zcollection_spark.zarr3.blobs import HttpBlobs
     calls = []
     monkeypatch.setattr(urllib.request, "urlopen",
                         _scripted_urlopen([code, 200], calls))
@@ -350,7 +363,7 @@ def test_transient_statuses_are_retried_by_every_client(backend, code,
     elif backend == "http":
         assert HttpFS().read_bytes(url) == b"ok"
     else:
-        assert HttpBlobs().try_read_bytes(url) == b"ok"
+        assert HttpFS().read_at(url, 0, 2) == b"ok"
     assert calls == [code, 200]
 
 
@@ -373,8 +386,8 @@ def test_zarr_blobs_route_gs_keyfile_and_never_fall_back_local(
     shipped blob conf and routes to the GCS blob backend.  A gs:// or
     az:// path with no credentials raises instead of writing under a
     local ``./gs:/bucket/...`` directory."""
-    from zcollection_spark.fs import gcs_keyfile_token_provider
-    from zcollection_spark.zarr3 import blobs
+    from zcollection_spark.fs import (LocalFS, capture_blob_conf,
+                                      gcs_keyfile_token_provider, task_fs)
     srv, endpoint = gcs_emulator
     for var in _CRED_ENV:
         monkeypatch.delenv(var, raising=False)
@@ -385,15 +398,16 @@ def test_zarr_blobs_route_gs_keyfile_and_never_fall_back_local(
     monkeypatch.setenv("GCS_JSON_ENDPOINT", endpoint)
     monkeypatch.chdir(tmp_path)
 
-    conf = blobs.capture_blob_conf()
-    assert conf["gs_keyfile"] == str(keyfile)
+    conf = capture_blob_conf()
+    assert conf["GCS_KEYFILE"] == str(keyfile)
     root = f"gs://zc-{uuid.uuid4().hex[:12]}/coll"
-    store = blobs.blobs_for(f"{root}/num=1", conf)
-    assert not isinstance(store, blobs.LocalBlobs)
+    store = task_fs(f"{root}/num=1", conf)
+    assert not isinstance(store, LocalFS)
     store.write_bytes(f"{root}/num=1/c.0", b"0123456789")
     assert store.read_at(f"{root}/num=1/c.0", 2, 4) == b"2345"
     assert store.read_tail(f"{root}/num=1/c.0", 3) == b"789"
-    assert store.try_read_bytes(f"{root}/num=1/missing") is None
+    with pytest.raises(FileNotFoundError):
+        store.read_bytes(f"{root}/num=1/missing")
     fs = GcsFS(endpoint,
                token_provider=gcs_keyfile_token_provider(str(keyfile)))
     assert fs.read_bytes(f"{root}/num=1/c.0") == b"0123456789"
@@ -402,10 +416,92 @@ def test_zarr_blobs_route_gs_keyfile_and_never_fall_back_local(
     monkeypatch.delenv("GCS_KEYFILE")
     for path in ("gs://bkt/coll/num=1", "az://c/coll/num=1"):
         with pytest.raises(StoreError, match="credentials"):
-            blobs.blobs_for(path, None)
+            task_fs(path, None)
 
 
 def test_http_blobs_stay_read_only():
-    from zcollection_spark.zarr3.blobs import HttpBlobs
     with pytest.raises(ReadOnlyError):
-        HttpBlobs().write_bytes("http://example.invalid/x", b"")
+        HttpFS().write_bytes("http://example.invalid/x", b"")
+
+
+def test_task_clients_are_cached_per_credential():
+    """Two env snapshots with one S3 endpoint and different access keys
+    resolve to two clients; the same snapshot resolves to the same
+    client."""
+    pytest.importorskip("boto3")
+    from zcollection_spark.fs import S3FS, task_fs
+    base = {"AWS_ENDPOINT_URL": "http://127.0.0.1:9",
+            "AWS_SECRET_ACCESS_KEY": "secret"}
+    one = task_fs("s3://bkt/coll", {**base, "AWS_ACCESS_KEY_ID": "one"})
+    two = task_fs("s3://bkt/coll", {**base, "AWS_ACCESS_KEY_ID": "two"})
+    assert isinstance(one, S3FS) and isinstance(two, S3FS)
+    assert one is not two
+    assert task_fs("s3://bkt/x", {**base, "AWS_ACCESS_KEY_ID": "one"}) \
+        is one
+
+
+def test_blob_conf_carries_every_env_var_the_resolver_reads(monkeypatch):
+    """Tasks resolve with the driver's snapshot laid over their own
+    env, so the snapshot must hold every variable the resolver reads —
+    else a task could route a path differently from the driver."""
+    from zcollection_spark import fs as fsmod
+    captured = set(fsmod._STORE_ENV + fsmod._AWS_ENV)
+
+    class Recording(dict):
+        def get(self, key, default=None):
+            read.add(key)
+            return super().get(key, default)
+
+    read: set = set()
+    for path, env in [
+            ("s3://b/k", {"AWS_ENDPOINT_URL": "http://127.0.0.1:9",
+                          "AWS_ACCESS_KEY_ID": "a",
+                          "AWS_SECRET_ACCESS_KEY": "s"}),
+            ("gs://b/k", {"GCS_ACCESS_KEY_ID": "a",
+                          "GCS_SECRET_ACCESS_KEY": "s"}),
+            ("gs://b/k", {"GCS_BEARER_TOKEN": "t"}),
+            ("gs://b/k", {}),
+            ("az://c/k", {"AZURE_STORAGE_ACCOUNT": "acct",
+                          "AZURE_STORAGE_KEY": azurite_mini.KEY_B64}),
+            ("az://c/k", {})]:
+        fsmod.resolve_fs(path, Recording(env))
+    assert read <= captured, read - captured
+    for name in captured:
+        monkeypatch.setenv(name, "x")
+    assert set(fsmod.capture_blob_conf()) == captured
+    monkeypatch.delenv("AWS_ENDPOINT_URL")
+    # the AWS group rides only with a custom endpoint
+    assert set(fsmod.capture_blob_conf()) == set(fsmod._STORE_ENV)
+
+
+def test_auto_named_scratch_roots_are_removed_at_exit(tmp_path):
+    """An object-store or HTTP client's own scratch root is removed when
+    the process exits; a ``scratch_dir`` the caller gave is kept."""
+    import subprocess
+    import sys
+    from pathlib import Path
+    tmp = tmp_path / "tmp"
+    tmp.mkdir()
+    given = tmp_path / "given"
+    code = (
+        "import os\n"
+        "from zcollection_spark.fs import GcsFS, HttpFS\n"
+        "print(GcsFS('http://127.0.0.1:9', bearer_token='t')"
+        ".new_scratch_dir())\n"
+        "http = HttpFS()\n"
+        "os.makedirs(http._scratch_root)\n"
+        "print(http._scratch_root)\n"
+        "print(GcsFS('http://127.0.0.1:9', bearer_token='t', "
+        f"scratch_dir={str(given)!r}).new_scratch_dir())\n")
+    out = subprocess.run(
+        [sys.executable, "-c", code], cwd=Path(__file__).parent.parent,
+        env={**os.environ, "TMPDIR": str(tmp)}, capture_output=True,
+        text=True, check=True).stdout.split()
+    auto, http_root, kept = out
+    auto_root = os.path.dirname(os.path.dirname(auto))
+    assert os.path.basename(auto_root).startswith("zcgs-")
+    assert os.path.basename(http_root).startswith("zchttp-")
+    assert os.path.dirname(auto_root) == os.path.dirname(http_root) \
+        == str(tmp)
+    assert os.listdir(tmp) == []
+    assert os.path.isdir(kept) and kept.startswith(str(given))

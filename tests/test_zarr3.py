@@ -530,6 +530,48 @@ def test_corrupt_shard_fails_loudly(tmp_path):
         read_array(tmp_path / "c2")
 
 
+def test_truncated_shard_fails_the_partial_read_naming_it(tmp_path):
+    """The ranged-read path (``read_array_slice``) checks a shard as
+    ``read_array`` does: a shard cut below its index, and an index that
+    points past the end of its shard, both raise naming the shard."""
+    from zcollection_spark.errors import StoreError
+    from zcollection_spark.zarr3.core import _crc32c, read_array_slice
+    data = np.arange(400, dtype=np.int64)
+    write_array(tmp_path / "s", data, chunk_shape=(50,), shard_shape=(200,))
+    shard = tmp_path / "s" / "c" / "0"
+    raw = shard.read_bytes()
+    shard.write_bytes(raw[:40])          # shorter than its 68-byte index
+    with pytest.raises(ValueError, match=f"corrupt shard {shard}: shorter"):
+        read_array_slice(tmp_path / "s", 0, 10)
+    # an intact, checksummed index whose last chunk runs past the end
+    index = np.frombuffer(raw[-68:-4], dtype="<u8").reshape(4, 2).copy()
+    index[3] = (len(raw) - 8, 1000)
+    forged = index.tobytes()
+    shard.write_bytes(raw[:-68] + forged
+                      + _crc32c(forged).to_bytes(4, "little"))
+    with pytest.raises(StoreError, match=f"{shard} is truncated"):
+        read_array_slice(tmp_path / "s", 150, 200)
+    np.testing.assert_array_equal(read_array_slice(tmp_path / "s", 0, 10),
+                                  data[:10])
+
+
+def test_zarr_collection_on_memory_store_fails_at_create(spark):
+    """``memory://`` lives in the driver's process; zarr partitions are
+    written by Spark tasks in other processes, so the create refuses
+    before writing anything."""
+    from zcollection_spark.errors import StoreError
+    from zcollection_spark.fs import fs_for
+    schema = (zc.SchemaBuilder().add_dimension("num")
+              .add_variable("num", "int64", ("num",))
+              .build("num"))
+    with pytest.raises(StoreError, match="memory://"):
+        create_zarr_collection(spark, "memory://zarr-refused/c",
+                               schema=schema, axis="num",
+                               partitioning=zc.Sequence(("num",)))
+    assert not fs_for("memory://zarr-refused").exists(
+        "memory://zarr-refused/c")
+
+
 # -- nulls in variables zarr cannot store as null ---------------------------
 
 _NULLABLE = [("int64", "long", -1, 7),

@@ -1,8 +1,9 @@
 """Zarr v3 layout on a REAL S3 endpoint — both engine layouts now run
 against genuine object-store semantics.
 
-Executors write zarr chunk/shard objects directly to S3 through
-``zarr3.blobs`` (no scratch bridge needed — all zarr I/O is Python),
+Executors write zarr chunk/shard objects directly to S3 through the
+same ``fs.S3FS`` client the driver uses (``fs.task_fs``; no scratch
+bridge needed — all zarr I/O is Python),
 the staged manifest publish moves them object-by-object, and the
 per-partition read tasks pull chunks back with plain GETs plus ranged
 GETs for shard partial reads.  Reference analog: zarr collections over

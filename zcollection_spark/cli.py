@@ -233,7 +233,7 @@ def cmd_manifest(args: argparse.Namespace) -> int:
     coll = _open(args.path, mode="rw")
     if coll.data_format == "zarr3":
         # zarr3: chunk names derive from zarr metadata — HTTP serving
-        # needs no manifest (fs.HttpBlobs reads are pure GETs)
+        # needs no manifest (fs.HttpFS chunk reads are pure GETs)
         print("zarr3 collections need no manifest; serve the directory "
               "as-is (chunk names come from zarr metadata)")
         return 0

@@ -17,12 +17,18 @@ implementations:
   per-backend primitives: :class:`S3FS` (boto3), :class:`AzureBlobFS` and
   :class:`GcsFS` (REST over the retrying :func:`http_request` transport).
 
+The same clients serve the zarr layout's chunk I/O inside Spark tasks
+(``read_at``/``read_tail`` are the shard partial reads): one credential
+resolver, :func:`resolve_fs`, picks the client for the driver
+(:func:`fs_for`) and for the tasks (:func:`task_fs`).
+
 Atomicity note: on object stores a single PUT is atomic, which is all the
 catalog swap protocol requires (see ``catalog.py``).
 """
 
 from __future__ import annotations
 
+import atexit
 import hashlib
 import json
 import os
@@ -30,6 +36,7 @@ import shutil
 import tempfile
 import threading
 import uuid
+from collections import ChainMap
 from pathlib import Path
 
 from pyspark.sql import SparkSession
@@ -47,6 +54,53 @@ _NON_ATOMIC_RENAME_SCHEMES = frozenset(
 
 def scheme_of(path: str) -> str:
     return path.split("://", 1)[0] if "://" in path else "file"
+
+
+def _auto_scratch(scratch_dir: "str | None", tag: str) -> str:
+    """``scratch_dir``, or a fresh ``{tmp}/{tag}-xxxxxxxx`` that is
+    removed at interpreter exit.  A directory the caller gave is never
+    removed."""
+    if scratch_dir:
+        return scratch_dir
+    root = os.path.join(tempfile.gettempdir(),
+                        f"{tag}-{uuid.uuid4().hex[:8]}")
+    atexit.register(shutil.rmtree, root, ignore_errors=True)
+    return root
+
+
+def _range_header(offset: "int | None", nbytes: int) -> str:
+    """``Range`` of bytes ``[offset, offset + nbytes)``, or of the last
+    ``nbytes`` when ``offset`` is None."""
+    if offset is None:
+        return f"bytes=-{nbytes}"
+    return f"bytes={offset}-{offset + nbytes - 1}"
+
+
+def _range_body(status: int, body: bytes, offset: "int | None",
+                nbytes: int) -> bytes:
+    """The bytes a ranged GET asked for: a 206 body as sent; a 200 from
+    a server that ignores ``Range`` (the whole object) sliced here; a
+    416 (nothing in range) empty."""
+    if status == 416:
+        return b""
+    if status == 206:
+        return body
+    return body[-nbytes:] if offset is None else body[offset:offset + nbytes]
+
+
+def _checked_range(path: str, offset: int, nbytes: int,
+                   got: "bytes | None") -> bytes:
+    """``read_at``'s one rule on every store: an absent object is
+    :class:`FileNotFoundError`; fewer than ``nbytes`` bytes (a 416 or a
+    short 206 on object stores, a short read on disk) means the object
+    exists but ends inside the range, which is truncation."""
+    if got is None:
+        raise FileNotFoundError(path)
+    if len(got) < nbytes:
+        raise StoreError(
+            f"{path} is truncated/corrupt: ranged read at {offset} "
+            f"returned {len(got)} of {nbytes} bytes")
+    return got
 
 
 def _content_token(data: str) -> str:
@@ -144,6 +198,14 @@ class LocalFS:
         with open(path, "rb") as fh:
             fh.seek(max(fh.seek(0, os.SEEK_END) - nbytes, 0))
             return fh.read()
+
+    def read_at(self, path: str, offset: int, nbytes: int) -> bytes:
+        """Bytes ``[offset, offset + nbytes)`` of a file — a chunk of a
+        zarr shard; a file that ends inside the range raises
+        :class:`StoreError`."""
+        with open(path, "rb") as fh:
+            fh.seek(offset)
+            return _checked_range(path, offset, nbytes, fh.read(nbytes))
 
     def write_text(self, path: str, data: str) -> None:
         target = Path(path)
@@ -783,8 +845,8 @@ def http_request(method: str, url: str, headers: dict | None = None,
                  body: bytes | None = None, *, timeout: float = 60,
                  authorize=None, refresh=None, denied=None):
     """One urllib exchange with bounded retry → ``(status, headers,
-    body)`` — the transport under :class:`AzureBlobFS`, :class:`GcsFS`,
-    :class:`HttpFS` and the zarr ``HttpBlobs``.
+    body)`` — the transport under :class:`AzureBlobFS`, :class:`GcsFS`
+    and :class:`HttpFS`.
 
     Object stores and CDNs throttle routinely, and a flaky window must
     not fail an insert or read as absence: statuses in
@@ -902,9 +964,12 @@ class _ObjectStoreFS:
       LIST page ``(rows, prefixes, next_token)`` with ``(key, version,
       size)`` rows;
     - ``_get(bucket, key)`` → ``(body, version)``, None when absent;
-    - ``_get_tail(bucket, key, nbytes)`` → the last ``nbytes`` of the
-      object (all of a shorter one) by one suffix-range GET, None when
-      absent;
+    - ``_get_range(bucket, key, offset, nbytes)`` → bytes ``[offset,
+      offset + nbytes)`` of the object, or its last ``nbytes`` when
+      ``offset`` is None, by one ranged GET: fewer bytes when the
+      object ends first (none past its end), None when absent.  It
+      serves ``read_tail`` (parquet footers, zarr shard indexes) and
+      ``read_at`` (zarr inner chunks);
     - ``_put(bucket, key, data)``, and ``_put_if(bucket, key, data,
       token)``: the conditional PUT (create-only for a None token,
       replace-exactly-this otherwise) returning the new version, or
@@ -919,8 +984,7 @@ class _ObjectStoreFS:
 
     def __init__(self, scratch_dir: str | None, tag: str):
         from collections import Counter
-        self._scratch_root = scratch_dir or os.path.join(
-            tempfile.gettempdir(), f"{tag}-{uuid.uuid4().hex[:8]}")
+        self._scratch_root = _auto_scratch(scratch_dir, tag)
         #: localize mirror file -> version token (ETag / generation)
         self._versions: dict[str, str] = {}
         self.api_counts = Counter()
@@ -987,10 +1051,16 @@ class _ObjectStoreFS:
     def read_tail(self, path: str, nbytes: int) -> bytes:
         """The last ``nbytes`` of an object (all of a shorter one): one
         ranged GET — a parquet footer without the file."""
-        tail = self._get_tail(*self._bk(path), nbytes)
+        tail = self._get_range(*self._bk(path), None, nbytes)
         if tail is None:
             raise FileNotFoundError(path)
         return tail
+
+    def read_at(self, path: str, offset: int, nbytes: int) -> bytes:
+        """Bytes ``[offset, offset + nbytes)`` of an object by one
+        ranged GET — a zarr inner chunk without its shard."""
+        return _checked_range(path, offset, nbytes, self._get_range(
+            *self._bk(path), offset, nbytes))
 
     def write_text(self, path: str, data: str) -> None:
         self.write_bytes(path, data.encode("utf-8"))
@@ -1200,14 +1270,17 @@ class S3FS(_ObjectStoreFS):
                  region: str | None = None,
                  scratch_dir: str | None = None,
                  access_key: str | None = None,
-                 secret_key: str | None = None):
+                 secret_key: str | None = None,
+                 session_token: str | None = None):
         import boto3  # optional dep, import-gated (env ships it)
         kwargs = {}
         if access_key:
-            # explicit creds (shipped plan config in Python workers);
-            # otherwise boto3's normal chain (env, instance role)
+            # explicit creds (resolve_fs passes its env's, which in a
+            # Python task may be the driver's snapshot); otherwise
+            # boto3's normal chain (env, instance role)
             kwargs["aws_access_key_id"] = access_key
             kwargs["aws_secret_access_key"] = secret_key
+            kwargs["aws_session_token"] = session_token
         self._client = boto3.client(
             "s3",
             endpoint_url=endpoint_url or os.environ.get("AWS_ENDPOINT_URL"),
@@ -1272,17 +1345,22 @@ class S3FS(_ObjectStoreFS):
             return None
         return resp["Body"].read(), resp["ETag"]
 
-    def _get_tail(self, bucket: str, key: str, nbytes: int):
+    def _get_range(self, bucket: str, key: str, offset: "int | None",
+                   nbytes: int):
         self.api_counts["get"] += 1
         try:
-            resp = self._client.get_object(Bucket=bucket, Key=key,
-                                           Range=f"bytes=-{nbytes}")
+            resp = self._client.get_object(
+                Bucket=bucket, Key=key,
+                Range=_range_header(offset, nbytes))
         except self._client.exceptions.ClientError as exc:
             if _s3_missing(exc):
                 return None
+            if exc.response.get("ResponseMetadata", {}) \
+                    .get("HTTPStatusCode") == 416:
+                return b""
             raise
-        # a server that ignores Range answers 200 with the whole body
-        return resp["Body"].read()[-nbytes:]
+        return _range_body(resp["ResponseMetadata"]["HTTPStatusCode"],
+                           resp["Body"].read(), offset, nbytes)
 
     def _put(self, bucket: str, key: str, data: bytes) -> None:
         self.api_counts["put"] += 1
@@ -1406,20 +1484,20 @@ class HttpFS:
     requires_localization = True
 
     def __init__(self, scratch_dir: str | None = None):
-        self._scratch_root = scratch_dir or os.path.join(
-            tempfile.gettempdir(), f"zchttp-{uuid.uuid4().hex[:8]}")
+        self._scratch_root = _auto_scratch(scratch_dir, "zchttp")
         self._etags: dict[str, str] = {}
         self._manifests: dict[str, tuple[str | None, dict]] = {}
 
     # -- plumbing -------------------------------------------------------
     @staticmethod
-    def _request(url: str, method: str = "GET"):
+    def _request(url: str, method: str = "GET",
+                 headers: dict | None = None):
         """``(status, headers, body)`` through the shared retrying
         transport — CDNs throttle; a throttle must not read as absence
         or failure."""
         import urllib.error
         try:
-            return http_request(method, url, timeout=30)
+            return http_request(method, url, headers, timeout=30)
         except urllib.error.URLError:
             raise StoreError(f"HTTP store unreachable: {url}") from None
 
@@ -1511,6 +1589,28 @@ class HttpFS:
 
     def read_bytes(self, path: str) -> bytes:
         return self._get(path)[0]
+
+    def _get_range(self, url: str, offset: "int | None",
+                   nbytes: int) -> "bytes | None":
+        """One ranged GET — the :class:`_ObjectStoreFS` primitive of the
+        same name, over a URL: zarr shard reads are Range requests."""
+        status, _, body = self._request(
+            url, headers={"Range": _range_header(offset, nbytes)})
+        if status in (404, 410):
+            return None
+        if status >= 400 and status != 416:
+            raise StoreError(f"ranged GET {url} failed: {status}")
+        return _range_body(status, body, offset, nbytes)
+
+    def read_tail(self, path: str, nbytes: int) -> bytes:
+        tail = self._get_range(path, None, nbytes)
+        if tail is None:
+            raise FileNotFoundError(path)
+        return tail
+
+    def read_at(self, path: str, offset: int, nbytes: int) -> bytes:
+        return _checked_range(path, offset, nbytes,
+                              self._get_range(path, offset, nbytes))
 
     def read_versioned(self, path: str) -> tuple[str | None, str | None]:
         try:
@@ -1643,10 +1743,10 @@ _HTTP_FS = None
 _HTTP_FS_LOCK = threading.Lock()
 
 
-#: One S3FS per (endpoint, region) — the client, the scratch root, and
-#: the ETag-validated localize mirror are all reusable; a fresh instance
-#: per fs_for call would re-download every mirrored object for each
-#: Collection handle on the same store.
+#: One S3FS per (endpoint, region, credential) — the client, the
+#: scratch root, and the ETag-validated localize mirror are all
+#: reusable; a fresh instance per fs_for call would re-download every
+#: mirrored object for each Collection handle on the same store.
 _S3_CACHE: dict = {}
 _S3_CACHE_LOCK = threading.Lock()
 
@@ -1764,8 +1864,7 @@ class _RestObjectStoreFS(_ObjectStoreFS):
 
     def _fetch(self, bucket: str, key: str, headers: dict | None = None):
         """An object's bytes, status unmapped → ``(status, headers,
-        body)``: the ranged-GET primitive zarr shard reads use
-        (``zarr3.blobs`` maps 404/416/206 itself)."""
+        body)``; ``_get`` and ``_get_range`` map the statuses."""
         return self._request("GET", bucket, key, self._MEDIA, headers)
 
     def _get(self, bucket: str, key: str):
@@ -1778,17 +1877,17 @@ class _RestObjectStoreFS(_ObjectStoreFS):
                 f"GET {self._SCHEME}://{bucket}/{key} failed: {status}")
         return body, hdrs.get(self._VERSION_HEADER)
 
-    def _get_tail(self, bucket: str, key: str, nbytes: int):
+    def _get_range(self, bucket: str, key: str, offset: "int | None",
+                   nbytes: int):
         self.api_counts["get"] += 1
-        status, _, body = self._fetch(bucket, key,
-                                      {"Range": f"bytes=-{nbytes}"})
+        status, _, body = self._fetch(
+            bucket, key, {"Range": _range_header(offset, nbytes)})
         if status == 404:
             return None
-        if status >= 400:
+        if status >= 400 and status != 416:
             raise StoreError(f"ranged GET {self._SCHEME}://{bucket}/{key} "
                              f"failed: {status}")
-        # a server that ignores Range answers 200 with the whole body
-        return body[-nbytes:]
+        return _range_body(status, body, offset, nbytes)
 
     def _delete_keys(self, bucket: str, keys: list[str]) -> None:
         for key in keys:
@@ -2547,8 +2646,15 @@ _GCS_CACHE: dict = {}
 _GCS_CACHE_LOCK = threading.Lock()
 
 
-def fs_for(path: str, spark: SparkSession | None = None):
-    """Pick the metadata FS for ``path`` by scheme."""
+def resolve_fs(path: str, env, spark: SparkSession | None = None):
+    """The store client for ``path`` under the env mapping ``env`` —
+    the one credential resolver.  :func:`fs_for` passes this process's
+    env; Spark tasks pass the driver's snapshot laid over theirs
+    (:func:`task_fs`), so both sides route a path alike.  Clients are
+    cached per endpoint and credential.  A non-local path that no
+    Python client serves under ``env`` (a Hadoop-connector scheme, or
+    az:// / gs:// without a credential) gets :class:`HadoopFS` when
+    ``spark`` is given, else None."""
     if path.startswith("memory://"):
         return _MEMORY_FS
     scheme = scheme_of(path)
@@ -2559,26 +2665,28 @@ def fs_for(path: str, spark: SparkSession | None = None):
                 _HTTP_FS = HttpFS()
             return _HTTP_FS
     if scheme == "az":
-        account = os.environ.get("AZURE_STORAGE_ACCOUNT")
-        azkey = os.environ.get("AZURE_STORAGE_KEY")
-        azsas = os.environ.get("AZURE_STORAGE_SAS_TOKEN")
-        azbearer = os.environ.get("AZURE_STORAGE_BEARER_TOKEN")
-        azmsi = os.environ.get("AZURE_MSI_ENDPOINT")
+        account = env.get("AZURE_STORAGE_ACCOUNT")
+        azkey = env.get("AZURE_STORAGE_KEY")
+        azsas = env.get("AZURE_STORAGE_SAS_TOKEN")
+        azbearer = env.get("AZURE_STORAGE_BEARER_TOKEN")
+        azmsi = env.get("AZURE_MSI_ENDPOINT")
         if account and (azkey or azsas or azbearer or azmsi):
-            endpoint = (os.environ.get("AZURE_BLOB_ENDPOINT")
+            endpoint = (env.get("AZURE_BLOB_ENDPOINT")
                         or f"https://{account}.blob.core.windows.net")
             cred = hashlib.sha256(
                 f"{account}\x00{azkey or ''}\x00{azsas or ''}"
                 f"\x00{azbearer or ''}\x00{azmsi or ''}"
                 .encode()).hexdigest()
-            # MSI endpoint configured and no static credential wins:
-            # provider-backed bearer auth with automatic refresh
-            provider = (msi_token_provider()
-                        if azmsi and not (azkey or azsas or azbearer)
-                        else None)
             with _AZ_CACHE_LOCK:
                 cache_key = (endpoint, cred)
                 if cache_key not in _AZ_CACHE:
+                    # MSI endpoint configured and no static credential
+                    # wins: provider-backed bearer auth with automatic
+                    # refresh
+                    provider = (msi_token_provider(endpoint=azmsi)
+                                if azmsi and not (azkey or azsas
+                                                  or azbearer)
+                                else None)
                     _AZ_CACHE[cache_key] = AzureBlobFS(
                         account, azkey, endpoint, sas_token=azsas,
                         bearer_token=azbearer, token_provider=provider)
@@ -2586,9 +2694,8 @@ def fs_for(path: str, spark: SparkSession | None = None):
         # no usable credential (no account key, SAS, bearer token or
         # MSI endpoint): fall through to the JVM hadoop-azure
         # connector (service-principal auth)
-    if scheme == "gs" and not (os.environ.get("GCS_ACCESS_KEY_ID")
-                               and os.environ.get(
-                                   "GCS_SECRET_ACCESS_KEY")):
+    if scheme == "gs" and not (env.get("GCS_ACCESS_KEY_ID")
+                               and env.get("GCS_SECRET_ACCESS_KEY")):
         # the S3-interop surface needs the FULL HMAC pair — a partial
         # config (endpoint only, or key without secret) would sign
         # googleapis.com requests with ambient AWS credentials or die
@@ -2596,25 +2703,29 @@ def fs_for(path: str, spark: SparkSession | None = None):
         # service-account path (OAuth bearer against the JSON API —
         # the az AAD/MSI pattern) before surrendering to the JVM
         # gcs-connector
-        gsbearer = os.environ.get("GCS_BEARER_TOKEN")
-        gskeyfile = os.environ.get("GCS_KEYFILE")
-        gsmeta = os.environ.get("GCE_METADATA_ENDPOINT")
+        gsbearer = env.get("GCS_BEARER_TOKEN")
+        gskeyfile = env.get("GCS_KEYFILE")
+        gsmeta = env.get("GCE_METADATA_ENDPOINT")
         if gsbearer or gskeyfile or gsmeta:
-            endpoint = (os.environ.get("GCS_JSON_ENDPOINT")
+            endpoint = (env.get("GCS_JSON_ENDPOINT")
                         or "https://storage.googleapis.com")
             cred = hashlib.sha256(
                 f"{gsbearer or ''}\x00{gskeyfile or ''}"
                 f"\x00{gsmeta or ''}".encode()).hexdigest()
-            # static token wins; then the JSON keyfile (JWT grant —
-            # the off-GCE mode); then the metadata server.  Both
-            # provider modes refresh automatically (pre-expiry + 401)
-            provider = None
-            if not gsbearer:
-                provider = (gcs_keyfile_token_provider() if gskeyfile
-                            else gce_metadata_token_provider())
             with _GCS_CACHE_LOCK:
                 cache_key = (endpoint, cred)
                 if cache_key not in _GCS_CACHE:
+                    # static token wins; then the JSON keyfile (JWT
+                    # grant — the off-GCE mode); then the metadata
+                    # server.  Both provider modes refresh
+                    # automatically (pre-expiry + 401)
+                    provider = None
+                    if not gsbearer:
+                        provider = (
+                            gcs_keyfile_token_provider(gskeyfile)
+                            if gskeyfile
+                            else gce_metadata_token_provider(
+                                endpoint=gsmeta))
                     _GCS_CACHE[cache_key] = GcsFS(
                         endpoint, bearer_token=gsbearer,
                         token_provider=provider)
@@ -2630,36 +2741,102 @@ def fs_for(path: str, spark: SparkSession | None = None):
         # HadoopFS branch (JVM hadoop-azure connector), the same way
         # the reference delegates multi-scheme auth to obstore
         # (store/factory.py:22-79).
+        token = None
         if scheme == "gs":
-            endpoint = os.environ.get("GCS_ENDPOINT_URL",
-                                      "https://storage.googleapis.com")
-            access = os.environ.get("GCS_ACCESS_KEY_ID")
-            secret = os.environ.get("GCS_SECRET_ACCESS_KEY")
+            endpoint = env.get("GCS_ENDPOINT_URL",
+                               "https://storage.googleapis.com")
+            access = env.get("GCS_ACCESS_KEY_ID")
+            secret = env.get("GCS_SECRET_ACCESS_KEY")
             cred_src = (endpoint, access or "", secret or "")
         else:
-            endpoint = os.environ.get("AWS_ENDPOINT_URL")
-            access = secret = None
-            cred_src = tuple(os.environ.get(k, "") for k in
-                             ("AWS_ACCESS_KEY_ID",
-                              "AWS_SECRET_ACCESS_KEY",
-                              "AWS_SESSION_TOKEN"))
+            endpoint = env.get("AWS_ENDPOINT_URL")
+            access = env.get("AWS_ACCESS_KEY_ID")
+            secret = env.get("AWS_SECRET_ACCESS_KEY")
+            token = env.get("AWS_SESSION_TOKEN")
+            cred_src = (access or "", secret or "", token or "")
         cred = hashlib.sha256("\x00".join(cred_src).encode()).hexdigest()
-        key = (scheme == "gs", endpoint,
-               os.environ.get("AWS_REGION"), cred)
+        region = env.get("AWS_REGION")
+        key = (scheme == "gs", endpoint, region, cred)
         try:
             with _S3_CACHE_LOCK:
                 if key not in _S3_CACHE:
                     _S3_CACHE[key] = S3FS(endpoint_url=endpoint,
+                                          region=region,
                                           access_key=access,
-                                          secret_key=secret)
+                                          secret_key=secret,
+                                          session_token=token)
                 return _S3_CACHE[key]
         except ImportError:
             pass  # no boto3: fall through to the JVM connector
     if "://" in path and not path.startswith("file://"):
-        if spark is None:
-            raise ValueError(f"non-local path {path!r} needs a SparkSession")
-        return HadoopFS(spark)
+        return None if spark is None else HadoopFS(spark)
     return LocalFS()
+
+
+def fs_for(path: str, spark: SparkSession | None = None):
+    """Pick the metadata FS for ``path`` by scheme and this process's
+    env (:func:`resolve_fs`)."""
+    fs = resolve_fs(path, os.environ, spark)
+    if fs is None:
+        raise ValueError(f"non-local path {path!r} needs a SparkSession")
+    return fs
+
+
+#: The env vars :func:`resolve_fs` reads: the AWS group, then the rest.
+_AWS_ENV = ("AWS_ENDPOINT_URL", "AWS_REGION", "AWS_ACCESS_KEY_ID",
+            "AWS_SECRET_ACCESS_KEY", "AWS_SESSION_TOKEN")
+_STORE_ENV = ("AZURE_STORAGE_ACCOUNT", "AZURE_STORAGE_KEY",
+              "AZURE_STORAGE_SAS_TOKEN", "AZURE_STORAGE_BEARER_TOKEN",
+              "AZURE_MSI_ENDPOINT", "AZURE_BLOB_ENDPOINT",
+              "GCS_ACCESS_KEY_ID", "GCS_SECRET_ACCESS_KEY",
+              "GCS_ENDPOINT_URL", "GCS_BEARER_TOKEN", "GCS_KEYFILE",
+              "GCE_METADATA_ENDPOINT", "GCS_JSON_ENDPOINT")
+
+
+def capture_blob_conf() -> dict | None:
+    """Snapshot, on the DRIVER, the env vars :func:`resolve_fs` reads,
+    keyed by name, so they ride the pickled plan to the tasks
+    (:func:`task_fs`).
+
+    Long-lived Python workers keep the environment they were born with
+    — env vars set later (a test fixture, a late-configured endpoint)
+    never reach reused workers, so the snapshot makes task routing
+    deterministic.  The AWS group rides only when a custom endpoint is
+    set (test / on-prem rigs); against real AWS, executors use their
+    own credential chain (instance roles), which is the
+    production-correct path.  A keyfile path or a metadata/MSI
+    endpoint suits long jobs better than a static token: each process
+    mints and refreshes its own tokens."""
+    names = _STORE_ENV + (_AWS_ENV if os.environ.get("AWS_ENDPOINT_URL")
+                          else ())
+    conf = {name: os.environ[name] for name in names
+            if os.environ.get(name)}
+    return conf or None
+
+
+def task_fs(path: str, conf: dict | None = None):
+    """The store client a Spark task uses for ``path``: the driver's
+    snapshot ``conf`` (:func:`capture_blob_conf`) laid over this
+    process's env, resolved exactly as :func:`fs_for` resolves on the
+    driver.  Zarr chunks are read and written from tasks, so a root no
+    task can reach raises :class:`StoreError` rather than writing a
+    local directory named after the URL."""
+    if path.startswith("memory://"):
+        raise StoreError(
+            f"{path}: memory:// lives in one process, and zarr "
+            f"partitions are read and written by Spark tasks in other "
+            f"processes — use a local or object-store root")
+    fs = resolve_fs(path, ChainMap(conf or {}, os.environ))
+    if fs is None:
+        raise StoreError(
+            f"no credentials for {path}: zarr chunk I/O runs in Spark "
+            f"tasks through the Python store clients — set "
+            f"AZURE_STORAGE_ACCOUNT plus AZURE_STORAGE_KEY, "
+            f"AZURE_STORAGE_SAS_TOKEN, AZURE_STORAGE_BEARER_TOKEN or "
+            f"AZURE_MSI_ENDPOINT for az://; GCS_BEARER_TOKEN, "
+            f"GCS_KEYFILE, GCE_METADATA_ENDPOINT or the "
+            f"GCS_ACCESS_KEY_ID/GCS_SECRET_ACCESS_KEY pair for gs://")
+    return fs
 
 
 def strip_scheme(path: str) -> str:

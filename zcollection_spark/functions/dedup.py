@@ -193,6 +193,34 @@ def _pin_wide(df: DataFrame) -> tuple[DataFrame, object]:
     return frame, _MaterializedHandle(frame, path, store)
 
 
+def _scan_size_bytes(df: DataFrame) -> int:
+    """Driver-side estimate of the input's scan size (optimizer
+    statistics — file sizes for a parquet scan; NO Spark job).  −1
+    when the estimate is unavailable (e.g. Spark Connect), which
+    callers treat as "small"."""
+    try:
+        return int(df._jdf.queryExecution().optimizedPlan()
+                   .stats().sizeInBytes())
+    except Exception:
+        return -1
+
+
+def pin_if_large(frame: DataFrame, source: DataFrame,
+                 key: str) -> tuple[DataFrame, list]:
+    """The size-gated pin: ``frame.persist()`` when ``source``'s
+    optimizer-estimated scan size reaches config ``key`` (None: never;
+    0: always).  On a small input recomputing a shared intermediate
+    beats a pin, on a large one the pin wins (r17).  Returns
+    ``(frame_to_build_on, handles)``, the handles to release through
+    ``_attach_cached`` / ``unpersist_intermediates``."""
+    from .. import config
+    gate = config.get(key)
+    if gate is not None and 0 <= gate <= _scan_size_bytes(source):
+        frame = frame.persist()
+        return frame, [frame]
+    return frame, []
+
+
 def sweep_intermediates(spark: "SparkSession | None" = None,
                         root: "str | None" = None) -> list[str]:
     """Delete every ``zc-intermediate-*`` table under ``root``

@@ -41,7 +41,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .dedup import _attach_cached, md5_long
+from .dedup import _attach_cached, md5_long, pin_if_large
 from .text import words
 
 #: salt buckets for the two-stage top-k (stage 1 caps any single
@@ -313,17 +313,11 @@ def tfidf_topk(corpus: DataFrame, *, id_col: str, text_col: str,
         raise ValueError("k must be >= 1")
     if round_to < 0:
         raise ValueError("round_to must be >= 0")
-    from .. import config
-    from .text import _scan_size_bytes
     tok = corpus.select(F.col(id_col),
                         F.explode(words(text_col)).alias("term"))
-    tf = tok.groupBy(id_col, "term").agg(
-        F.count(F.lit(1)).alias("tf"))
-    handles = []
-    gate = config.get("retrieval.pin_tf_min_input_bytes")
-    if gate is not None and 0 <= gate <= _scan_size_bytes(corpus):
-        tf = tf.persist()
-        handles.append(tf)
+    tf, handles = pin_if_large(
+        tok.groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("tf")),
+        corpus, "retrieval.pin_tf_min_input_bytes")
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("__df"))
     # N is a plain corpus count (r16, guide §1.2): every non-null-text
     # document contributes ≥1 token (words('') is ['']), so counting

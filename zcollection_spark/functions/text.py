@@ -89,18 +89,6 @@ def text_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def _scan_size_bytes(df: DataFrame) -> int:
-    """Driver-side estimate of the input's scan size (optimizer
-    statistics — file sizes for a parquet scan; NO Spark job).  −1
-    when the estimate is unavailable (e.g. Spark Connect), which
-    callers treat as "small"."""
-    try:
-        return int(df._jdf.queryExecution().optimizedPlan()
-                   .stats().sizeInBytes())
-    except Exception:
-        return -1
-
-
 def unigram_stats(df: DataFrame, *, id_col: str = "doc_id",
                   text_col: str = "text") -> DataFrame:
     """Corpus-statistical quality scoring (two passes over the corpus):
@@ -134,19 +122,15 @@ def unigram_stats(df: DataFrame, *, id_col: str = "doc_id",
     the crossover sits between 100 k and 1 M docs).  The choice is
     gated on the input's optimizer-estimated scan size
     (driver-side, no job) against config
-    ``text.pin_tokens_min_input_bytes``; the pinned frame releases
-    through the dedup-family caller contract
+    ``text.pin_tokens_min_input_bytes`` (``dedup.pin_if_large``); the
+    pinned frame releases through the dedup-family caller contract
     (``unpersist_intermediates``), and harnesses that repeat queries
     clear the cache between repeats as before.
     """
-    from .. import config
-    tok_rows = df.select(F.col(id_col),
-                         F.explode(words(text_col)).alias("__tok"))
-    handles = []
-    gate = config.get("text.pin_tokens_min_input_bytes")
-    if gate is not None and 0 <= gate <= _scan_size_bytes(df):
-        tok_rows = tok_rows.persist()
-        handles.append(tok_rows)
+    from .dedup import _attach_cached, pin_if_large
+    tok_rows, handles = pin_if_large(
+        df.select(F.col(id_col), F.explode(words(text_col)).alias("__tok")),
+        df, "text.pin_tokens_min_input_bytes")
     vocab = tok_rows.groupBy("__tok").agg(
         F.count(F.lit(1)).alias("__cnt"))
     n = F.count(F.lit(1)).cast("double")
@@ -157,10 +141,7 @@ def unigram_stats(df: DataFrame, *, id_col: str = "doc_id",
                 .alias("avg_token_count"),
                 (F.sum((F.col("__cnt") == 1).cast("long"))
                  .cast("double") / n).alias("hapax_share")))
-    if handles:
-        from .dedup import _attach_cached
-        out = _attach_cached(out, *handles)
-    return out
+    return _attach_cached(out, *handles)
 
 
 def bigram_lm_score(df: DataFrame, *, id_col: str = "doc_id",

@@ -38,7 +38,6 @@ Raw bytes stay on the parquet layout.
 from __future__ import annotations
 
 import json
-from pathlib import Path
 from typing import Iterable
 
 import numpy as np
@@ -53,6 +52,7 @@ from ..collection import staging as staging_proto
 from ..collection.collection import Collection, _create, open_collection
 from ..collection.stats import bloom_kind_of
 from ..errors import SchemaError
+from ..fs import LocalFS, capture_blob_conf, task_fs
 # metadata I/O goes through the collection core's ``fs.fs_for``; the
 # name stays importable here for instrumentation that wraps it per module
 from ..fs import fs_for  # noqa: F401
@@ -107,7 +107,6 @@ def write_partition_group(spec: dict, pdf: pd.DataFrame) -> tuple[str, dict]:
     for ``spec["bloom_kinds"]`` (both optional) — built from the very
     arrays encoded here, so it describes what the group stores.
     """
-    import shutil as _shutil
     from ..collection.stats import bloom_entry, zone_entry
     from ..partitioning import from_json as pj
     part = pj(json.loads(spec["partitioning_json"]))
@@ -115,7 +114,7 @@ def write_partition_group(spec: dict, pdf: pd.DataFrame) -> tuple[str, dict]:
     key = {k: int(pdf[k].iloc[0]) for k in spec["keys"]}
     rel = part.encode(key)
     root = str(spec["root"])
-    conf = spec.get("blob_conf")
+    fs = task_fs(root, spec.get("blob_conf"))
     group_path = f"{root}/{rel}"
     pdf = (pdf.sort_values(axis).reset_index(drop=True)
            if axis in pdf.columns else pdf.reset_index(drop=True))
@@ -123,11 +122,10 @@ def write_partition_group(spec: dict, pdf: pd.DataFrame) -> tuple[str, dict]:
     # previous (larger) incarnation before writing.  Staging dirs are
     # always fresh, so this only fires on direct (non-staged) writes —
     # local paths only; object-store staging never hits it.
-    if not root.startswith(("s3://", "s3a://", "s3n://")) \
-            and Path(group_path).exists():
-        _shutil.rmtree(group_path, ignore_errors=True)
+    if isinstance(fs, LocalFS):
+        fs.delete(group_path)
     write_group(group_path, {"_zc_partition_key": json.dumps(key)},
-                conf=conf)
+                fs=fs)
     chunk_rows = spec["chunk_rows"]
     # nested-group variables ("a/b/var") need explicit Zarr group docs at
     # every intermediate level (the reference recurses nested groups,
@@ -139,7 +137,7 @@ def write_partition_group(spec: dict, pdf: pd.DataFrame) -> tuple[str, dict]:
             rel_group = "/".join(parts[:depth])
             if rel_group not in seen_groups:
                 seen_groups.add(rel_group)
-                write_group(f"{group_path}/{rel_group}", {}, conf=conf)
+                write_group(f"{group_path}/{rel_group}", {}, fs=fs)
     stored: dict[str, np.ndarray] = {}
     for name, dtype, extra in spec["var_meta"]:
         series = pdf[name]
@@ -158,7 +156,7 @@ def write_partition_group(spec: dict, pdf: pd.DataFrame) -> tuple[str, dict]:
             chunk, values.shape, values.dtype, spec["shard_budget"])
         write_array(f"{group_path}/{name}", values, chunk_shape=chunk,
                     shard_shape=shard, codec="zstd", level=spec["level"],
-                    conf=conf)
+                    fs=fs)
     stats = {col: zone_entry(stored[col])
              for col in spec.get("stats_columns", ()) if col in stored}
     for col, kind in spec.get("bloom_kinds", {}).items():
@@ -181,7 +179,7 @@ def create_zarr_collection(spark: SparkSession, path: str, *,
                    partitioning=partitioning, stats_columns=stats_columns,
                    bloom_columns=bloom_columns, bloom_bits=bloom_bits,
                    overwrite=overwrite)
-    write_group(coll.path, {"zcollection": True})
+    write_group(coll.path, {"zcollection": True}, fs=coll._fs)
     return coll
 
 
@@ -202,6 +200,10 @@ class ZarrCollection(Collection):
 
     def __init__(self, *args, **kwargs):
         super().__init__(*args, **kwargs)
+        # partitions are read and written by Spark tasks: a root they
+        # cannot reach (memory://, a scheme with no credentialed Python
+        # client) fails here, before anything is written
+        task_fs(self.path)
         # full-scan plan cache, keyed on the catalog generation (to_df)
         self._df_cache: dict = {}
         datasource.register(self.spark)
@@ -227,30 +229,28 @@ class ZarrCollection(Collection):
                     if v.name in df.columns]
         if not imm_vars:
             return
-        from .blobs import blobs_for
         imm_path = f"{self.path}/_immutable"
-        if blobs_for(imm_path).try_read_bytes(
-                f"{imm_path}/zarr.json") is not None:
+        if self._fs.exists_file(f"{imm_path}/zarr.json"):
             return
         row = df.select(*[v.name for v in imm_vars]).limit(1).collect()
         if not row:
             return
-        write_group(imm_path, {"immutable": True})
+        write_group(imm_path, {"immutable": True}, fs=self._fs)
         for var in imm_vars:
             value = np.asarray(row[0][var.name], dtype=np.dtype(
                 var.dtype if not var.dtype.startswith("datetime")
                 else "datetime64[us]"))
-            write_array(f"{imm_path}/{var.name}", np.atleast_1d(value))
+            write_array(f"{imm_path}/{var.name}", np.atleast_1d(value),
+                        fs=self._fs)
 
     def _attach_immutable(self, df: DataFrame,
                           wanted: set | None) -> DataFrame:
         """Attach ``_immutable`` variables as literals of their declared
         type — a map-side constant, where parquet broadcasts a one-row
         table; partition data wins on name conflict (quirk Q5)."""
-        from .blobs import blobs_for
         imm_path = f"{self.path}/_immutable"
-        blobs = blobs_for(imm_path)
-        if blobs.try_read_bytes(f"{imm_path}/zarr.json") is None:
+        if not self.schema.immutable_variables \
+                or not self._fs.exists_file(f"{imm_path}/zarr.json"):
             return df
         dims, cols = self.schema.dim_map, {}
         for var in self.schema.immutable_variables:
@@ -258,10 +258,10 @@ class ZarrCollection(Collection):
                     wanted is not None and var.name not in wanted
                     and var.name.rsplit("/", 1)[-1] not in wanted):
                 continue
-            if blobs.try_read_bytes(
-                    f"{imm_path}/{var.name}/zarr.json") is None:
+            if not self._fs.exists_file(f"{imm_path}/{var.name}/zarr.json"):
                 continue
-            value = read_array(f"{imm_path}/{var.name}").tolist()
+            value = read_array(f"{imm_path}/{var.name}",
+                               fs=self._fs).tolist()
             # stored at least 1-D: a scalar variable is its one element
             cols[var.name] = F.lit(value if var.dimensions else value[0]) \
                 .cast(var.spark_type(dims, self.axis))
@@ -278,7 +278,6 @@ class ZarrCollection(Collection):
         profile = engine_config.profile()
         var_schemas = [v for v in self.schema.partitioned_variables
                        if v.name in columns]
-        from .blobs import capture_blob_conf
         return {
             "root": self.path,
             "axis": axis,
@@ -370,7 +369,6 @@ class ZarrCollection(Collection):
         the endpoint conf are resolved here on the driver and ride the
         task closure: Python workers keep the environment they were born
         with."""
-        from .blobs import capture_blob_conf
         wanted = (None if variables is None
                   else set(variables) | set(self.partitioning.keys))
         schema = datasource.scan_schema(self.schema, self.partitioning,
@@ -406,7 +404,6 @@ class ZarrCollection(Collection):
         partition keys).  The plan is cached per (projection, endpoint
         conf, catalog generation): every commit bumps the generation, so
         a cached scan's partition list is always the current one."""
-        from .blobs import capture_blob_conf
         key = (None if variables is None else tuple(sorted(variables)),
                json.dumps(capture_blob_conf(), sort_keys=True),
                self.generation())
@@ -451,18 +448,18 @@ class ZarrCollection(Collection):
             return self.spark.createDataFrame([], struct)
         nd = {v.name for v in var_schemas if len(v.dimensions) > 1}
         root = self.path
-        from .blobs import capture_blob_conf
         blob_conf = capture_blob_conf()
 
         def read_spans(batches: Iterable[pd.DataFrame]
                        ) -> Iterable[pd.DataFrame]:
+            fs = task_fs(root, blob_conf)
             for pdf in batches:
                 for rel, start, stop in pdf.itertuples(index=False):
                     data = {}
                     for name in names:
                         vals = read_array_slice(f"{root}/{rel}/{name}",
                                                 int(start), int(stop),
-                                                conf=blob_conf)
+                                                fs=fs)
                         if vals.dtype.kind == "M":
                             vals = vals.astype("datetime64[us]")
                         data[name] = list(vals) if name in nd else vals

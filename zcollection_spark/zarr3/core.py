@@ -1,9 +1,12 @@
-"""Zarr v3 array/group read-write against a directory store.
+"""Zarr v3 array/group read-write against any store client of ``fs.py``.
 
 Chunk layout and metadata follow the v3 core spec; compression parity with
 the reference's codec profiles (zstd level 3/9 — ``codecs/defaults.py``).
 Edge chunks are stored padded to the full chunk shape and sliced on read,
-as the spec requires.
+as the spec requires.  Every function takes the store client as ``fs``;
+without one it resolves :func:`..fs.task_fs` for the path, which is what
+the Spark tasks that read and write partitions do with the driver's
+shipped env snapshot.
 """
 
 from __future__ import annotations
@@ -17,7 +20,7 @@ from typing import Any, Mapping
 
 import numpy as np
 
-from .blobs import blobs_for
+from ..fs import task_fs
 
 ZARR_FORMAT = 3
 
@@ -280,7 +283,7 @@ def write_array(path: str | Path, data: np.ndarray, *,
                 fill_value: Any = None, codec: str = "zstd",
                 level: int = 3,
                 attributes: Mapping[str, Any] | None = None,
-                conf: dict | None = None) -> None:
+                fs=None) -> None:
     """Write one Zarr v3 array directory (zarr.json + c/... chunks).
 
     With ``shard_shape`` the array is written through the spec's
@@ -290,8 +293,7 @@ def write_array(path: str | Path, data: np.ndarray, *,
     profiles target (``codecs/defaults.py:133-156``).
     """
     path = str(path)
-    blobs = blobs_for(path, conf)
-    blobs.mkdirs(path)
+    fs = fs or task_fs(path)
     src_dtype = data.dtype
     is_vlen = src_dtype.kind in ("U", "O")
     if is_vlen:
@@ -321,8 +323,8 @@ def write_array(path: str | Path, data: np.ndarray, *,
                          fill_value=fill_value, codec=codec, level=level,
                          attributes=dict(attributes or {}),
                          shard_shape=shard_shape)
-    blobs.write_text(f"{path}/zarr.json",
-                     json.dumps(meta.to_document(), indent=1))
+    fs.write_text(f"{path}/zarr.json",
+                  json.dumps(meta.to_document(), indent=1))
     fill = meta.fill_value if meta.fill_value is not None \
         else ("" if meta.is_vlen else 0)
     if shard_shape is None:
@@ -332,13 +334,13 @@ def write_array(path: str | Path, data: np.ndarray, *,
                            for i, c, s in zip(idx, meta.chunk_shape,
                                               meta.shape))
             chunk_path = f"{path}/c/" + "/".join(map(str, idx))
-            blobs.write_bytes(chunk_path,
-                              _encode_block(data, slices, meta, fill))
+            fs.write_bytes(chunk_path,
+                           _encode_block(data, slices, meta, fill))
         return
-    _write_sharded(blobs, path, data, meta, fill)
+    _write_sharded(fs, path, data, meta, fill)
 
 
-def _write_sharded(blobs, path: str, data: np.ndarray,
+def _write_sharded(fs, path: str, data: np.ndarray,
                    meta: ZarrArrayMeta, fill: Any) -> None:
     shard = meta.shard_shape
     per_shard = tuple(s // c for s, c in zip(shard, meta.chunk_shape))
@@ -361,16 +363,24 @@ def _write_sharded(blobs, path: str, data: np.ndarray,
         shard_path = f"{path}/c/" + "/".join(map(str, sidx))
         index_bytes = index.tobytes()
         checksum = _crc32c(index_bytes).to_bytes(4, "little")
-        blobs.write_bytes(shard_path,
-                          b"".join(payloads) + index_bytes + checksum)
+        fs.write_bytes(shard_path,
+                       b"".join(payloads) + index_bytes + checksum)
 
 
-def read_array(path: str | Path, conf: dict | None = None) -> np.ndarray:
+def _read_or_none(fs, path: str) -> "bytes | None":
+    """A chunk or shard object, or None when absent (the fill value)."""
+    try:
+        return fs.read_bytes(path)
+    except FileNotFoundError:
+        return None
+
+
+def read_array(path: str | Path, fs=None) -> np.ndarray:
     """Read one Zarr v3 array directory into a numpy array."""
     path = str(path)
-    blobs = blobs_for(path, conf)
+    fs = fs or task_fs(path)
     meta = ZarrArrayMeta.from_document(
-        json.loads(blobs.read_text(f"{path}/zarr.json")))
+        json.loads(fs.read_text(f"{path}/zarr.json")))
     storage = meta.storage_dtype
     fill = meta.fill_value if meta.fill_value is not None \
         else ("" if meta.is_vlen else 0)
@@ -391,7 +401,7 @@ def read_array(path: str | Path, conf: dict | None = None) -> np.ndarray:
     if meta.shard_shape is None:
         for idx in np.ndindex(*_chunk_count(meta.shape, meta.chunk_shape)):
             chunk_path = f"{path}/c/" + "/".join(map(str, idx))
-            payload = blobs.try_read_bytes(chunk_path)
+            payload = _read_or_none(fs, chunk_path)
             if payload is None:
                 continue  # missing chunk = fill value (spec)
             slices = tuple(slice(i * c, min((i + 1) * c, s))
@@ -405,7 +415,7 @@ def read_array(path: str | Path, conf: dict | None = None) -> np.ndarray:
         tail_nbytes = index_nbytes + 4  # + crc32c of the index
         for sidx in np.ndindex(*_chunk_count(meta.shape, shard)):
             shard_path = f"{path}/c/" + "/".join(map(str, sidx))
-            raw = blobs.try_read_bytes(shard_path)
+            raw = _read_or_none(fs, shard_path)
             if raw is None:
                 continue  # missing shard = fill value
             if len(raw) < tail_nbytes:
@@ -438,7 +448,7 @@ def read_array(path: str | Path, conf: dict | None = None) -> np.ndarray:
 
 
 def read_array_slice(path: str | Path, start: int, stop: int,
-                     conf: dict | None = None) -> np.ndarray:
+                     fs=None) -> np.ndarray:
     """Read rows ``[start, stop)`` along axis 0, touching only the chunks
     (and, inside a shard, only the inner chunks) that intersect the range.
 
@@ -450,9 +460,9 @@ def read_array_slice(path: str | Path, start: int, stop: int,
     object-store ``Range`` GET pattern.
     """
     path = str(path)
-    blobs = blobs_for(path, conf)
+    fs = fs or task_fs(path)
     meta = ZarrArrayMeta.from_document(
-        json.loads(blobs.read_text(f"{path}/zarr.json")))
+        json.loads(fs.read_text(f"{path}/zarr.json")))
     storage = meta.storage_dtype
     fill = meta.fill_value if meta.fill_value is not None \
         else ("" if meta.is_vlen else 0)
@@ -496,7 +506,7 @@ def read_array_slice(path: str | Path, start: int, stop: int,
                     else [()]:
                 chunk_path = f"{path}/c/" + "/".join(
                     map(str, (row_chunk, *tail_idx)))
-                payload = blobs.try_read_bytes(chunk_path)
+                payload = _read_or_none(fs, chunk_path)
                 if payload is not None:
                     place(payload, row_chunk, tail_idx)
         if np.dtype(meta.dtype).kind == "M":
@@ -516,9 +526,13 @@ def read_array_slice(path: str | Path, start: int, stop: int,
                 map(str, (shard_row, *shard_tail)))
             # ranged reads: index tail first, then only the needed inner
             # chunks — on S3 these are Range GETs, never a full object
-            tail = blobs.read_tail(shard_path, tail_nbytes)
-            if tail is None:
-                continue
+            try:
+                tail = fs.read_tail(shard_path, tail_nbytes)
+            except FileNotFoundError:
+                continue  # missing shard = fill value
+            if len(tail) < tail_nbytes:
+                raise ValueError(f"corrupt shard {shard_path}: shorter "
+                                 f"than its {tail_nbytes}-byte index")
             if _crc32c(tail[:-4]) != int.from_bytes(tail[-4:],
                                                     "little"):
                 raise ValueError(f"corrupt shard {shard_path}: "
@@ -536,7 +550,7 @@ def read_array_slice(path: str | Path, start: int, stop: int,
                     st * ps + ci
                     for st, ps, ci in zip(shard_tail, per_shard[1:],
                                           cidx[1:]))
-                place(blobs.read_at(shard_path, off, nbytes),
+                place(fs.read_at(shard_path, off, nbytes),
                       row_chunk, tail_idx)
     if np.dtype(meta.dtype).kind == "M":
         return out.view(meta.dtype)
@@ -545,18 +559,16 @@ def read_array_slice(path: str | Path, start: int, stop: int,
 
 def write_group(path: str | Path,
                 attributes: Mapping[str, Any] | None = None,
-                conf: dict | None = None) -> None:
+                fs=None) -> None:
     path = str(path)
-    blobs = blobs_for(path, conf)
-    blobs.mkdirs(path)
-    blobs.write_text(f"{path}/zarr.json", json.dumps({
+    (fs or task_fs(path)).write_text(f"{path}/zarr.json", json.dumps({
         "zarr_format": ZARR_FORMAT, "node_type": "group",
         "attributes": dict(attributes or {})}, indent=1))
 
 
-def read_group_meta(path: str | Path) -> dict:
-    doc = json.loads(blobs_for(str(path)).read_text(
-        f"{path}/zarr.json"))
+def read_group_meta(path: str | Path, fs=None) -> dict:
+    path = str(path)
+    doc = json.loads((fs or task_fs(path)).read_text(f"{path}/zarr.json"))
     if doc.get("node_type") != "group":
         raise ValueError(f"{path} is not a Zarr v3 group")
     return doc

@@ -25,7 +25,6 @@ row-by-row conversion.
 from __future__ import annotations
 
 import json
-from pathlib import Path
 from typing import Iterator, Sequence
 
 import numpy as np
@@ -38,6 +37,7 @@ from pyspark.sql.datasource import (DataSource, DataSourceArrowWriter,
                                     LessThanOrEqual, WriterCommitMessage)
 from pyspark.sql import types as T
 
+from ..fs import task_fs
 from ..partitioning import from_json as partitioning_from_json
 from ..schema import DatasetSchema
 
@@ -46,9 +46,7 @@ CONFIG_NAME = "_zcollection.json"
 
 def _load_config(root: str,
                  conf: dict | None = None) -> tuple[DatasetSchema, object]:
-    from .blobs import blobs_for
-    doc = json.loads(
-        blobs_for(root, conf).read_text(f"{root}/{CONFIG_NAME}"))
+    doc = json.loads(task_fs(root, conf).read_text(f"{root}/{CONFIG_NAME}"))
     return (DatasetSchema.from_json(doc["schema"]),
             partitioning_from_json(doc["partitioning"]))
 
@@ -95,6 +93,7 @@ def read_partition(root: str, rel: str, key: dict,
     environment they were born with, so it must ride the task).  Backs
     both the collection scans and the raw ``zarr3`` format reader."""
     from .core import read_array
+    fs = task_fs(root, blob_conf)
     group_path = f"{root}/{rel}"
     wanted = columns
     arrays: dict[str, pa.Array] = {}
@@ -110,7 +109,7 @@ def read_partition(root: str, rel: str, key: dict,
             continue
         array_path = f"{group_path}/{name}"
         try:
-            values = read_array(array_path, conf=blob_conf)
+            values = read_array(array_path, fs=fs)
         except FileNotFoundError:
             # a variable the partition does not store (added by schema
             # evolution, or dropped by update(allow_variable_drop=True)):
@@ -118,7 +117,7 @@ def read_partition(root: str, rel: str, key: dict,
             # nulls — what the parquet layout reads for a missing column
             if length is None:
                 length = len(read_array(
-                    f"{group_path}/{dataset_schema.axis}", conf=blob_conf))
+                    f"{group_path}/{dataset_schema.axis}", fs=fs))
             var = var_map.get(name)
             if var is None:
                 raise
@@ -137,12 +136,12 @@ def read_partition(root: str, rel: str, key: dict,
         length = len(values)
     if length is None:  # keys-only projection: length from axis array
         length = len(read_array(f"{group_path}/{dataset_schema.axis}",
-                                conf=blob_conf))
+                                fs=fs))
     for kname in partitioning.keys:
         if kname in var_map and kname not in arrays \
                 and (wanted is None or kname in wanted):
             arrays[kname] = _np_to_arrow(
-                read_array(f"{group_path}/{kname}", conf=blob_conf))
+                read_array(f"{group_path}/{kname}", fs=fs))
         elif kname not in var_map:
             if wanted is None or kname in wanted:
                 arrays[kname] = pa.array(
@@ -201,29 +200,10 @@ class ZarrReader(DataSourceReader):
 
     # -- partition enumeration (catalog first, walk fallback) ----------
     def partitions(self) -> Sequence[InputPartition]:
-        from pyspark.sql import SparkSession
         from ..collection.catalog import Catalog
-        from ..fs import S3FS, fs_for, scheme_of
-        from .blobs import store_client
-        # this also runs in a Python worker: with a shipped blob_conf,
-        # build the object-store metadata FS from it instead of the
-        # worker's env (workers keep the environment they were BORN
-        # with — late-set endpoint config never reaches them)
-        conf = self.blob_conf
-        scheme = scheme_of(self.root)
-        if conf is not None and scheme in ("s3", "s3a", "s3n"):
-            fs = S3FS(endpoint_url=conf.get("endpoint_url"),
-                      region=conf.get("region"),
-                      access_key=conf.get("access_key"),
-                      secret_key=conf.get("secret_key"))
-        elif conf is not None and (
-                scheme == "az" and conf.get("az_account")
-                or scheme == "gs" and (conf.get("gs_bearer")
-                                       or conf.get("gs_keyfile")
-                                       or conf.get("gs_meta"))):
-            fs = store_client(self.root, conf)
-        else:
-            fs = fs_for(self.root, SparkSession.getActiveSession())
+        # this also runs in a Python worker, which keeps the env it was
+        # BORN with: the shipped blob_conf routes it like the driver
+        fs = task_fs(self.root, self.blob_conf)
         relpaths = Catalog(fs, self.root).read()
         if relpaths is None:
             relpaths = fs.list_partition_dirs(self.root,
