@@ -63,6 +63,31 @@ def test_config_override():
     assert config.get("codec.profile") == "cloud-balanced"
 
 
+def test_every_config_key_is_read():
+    """Each ``_DEFAULTS`` key is named somewhere in the package besides
+    its own entry: a key no code reads makes ``set_option`` a silent
+    no-op."""
+    import ast
+    from pathlib import Path
+
+    pkg = Path(config.__file__).parent
+    texts = []
+    for path in sorted(pkg.rglob("*.py")):
+        text = path.read_text()
+        if path == Path(config.__file__):
+            lines = text.splitlines()
+            for node in ast.parse(text).body:
+                if (isinstance(node, ast.AnnAssign)
+                        and getattr(node.target, "id", None) == "_DEFAULTS"):
+                    del lines[node.lineno - 1:node.end_lineno]
+            text = "\n".join(lines)
+        texts.append(text)
+    corpus = "\n".join(texts)
+    unread = [key for key in config._DEFAULTS
+              if f'"{key}"' not in corpus and f"'{key}'" not in corpus]
+    assert unread == []
+
+
 def test_config_unknown_key():
     with pytest.raises(KeyError):
         config.get("bogus")

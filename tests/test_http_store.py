@@ -77,6 +77,8 @@ def test_http_store_is_read_only(spark, http_root):
         fs.write_text(f"{url}/coll/x.txt", "nope")
     with pytest.raises(ReadOnlyError):
         fs.delete(f"{url}/coll/num=0")
+    with pytest.raises(ReadOnlyError):
+        fs.copy_file(f"{url}/coll/num=0", f"{url}/coll/num=9")
     coll = zc.open_collection(spark, f"{url}/coll", mode="r")
     with pytest.raises(ReadOnlyError):
         coll.insert(coll.query())

@@ -632,128 +632,6 @@ def test_pin_rmw_survives_cas_conflict(spark, tmp_path):
     assert got == sorted({g1, g2}) == cat.pins()
 
 
-def test_distributed_retention_copies_for_huge_pin_sets(spark, tmp_path):
-    """Past ``retention.distribute_min_files`` the copies run as a
-    Spark job over the executors (the 100-TB escalation: 500 k copies
-    at cluster parallelism instead of 16 driver threads).  Same
-    completion contract: markers only after the WHOLE job succeeds,
-    and the pinned read stays bit-identical."""
-    from zcollection_spark import config
-    from zcollection_spark.collection.catalog import RETAINED_MARKER
-
-    coll = _mk(spark, str(tmp_path / "dist"))
-    coll.insert(_df(spark, coll, [(1, 1.0), (1, 1.5)]))
-    coll.insert(_df(spark, coll, [(2, 2.0)]))
-    g = coll.generation()
-    before = _rows(coll.query(at_generation=g))
-    coll.pin_generation(g)
-    cat: Catalog = coll._catalog
-    assert cat._retention_spark_session(12) is None   # default floor: no
-    with config.override(**{"retention.distribute_min_files": 1}):
-        assert cat._retention_spark_session(12) is spark
-        copied = cat.retain_for_pins(["num=1", "num=2"])
-    assert sorted(copied) == ["num=1", "num=2"]
-    stamp1 = int(cat.read_doc()["touched"]["num=1"])
-    assert cat.has_retained(stamp1, "num=1")
-    # the marker certifies the distributed copy's exact file count
-    import json as _json
-    marker = _json.loads(cat._fs.read_text(
-        f"{cat.retained_root(stamp1)}/num=1/{RETAINED_MARKER}"))
-    assert marker["n_files"] >= 1
-    # end-to-end: republish, pinned read bit-identical
-    coll.insert(_df(spark, coll, [(1, 9.0)]))
-    assert _rows(coll.query(at_generation=g)) == before
-
-
-def test_distributed_retention_excluded_for_memory_store(spark):
-    """memory:// is process-local — Python workers would rebuild an
-    EMPTY store; the escalation must refuse it at any file count."""
-    from zcollection_spark import config
-    from zcollection_spark.collection.catalog import Catalog
-    from zcollection_spark.fs import fs_for
-
-    cat = Catalog(fs_for("memory://ret-gate"), "memory://ret-gate")
-    with config.override(**{"retention.distribute_min_files": 1}):
-        assert cat._retention_spark_session(10**6) is None
-
-
-def test_distributed_retention_excluded_for_jvm_driver_client(spark):
-    """r12 advice (medium): the scheme gate alone is not enough — if
-    the DRIVER's own metadata client is the py4j HadoopFS fallback
-    (boto3 missing, creds only in Spark conf), workers cannot rebuild
-    a client from env and the fan-out would fail the publish.  The
-    escalation must refuse unless the driver client is one of the
-    env-reconstructible classes."""
-    from zcollection_spark import config
-    from zcollection_spark.collection.catalog import Catalog
-
-    class _JvmGatewayFS:          # stands in for HadoopFS: py4j-bound
-        pass
-
-    cat = Catalog(_JvmGatewayFS(), "s3://bucket/coll")
-    with config.override(**{"retention.distribute_min_files": 1}):
-        assert cat._retention_spark_session(10**6) is None
-    # and a CountingFS wrapper is unwrapped before the check, so the
-    # normal instrumented-local path still escalates
-    from zcollection_spark.fs import CountingFS, LocalFS
-    cat2 = Catalog(CountingFS(LocalFS()), "/tmp/whatever")
-    with config.override(**{"retention.distribute_min_files": 1}):
-        assert cat2._retention_spark_session(10**6) is spark
-
-
-def test_distributed_retention_failure_degrades_to_pool(
-        spark, tmp_path, monkeypatch):
-    """A failure of the distributed copy JOB (cluster trouble, workers
-    missing the SDK) is an availability problem: retention must degrade
-    to the bounded driver pool — with a warning — and still complete.
-    The deliberate vanished-file StoreError stays loud."""
-    import warnings as _w
-
-    from zcollection_spark import config
-    from zcollection_spark.collection.catalog import Catalog
-    from zcollection_spark.errors import StoreError
-
-    coll = _mk(spark, str(tmp_path / "degrade"))
-    coll.insert(_df(spark, coll, [(1, 1.0), (1, 1.5)]))
-    coll.insert(_df(spark, coll, [(2, 2.0)]))
-    g = coll.generation()
-    before = _rows(coll.query(at_generation=g))
-    coll.pin_generation(g)
-    cat: Catalog = coll._catalog
-
-    def _boom(self, jobs, spark_):
-        raise RuntimeError("executors cannot rebuild the store client")
-
-    monkeypatch.setattr(Catalog, "_retain_distributed", _boom)
-    with config.override(**{"retention.distribute_min_files": 1}):
-        with _w.catch_warnings(record=True) as caught:
-            _w.simplefilter("always")
-            copied = cat.retain_for_pins(["num=1", "num=2"])
-    assert sorted(copied) == ["num=1", "num=2"]
-    assert any("falling back to the driver copy pool" in str(w.message)
-               for w in caught)
-    stamp1 = int(cat.read_doc()["touched"]["num=1"])
-    assert cat.has_retained(stamp1, "num=1")
-    # pool-completed copies serve the pinned read bit-identically
-    coll.insert(_df(spark, coll, [(1, 9.0)]))
-    assert _rows(coll.query(at_generation=g)) == before
-
-    # vanished-file StoreError propagates — no silent pool retry of a
-    # copy set the job itself declared wrong
-    coll2 = _mk(spark, str(tmp_path / "loud"))
-    coll2.insert(_df(spark, coll2, [(1, 1.0)]))
-    coll2.pin_generation(coll2.generation())
-    cat2: Catalog = coll2._catalog
-
-    def _vanished(self, jobs, spark_):
-        raise StoreError("x vanished during distributed retention copy")
-
-    monkeypatch.setattr(Catalog, "_retain_distributed", _vanished)
-    with config.override(**{"retention.distribute_min_files": 1}):
-        with pytest.raises(StoreError, match="vanished"):
-            cat2.retain_for_pins(["num=1"])
-
-
 def test_sweep_reclaims_orphaned_empty_stamp_dir(spark, tmp_path):
     """r12 advice: a prior sweep that crashed between its copy deletes
     and the stamp-dir delete leaves an EMPTY gen-* dir that no later

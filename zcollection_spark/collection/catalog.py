@@ -17,7 +17,6 @@ from __future__ import annotations
 import hashlib
 import json
 import threading
-import warnings
 from collections import defaultdict
 
 from ..errors import CommitConflictError, StoreError
@@ -277,21 +276,6 @@ class Catalog:
         #: refs removed by the most recent sweep_blooms (direct or via
         #: prune_history) — observability for CLI/maintenance callers
         self.last_swept: list[str] = []
-
-    def _baseline(self) -> list[str]:
-        """Current catalog, or — if it's absent/corrupt — a store walk.
-
-        Without the walk, an ``add()`` on a corrupt catalog would write a
-        valid-but-incomplete document containing only the delta, silently
-        hiding every pre-existing partition from catalog readers until a
-        manual ``repair_catalog``.
-        """
-        current = self.read()
-        if current is not None:
-            return current
-        if self._walk_depth is not None:
-            return self._fs.list_partition_dirs(self._root, self._walk_depth)
-        return []
 
     def _read_doc(self) -> dict | None:
         """Validated catalog document, or None if absent/corrupt."""
@@ -632,22 +616,13 @@ class Catalog:
                 f"delete the file explicitly") from exc
 
     def _mutate_pins(self, fn) -> list[int]:
-        """Read-modify-write of the pin ledger — conditional-write loop
-        on stores that have one (same discipline as ``_commit_rmw``:
-        unpin must never be resurrected by a racing pin's last-wins
-        PUT)."""
+        """Read-modify-write of the pin ledger — a conditional-write loop
+        (same discipline as ``_commit_rmw``: unpin must never be
+        resurrected by a racing pin's last-wins PUT)."""
         path = self._pins_path()
-        cas = hasattr(self._fs, "write_if")
         with _LOCKS[path]:
             for attempt in range(_CAS_RETRIES):
-                token = None
-                if cas:
-                    raw, token = self._fs.read_versioned(path)
-                else:
-                    try:
-                        raw = self._fs.read_text(path)
-                    except (OSError, FileNotFoundError):
-                        raw = None
+                raw, token = self._fs.read_versioned(path)
                 try:
                     cur = ([int(g) for g in
                             json.loads(raw).get("pins", [])]
@@ -663,9 +638,6 @@ class Catalog:
                         f"drop existing pins") from exc
                 new = sorted({int(g) for g in fn(list(cur))})
                 data = json.dumps({"format_version": 1, "pins": new})
-                if not cas:
-                    self._fs.write_text(path, data)
-                    return new
                 try:
                     self._fs.write_if(path, data, token)
                     return new
@@ -714,6 +686,10 @@ class Catalog:
         published nothing (retention copies are harmless extra) or
         rolls forward with retention already complete.
 
+        Every copy is one server-side ``copy_file`` call on the
+        driver's bounded pool (``_RETAIN_COPY_WORKERS`` threads), so
+        ``CountingFS`` and ``api_counts`` see each one.
+
         Concurrency contract with pin/unpin: the pin set is read ONCE
         at the start of this call.  A ``pin`` that lands after that
         read is honored from the NEXT publish on (the racing publish
@@ -759,11 +735,6 @@ class Catalog:
             candidates.append((rel, stamp))
         if not candidates:
             return []
-        # server-side copy when the store has one (S3 CopyObject,
-        # GCS rewrite, Azure Copy Blob, Hadoop FileUtil) — a
-        # pinned 100-GB partition must never round-trip through
-        # the driver; the byte path is the small-store fallback
-        copier = getattr(self._fs, "copy_file", None)
 
         def _prep(cand: "tuple[str, int]"):
             """Per-partition store probes (marker HEAD, partial-dir
@@ -783,20 +754,19 @@ class Catalog:
             return rel, stamp, src, dst, _walk_files(self._fs, src)
 
         def _copy_one(rel: str, src_f: str, dst_f: str) -> None:
-            if copier is not None:
-                if not copier(src_f, dst_f):
-                    # a file listed a moment ago is gone: someone
-                    # is mutating the partition under us — writing
-                    # the marker would certify a PARTIAL copy as
-                    # complete forever.  Loud stop; the publish
-                    # retries retention from the marker check.
-                    raise StoreError(
-                        f"{src_f} vanished during retention "
-                        f"copy (concurrent mutation?) — retained "
-                        f"copy of {rel} is incomplete, not "
-                        f"marked")
-            else:
-                self._fs.write_bytes(dst_f, self._fs.read_bytes(src_f))
+            # server-side copy (S3 CopyObject, GCS rewrite, Azure Copy
+            # Blob, Hadoop FileUtil) — a pinned 100-GB partition never
+            # round-trips through the driver
+            if not self._fs.copy_file(src_f, dst_f):
+                # a file listed a moment ago is gone: someone is
+                # mutating the partition under us — writing the marker
+                # would certify a PARTIAL copy as complete forever.
+                # Loud stop; the publish retries retention from the
+                # marker check.
+                raise StoreError(
+                    f"{src_f} vanished during retention copy "
+                    f"(concurrent mutation?) — retained copy of {rel} "
+                    f"is incomplete, not marked")
 
         # the per-file copies are independent idempotent server-side
         # calls — run them on a bounded pool so a republish touching
@@ -816,33 +786,6 @@ class Catalog:
                 thread_name_prefix="zcs-retain") as pool:
             jobs = [j for j in pool.map(_prep, candidates)
                     if j is not None]
-            total_files = sum(len(files) for *_, files in jobs)
-            # resolve the session ONCE and thread it through (r12
-            # advice: a second lookup inside _retain_distributed could
-            # disagree with this one if the config override or active
-            # session changes in between)
-            spark = self._retention_spark_session(total_files)
-            if spark is not None and jobs:
-                # huge pin set: escalate past the driver pool — copies
-                # fan out over the executors (see _retain_distributed).
-                # A failure of the Spark JOB itself (workers missing
-                # the store SDK, serialization, cluster trouble) is an
-                # availability problem, not a data problem: degrade to
-                # the bounded driver pool below, which needs only the
-                # driver's own client.  The deliberate vanished-file
-                # StoreError stays loud — that one means the copy set
-                # is wrong, and no pool retry can make it right.
-                try:
-                    return self._retain_distributed(jobs, spark)
-                except StoreError:
-                    raise
-                except Exception as exc:  # noqa: BLE001 — degrade wide
-                    warnings.warn(
-                        f"distributed retention copy failed "
-                        f"({type(exc).__name__}: {exc}); falling back "
-                        f"to the driver copy pool for "
-                        f"{total_files} file(s)", RuntimeWarning,
-                        stacklevel=2)
             futures = [
                 (rel, stamp, len(files),
                  [pool.submit(_copy_one, rel, f"{src}/{f}",
@@ -865,104 +808,6 @@ class Catalog:
                     for fut in futs:
                         fut.cancel()
                 raise
-        return out
-
-    def _retention_spark_session(self, total_files: int):
-        """The active SparkSession IFF this retention pass should run
-        its copies as a Spark job: the file count reaches the
-        ``retention.distribute_min_files`` config (0 = disabled) and
-        the store is executor-visible (the same precondition the data
-        plane already relies on — executors write partition files to
-        this store; ``memory://`` is process-local and always stays on
-        the driver pool)."""
-        from .. import config
-        floor = config.get("retention.distribute_min_files")
-        if not floor or total_files < floor:
-            return None
-        # executor-reconstructible clients only: object-store backends
-        # rebuild from env/creds; bare/file paths assume the shared
-        # filesystem the data plane already writes through.  memory://
-        # is process-local; hdfs:// etc. ride the DRIVER's py4j
-        # gateway, which a Python worker does not have.
-        scheme = self._root.split("://", 1)[0] if "://" in self._root \
-            else "file"
-        if scheme not in ("s3", "gs", "az", "file"):
-            return None
-        # the scheme alone is not enough (r12 advice): the DRIVER may
-        # itself have fallen back to the py4j HadoopFS client (boto3
-        # missing, az/gs creds outside the env) — a worker-side
-        # fs_for() would then raise instead of rebuilding a client,
-        # and the whole publish would fail on an availability detail.
-        # Require the driver's own metadata client to be one of the
-        # env-reconstructible classes before fanning out.
-        from .. import fs as fsmod
-        inner = getattr(self._fs, "inner", self._fs)  # unwrap CountingFS
-        if not isinstance(inner, (fsmod.LocalFS, fsmod._ObjectStoreFS)):
-            return None
-        from pyspark.sql import SparkSession
-        return SparkSession.getActiveSession()
-
-    def _retain_distributed(self, jobs, spark) -> list[str]:
-        """Retention copies as a Spark job — the 100-TB escalation.
-
-        A republish touching 10 k pinned partitions × 50 files is
-        500 k independent server-side copy calls; the driver pool's
-        16 threads serialize that into tens of minutes, while the
-        cluster disposes of it at executor-count parallelism.  Workers
-        rebuild the store client by scheme/env (``fs_for`` — exactly
-        how partition writes already reach the store) and issue the
-        same idempotent copy calls; failures come back as (rel, path)
-        pairs and raise the same loud vanished-file stop, with every
-        touched partition left UNMARKED (= retried), never certified.
-        Markers are written on the driver only after the whole job
-        succeeds — same completion contract as the pool path.
-
-        Observability note: copies issued by executors do NOT tick the
-        driver-side CountingFS/api_counts probes (each worker has its
-        own client) — op-budget assertions and the bench retention
-        counter run below the distribute threshold by construction, so
-        they keep exact counts on the pool path.
-
-        ``spark`` is resolved ONCE by the caller (retain_for_pins) —
-        re-resolving here could race a config override or session swap
-        between the two lookups (r12 advice)."""
-        pairs = [(rel, f"{src}/{f}", f"{dst}/{f}")
-                 for rel, stamp, src, dst, files in jobs
-                 for f in files]
-        # ~512 copies per task: enough to amortize task launch, small
-        # enough that stragglers re-run cheaply
-        n_slices = max(1, min(len(pairs) // 512 + 1,
-                              spark.sparkContext.defaultParallelism * 4))
-
-        def _copy_chunk(it):
-            from zcollection_spark import fs as fsmod
-            fs = None
-            for rel, src_f, dst_f in it:
-                if fs is None:
-                    fs = fsmod.fs_for(src_f)
-                copier = getattr(fs, "copy_file", None)
-                if copier is not None:
-                    if not copier(src_f, dst_f):
-                        yield (rel, src_f)
-                else:
-                    fs.write_bytes(dst_f, fs.read_bytes(src_f))
-
-        failures = (spark.sparkContext
-                    .parallelize(pairs, numSlices=n_slices)
-                    .mapPartitions(_copy_chunk).collect())
-        if failures:
-            raise StoreError(
-                f"{len(failures)} file(s) vanished during distributed "
-                f"retention copy (concurrent mutation?) — e.g. "
-                f"{failures[0][1]} of partition {failures[0][0]}; no "
-                f"retained copy was marked complete")
-        out: list[str] = []
-        for rel, stamp, _src, _dst, files in jobs:
-            self._fs.write_text(
-                self._retained_marker(stamp, rel),
-                json.dumps({"format_version": 1, "stamp": stamp,
-                            "n_files": len(files)}))
-            out.append(rel)
         return out
 
     def sweep_retained(self) -> list[str]:
@@ -1039,25 +884,18 @@ class Catalog:
         return removed
 
     def _commit_rmw(self, mutate, need_base: bool = True) -> list[str]:
-        """Read-merge-write commit.  On stores with conditional writes
-        (``fs.write_if``) this is an optimistic-concurrency loop: read
-        the document and its version token in ONE GET, apply ``mutate``,
+        """Read-merge-write commit, an optimistic-concurrency loop over
+        the store's conditional write (``fs.write_if``): read the
+        document and its version token in ONE GET, apply ``mutate``,
         conditionally PUT; a lost race re-reads the winner's document
         and re-merges, so concurrent committers CONVERGE TO THE UNION
         instead of last-writer-wins (S3: native ``If-Match`` ETag PUT —
-        lock-free, any number of writers; local/HDFS: lock-file CAS).
-        On a store without ``write_if`` the single-shot last-wins write
-        is kept, reconciled by ``repair_catalog`` — the pre-CAS
-        semantics, still pinned for that configuration."""
+        lock-free, any number of writers; local/HDFS: lock-file CAS)."""
         import random
         import time
-        cas = hasattr(self._fs, "write_if")
         with _LOCKS[self._path]:
             for attempt in range(_CAS_RETRIES):
-                if cas:
-                    doc0, token = self._read_doc_versioned()
-                else:
-                    doc0, token = self._read_doc(), None
+                doc0, token = self._read_doc_versioned()
                 if doc0 is not None:
                     base = list(doc0["partitions"])
                 elif need_base and self._walk_depth is not None:
@@ -1078,10 +916,6 @@ class Catalog:
                                       gen, touched)
                 partitions = doc["partitions"]
                 payload = json.dumps(doc, indent=1)
-                if not cas:
-                    self._fs.write_text(self._path, payload)
-                    self._snapshot(doc)
-                    return partitions
                 try:
                     self._fs.write_if(self._path, payload, token)
                     self._snapshot(doc)

@@ -93,15 +93,6 @@ def new_staging_dir(fs, root: str) -> tuple[str, str]:
     return staging_id, staging
 
 
-def _exists_file(fs, path: str) -> bool:
-    """Existence of a single FILE/object.  Object stores answer with one
-    HEAD (``exists_file``); ``exists`` would pay an extra prefix LIST on
-    every miss — and publish-path checks miss by design (fresh targets,
-    markers not yet written)."""
-    checker = getattr(fs, "exists_file", None)
-    return checker(path) if checker is not None else fs.exists(path)
-
-
 def _walk_files(fs, root: str, rel: str = "") -> list[str]:
     """All file paths under ``root``, relative, recursive, sorted;
     hidden (``_``/``.``) names skipped at every level.
@@ -149,7 +140,7 @@ def _quarantine_move(fs, src: str, dst: str) -> bool:
     first refused rename so the caller reports the id unresolved."""
     for rel in _walk_all(fs, src):
         target = f"{dst}/{rel}"
-        if _exists_file(fs, target):
+        if fs.exists_file(target):
             fs.delete(f"{src}/{rel}")
             continue
         fs.mkdirs(_parent(target))
@@ -241,12 +232,12 @@ def _publish_one(fs, root: str, staging_id: str, staging: str,
         # everything — not just non-manifest names — is what makes the
         # later exists-check unambiguous even when old and new
         # generations share filenames (deterministic layouts).
-        if not _exists_file(fs, marker):
+        if not fs.exists_file(marker):
             # no dst-exists pre-check: the walk is one flat LIST that
             # returns [] for an absent prefix — a separate exists() on
             # an object store is HEAD-miss + LIST, pure overhead
             for f in _walk_files(fs, dst):
-                if _exists_file(fs, f"{old}/{f}"):
+                if fs.exists_file(f"{old}/{f}"):
                     fs.delete(f"{dst}/{f}")
                 else:
                     fs.mkdirs(_parent(f"{old}/{f}"))
@@ -266,14 +257,14 @@ def _publish_one(fs, root: str, staging_id: str, staging: str,
             fs.mkdirs(_parent(target))
             if mover is not None:
                 moved = mover(source, target)
-            elif _exists_file(fs, target):
+            elif fs.exists_file(target):
                 continue  # landed in an earlier attempt
-            elif _exists_file(fs, source):
+            elif fs.exists_file(source):
                 _must_rename(fs, source, target)
                 moved = True
             else:
                 moved = False
-            if not moved and not _exists_file(fs, target):
+            if not moved and not fs.exists_file(target):
                 raise RuntimeError(
                     f"staged file {source!r} missing and {target!r} not "
                     f"published — staged data incomplete, cannot roll "
@@ -295,7 +286,7 @@ def _publish_one(fs, root: str, staging_id: str, staging: str,
             if fname.startswith(("_", ".")):
                 continue
             target = f"{dst}/{staging_id}-{fname}"
-            if not _exists_file(fs, target):
+            if not fs.exists_file(target):
                 _must_move_file(fs, f"{src}/{fname}", target)
 
 
@@ -368,7 +359,7 @@ def staged_publish(fs, root: str, *, write_fn, depth: int,
             pass
         raise
     manifests = None
-    atomic = getattr(fs, "supports_atomic_rename", lambda p: True)(root)
+    atomic = fs.supports_atomic_rename(root)
     if mode == "swap" and not atomic:
         # Object-store path: the intent records per-partition file
         # manifests so the publish (and any crash recovery) can run
@@ -416,7 +407,7 @@ def recover(fs, root: str, catalog=None) -> dict:
         staging = f"{staging_root}/{staging_id}"
         intent_path = f"{staging}/{INTENT_NAME}"
         intent = None
-        if _exists_file(fs, intent_path):
+        if fs.exists_file(intent_path):
             try:
                 intent = json.loads(fs.read_text(intent_path))
             except ValueError:
@@ -427,8 +418,7 @@ def recover(fs, root: str, catalog=None) -> dict:
         else:
             quarantine = f"{root}/{QUARANTINE_RELPATH}"
             fs.mkdirs(quarantine)
-            atomic = getattr(fs, "supports_atomic_rename",
-                             lambda p: True)(root)
+            atomic = fs.supports_atomic_rename(root)
             if not atomic:
                 # object store: no directory rename exists — move the
                 # debris file-granularly (idempotent across crashes)
@@ -482,7 +472,7 @@ def gc_quarantine(fs, root: str, *, older_than: float,
     for qid in fs.list_dirs(qroot):
         marker = f"{qroot}/{qid}/.quarantined_at"
         stamp = None
-        if _exists_file(fs, marker):
+        if fs.exists_file(marker):
             try:
                 stamp = float(fs.read_text(marker))
             except ValueError:

@@ -2,10 +2,11 @@
 
 Re-expresses ``/root/reference/zcollection/config.py:18-55`` (global config
 with an ``override`` context manager) and the codec profiles of
-``codecs/defaults.py:133-156``.  On Spark, a codec profile maps to parquet
-compression + target file sizing (the reference's shard-size targeting,
-``codecs/sharding.py:32-159``, becomes ``maxRecordsPerFile`` /
-``files.maxPartitionBytes``).
+``codecs/defaults.py:133-156``.  On Spark, a codec profile maps to the
+parquet codec and level, and to the zarr layout's shard budget
+(``shard_target_bytes``).  Parquet file sizing does not come from the
+profile: the axis dimension's ``chunks`` becomes the writer's
+``maxRecordsPerFile`` (``Collection._write_tree``).
 """
 
 from __future__ import annotations
@@ -43,14 +44,6 @@ PROFILES: dict[str, CodecProfile] = {
 
 _DEFAULTS: dict[str, Any] = {
     "codec.profile": "cloud-balanced",   # reference default
-    "catalog.enabled": True,
-    "partition.files": 1,                # output files per partition write
-    # retention copy fan-out escalation: a pinned republish whose
-    # retained-file count reaches this runs its server-side copies as
-    # a Spark job over the executors (cluster-wide parallelism)
-    # instead of the driver's bounded 16-thread pool.  0 disables the
-    # distributed path entirely.
-    "retention.distribute_min_files": 4096,
     # hard caps on the documented driver-side collects (r12 verdict):
     # exceeding one raises DriverBoundExceededError instead of OOMing
     # the driver.  Each names a cardinality, never a byte volume.

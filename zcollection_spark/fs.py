@@ -760,8 +760,7 @@ class CountingFS:
 
     def exists_file(self, path: str) -> bool:
         self.counts["head"] += 1
-        checker = getattr(self.inner, "exists_file", self.inner.exists)
-        return checker(path)
+        return self.inner.exists_file(path)
 
     def read_text(self, path: str) -> str:
         self.counts["get"] += 1
@@ -820,8 +819,7 @@ class CountingFS:
         return self.inner.list_partition_dirs(root, depth)
 
     def supports_atomic_rename(self, path: str) -> bool:
-        return getattr(self.inner, "supports_atomic_rename",
-                       lambda p: True)(path)
+        return self.inner.supports_atomic_rename(path)
 
     def __getattr__(self, name):
         attr = getattr(self.inner, name)
@@ -1736,7 +1734,7 @@ class HttpFS:
             "store (local/S3/HDFS) and serve the files statically")
 
     write_text = write_bytes = write_if = delete = move_file = \
-        rename = upload_tree = new_scratch_dir = _read_only
+        copy_file = rename = upload_tree = new_scratch_dir = _read_only
 
 
 _HTTP_FS = None
