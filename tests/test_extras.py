@@ -99,7 +99,7 @@ def test_codec_profiles_parity():
     # reference profiles: local-fast zstd3, cloud-balanced sharded 128MiB
     # zstd3 (default), cloud-cold sharded 512MiB zstd9
     assert config.PROFILES["local-fast"].level == 3
-    assert config.PROFILES["cloud-balanced"].target_file_bytes == 128 << 20
+    assert config.PROFILES["cloud-balanced"].shard_target_bytes == 128 << 20
     assert config.PROFILES["cloud-cold"].level == 9
 
 

@@ -12,6 +12,7 @@ catalog is a single mutable list).
 
 from __future__ import annotations
 
+import json
 import threading
 
 import numpy as np
@@ -22,7 +23,7 @@ import zcollection_spark as zc
 from zcollection_spark.collection import catalog as catmod
 from zcollection_spark.collection.catalog import Catalog
 from zcollection_spark.errors import StoreError
-from zcollection_spark.fs import LocalFS
+from zcollection_spark.fs import CountingFS, LocalFS
 
 
 def _mk(spark, path):
@@ -98,6 +99,38 @@ def test_read_at_serves_state_when_snapshot_missing(tmp_path):
     fs.delete(cat._gen_path(gen))  # simulate the crash
     doc = cat.read_at(gen)
     assert doc["partitions"] == ["num=1"]
+
+
+def test_catalog_document_is_read_in_one_get(tmp_path):
+    """Every read of the state document is one GET with no existence
+    probe before it, whether the document is absent or present; a
+    snapshot is validated like the state document."""
+    fs = CountingFS(LocalFS())
+    cat = Catalog(fs, str(tmp_path / "store"))
+    reads = {"read": cat.read, "read_doc": cat.read_doc,
+             "read_stats": cat.read_stats, "generation": cat.generation,
+             "read_txn": lambda: cat.read_txn("app")}
+
+    def counts():
+        out = {}
+        for name, read in reads.items():
+            fs.reset()
+            read()
+            out[name] = dict(fs.counts)
+        return out
+
+    assert counts() == {name: {"get": 1} for name in reads}
+    cat.add(["num=1"])
+    cat.add(["num=2"])
+    assert cat.read() == ["num=1", "num=2"]
+    assert counts() == {name: {"get": 1} for name in reads}
+    old = cat.generation() - 1
+    snap = cat._gen_path(old)
+    fs.write_text(snap, json.dumps({"partitions": ["num=9"],
+                                    "checksum": "bad"}))
+    assert cat.read_at(old) is None
+    fs.write_text(snap, "[]")
+    assert cat.read_at(old) is None
 
 
 def test_repair_stamps_everything_current(spark, tmp_path):

@@ -105,13 +105,12 @@ LAYOUTS = {"parquet": zc.create_collection, "zarr": create_zarr_collection}
 
 
 def pandas_merge_model(existing: pd.DataFrame, inserted: pd.DataFrame, *,
-                       merge: str, key: str, nan_axis: bool) -> pd.DataFrame:
+                       merge: str, key: str) -> pd.DataFrame:
     """The reference's per-partition keep-sets (``merge.py:132-279``) on
     the ``t`` axis; partitions the batch does not touch stay as they are.
-    A null axis value never matches.  ``nan_axis``: the layout stores a
-    null float as NaN (zarr), which Spark orders above every number, so
-    ``time_series`` keeps it where the parquet layout's null is dropped
-    (a null is never outside the inserted bounds)."""
+    A null axis value never matches, and is never outside the inserted
+    bounds.  One rule for both layouts: the zarr layout's NaN is its
+    null."""
     out = [existing[~existing[key].isin(inserted[key])]]
     for part, ins in inserted.groupby(key):
         old = existing[existing[key] == part]
@@ -121,8 +120,7 @@ def pandas_merge_model(existing: pd.DataFrame, inserted: pd.DataFrame, *,
         elif axis.empty:
             keep = pd.Series(True, index=old.index)
         else:
-            keep = ((old["t"] < axis.min()) | (old["t"] > axis.max())
-                    | (old["t"].isna() & nan_axis))
+            keep = (old["t"] < axis.min()) | (old["t"] > axis.max())
         out += [old[keep], ins]
     return pd.concat(out)
 
@@ -171,8 +169,7 @@ def test_exact_merges_match_pandas_model(spark, tmp_path, layout, merge,
                            axis="t", partitioning=zc.Sequence(("part",)))
     coll.insert(spark.createDataFrame(existing))
     coll.insert(spark.createDataFrame(inserted), merge=merge)
-    want = pandas_merge_model(existing, inserted, merge=merge, key="part",
-                              nan_axis=layout == "zarr")
+    want = pandas_merge_model(existing, inserted, merge=merge, key="part")
     got = coll.query().toPandas()
     assert _rows(got) == _rows(want)
     assert len(got) == len(want)
@@ -203,8 +200,7 @@ def test_exact_merges_axis_as_partition_key(spark, tmp_path, layout,
 
     coll.insert(frame(existing))
     coll.insert(frame(inserted), merge=merge)
-    want = pandas_merge_model(existing, inserted, merge=merge, key="t",
-                              nan_axis=False)
+    want = pandas_merge_model(existing, inserted, merge=merge, key="t")
     got = coll.query().toPandas()
     assert sorted(zip(got["v"], got["t"])) == sorted(
         zip(want["v"], want["t"].astype(np.int64)))

@@ -326,7 +326,7 @@ def test_zarr_collection_sharded_profile(spark, tmp_path):
               .add_variable("value", "float64", ("ts",))
               .build("ts"))
     zconfig.PROFILES["test-shard"] = zconfig.CodecProfile(
-        "test-shard", "zstd", 3, 64 << 20, 1600)
+        "test-shard", "zstd", 3, 1600)
     try:
         with zconfig.override(**{"codec.profile": "test-shard"}):
             coll = create_zarr_collection(

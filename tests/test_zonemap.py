@@ -215,11 +215,6 @@ def test_stats_columns_validation(spark, tmp_path):
         zc.create_collection(
             spark, str(tmp_path / "a"), schema=schema, axis="i",
             partitioning=zc.Sequence(("num",)), stats_columns=["nope"])
-    with pytest.raises(SchemaError, match="catalog_enabled"):
-        zc.create_collection(
-            spark, str(tmp_path / "b"), schema=schema, axis="i",
-            partitioning=zc.Sequence(("num",)), catalog_enabled=False,
-            stats_columns=["num"])
 
 
 def test_stats_survive_reopen_and_crash_rollforward(spark, tmp_path):

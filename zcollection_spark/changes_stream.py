@@ -81,8 +81,8 @@ class ChangesStreamReader(SimpleDataSourceStreamReader):
 
     def read(self, start: dict) -> Tuple[Iterator[Tuple], dict]:
         since = int(start["generation"])
-        cur = self._cat()._read_doc() or {"generation": 0,
-                                          "partitions": []}
+        cur = self._cat().read_doc() or {"generation": 0,
+                                         "partitions": []}
         to_gen = int(cur.get("generation", 0))
         if to_gen <= since:
             # an ITERATOR, not a list: the engine probes an unadvanced

@@ -35,7 +35,6 @@ def cmd_inspect(args: argparse.Namespace) -> int:
         "path": coll.path,
         "axis": coll.axis,
         "partitioning": coll.partitioning.to_json(),
-        "catalog_enabled": coll.catalog_enabled,
         "generation": coll.generation(),
         "stats_columns": getattr(coll, "stats_columns", []),
         "cluster_by": getattr(coll, "cluster_by", []),

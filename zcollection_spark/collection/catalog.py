@@ -73,6 +73,20 @@ def _checksum(partitions: list[str]) -> str:
     return hashlib.sha256("\n".join(partitions).encode()).hexdigest()
 
 
+def _parse_doc(text: str | None) -> dict | None:
+    """The checksum-validated catalog document in ``text`` (the state
+    document or a generation snapshot), or None if absent/corrupt."""
+    if text is None:
+        return None
+    try:
+        doc = json.loads(text)
+        if doc.get("checksum") == _checksum(list(doc["partitions"])):
+            return doc
+    except (ValueError, KeyError, TypeError, AttributeError):
+        pass
+    return None  # corrupt → treated missing (quirk Q1 intent)
+
+
 def diff_documents(base_doc: dict, cur_doc: dict,
                    since: int) -> list[tuple]:
     """Partition-level change rows ``(stamp, relpath, change)`` between
@@ -277,19 +291,6 @@ class Catalog:
         #: prune_history) — observability for CLI/maintenance callers
         self.last_swept: list[str] = []
 
-    def _read_doc(self) -> dict | None:
-        """Validated catalog document, or None if absent/corrupt."""
-        if not self._fs.exists(self._path):
-            return None
-        try:
-            doc = json.loads(self._fs.read_text(self._path))
-            partitions = list(doc["partitions"])
-            if doc.get("checksum") != _checksum(partitions):
-                return None  # corrupt → treated missing (quirk Q1 intent)
-            return doc
-        except (ValueError, KeyError, OSError):
-            return None
-
     def _read_doc_versioned(self) -> tuple[dict | None, object | None]:
         """``(doc, version_token)`` in ONE read.  The token names the
         bytes read (S3 ETag / content hash) regardless of whether they
@@ -300,34 +301,26 @@ class Catalog:
             text, token = self._fs.read_versioned(self._path)
         except OSError:
             return None, None
-        if text is None:
-            return None, None
-        try:
-            doc = json.loads(text)
-            partitions = list(doc["partitions"])
-            if doc.get("checksum") != _checksum(partitions):
-                doc = None
-        except (ValueError, KeyError):
-            doc = None
-        return doc, token
+        return _parse_doc(text), token
 
     def read(self) -> list[str] | None:
         """Sorted partition relpaths, or None if absent/corrupt."""
-        doc = self._read_doc()
+        doc = self.read_doc()
         return list(doc["partitions"]) if doc is not None else None
 
     def read_doc(self) -> dict | None:
         """The validated CURRENT document (partitions + generation +
         touched + stats), or None if absent/corrupt — the public read
         for consumers that need more than the partition list
-        (time-travel staleness verification)."""
-        return self._read_doc()
+        (time-travel staleness verification).  The one reader of the
+        state document: one GET, no existence probe before it."""
+        return self._read_doc_versioned()[0]
 
     def read_stats(self) -> dict:
         """Per-partition zone-map statistics:
         ``{relpath: {col: [min, max, null_count]}}`` — empty when the
         collection records none.  One GET with the partition list."""
-        doc = self._read_doc()
+        doc = self.read_doc()
         return dict((doc or {}).get("stats", {}))
 
     def read_txn(self, app_id: str) -> int:
@@ -336,7 +329,7 @@ class Catalog:
         the partition list — the Delta-style streaming-sink idempotence
         ledger: a replayed micro-batch whose version is already recorded
         was fully committed and must be skipped."""
-        doc = self._read_doc()
+        doc = self.read_doc()
         if doc is None:
             return -1
         return int(doc.get("txn", {}).get(app_id, -1))
@@ -486,7 +479,7 @@ class Catalog:
         if not present:
             self.last_swept = []
             return []
-        docs = [self._read_doc()]
+        docs = [self.read_doc()]
         docs += [self.read_at(g) for g in self.history()]
         live = set()
         for doc in docs:
@@ -531,26 +524,23 @@ class Catalog:
 
     def generation(self) -> int:
         """Generation of the current catalog state (0 = no catalog)."""
-        doc = self._read_doc()
+        doc = self.read_doc()
         return int((doc or {}).get("generation", 0))
 
     def read_at(self, generation: int) -> dict | None:
         """The committed document of ``generation`` — from its snapshot
         file, or from state when state IS that generation (covers the
         crash window before the snapshot PUT).  None when the snapshot
-        has been pruned or never existed."""
-        doc = self._read_doc()
+        has been pruned, never existed or is corrupt."""
+        doc = self.read_doc()
         if doc is not None and int(doc.get("generation", 0)) \
                 == int(generation):
             return doc
         try:
-            snap = json.loads(self._fs.read_text(
-                self._gen_path(generation)))
-        except (OSError, ValueError, FileNotFoundError):
+            text = self._fs.read_text(self._gen_path(generation))
+        except (OSError, ValueError):
             return None
-        if snap.get("checksum") != _checksum(list(snap["partitions"])):
-            return None
-        return snap
+        return _parse_doc(text)
 
     def history(self) -> list[int]:
         """Available snapshot generations, ascending (one LIST)."""

@@ -56,7 +56,11 @@ Scale design notes (the parts that matter at 100 TB / 1000 executors):
 Deliberate deviations (SURVEY §2.8): Q2 fixed — partition order is numeric
 (explicit ``orderBy``), not lexicographic.  Q3 fixed by the shuffle.  Q4
 tightened — ``update`` must return all partitioned variables unless
-``allow_variable_drop=True``.  Q5/Q6/Q7/Q8 preserved.
+``allow_variable_drop=True``.  Q5/Q6/Q7/Q8 preserved.  Every collection
+has a catalog: ``create_collection`` has no switch to turn it off (the
+reference's catalog is opt-in, SURVEY §2.1), because time travel, pins,
+``changes``, ``history``, the streaming txn ledger, zone maps and
+blooms all live in it.
 """
 
 from __future__ import annotations
@@ -102,7 +106,6 @@ ROW_IDX = "_row_idx"
 def create_collection(spark: SparkSession, path: str, *,
                       schema: DatasetSchema, axis: str,
                       partitioning: Partitioning,
-                      catalog_enabled: bool = True,
                       stats_columns: "Iterable[str] | None" = None,
                       bloom_columns: "Iterable[str] | None" = None,
                       bloom_bits: int = 1024,
@@ -117,7 +120,7 @@ def create_collection(spark: SparkSession, path: str, *,
     per-partition min/max/null-count of the named data columns,
     committed with every publish and used by ``query(where=...)`` to
     skip partitions a data-column predicate provably cannot match
-    (partitioning/zonemap.py) — requires ``catalog_enabled``.
+    (partitioning/zonemap.py).
 
     ``bloom_columns`` adds per-partition bloom filters (``bloom_bits``
     bits each, int/string columns only) for EQUALITY skipping on
@@ -151,7 +154,6 @@ def create_collection(spark: SparkSession, path: str, *,
     aggregate job per write)."""
     return _create(Collection, spark, path, schema=schema, axis=axis,
                    partitioning=partitioning,
-                   catalog_enabled=catalog_enabled,
                    stats_columns=stats_columns, bloom_columns=bloom_columns,
                    bloom_bits=bloom_bits, cluster_by=cluster_by,
                    cluster_mode=cluster_mode, overwrite=overwrite)
@@ -159,7 +161,6 @@ def create_collection(spark: SparkSession, path: str, *,
 
 def _create(cls: "type[Collection]", spark: SparkSession, path: str, *,
             schema: DatasetSchema, axis: str, partitioning: Partitioning,
-            catalog_enabled: bool = True,
             stats_columns: "Iterable[str] | None" = None,
             bloom_columns: "Iterable[str] | None" = None,
             bloom_bits: int = 1024,
@@ -187,10 +188,6 @@ def _create(cls: "type[Collection]", spark: SparkSession, path: str, *,
                 f"partitioning variable {var!r} does not span the axis")
     stats_columns = sorted(stats_columns) if stats_columns else None
     if stats_columns:
-        if not catalog_enabled:
-            raise SchemaError(
-                "stats_columns requires catalog_enabled=True — the "
-                "catalog document is where the statistics live")
         for col in stats_columns:
             if col not in var_map or var_map[col].immutable:
                 raise SchemaError(
@@ -209,10 +206,6 @@ def _create(cls: "type[Collection]", spark: SparkSession, path: str, *,
                     f"in filters= instead of where= zone maps")
     bloom_columns = sorted(bloom_columns) if bloom_columns else None
     if bloom_columns:
-        if not catalog_enabled:
-            raise SchemaError(
-                "bloom_columns requires catalog_enabled=True — the "
-                "catalog document is where the filters live")
         if bloom_bits % 64 or bloom_bits <= 0:
             raise SchemaError("bloom_bits must be a positive multiple "
                               "of 64")
@@ -264,15 +257,13 @@ def _create(cls: "type[Collection]", spark: SparkSession, path: str, *,
     if exists:
         fs.delete(path)
     coll = cls(spark, path, bound, partitioning, mode="rw",
-               catalog_enabled=catalog_enabled,
                stats_columns=stats_columns,
                bloom_columns=bloom_columns,
                bloom_bits=bloom_bits,
                cluster_by=cluster_by,
                cluster_mode=cluster_mode)
     coll._write_config()
-    if catalog_enabled:
-        coll._catalog.write([])
+    coll._catalog.write([])
     return coll
 
 
@@ -327,7 +318,6 @@ def open_collection(spark: SparkSession, path: str, *,
                           f"(unsafe string-vs-timestamp ordering)")
             stats_columns = [c for c in stats_columns if c not in bad]
     return cls(spark, path, schema, partitioning, mode=mode,
-               catalog_enabled=doc.get("catalog_enabled", True),
                stats_columns=stats_columns,
                bloom_columns=bloom_columns,
                bloom_bits=bloom_bits,
@@ -350,7 +340,7 @@ class Collection:
 
     def __init__(self, spark: SparkSession, path: str,
                  schema: DatasetSchema, partitioning: Partitioning, *,
-                 mode: str = "r", catalog_enabled: bool = True,
+                 mode: str = "r",
                  stats_columns: "list[str] | None" = None,
                  bloom_columns: "list[str] | None" = None,
                  bloom_bits: int = 1024,
@@ -364,7 +354,6 @@ class Collection:
         self.partitioning = partitioning
         self.axis = schema.axis
         self.mode = mode
-        self.catalog_enabled = catalog_enabled
         self.stats_columns = list(stats_columns) if stats_columns else []
         self.bloom_columns = list(bloom_columns) if bloom_columns else []
         self.cluster_by = list(cluster_by) if cluster_by else []
@@ -395,8 +384,7 @@ class Collection:
         ``data_format`` reopens as parquet."""
         doc = {"format_version": FORMAT_VERSION,
                "schema": (schema or self.schema).to_json(),
-               "partitioning": self.partitioning.to_json(),
-               "catalog_enabled": self.catalog_enabled}
+               "partitioning": self.partitioning.to_json()}
         if self.data_format is not None:
             doc["data_format"] = self.data_format
         if self.stats_columns:
@@ -424,9 +412,6 @@ class Collection:
         reconstructs an old view only while every listed partition is
         untouched since that generation or pin-retained; see
         ``catalog.resolve_snapshot_readable``."""
-        if not self.catalog_enabled:
-            raise ValueError("at_generation requires the catalog "
-                             "(this collection runs catalog-less)")
         from .catalog import resolve_snapshot_readable
         return resolve_snapshot_readable(self._catalog, generation)
 
@@ -434,9 +419,12 @@ class Collection:
                    at_generation: int | None = None) -> list[str]:
         """Matching partition relpaths in numeric key order (Q2 fixed).
 
-        Catalog hit = one GET; miss = depth-limited store walk
-        (``base.py:340-386``) — on object stores the walk is the expensive
-        path, which is why inserts keep the catalog current.
+        Catalog hit = one GET.  Every collection has a catalog, so a
+        miss means only that ``_catalog/state.json`` is absent or
+        corrupt; it falls back to the depth-limited store walk
+        (``base.py:340-386``) — on object stores the walk is the
+        expensive path, which is why inserts keep the catalog current
+        (``repair_catalog`` rewrites it from that walk).
 
         ``at_generation`` lists the partition set AS OF that committed
         generation (verified reconstructable — and, matching
@@ -445,16 +433,11 @@ class Collection:
         partition supports the documented partial-read workflow).
         """
         if at_generation is not None:
-            if not self.catalog_enabled:
-                raise ValueError("at_generation requires the catalog "
-                                 "(this collection runs catalog-less)")
             from .catalog import resolve_matched
             return resolve_matched(
                 self._catalog, at_generation,
                 lambda rels: self._match_relpaths(rels, filters))[2]
-        else:
-            relpaths = (self._catalog.read() if self.catalog_enabled
-                        else None)
+        relpaths = self._catalog.read()
         if relpaths is None:
             relpaths = self._fs.list_partition_dirs(
                 self.path, self.partitioning.depth)
@@ -486,9 +469,7 @@ class Collection:
         self._require_writable()
         # pass the catalog so a rolled-forward insert commits its txn
         # version atomically (exactly-once across crash + replay)
-        staging_proto.recover(
-            self._fs, self.path,
-            self._catalog if self.catalog_enabled else None)
+        staging_proto.recover(self._fs, self.path, self._catalog)
         relpaths = self._fs.list_partition_dirs(self.path,
                                                 self.partitioning.depth)
         self._catalog.write(relpaths)  # preserves the txn ledger
@@ -671,8 +652,7 @@ class Collection:
         boundary.  ``stats_map`` overrides the catalog read (time-travel
         passes the SNAPSHOT's statistics: they describe the data as of
         that generation, which the staleness gate proved unchanged)."""
-        if not (self.catalog_enabled
-                and (self.stats_columns or self.bloom_columns)):
+        if not (self.stats_columns or self.bloom_columns):
             return relpaths
         if stats_map is None:
             stats_map = self._catalog.read_stats()
@@ -741,9 +721,6 @@ class Collection:
             # pinned-generation retained copies (copy-on-republish);
             # staleness is fatal only for MATCHED partitions
             # (catalog.resolve_matched — the partial-read contract).
-            if not self.catalog_enabled:
-                raise ValueError("at_generation requires the catalog "
-                                 "(this collection runs catalog-less)")
             from .catalog import resolve_matched
             snap, sources, relpaths = resolve_matched(
                 self._catalog, at_generation,
@@ -1004,14 +981,13 @@ class Collection:
         so every partition a publish writes — insert, merges,
         ``update``, ``compact`` — gets entries describing what it
         stores."""
-        with_stats = self.catalog_enabled and bool(
-            self.stats_columns or self.bloom_columns)
+        with_stats = bool(self.stats_columns or self.bloom_columns)
         return staging_proto.staged_publish(
             self._fs, self.path,
             write_fn=lambda staging: self._spark_parquet_write(
                 staging, run_write, with_stats=with_stats),
             depth=self.partitioning.depth, mode=mode,
-            catalog=self._catalog if self.catalog_enabled else None,
+            catalog=self._catalog,
             txn=txn)
 
     def _write(self, derived: DataFrame, *,
@@ -1096,8 +1072,7 @@ class Collection:
     def txn_version(self, app_id: str) -> int:
         """Highest committed streaming-sink transaction version for
         ``app_id`` (-1 if none) — see ``Catalog.read_txn``."""
-        return self._catalog.read_txn(app_id) \
-            if self.catalog_enabled else -1
+        return self._catalog.read_txn(app_id)
 
     def exclusive_writer(self, *, ttl: float = 60.0,
                          owner: str | None = None):
@@ -1118,7 +1093,7 @@ class Collection:
         that must not observe a torn multi-writer state compare the
         generation before and after resolving their partition list;
         incremental consumers feed it to :meth:`changes`."""
-        return self._catalog.generation() if self.catalog_enabled else 0
+        return self._catalog.generation()
 
     def pin_generation(self, generation: int) -> list[int]:
         """Promise generation ``generation`` stays readable FOREVER:
@@ -1133,8 +1108,6 @@ class Collection:
         pinned partition actually changes.  Raises if the generation is
         ALREADY unreconstructable (a pin cannot resurrect content that
         was overwritten before it existed).  Returns the pin list."""
-        if not self.catalog_enabled:
-            raise ValueError("pin_generation requires the catalog")
         # a pin of a stale generation would promise what we cannot
         # serve — verify reconstructability first (retained-aware)
         self._resolve_for_read(generation)
@@ -1143,15 +1116,13 @@ class Collection:
     def unpin_generation(self, generation: int) -> list[int]:
         """Drop a pin and reclaim retained copies nothing else
         references.  Returns the remaining pin list."""
-        if not self.catalog_enabled:
-            raise ValueError("unpin_generation requires the catalog")
         pins = self._catalog.unpin(generation)
         self._catalog.sweep_retained()
         return pins
 
     def pinned_generations(self) -> list[int]:
         """Currently pinned generations, ascending."""
-        return self._catalog.pins() if self.catalog_enabled else []
+        return self._catalog.pins()
 
     def stale_partitions(self, generation: int) -> list[str]:
         """The gen-``generation`` partitions reconstructable from
@@ -1160,8 +1131,6 @@ class Collection:
         names exactly what a partial historical read would miss
         (filter them out with a key predicate instead of catching the
         ValueError)."""
-        if not self.catalog_enabled:
-            raise ValueError("stale_partitions requires the catalog")
         from .catalog import stale_partitions
         return stale_partitions(self._catalog, generation)
 
@@ -1184,10 +1153,8 @@ class Collection:
         checkpoints" replays exactly, whatever has been committed
         since.  Both endpoints must still be retained (same pruned-
         snapshot contract)."""
-        if not self.catalog_enabled:
-            raise StoreError("changes() requires the catalog")
         if to_generation is None:
-            current = self._catalog._read_doc() or {}
+            current = self._catalog.read_doc() or {}
         else:
             current = self._catalog.read_at(int(to_generation))
             if current is None:
@@ -1231,8 +1198,6 @@ class Collection:
         the previous available snapshot (``None`` when that snapshot
         was pruned — unknown, never silently empty).  Driver-side
         metadata only: ``limit`` small documents, no Spark job."""
-        if not self.catalog_enabled:
-            raise StoreError("history() requires the catalog")
         if limit <= 0:  # [-0:] would return the WHOLE ledger
             raise ValueError("history(limit=...) must be >= 1")
         gens = set(self._catalog.history())
@@ -1439,7 +1404,7 @@ class Collection:
         # manifest carrying the NEW generation over a STALE file list —
         # passing the HttpFS staleness guard while naming deleted
         # files (the silent-empty-partition case the guard exists for)
-        gen = self._catalog.generation() if self.catalog_enabled else 0
+        gen = self._catalog.generation()
         rels = self.partitions()
 
         def files_of(rel: str) -> tuple[str, list[str]]:
@@ -1475,7 +1440,7 @@ class Collection:
         # error; rewriting here keeps that guard defense-in-depth, not
         # the primary mechanism).  Caller retries the whole
         # list-stamp-put cycle when unstable.
-        if self.catalog_enabled and self._catalog.generation() != gen:
+        if self._catalog.generation() != gen:
             return manifest, False
         return manifest, True
 
@@ -1484,13 +1449,11 @@ class Collection:
         (``base.py:599-634``; ≈ ALTER TABLE DROP PARTITION)."""
         self._require_writable()
         doomed = self.partitions(filters=filters)
-        if self.catalog_enabled:
-            # pinned generations keep their content past the drop
-            self._catalog.retain_for_pins(doomed)
+        # pinned generations keep their content past the drop
+        self._catalog.retain_for_pins(doomed)
         self._pooled_map(
             lambda rel: self._fs.delete(f"{self.path}/{rel}"), doomed)
-        if self.catalog_enabled:
-            self._catalog.remove(doomed)
+        self._catalog.remove(doomed)
         return doomed
 
     # ------------------------------------------------------------------
@@ -1619,13 +1582,11 @@ class Collection:
         from .. import xbridge
         # one catalog GET at most — never the recursive walk fallback
         # (repr runs in logs/debuggers; a store walk there is a trap)
-        n_parts = None
-        if self.catalog_enabled:
-            try:
-                relpaths = self._catalog.read()
-                n_parts = None if relpaths is None else len(relpaths)
-            except Exception:
-                n_parts = None
+        try:
+            relpaths = self._catalog.read()
+            n_parts = None if relpaths is None else len(relpaths)
+        except Exception:
+            n_parts = None
         tree = xbridge.tree_repr(self.schema, name="Collection",
                                  n_partitions=n_parts)
         head, _, rest = tree.partition("\n")

@@ -82,18 +82,25 @@ def time_series(existing: DataFrame, inserted: DataFrame, *, axis: str,
     exchange on the partition keys carries both the merge and the
     write.  An existing null-axis row is dropped whenever its partition
     has bounds (the comparison is null), and kept when it has none.
+    A float NaN axis value counts as null on both sides: the zarr
+    layout stores a null float as NaN, which Spark orders above every
+    number.
     """
     both, tag = _tagged_union(existing, inserted)
     whole = (Window.partitionBy(*keys).orderBy(axis_order(axis))
              .rowsBetween(Window.unboundedPreceding,
                           Window.unboundedFollowing))
-    ins_axis = F.when(F.col(tag), F.col(axis))
+    value = F.col(axis)
+    dtype = existing.schema[axis].dataType
+    if isinstance(dtype, (T.FloatType, T.DoubleType)):
+        value = F.nanvl(value, F.lit(None).cast(dtype))
+    ins_axis = F.when(F.col(tag), value)
     lo, hi = f"{tag}_lo", f"{tag}_hi"
     return (both
             .select("*", F.min(ins_axis).over(whole).alias(lo),
                     F.max(ins_axis).over(whole).alias(hi))
             .where(F.col(tag) | F.col(lo).isNull()
-                   | (F.col(axis) < F.col(lo)) | (F.col(axis) > F.col(hi)))
+                   | (value < F.col(lo)) | (value > F.col(hi)))
             .drop(tag, lo, hi))
 
 

@@ -18,11 +18,10 @@ from typing import Any, Iterator
 
 @dataclasses.dataclass(frozen=True)
 class CodecProfile:
-    """Write-side codec/file-sizing policy."""
+    """Write-side codec policy and zarr shard budget."""
     name: str
     compression: str            # parquet codec
     level: int | None           # codec level (zstd)
-    target_file_bytes: int      # analog of the reference's shard target
     shard_target_bytes: int | None = None   # zarr shard budget, None = off
 
     def writer_options(self) -> dict[str, str]:
@@ -35,11 +34,9 @@ class CodecProfile:
 #: parity with the reference's three profiles (codecs/defaults.py:133-156):
 #: local-fast is unsharded; the cloud profiles shard at 128/512 MiB
 PROFILES: dict[str, CodecProfile] = {
-    "local-fast": CodecProfile("local-fast", "zstd", 3, 64 << 20, None),
-    "cloud-balanced": CodecProfile("cloud-balanced", "zstd", 3, 128 << 20,
-                                   128 << 20),
-    "cloud-cold": CodecProfile("cloud-cold", "zstd", 9, 512 << 20,
-                               512 << 20),
+    "local-fast": CodecProfile("local-fast", "zstd", 3),
+    "cloud-balanced": CodecProfile("cloud-balanced", "zstd", 3, 128 << 20),
+    "cloud-cold": CodecProfile("cloud-cold", "zstd", 9, 512 << 20),
 }
 
 _DEFAULTS: dict[str, Any] = {
