@@ -53,7 +53,8 @@ def main() -> None:
 
     probe = docs.select(F.max("doc_id")).first()[0]
     hit = coll.query(where=f"doc_id == {probe}")
-    pruned = coll._zone_prune(coll.partitions(), f"doc_id == {probe}")
+    pruned = coll._zone_prune(coll.partitions(), f"doc_id == {probe}",
+                              coll._catalog.read_stats())
     print(f"point lookup doc_id == {probe}: {hit.count()} row, "
           f"{len(pruned)}/{len(coll.partitions())} partitions scanned")
     assert hit.count() == 1 and len(pruned) < len(coll.partitions())

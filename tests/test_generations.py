@@ -550,3 +550,116 @@ def test_zarr_time_travel_exact_over_live_and_retained(spark, tmp_path):
     # the live read sees the republish and the post-snapshot partitions
     assert rows(coll.query()) == [(3, 3.0), (4, 4.0), (5, 50.0),
                                   (6, 6.0), (7, 7.0), (8, 8.0)]
+
+
+def test_generation_never_repeats_after_corrupt_state(spark, tmp_path):
+    """A commit over a corrupt state document seeds its generation from
+    the snapshots left behind: the numbering never goes backwards, so no
+    old ``gen-N.json`` is served as a new generation's document and an
+    incremental consumer still sees the new partition."""
+    coll = _mk(spark, str(tmp_path / "c"))
+    cat = coll._catalog
+    for n in range(1, 4):
+        cat.add([f"num={n}"])
+    old_max = max(cat.history())
+    (tmp_path / "c" / "_catalog" / "state.json").write_text("{broken")
+    cat.add(["num=9"])
+    assert cat.generation() > old_max
+    assert cat.read_at(old_max)["generation"] == old_max
+    assert coll.changes(old_max)["added"] == ["num=9"]
+
+
+class _StateReads:
+    """Counts reads of the state document and of generation snapshots
+    through the local store (every catalog read goes through one of
+    these two methods)."""
+
+    def __init__(self, monkeypatch):
+        self.state = self.snapshots = 0
+        for name in ("read_versioned", "read_text"):
+            real = getattr(LocalFS, name)
+            monkeypatch.setattr(LocalFS, name, self._wrap(real))
+
+    def _wrap(self, real):
+        def read(fs, path, *args):
+            if path.endswith("/_catalog/state.json"):
+                self.state += 1
+            elif "/_catalog/gen-" in path:
+                self.snapshots += 1
+            return real(fs, path, *args)
+        return read
+
+    def take(self) -> tuple[int, int]:
+        out = (self.state, self.snapshots)
+        self.state = self.snapshots = 0
+        return out
+
+
+@pytest.mark.parametrize("layout", ["parquet", "zarr"])
+def test_query_and_history_read_the_state_document_once(
+        spark, tmp_path, monkeypatch, layout):
+    """One state-document read per query, whether it prunes by key, by
+    zone map or reads a past generation (which adds its one snapshot
+    read); ``history`` reads state once and each snapshot once."""
+    from zcollection_spark.zarr3.collection import create_zarr_collection
+    create = (zc.create_collection if layout == "parquet"
+              else create_zarr_collection)
+    coll = create(spark, str(tmp_path / "c"),
+                  schema=_mk(spark, str(tmp_path / "s")).schema,
+                  axis="i", partitioning=zc.Sequence(("num",)),
+                  stats_columns=["value"])
+    for n in range(1, 4):
+        coll.insert(_df(spark, coll, [(n, float(n))]))
+    g = coll.generation()
+    reads = _StateReads(monkeypatch)
+    coll.query(filters="num >= 2")
+    assert reads.take() == (1, 0)
+    assert coll.query(where="value >= 2.5").count() == 1
+    assert reads.take()[0] == 1
+    assert coll.query(at_generation=g - 1).count() == 2
+    assert reads.take() == (1, 1)
+    assert len(coll.history(limit=10)) == 4
+    state, snapshots = reads.take()
+    assert state == 1 and snapshots >= 4
+
+
+def test_commit_encodes_once_and_snapshot_equals_state(tmp_path,
+                                                      monkeypatch):
+    """Each commit attempt encodes its document once; the snapshot PUT
+    carries the state document's own bytes."""
+    fs = LocalFS()
+    root = tmp_path / "store"
+    cat = Catalog(fs, str(root))
+    cat.add(["num=1"])
+    encodes = []
+    real_dumps = json.dumps
+
+    def dumps(obj, *args, **kwargs):
+        encodes.append(obj.get("generation"))
+        return real_dumps(obj, *args, **kwargs)
+
+    monkeypatch.setattr(catmod.json, "dumps", dumps)
+    cat.add(["num=2"], stats={"num=2": {"value": [1.0, 2.0, 0]}})
+    assert encodes == [2]
+    state = (root / "_catalog" / "state.json").read_bytes()
+    assert (root / "_catalog" / "gen-000000000002.json").read_bytes() \
+        == state
+
+    # a lost race re-reads, re-merges and encodes again: once per
+    # attempt.  A rival commits between our encode and our PUT
+    real_write_if = LocalFS.write_if
+
+    def write_if(self, path, data, token):
+        if not encodes[1:]:
+            Catalog(LocalFS(), str(root)).add(["num=4"])
+        return real_write_if(self, path, data, token)
+
+    encodes.clear()
+    monkeypatch.setattr(catmod, "_LOCKS", _FreshLocks())
+    monkeypatch.setattr(LocalFS, "write_if", write_if)
+    cat.add(["num=3"])
+    assert encodes == [3, 3, 4]  # ours, the rival's, ours again
+    assert cat.read() == ["num=1", "num=2", "num=3", "num=4"]
+    state = (root / "_catalog" / "state.json").read_bytes()
+    assert (root / "_catalog" / "gen-000000000004.json").read_bytes() \
+        == state

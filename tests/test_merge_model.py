@@ -219,3 +219,27 @@ def test_exact_merges_keep_variables_named_like_helpers(spark, merge):
     assert got.columns == existing.columns
     assert sorted(map(tuple, got.collect())) == [
         (0, 1.0, 7, 8, 9), (0, 5.0, 4, 5, 6)]
+
+
+@pytest.mark.parametrize("layout", sorted(LAYOUTS))
+def test_exact_upsert_nan_axis_matches_nothing(spark, tmp_path, layout):
+    """An explicit NaN axis value matches nothing, like a null (and like
+    ``numpy.isin``): both layouts keep every existing NaN and null row.
+    The frames come from rows holding ``float("nan")``; a pandas NaN
+    reaches Spark as a null."""
+    cols = "t double, part long, v long"
+    nan = float("nan")
+    existing = spark.createDataFrame(
+        [(1.0, 0, 1), (None, 0, 2), (nan, 0, 3), (5.0, 0, 4)], cols)
+    inserted = spark.createDataFrame(
+        [(nan, 0, 10), (None, 0, 11), (2.0, 0, 12)], cols)
+    schema = (zc.SchemaBuilder().add_dimension("t")
+              .add_variable("t", "float64", ("t",))
+              .add_variable("part", "int64", ("t",))
+              .add_variable("v", "int64", ("t",)).build())
+    coll = LAYOUTS[layout](spark, str(tmp_path / "c"), schema=schema,
+                           axis="t", partitioning=zc.Sequence(("part",)))
+    coll.insert(existing)
+    coll.insert(inserted, merge="upsert")
+    assert sorted(r.v for r in coll.query().collect()) == [
+        1, 2, 3, 4, 10, 11, 12]

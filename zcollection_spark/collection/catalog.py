@@ -510,15 +510,15 @@ class Catalog:
     def _gen_path(self, generation: int) -> str:
         return f"{self._root}/_catalog/gen-{int(generation):012d}.json"
 
-    def _snapshot(self, doc: dict) -> None:
-        """Immutable per-generation snapshot, written AFTER the state
-        commit (best-effort: a crash in between only costs the newest
-        snapshot file, which ``read_at`` serves from state instead).
-        One extra small PUT per commit buys an audit trail and
+    def _snapshot(self, generation: int, payload: str) -> None:
+        """Immutable per-generation snapshot: the state document's own
+        bytes (``payload``, encoded once by ``_commit_rmw``), PUT AFTER
+        the state commit.  Best-effort: a crash in between only costs
+        the newest snapshot file, which ``read_at`` serves from state
+        instead.  One extra PUT per commit buys an audit trail and
         incremental-consumer diffs (``Collection.changes``)."""
         try:
-            self._fs.write_text(self._gen_path(doc["generation"]),
-                                json.dumps(doc, indent=1))
+            self._fs.write_text(self._gen_path(generation), payload)
         except OSError:
             pass  # the commit itself (state PUT) already succeeded
 
@@ -528,19 +528,25 @@ class Catalog:
         return int((doc or {}).get("generation", 0))
 
     def read_at(self, generation: int) -> dict | None:
-        """The committed document of ``generation`` — from its snapshot
-        file, or from state when state IS that generation (covers the
-        crash window before the snapshot PUT).  None when the snapshot
-        has been pruned, never existed or is corrupt."""
+        """The committed document of ``generation``: its snapshot file,
+        one GET.  Only when that file is absent or invalid is the state
+        document read, and served when state IS that generation (the
+        crash window between the state PUT and the snapshot PUT).  None
+        when the snapshot has been pruned, never existed or is corrupt.
+        Generation numbers never repeat (``_commit_rmw``), so a valid
+        snapshot is always the document its generation committed."""
+        try:
+            text, _ = self._fs.read_versioned(self._gen_path(generation))
+        except OSError:
+            text = None
+        doc = _parse_doc(text)
+        if doc is not None:
+            return doc
         doc = self.read_doc()
         if doc is not None and int(doc.get("generation", 0)) \
                 == int(generation):
             return doc
-        try:
-            text = self._fs.read_text(self._gen_path(generation))
-        except (OSError, ValueError):
-            return None
-        return _parse_doc(text)
+        return None
 
     def history(self) -> list[int]:
         """Available snapshot generations, ascending (one LIST)."""
@@ -897,18 +903,25 @@ class Catalog:
                 stats_map = dict((doc0 or {}).get("stats", {}))
                 touched = dict((doc0 or {}).get("touched", {}))
                 # the CAS serializes generation numbers: a lost race
-                # re-reads the winner's generation and re-increments
-                gen = int((doc0 or {}).get("generation", 0)) + 1
+                # re-reads the winner's generation and re-increments.
+                # With no valid document, the snapshots left behind
+                # seed it, so a number (and its snapshot) never repeats
+                gen = 1 + (int(doc0.get("generation", 0))
+                           if doc0 is not None
+                           else max(self.history(), default=0))
                 partitions, txn_map, stats_map = \
                     mutate(base, txn_map, stats_map, touched, gen)
                 stats_map = self._externalize_blooms(stats_map)
                 doc = self._build_doc(partitions, txn_map, stats_map,
                                       gen, touched)
                 partitions = doc["partitions"]
-                payload = json.dumps(doc, indent=1)
+                # encoded once, compactly: the snapshot PUTs the same
+                # bytes (an indented encode runs CPython's pure-Python
+                # encoder, about 6x slower on a wide document)
+                payload = json.dumps(doc, separators=(",", ":"))
                 try:
                     self._fs.write_if(self._path, payload, token)
-                    self._snapshot(doc)
+                    self._snapshot(gen, payload)
                     return partitions
                 except CommitConflictError:
                     if attempt == _CAS_RETRIES - 1:
@@ -973,6 +986,3 @@ class Catalog:
             return sorted(set(base) - set(gone)), txn_map, stats_map
 
         return self._commit_rmw(mutate)
-
-    def drop(self) -> None:
-        self._fs.delete(self._path)

@@ -12,8 +12,7 @@ fill values, ``nested``, merges, staged publish, pins and retention,
 A layout overrides only its storage jobs (the hooks):
 
 - ``_read_partitions(relpaths, variables, sources)`` — scan exactly the
-  resolved partitions, and ``_filter_keys`` — put the key predicate on
-  that scan where it costs nothing per row;
+  resolved partitions;
 - ``_write(derived, txn=...)`` — write partitions and publish them,
   with their statistics;
 - ``_write_immutable`` / ``_attach_immutable`` — store and attach the
@@ -39,10 +38,10 @@ metadata never pollutes reads.
 
 Scale design notes (the parts that matter at 100 TB / 1000 executors):
 
-- **reads are declarative**: ``query`` builds ``read.parquet → filter →
-  select`` so Catalyst does partition pruning + column pruning + parquet
-  predicate pushdown; the driver-side catalog only *shortcuts the listing*
-  (one small GET instead of a recursive object-store LIST).
+- **partitions are pruned at listing time**: the catalog (one small GET
+  instead of a recursive object-store LIST) decides which partitions a
+  query reads, and the scan names exactly those; Catalyst then does
+  column pruning and parquet predicate pushdown of the ``where`` filter.
 - **writes shuffle once**: rows are hash-repartitioned by the partition-key
   columns, sorted within partitions by the axis, and written with
   ``partitionBy``; all rows of one partition meet in one task (fixing the
@@ -432,16 +431,26 @@ class Collection:
         filter MATCHES, so a key predicate that excludes every stale
         partition supports the documented partial-read workflow).
         """
+        return self._resolve(filters, at_generation)[2]
+
+    def _resolve(self, filters: str | None, at_generation: int | None
+                 ) -> "tuple[dict | None, dict | None, list[str]]":
+        """``(doc, sources, matched)`` from ONE catalog read, shared by
+        :meth:`partitions` and :meth:`_load`: the live document (None
+        when absent or corrupt, then the store walk lists), or the
+        verified ``at_generation`` snapshot with its read ``sources``
+        (``catalog.resolve_matched``)."""
+        def match(rels):
+            return self._match_relpaths(rels, filters)
+
         if at_generation is not None:
             from .catalog import resolve_matched
-            return resolve_matched(
-                self._catalog, at_generation,
-                lambda rels: self._match_relpaths(rels, filters))[2]
-        relpaths = self._catalog.read()
-        if relpaths is None:
-            relpaths = self._fs.list_partition_dirs(
-                self.path, self.partitioning.depth)
-        return self._match_relpaths(relpaths, filters)
+            return resolve_matched(self._catalog, at_generation, match)
+        doc = self._catalog.read_doc()
+        rels = (list(doc["partitions"]) if doc is not None else
+                self._fs.list_partition_dirs(self.path,
+                                             self.partitioning.depth))
+        return doc, None, match(rels)
 
     def _match_relpaths(self, relpaths: "list[str]",
                         filters: str | None) -> list[str]:
@@ -599,13 +608,6 @@ class Collection:
             out = out.unionByName(p)
         return out
 
-    def _filter_keys(self, df: DataFrame, predicate) -> DataFrame:
-        """Hook: apply the partition-key predicate to a scan of the
-        partitions it matched.  Catalyst turns it into the parquet
-        scan's partition filters: no per-row cost, and the plan shows
-        the pruning."""
-        return df.where(predicate.to_column())
-
     def _immutable_df(self) -> DataFrame | None:
         imm_path = f"{self.path}/{IMMUTABLE_RELPATH}"
         if not self.schema.immutable_variables or not self._fs.exists(imm_path):
@@ -644,19 +646,16 @@ class Collection:
         return df.withColumns(casts) if casts else df
 
     def _zone_prune(self, relpaths: list[str], where: str,
-                    stats_map: dict | None = None) -> list[str]:
+                    stats_map: dict) -> list[str]:
         """Drop partitions whose zone-map statistics PROVE the ``where``
         predicate cannot match (partitioning/zonemap.py).  Partitions
         without statistics are always kept — pruning is an optimization
         layered under the exact Catalyst filter, never a correctness
-        boundary.  ``stats_map`` overrides the catalog read (time-travel
-        passes the SNAPSHOT's statistics: they describe the data as of
-        that generation, which the staleness gate proved unchanged)."""
-        if not (self.stats_columns or self.bloom_columns):
-            return relpaths
-        if stats_map is None:
-            stats_map = self._catalog.read_stats()
-        if not stats_map:
+        boundary.  ``stats_map`` comes from the catalog document that
+        listed ``relpaths`` (time travel passes the SNAPSHOT's
+        statistics: they describe the data as of that generation, which
+        the staleness gate proved unchanged)."""
+        if not (self.stats_columns or self.bloom_columns) or not stats_map:
             return relpaths
         may_match = compile_zone_filter(where)
         allowed = set(self.stats_columns) \
@@ -697,41 +696,26 @@ class Collection:
               ) -> DataFrame | None:
         """Pruned scan with partition-key columns attached.
 
-        Uses the catalog for listing-time pruning when available, and ALWAYS
-        also applies the predicate as a Catalyst filter so the plan is
-        correct (and prunes) even on a bare directory tree.  ``where``
-        (data-column dialect, float literals allowed) additionally
-        zone-map-prunes partitions and filters the scanned rows.
+        The key predicate is applied once, at listing time: one read
+        of the catalog document (the live one, or the ``at_generation``
+        snapshot) gives the partition list, and the scan names exactly
+        the matched partitions, so no row filter on the keys follows.
+        Without a valid catalog the store walk gives the list.
+        ``where`` (data-column dialect, float literals allowed)
+        additionally zone-map-prunes partitions with the same
+        document's statistics and filters the scanned rows.
         ``variables`` is the caller's column need, handed to
         ``_read_partitions`` with the ``where`` columns (and, for
         ``keep_internal``, the axis) added.  ``keep_internal`` keeps
         ``_row_idx``; a layout that does not store it gets it from the
         on-disk order, which is the axis order.
         """
-        predicate = compile_filter(filters)
         row_filter = (None if where is None
                       else compile_filter(where, allow_float=True))
-        sources = None
-        if at_generation is not None:
-            # fetch + staleness-verify the snapshot ONCE and thread it
-            # to both the partition list and the zone-stats map — a
-            # where-clause time-travel read used to verify twice (two
-            # extra GETs per query on object stores, r10 advice).
-            # ``sources`` routes republished partitions to their
-            # pinned-generation retained copies (copy-on-republish);
-            # staleness is fatal only for MATCHED partitions
-            # (catalog.resolve_matched — the partial-read contract).
-            from .catalog import resolve_matched
-            snap, sources, relpaths = resolve_matched(
-                self._catalog, at_generation,
-                lambda rels: self._match_relpaths(rels, filters))
-        else:
-            snap = None
-            relpaths = self.partitions(filters=filters)
+        doc, sources, relpaths = self._resolve(filters, at_generation)
         if where is not None:
-            snap_stats = (dict(snap.get("stats", {}))
-                          if snap is not None else None)
-            relpaths = self._zone_prune(relpaths, where, snap_stats)
+            relpaths = self._zone_prune(relpaths, where,
+                                        (doc or {}).get("stats", {}))
         if not relpaths:
             return None
         scan = None
@@ -744,8 +728,6 @@ class Collection:
         df = self._read_partitions(relpaths, scan, sources)
         if keep_internal and ROW_IDX not in df.columns:
             df = self._with_row_idx(df)  # before any row filter
-        if predicate.expr is not None:
-            df = self._filter_keys(df, predicate)
         if row_filter is not None:
             # the exact predicate: pushed into the parquet scan by
             # Catalyst; zone maps only decided which partitions to list
@@ -1215,8 +1197,8 @@ class Collection:
             parts = doc.get("partitions", [])
             added = sorted(rel for rel in parts
                            if int(stamps.get(rel, g)) == g)
-            prev = docs.get(g - 1) if g - 1 in docs \
-                else self._catalog.read_at(g - 1)
+            prev = (docs[g - 1] if g - 1 in docs
+                    else self._catalog.read_at(g - 1) if g > 1 else None)
             removed = (sorted(set(prev.get("partitions", []))
                               - set(parts))
                        if prev is not None

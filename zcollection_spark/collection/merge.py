@@ -72,6 +72,19 @@ def axis_order(axis: str) -> Column:
     return F.col(axis).asc_nulls_last()
 
 
+def _axis_value(frame: DataFrame, axis: str) -> Column:
+    """The axis value both exact merges test: a float NaN reads as
+    null.  The zarr layout stores a null float as NaN, which Spark
+    orders above every number and matches to itself; through this one
+    rule it never matches and is never outside the inserted bounds,
+    like a null (and like ``numpy.isin``)."""
+    value = F.col(axis)
+    dtype = frame.schema[axis].dataType
+    if isinstance(dtype, (T.FloatType, T.DoubleType)):
+        value = F.nanvl(value, F.lit(None).cast(dtype))
+    return value
+
+
 def time_series(existing: DataFrame, inserted: DataFrame, *, axis: str,
                 keys: tuple[str, ...]) -> DataFrame:
     """Drop existing rows with ``axis ∈ [inserted.min, inserted.max]``
@@ -82,18 +95,14 @@ def time_series(existing: DataFrame, inserted: DataFrame, *, axis: str,
     exchange on the partition keys carries both the merge and the
     write.  An existing null-axis row is dropped whenever its partition
     has bounds (the comparison is null), and kept when it has none.
-    A float NaN axis value counts as null on both sides: the zarr
-    layout stores a null float as NaN, which Spark orders above every
-    number.
+    A float NaN axis value counts as null on both sides
+    (:func:`_axis_value`).
     """
     both, tag = _tagged_union(existing, inserted)
     whole = (Window.partitionBy(*keys).orderBy(axis_order(axis))
              .rowsBetween(Window.unboundedPreceding,
                           Window.unboundedFollowing))
-    value = F.col(axis)
-    dtype = existing.schema[axis].dataType
-    if isinstance(dtype, (T.FloatType, T.DoubleType)):
-        value = F.nanvl(value, F.lit(None).cast(dtype))
+    value = _axis_value(existing, axis)
     ins_axis = F.when(F.col(tag), value)
     lo, hi = f"{tag}_lo", f"{tag}_hi"
     return (both
@@ -122,7 +131,8 @@ def upsert(existing: DataFrame, inserted: DataFrame, *, axis: str,
     ``CURRENT ROW .. CURRENT ROW`` spans exactly the rows of equal axis
     value, so ``max(inserted)`` over it says whether the inserted slice
     holds that value — the reference's per-partition ``numpy.isin``.
-    A null axis value never matches (as in an equi-join).  The window's
+    A null or NaN axis value never matches (as in an equi-join, and as
+    ``numpy.isin`` treats NaN; :func:`_axis_value`).  The window's
     exchange and sort are the ones the write needs, so the upsert
     costs no shuffle of its own.  Tolerance mode: an existing row is
     dropped when ANY inserted axis value in the same partition lies
@@ -144,7 +154,8 @@ def upsert(existing: DataFrame, inserted: DataFrame, *, axis: str,
         hit = f"{tag}_hit"
         return (both
                 .withColumn(hit, F.max(F.col(tag)).over(peers))
-                .where(F.col(tag) | F.col(axis).isNull() | ~F.col(hit))
+                .where(F.col(tag) | _axis_value(existing, axis).isNull()
+                       | ~F.col(hit))
                 .drop(tag, hit))
     # the axis may itself BE a partition key (Sequence partitioning on
     # the axis column): dedupe so the join key list stays unambiguous

@@ -393,12 +393,6 @@ class ZarrCollection(Collection):
         return (self.spark.range(len(tasks), numPartitions=len(tasks))
                 .mapInArrow(decode, schema))
 
-    def _filter_keys(self, df: DataFrame, predicate) -> DataFrame:
-        # the scan holds exactly the matched partitions: a row filter on
-        # their keys removes nothing, and each new key literal would cost
-        # a whole-stage codegen compile
-        return df
-
     def to_df(self, *, variables: Iterable[str] | None = None) -> DataFrame:
         """Every live partition, projected to ``variables`` (plus the
         partition keys).  The plan is cached per (projection, endpoint
